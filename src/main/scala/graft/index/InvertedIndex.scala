@@ -2,6 +2,7 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{DocRow, PostingsRow}
@@ -15,6 +16,10 @@ trait IndexView {
   def spark: SparkSession
   def stats: Bm25Stats
   def postings: Dataset[PostingsRow]
+  /** The postings rows of `terms` — the seam every per-query postings
+    * reader goes through, so a warm reader can serve them from memory. */
+  def postingsOf(terms: Seq[String]): Dataset[PostingsRow] =
+    postings.filter(org.apache.spark.sql.functions.col("term").isin(terms.distinct: _*))
   def docs: Dataset[DocRow]
   def termStats: DataFrame
   /** Tombstoned docIds (live-docs complement); default: none. */
@@ -41,10 +46,22 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   }
 
   @volatile private var cached
-      : Option[(Dataset[PostingsRow], Dataset[DocRow], DataFrame)] = None
+      : Option[(RDD[SegmentPostings], Dataset[DocRow], DataFrame)] = None
 
-  def postings: Dataset[PostingsRow] = cached.map(_._1)
-    .getOrElse(spark.read.parquet(s"$dir/postings").as[PostingsRow])
+  /** The whole postings table, always read from parquet: warm serving
+    * reads postings through `postingsOf` and the resident segments. The
+    * schema is the row type's, so opening the scan runs no footer job. */
+  def postings: Dataset[PostingsRow] =
+    spark.read.schema(InvertedIndex.PostingsSchema).parquet(s"$dir/postings").as[PostingsRow]
+
+  /** The warm reader's postings: one cached partition per segment. */
+  def residentPostings: Option[RDD[SegmentPostings]] = cached.map(_._1)
+
+  override def postingsOf(terms: Seq[String]): Dataset[PostingsRow] =
+    residentPostings match {
+      case Some(segs) => SegmentPostings.rowsOf(spark, segs, terms)
+      case None => super.postingsOf(terms)
+    }
 
   /** DocRow columns of the docs table (the stored `text` field is
     * explicitly pruned — readers that want it use `storedFields`). */
@@ -133,6 +150,16 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     statsMap
   }
 
+  /** The loaded `termDfMap` dictionary in Spark's string order (code
+    * point order) — never triggers a job, so multi-term rewrites expand
+    * on the driver only once serving has loaded the dictionary. */
+  @volatile private var sortedTerms: Option[Array[String]] = None
+  def sortedTermsIfLoaded: Option[Array[String]] = {
+    if (sortedTerms.isEmpty)
+      statsMap.foreach(m => sortedTerms = Some(m.keys.toArray.sorted(InvertedIndex.CodePointOrder)))
+    sortedTerms
+  }
+
   /** Driver-side stored-fields cache for serving mode: docId → url,
     * loaded on demand when the docs table is small enough. Saves the
     * GET_FIELDS job per query (a web-scale deployment fronts this with
@@ -166,6 +193,17 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     }
     dlqsMap
   }
+
+  /** Materializes the cached docs table `d` and, under the maps' doc
+    * cap, loads the url and norms caches from the same scan (serving
+    * mode: stored fields and norms without a job). */
+  private def loadDocMaps(d: Dataset[DocRow], maxDocs: Long = 1L << 20): Unit =
+    if (stats.docCount > maxDocs) d.count()
+    else {
+      val rows = d.select("docId", "url", "dlq").as[(Long, String, Int)].collect()
+      urlsMap = Some(rows.iterator.map(r => r._1 -> r._2).toMap)
+      dlqsMap = Some(rows.iterator.map(r => r._1 -> r._3).toMap)
+    }
 
   /** The norms cache as a REUSABLE broadcast — one ship per searcher
     * lifetime, not one per query (re-broadcasting a 10^6-entry map per
@@ -210,24 +248,55 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
 
   /** Pin the segment tables in executor memory and materialize them —
     * the analogue of a warm MMapDirectory + preloaded norms in the
-    * reference's "warm searcher" serving mode. Opt-in: at full corpus
+    * reference's "warm searcher" serving mode. Postings become one
+    * resident flat layout per segment (SegmentPostings); docs and the
+    * term dictionary stay cached Datasets. Opt-in: at full corpus
     * scale you warm only the hot working set, so nothing in the query
     * path REQUIRES this. */
   def warm(): InvertedIndex = {
     if (cached.isEmpty) {
-      val p = spark.read.parquet(s"$dir/postings").as[PostingsRow].persist()
+      val segIds = graft.util.Json.obj(graft.util.Json.parse(manifest)).get("segments")
+        .map(graft.util.Json.arr(_).map(s =>
+          graft.util.Json.long(graft.util.Json.obj(s)("segId")).toInt))
+        .getOrElse(segments.map(_.segId).toSeq)
+      val p = SegmentPostings.resident(spark, s"$dir/postings", segIds)
       val d = docRowCols(spark.read.parquet(s"$dir/docs")).persist()
       val t = spark.read.parquet(s"$dir/termstats").persist()
-      p.count(); d.count(); t.count()
+      // each materialization is a few small tasks, bound by scheduling
+      // latency rather than cores: run them side by side
+      InvertedIndex.inParallel(() => p.count(), () => t.count(), () => loadDocMaps(d))
       cached = Some((p, d, t))
-      urlMap() // serving mode: stored-fields lookup without a job
-      dlqMap() // serving mode: in-RAM norms for the scoring kernels
     }
     this
   }
 }
 
 object InvertedIndex {
+  /** Schema of the postings parquet: PostingsRow's, as written. */
+  val PostingsSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.Encoders.product[PostingsRow].schema
+
+  /** Runs `tasks` on threads of their own and waits for all of them;
+    * the threads inherit the caller's Spark job group and pool. */
+  private def inParallel(tasks: (() => Any)*): Unit = {
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val threads = tasks.map(f => new Thread(() =>
+      try f() catch { case e: Throwable => failed.compareAndSet(null, e) }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failed.get).foreach(e => throw e)
+  }
+
+  /** Code point order — the order of UTF-8 bytes, which is how Spark
+    * sorts strings (String.compareTo orders UTF-16 units instead). */
+  val CodePointOrder: Ordering[String] = (a: String, b: String) => {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) Integer.compare(a.length, b.length)
+    else Integer.compare(a.codePointAt(i), b.codePointAt(i))
+  }
+
   def open(spark: SparkSession, dir: String): InvertedIndex = {
     require(Files.exists(Paths.get(dir, "manifest.json")),
       s"no committed index at $dir (manifest.json missing)")

@@ -22,6 +22,19 @@ import graft.util.{PFor, VarInt}
   * both paths agree on ranks.
   */
 object RelationalPath {
+  /** (docId, positions) of every posting in a row, in docId order — the
+    * one place that decodes the block/position format for the position
+    * readers. */
+  def positions(r: graft.model.PostingsRow): Iterator[(Long, Array[Int])] =
+    r.blocks.iterator.flatMap { b =>
+      val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
+      val pos = VarInt.decodePositions(b.positions, PFor.decodeInts(b.tfs, b.count))
+      docs.indices.iterator.map(i => (docs(i), pos(i)))
+    }
+
+  /** The corpus doc_id a url ends in (the relational output key). */
+  def docIdOfUrl(url: String): Long = url.substring(url.lastIndexOf('/') + 1).toLong
+
   /** Attribute predicate (AttrQ / AttrRangeQ) → boolean Column over the
     * docs table, typed from its schema (timestamp values parse,
     * numerics cast) — shared by the scorer path's bitset build and the
@@ -63,7 +76,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
   def tfTable(terms: Seq[String] = Nil): Dataset[(String, Long, Int)] = {
     val rows =
       if (terms.isEmpty) idx.postings
-      else idx.postings.filter(col("term").isin(terms: _*))
+      else idx.postingsOf(terms)
     rows.flatMap { r =>
       r.blocks.iterator.flatMap { b =>
         val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
@@ -75,10 +88,12 @@ final class RelationalPath(idx: graft.index.IndexView) {
 
   /** docs with the original doc_id recovered from the url; tombstoned
     * docs subtracted (anti join — the relational live-docs filter). */
-  def docsWithId: DataFrame = {
+  def docsWithId: DataFrame = liveDocsWithId(idx.hasDeletes)
+
+  private def liveDocsWithId(hasDeletes: Boolean): DataFrame = {
     val base = idx.docs.withColumn("doc_id",
       element_at(split(col("url"), "/"), -1).cast("long"))
-    if (idx.hasDeletes)
+    if (hasDeletes)
       base.join(idx.tombstones.toDF("docId"), Seq("docId"), "left_anti")
     else base
   }
@@ -579,22 +594,28 @@ final class RelationalPath(idx: graft.index.IndexView) {
   /** Shared tail of the position-verified doc queries (span-near,
     * interval combinators, interval sources): docs (ascending doc_id)
     * where `required` terms are all present and the decoded per-term
-    * position lists satisfy `verify`. Two execution shapes:
+    * position lists satisfy `verify`. Three execution shapes, chosen
+    * from ONE read of the reader's delete state:
     *
+    * - **Warm resident** (warm InvertedIndex, no deletes, urls cache
+    *   under its 2^20-doc cap): one narrow pass over the resident
+    *   segments — every doc's postings live in its own segment, so each
+    *   partition decodes and verifies its segment's docs and maps them
+    *   to doc_id through the urls broadcast; the driver sorts the
+    *   matching doc_ids. No shuffle, no join.
+    * - **Serving one-pass** (cold InvertedIndex, no deletes, urls cache
+    *   under its cap): ONE groupByKey over the query terms' positions
+    *   with the required-presence gate folded into the verifier and
+    *   doc_id recovered from the urls broadcast inside the same pass —
+    *   one shuffle, zero joins. The cap bounds the ungated shuffle: a
+    *   ≤2^20-doc corpus' position payload fits the verify stage even
+    *   for stop-word terms.
     * - **General two-phase** (the scale default): docId
     *   pre-intersection on `required` from the tf rows — with a hot
     *   term in the query the ANY-term candidate set would be the whole
     *   corpus, so the position payload of non-candidates must never
     *   reach the verify shuffle — then position decode + `verify` on
     *   the candidates only, then the docsWithId join for doc_id.
-    * - **Warm-serving one-pass** (InvertedIndex, no deletes, urls
-    *   cache under its 2^20-doc cap): ONE groupByKey over the query
-    *   terms' positions with the required-presence gate folded into
-    *   the verifier and doc_id recovered from the urls broadcast
-    *   inside the same pass — one shuffle, zero joins, the same
-    *   constant-plan-depth trade as the edismax kernel. The cap bounds
-    *   the ungated shuffle: a ≤2^20-doc corpus' position payload fits
-    *   the verify stage even for stop-word terms.
     *
     * `verify` sees exactly the terms present in the doc (NOT_*
     * reference terms of interval sources may be absent). */
@@ -603,13 +624,28 @@ final class RelationalPath(idx: graft.index.IndexView) {
       requiredTerms: Seq[String] = Nil): DataFrame = {
     val all = allTerms.distinct
     val req = (if (requiredTerms.isEmpty) allTerms else requiredTerms).distinct
-    val servingUrls = idx match {
-      case inv: graft.index.InvertedIndex if !inv.hasDeletes =>
-        inv.urlBroadcast()
+    val hasDeletes = idx.hasDeletes
+    val serving = idx match {
+      case inv: graft.index.InvertedIndex if !hasDeletes =>
+        inv.urlBroadcast().map(u => (u, inv.residentPostings))
       case _ => None
     }
-    servingUrls match {
-      case Some(urlsB) =>
+    serving match {
+      case Some((urlsB, Some(segs))) =>
+        segs.mapPartitions(_.flatMap { seg =>
+          val byDoc = scala.collection.mutable.HashMap.empty[Long,
+            scala.collection.mutable.HashMap[String, Array[Int]]]
+          seg.rows(all).foreach { r =>
+            RelationalPath.positions(r).foreach { case (d, p) =>
+              byDoc.getOrElseUpdate(d, scala.collection.mutable.HashMap.empty)(r.term) = p
+            }
+          }
+          byDoc.iterator.collect {
+            case (d, byTerm) if req.forall(byTerm.contains) && verify(byTerm) =>
+              RelationalPath.docIdOfUrl(urlsB.value(d))
+          }
+        }).collect().sorted.toSeq.toDF("doc_id")
+      case Some((urlsB, None)) =>
         positionsTable(all)
           .select(col("docId").cast("long"), col("term"), col("pos"))
           .as[(Long, String, Seq[Int])]
@@ -617,10 +653,9 @@ final class RelationalPath(idx: graft.index.IndexView) {
           .flatMapGroups { (docId, it) =>
             val byTerm = scala.collection.mutable.HashMap.empty[String, Array[Int]]
             it.foreach { case (_, t, p) => byTerm(t) = p.toArray }
-            if (req.forall(byTerm.contains) && verify(byTerm)) {
-              val u = urlsB.value(docId)
-              Iterator.single(u.substring(u.lastIndexOf('/') + 1).toLong)
-            } else Iterator.empty
+            if (req.forall(byTerm.contains) && verify(byTerm))
+              Iterator.single(RelationalPath.docIdOfUrl(urlsB.value(docId)))
+            else Iterator.empty
           }
           .toDF("doc_id").orderBy("doc_id")
       case None =>
@@ -641,7 +676,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
             else Iterator.empty
           }
           .toDF("docId")
-          .join(docsWithId.select("docId", "doc_id"), "docId")
+          .join(liveDocsWithId(hasDeletes).select("docId", "doc_id"), "docId")
           .select("doc_id").orderBy("doc_id")
     }
   }
@@ -678,15 +713,9 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * position source of spanNearDocs / phraseDocs / phraseScores (one
     * place knows the block/position format). */
   private[search] def positionsTable(terms: Seq[String]): DataFrame =
-    idx.postings.filter(col("term").isin(terms.distinct: _*))
-      .flatMap { r =>
-        r.blocks.iterator.flatMap { b =>
-          val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
-          val tfs = PFor.decodeInts(b.tfs, b.count)
-          val pos = VarInt.decodePositions(b.positions, tfs)
-          docs.indices.iterator.map(i => (r.term, docs(i), pos(i)))
-        }
-      }.toDF("term", "docId", "pos")
+    idx.postingsOf(terms)
+      .flatMap(r => RelationalPath.positions(r).map { case (d, p) => (r.term, d, p) })
+      .toDF("term", "docId", "pos")
 
   /** Bounded driver lookup of the terms' document frequencies (the
     * same shape as the Searcher's broadcast term stats). */

@@ -16,30 +16,59 @@ trait TermDict {
 
 /** Term dictionary over the termstats table — every lookup is a
   * predicate Catalyst pushes into the parquet scan (prefix → min/max
-  * row-group pruning; the dictionary is never enumerated on the driver)
-  * — the role of the reference's block-tree terms index
-  * [U lucene/core/.../codecs/blocktree/ + util/automaton/ for the
-  * matchers; Parquet stats replace the FST, SURVEY.md §2.4]. */
+  * row-group pruning) — the role of the reference's block-tree terms
+  * index [U lucene/core/.../codecs/blocktree/ + util/automaton/ for the
+  * matchers; Parquet stats replace the FST, SURVEY.md §2.4]. Once a
+  * serving reader has loaded its driver dictionary (`termDfMap`), prefix
+  * and fuzzy match against that instead, with the same results, order
+  * and expansion cap, and no job. */
 final class IndexTermDict(idx: graft.index.IndexView, maxExpansions: Int = 10000)
     extends TermDict {
   private val session = idx.spark
   import session.implicits._
 
-  private def run(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    val terms = df.select("term").orderBy("term")
-      .limit(maxExpansions + 1).as[String].collect().toSeq
+  private def capped(terms: Seq[String]): Seq[String] = {
     require(terms.size <= maxExpansions,
       s"multi-term query expands past $maxExpansions terms")
     terms
   }
 
-  def prefix(p: String): Seq[String] =
-    run(idx.termStats.filter(col("term").startsWith(p)))
+  private def run(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    capped(df.select("term").orderBy("term")
+      .limit(maxExpansions + 1).as[String].collect().toSeq)
+
+  /** A warm reader's loaded driver dictionary, sorted as `run` sorts:
+    * prefix and fuzzy match against it instead of running a job. */
+  private val warmTerms: Option[Array[String]] = idx match {
+    case inv: InvertedIndex => inv.sortedTermsIfLoaded
+    case _ => None
+  }
+
+  def prefix(p: String): Seq[String] = warmTerms match {
+    case Some(ts) =>
+      // prefix matches are one contiguous run of the sorted dictionary
+      var lo = 0
+      var hi = ts.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (InvertedIndex.CodePointOrder.lt(ts(mid), p)) lo = mid + 1 else hi = mid
+      }
+      capped(ts.iterator.drop(lo).takeWhile(_.startsWith(p))
+        .take(maxExpansions + 1).toSeq)
+    case None => run(idx.termStats.filter(col("term").startsWith(p)))
+  }
   def regex(re: String): Seq[String] =
     run(idx.termStats.filter(col("term").rlike(re)))
-  def fuzzy(term: String, maxEdits: Int): Seq[String] =
-    run(graft.index.TermFilters.fuzzyPruned(idx.termStats, term, maxEdits)
-      .filter(graft.index.TermFilters.withinEdits(col("term"), term, maxEdits)))
+  def fuzzy(term: String, maxEdits: Int): Seq[String] = warmTerms match {
+    case Some(ts) =>
+      capped(ts.iterator
+        .filter(t => math.abs(t.length - term.length) <= maxEdits &&
+          Rewriter.levenshteinDist(t, term) <= maxEdits)
+        .take(maxExpansions + 1).toSeq)
+    case None =>
+      run(graft.index.TermFilters.fuzzyPruned(idx.termStats, term, maxEdits)
+        .filter(graft.index.TermFilters.withinEdits(col("term"), term, maxEdits)))
+  }
   def range(lo: Option[String], hi: Option[String],
             il: Boolean, ih: Boolean): Seq[String] = {
     val conds =

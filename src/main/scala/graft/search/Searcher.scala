@@ -137,9 +137,19 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
 
   /** All scored hits of `q`, unranked (k caps per-segment emission when
     * > 0; pass k <= 0 for exhaustive evaluation). Multi-term queries
-    * are expanded against the term dictionary first (Query#rewrite). */
+    * are expanded against the term dictionary first (Query#rewrite).
+    *
+    * Plan shapes, chosen from ONE read of the reader's delete state (a
+    * delete landing mid-call cannot split the query over two states):
+    *  - warm reader, no deletes, no per-query docs rows needed: one
+    *    narrow pass over the resident segments — each partition looks up
+    *    the query terms and scores its segment, no shuffle;
+    *  - otherwise the postings rows of the query terms (`postingsOf`)
+    *    are grouped by segment, cogrouped with the docs rows when
+    *    attribute bits, match-all or deletes need them. */
   def scoredHits(q0: Query, k: Int,
                  after: Option[(Float, Long)] = None): Dataset[(Long, Float)] = {
+    val hasDeletes = idx.hasDeletes
     val qRewritten = Rewriter.rewrite(q0, new IndexTermDict(idx))
     // attribute predicates become indexed bitset lookups: evaluated ONCE
     // in the docs scan (pushdown-friendly), shipped as booleans
@@ -151,10 +161,8 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     val terms = Query.collectTerms(q)
     val hasMatchAll = Query.containsMatchAll(q)
     if (terms.isEmpty && !Query.needsDocs(q)) return idx.spark.emptyDataset[(Long, Float)]
-    val rows =
-      if (terms.isEmpty) idx.postings.limit(0)
-      else idx.postings.filter(col("term").isin(terms: _*))
     val kk = k
+    val aft = after
     // warm-serving filter cache (Solr filterCache): every attribute
     // predicate's docId bitmap is computed once and broadcast — the
     // per-query docs scan + cogroup disappears entirely for cached
@@ -162,12 +170,12 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     val cachedPredBits: Option[IndexedSeq[java.util.BitSet]] = idx match {
       case inv: graft.index.InvertedIndex
           // termAnchored: every candidate doc must have postings rows
-          // for the query terms in its own segment, or the postings
-          // groupByKey would drop whole segments (an attr-anchored
-          // query like `+lang:en -spark` — terms only under MUST_NOT —
-          // must keep the docs cogroup path)
+          // for the query terms in its own segment, or the per-segment
+          // scoring would drop whole segments (an attr-anchored query
+          // like `+lang:en -spark` — terms only under MUST_NOT — must
+          // keep the docs cogroup path)
           if Query.termAnchored(q) && preds.nonEmpty && !hasMatchAll &&
-            !idx.hasDeletes && inv.filterCacheEnabled =>
+            !hasDeletes && inv.filterCacheEnabled =>
         Some(preds.map { p =>
           inv.filterCache(p.toString) {
             FilterBits.build(idx.docs.filter(coalesce(predColumn(p), lit(false)))
@@ -176,67 +184,70 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
         }.toIndexedSeq)
       case _ => None
     }
-    if (cachedPredBits.isDefined) {
-      val bcBits = idx.spark.sparkContext.broadcast(cachedPredBits.get)
-      val aft = after
-      return rows.groupByKey(_.segId).flatMapGroups { (segId, ps) =>
+    val docsFree = cachedPredBits.isDefined || (!Query.needsDocs(q) && !hasDeletes)
+    val resident = idx match {
+      case inv: graft.index.InvertedIndex => inv.residentPostings
+      case _ => None
+    }
+    val bcBits = cachedPredBits.map(idx.spark.sparkContext.broadcast(_))
+    if (docsFree && resident.isDefined) {
+      return idx.spark.createDataset(resident.get.mapPartitions(_.flatMap { seg =>
+        SegmentScorer.score(bcQ.value, bcCtx.value, seg.rows(terms), None, kk, aft,
+          bcBits.fold(IndexedSeq.empty[java.util.BitSet])(_.value))
+      }))
+    }
+    val rows = idx.postingsOf(terms)
+    if (docsFree) {
+      return rows.groupByKey(_.segId).flatMapGroups { (_, ps) =>
         SegmentScorer.score(bcQ.value, bcCtx.value, ps, None, kk, aft,
-          bcBits.value)
+          bcBits.fold(IndexedSeq.empty[java.util.BitSet])(_.value))
       }
     }
     // deletes are subtracted INSIDE the per-segment scorer (a deleted
     // doc must not occupy a top-k slot), via the docs cogroup path
-    if (Query.needsDocs(q) || idx.hasDeletes) {
-      // null attribute values must read as non-matching, not poison the
-      // boolean array encoder on rows that travel for other reasons
-      val predCols = preds.map(p => coalesce(predColumn(p), lit(false)))
-      val withDel =
-        if (idx.hasDeletes)
-          idx.docs.join(idx.tombstones.toDF("docId").withColumn("del", lit(true)),
-            Seq("docId"), "left")
-            .withColumn("del", coalesce(col("del"), lit(false)))
-        else idx.docs.withColumn("del", lit(false))
-      // pre-filter: only rows that can influence scoring travel to the
-      // cogroup — any referenced predicate true, or tombstoned (full
-      // rows only for MatchAll, which needs every doc in general; a
-      // PURE constant-score match-all with k > 0 additionally cuts to
-      // the first k docIds per segment — rank is docId order, so the
-      // per-segment top-k is exactly the segment's lowest k live ids)
-      val matchAllCutoff: Option[org.apache.spark.sql.Column] = q match {
-        // `after.isEmpty`: a searchAfter cursor needs docIds PAST the
-        // first k per segment — the dense-prefix cutoff would hide the
-        // very rows page 2 must return
-        case MatchAllQ | ConstScoreQ(MatchAllQ, _)
-            if kk > 0 && !idx.hasDeletes && after.isEmpty =>
-          idx match {
-            case inv: graft.index.InvertedIndex if inv.segmentsDense =>
-              Some(inv.segments.map(s => col("docId").between(s.minDocId,
-                math.min(s.maxDocId, s.minDocId + kk - 1))).reduce(_ || _))
-            case _ => None
-          }
-        case _ => None
-      }
-      val needed =
-        if (hasMatchAll) matchAllCutoff.getOrElse(lit(true))
-        else (predCols :+ col("del")).reduce(_ || _)
-      val docsLite = withDel
-        .filter(needed)
-        .select(col("segId"), col("docId"),
-          (if (predCols.isEmpty) array().cast("array<boolean>")
-           else array(predCols: _*)).as("preds"),
-          col("del"))
-        .as[(Int, Long, Seq[Boolean], Boolean)]
-      val aft = after
-      rows.groupByKey(_.segId)
-        .cogroup(docsLite.groupByKey(_._1)) { (segId, ps, ds) =>
-          SegmentScorer.score(bcQ.value, bcCtx.value, ps, Some(ds), kk, aft)
+    // null attribute values must read as non-matching, not poison the
+    // boolean array encoder on rows that travel for other reasons
+    val predCols = preds.map(p => coalesce(predColumn(p), lit(false)))
+    val withDel =
+      if (hasDeletes)
+        idx.docs.join(idx.tombstones.toDF("docId").withColumn("del", lit(true)),
+          Seq("docId"), "left")
+          .withColumn("del", coalesce(col("del"), lit(false)))
+      else idx.docs.withColumn("del", lit(false))
+    // pre-filter: only rows that can influence scoring travel to the
+    // cogroup — any referenced predicate true, or tombstoned (full
+    // rows only for MatchAll, which needs every doc in general; a
+    // PURE constant-score match-all with k > 0 additionally cuts to
+    // the first k docIds per segment — rank is docId order, so the
+    // per-segment top-k is exactly the segment's lowest k live ids)
+    val matchAllCutoff: Option[org.apache.spark.sql.Column] = q match {
+      // `after.isEmpty`: a searchAfter cursor needs docIds PAST the
+      // first k per segment — the dense-prefix cutoff would hide the
+      // very rows page 2 must return
+      case MatchAllQ | ConstScoreQ(MatchAllQ, _)
+          if kk > 0 && !hasDeletes && after.isEmpty =>
+        idx match {
+          case inv: graft.index.InvertedIndex if inv.segmentsDense =>
+            Some(inv.segments.map(s => col("docId").between(s.minDocId,
+              math.min(s.maxDocId, s.minDocId + kk - 1))).reduce(_ || _))
+          case _ => None
         }
-    } else {
-      val aft = after
-      rows.groupByKey(_.segId).flatMapGroups { (segId, ps) =>
-        SegmentScorer.score(bcQ.value, bcCtx.value, ps, None, kk, aft)
-      }
+      case _ => None
     }
+    val needed =
+      if (hasMatchAll) matchAllCutoff.getOrElse(lit(true))
+      else (predCols :+ col("del")).reduce(_ || _)
+    val docsLite = withDel
+      .filter(needed)
+      .select(col("segId"), col("docId"),
+        (if (predCols.isEmpty) array().cast("array<boolean>")
+         else array(predCols: _*)).as("preds"),
+        col("del"))
+      .as[(Int, Long, Seq[Boolean], Boolean)]
+    rows.groupByKey(_.segId)
+      .cogroup(docsLite.groupByKey(_._1)) { (_, ps, ds) =>
+        SegmentScorer.score(bcQ.value, bcCtx.value, ps, Some(ds), kk, aft)
+      }
   }
 }
 

@@ -305,6 +305,12 @@ final class ByteBuilder(initial: Int) {
     buf(len) = b
     len += 1
   }
+  def ++=(a: Array[Byte]): Unit = {
+    if (len + a.length > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + a.length))
+    System.arraycopy(a, 0, buf, len, a.length)
+    len += a.length
+  }
   def result(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
   /** Bytes currently buffered (for RAM-budget accounting). */
   def size: Int = len

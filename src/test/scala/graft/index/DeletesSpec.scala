@@ -3,7 +3,7 @@ package graft.index
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.model.Page
+import graft.model.{Page, PostingsRow}
 import graft.search._
 
 import org.apache.spark.sql.Dataset
@@ -146,6 +146,52 @@ class DeletesSpec extends SparkSpec {
     // compaction keeps stable docIds (no renumbering, like a Lucene
     // merge keeping the segment map) — the density note is expected
     assert(CheckIndex.audit(compacted).forall(_.contains("docId space")))
+  }
+
+  test("warm reader with pending tombstones never returns a deleted doc") {
+    val rnd = new scala.util.Random(777L)
+    val vocab = Seq("the", "spark", "join", "merge", "sort", "window", "batch", "rare1")
+    val corpus = (0 until 150).map { i =>
+      val words = (0 until 3 + rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.length)))
+      (f"https://wd/$i%05d", words.mkString(" "), if (i % 3 == 0) "de" else "en")
+    }
+    val dir = Files.createTempDirectory("graft-warmdel").toString
+    val idx = IndexBuilder.build(spark, mkPagesFrom(corpus), dir,
+      IndexConfig(numPartitions = 3, partsPerSegment = 1, blockSize = 16,
+        hotTermDf = 40, numSalts = 2, hotSampleRate = 1.0)).warm()
+    val queries = Seq[Query](TermQ("spark"), Query.and("spark", "join"),
+      Query.or("window", "batch"), Query.not("the", "merge"),
+      Query.orMM(2, "sort", "merge", "rare1"), PhraseQ(Seq("spark", "join")),
+      BoolQ(must = Seq(TermQ("the")), filter = Seq(AttrQ("lang", "en"))), MatchAllQ)
+    val searcher = new Searcher(idx)
+    val before = queries.map(q => searcher.scoredHits(q, -1).collect().toMap)
+
+    // the resident layout serves exactly the parquet rows
+    def key(r: PostingsRow) = (r.segId, r.term, r.salt, r.df, r.ttf,
+      r.blocks.map(b => (b.firstDocId, b.maxDocId, b.count, b.maxTf, b.minNorm,
+        b.maxImpact, b.docs.toSeq, b.tfs.toSeq, b.norms.toSeq, b.positions.toSeq)))
+    val terms = Seq("spark", "the", "rare1", "absent")
+    val resident = idx.postingsOf(terms)
+    assert(resident.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.isEmpty)
+    assert(resident.collect().map(key).sortBy(k => (k._1, k._2, k._3)).toSeq ===
+      idx.postings.filter(col("term").isin(terms: _*)).collect().map(key)
+        .sortBy(k => (k._1, k._2, k._3)).toSeq)
+
+    val doomed = corpus.indices.filter(_ => rnd.nextDouble() < 0.3).map(_.toLong).toSet
+    Deletes.deleteByUrl(idx, doomed.toSeq.map(i => corpus(i.toInt)._1))
+    assert(idx.hasDeletes && idx.residentPostings.isDefined)
+    val cold = new Searcher(InvertedIndex.open(spark, dir))
+    queries.zip(before).foreach { case (q, all) =>
+      val got = searcher.scoredHits(q, -1).collect().toMap
+      assert(got.keySet.intersect(doomed).isEmpty, s"deleted doc leaked in $q")
+      // survivors keep their scores: collection stats still count the
+      // tombstoned docs until compaction
+      assert(got === all -- doomed, s"survivors changed in $q")
+      assert(got === cold.scoredHits(q, -1).collect().toMap, s"warm != cold on $q")
+      val top = searcher.topK(q, 10).collect().map(_.getLong(1))
+      assert(top.forall(d => !doomed.contains(d)), s"deleted doc in top-k of $q")
+    }
   }
 
   private def mkPagesFrom(corpus: Seq[(String, String, String)]): Dataset[Page] = {

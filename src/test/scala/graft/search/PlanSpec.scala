@@ -151,10 +151,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("span-near serving: single MapGroups pass, zero joins") {
-    // a warm InvertedIndex with no deletes takes the one-pass serving
+    // a cold InvertedIndex with no deletes takes the one-pass serving
     // shape: one groupByKey over the terms' positions, doc_id from the
-    // urls broadcast — no candidate join, no docsWithId join
-    val rel = new RelationalPath(idx)
+    // urls broadcast — no candidate join, no docsWithId join (a fresh
+    // reader: the shared one may have been warmed by another suite, and
+    // a warm reader runs no plan at all — see the job-count spec below)
+    val rel = new RelationalPath(graft.index.InvertedIndex.open(spark, idx.dir))
     val p = plan(rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true))
     assert(!p.contains("UDF("), "opaque UDF filter in span-near plan")
     assert(!p.contains("collect_list"), "ANY-term collect in span-near plan")
@@ -186,6 +188,39 @@ class PlanSpec extends SparkSpec {
     val below = p.drop(iVerify)
     assert(below.contains("Join") && below.contains("count("),
       below.take(3000))
+  }
+
+  test("warm reader, no deletes: scorer and span families run as ONE job, no shuffle") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val s = new Searcher(warm)
+    val rel = new RelationalPath(warm)
+    val page1 = s.topK(Query.or("spark", "merge"), 3).collect()
+    val (afterScore, afterDoc) = (page1.last.getFloat(3), page1.last.getLong(1))
+    val families: Seq[(String, () => Any)] = Seq(
+      "term" -> (() => s.topK(TermQ("spark"), 10).collect()),
+      "and" -> (() => s.topK(Query.and("spark", "join"), 10).collect()),
+      "or" -> (() => s.topK(Query.or("window", "batch"), 10).collect()),
+      "or_mm" -> (() => s.topK(Query.orMM(2, "sort", "merge", "window"), 10).collect()),
+      "not" -> (() => s.topK(Query.not("spark", "merge"), 10).collect()),
+      "filter" -> (() => s.topK(BoolQ(must = Seq(TermQ("spark")),
+        filter = Seq(AttrQ("lang", "en"))), 10).collect()),
+      "phrase" -> (() => s.topK(PhraseQ(Seq("batch", "batch")), 10).collect()),
+      "after" -> (() => s.topKAfter(Query.or("spark", "merge"), 3, afterScore, afterDoc).collect()),
+      "fuzzy" -> (() => s.topK(FuzzyQ("spork", 1), 10).collect()),
+      "span-near" -> (() => rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect()),
+      "intervals" -> (() => rel.intervalContainingDocs(Seq("spark", "merge"), 6, "the").collect()))
+    families.foreach { case (name, run) =>
+      run() // first call loads the driver caches (dictionary, filter bitmap)
+      val c = org.apache.spark.JobCounts.of(spark.sparkContext)(run())
+      assert(c.jobs === 1, s"$name: ${c.jobs} jobs")
+      assert(c.stages === 1, s"$name: ${c.stages} stages submitted — a shuffle ran")
+    }
+    // edismax keeps its one-shuffle kernel over the resident postings
+    val edis = () => EDisMax.topK(Seq(warm -> 1.0), EDisMax.parse("spark merge window", "50%"), 10)
+      .collect()
+    edis()
+    val e = org.apache.spark.JobCounts.of(spark.sparkContext)(edis())
+    assert(e.jobs <= 2 && e.stages <= 2, s"edismax: $e")
   }
 
   test("postings scan prunes columns (term stats never read blocks)") {

@@ -115,14 +115,19 @@ class RandomizedSearchSpec extends SparkSpec {
         Files.createTempDirectory(s"graft-rand$seed").toString, cfg)
       val oracle = new SpecOracle(corpus)
       val searcher = new Searcher(idx)
+      val queries = (1 to 25).map(_ => randQuery(rnd))
 
-      (1 to 25).foreach { qi =>
-        val q = randQuery(rnd)
+      def check(mode: String): Unit = queries.zipWithIndex.foreach { case (q, qi) =>
         val got = searcher.topK(q, 10).collect()
           .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getFloat(3))).toSeq
         val expected = oracle.topK(q, 10)
-        assert(got === expected, s"seed=$seed query#$qi $q")
+        assert(got === expected, s"$mode seed=$seed query#${qi + 1} $q")
       }
+      // the cold reader's parquet plans, then the same reader warm
+      // (resident segment postings, driver caches, filter bitmaps)
+      check("cold")
+      idx.warm()
+      check("warm")
     }
   }
 }

@@ -122,6 +122,30 @@ class SearchSpec extends SparkSpec {
     }
   }
 
+  test("warm dictionary expands fuzzy and prefix exactly as the termStats scan, with no job") {
+    val copy = indexCopy(idx.dir)
+    val cold = graft.index.InvertedIndex.open(spark, idx.dir)
+    val warm = graft.index.InvertedIndex.open(spark, copy).warm()
+    val dict = warm.termDfMap().get.keys.toSeq.sorted
+    assert(cold.sortedTermsIfLoaded.isEmpty && warm.sortedTermsIfLoaded.isDefined)
+    val coldDict = new IndexTermDict(cold)
+    val warmDict = new IndexTermDict(warm)
+    val prefixes = ("" +: "zzz_absent" +: dict.map(_.take(1)).distinct) ++
+      dict.filter(_.length >= 3).map(_.take(3)).distinct.take(20)
+    prefixes.foreach(p => assert(warmDict.prefix(p) === coldDict.prefix(p), s"prefix '$p'"))
+    val words = Seq("spork", "zzz_absent", "a") ++ dict.grouped(math.max(1, dict.size / 12)).map(_.head)
+    for (w <- words; e <- 0 to 2)
+      assert(warmDict.fuzzy(w, e) === coldDict.fuzzy(w, e), s"fuzzy '$w'~$e")
+    // the maxExpansions cap trips on both
+    Seq(cold, warm).foreach { r =>
+      intercept[IllegalArgumentException](new IndexTermDict(r, maxExpansions = 2).prefix(""))
+    }
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext) {
+      warmDict.prefix("s"); warmDict.fuzzy("spork", 1)
+    }
+    assert(c.jobs === 0)
+  }
+
   test("FilterBits: executor-side bitmap == row collect; O(partitions) blobs only") {
     import org.apache.spark.sql.functions._
     val matching = idx.docs

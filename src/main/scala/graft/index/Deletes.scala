@@ -2,8 +2,16 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.model.{PostingsRow, SegmentInfo}
+import graft.search.Bm25Stats
+import graft.util.{Json, PFor, VarInt}
 
 /** Delete-by-term / delete-by-key tombstones + compaction — the
   * analogue of the reference's live-docs bitsets and merge-time
@@ -14,8 +22,9 @@ import org.apache.spark.sql.functions._
   * index; queries subtract them INSIDE the per-segment scorer (so a
   * deleted doc never occupies a top-k slot) and the relational path
   * anti-joins them. `compact` rewrites postings/docs dropping deleted
-  * docs (docIds stay stable, as in a Lucene merge without renumbering
-  * — renumbering would invalidate nothing here but is unnecessary). */
+  * docs into a new generation (docIds stay stable, as in a Lucene merge
+  * without renumbering — renumbering would invalidate nothing here but
+  * is unnecessary). */
 object Deletes {
 
   def tombstonePath(dir: String): String = s"$dir/tombstones"
@@ -27,8 +36,7 @@ object Deletes {
   def tombstones(spark: SparkSession, dir: String): Dataset[java.lang.Long] = {
     import spark.implicits._
     if (!hasTombstones(dir)) spark.emptyDataset[java.lang.Long]
-    else spark.read.parquet(tombstonePath(dir)).select("docId")
-      .as[java.lang.Long]
+    else InvertedIndex.read(spark, dir, "tombstones").select("docId").as[java.lang.Long]
   }
 
   /** Tombstone docs by unique key (url) — the reference's
@@ -51,126 +59,124 @@ object Deletes {
   def expire(idx: InvertedIndex, olderThan: java.sql.Timestamp): Unit =
     deleteWhere(idx, col("ts") < olderThan)
 
-  /** Rewrite the index dropping tombstoned docs: postings are exploded
-    * to occurrences, ANTI-JOINED against the tombstone table (fully
-    * distributed — the tombstone set is never collected to the driver,
-    * so %-scale deletes of a web corpus stream through a shuffle
-    * instead of OOMing a broadcast), then regrouped and re-blocked with
-    * the primary build's block layout; docs rows dropped the same way;
-    * stats recomputed; manifest generation bumped; tombstones cleared.
-    * A merge-policy compaction in one pass. */
+  /** Rewrite the index without its tombstoned docs as the next
+    * generation — a merge-policy compaction in one pass:
+    *  - the tombstoned docIds are collected to the driver ONCE, as a
+    *    sorted `Array[Long]`, and broadcast: driver and executor memory
+    *    is bounded by 8 bytes per pending delete;
+    *  - one docs aggregate grouped by segId (count, Σdl, min and max
+    *    docId) gives the new collection stats, the segments table and
+    *    the manifest's segment ranges;
+    *  - postings: ONE narrow pass over the postings rows, no shuffle (a
+    *    row is already one (segId, term, salt) key in docId order):
+    *    each row drops its deleted docIds and re-blocks the survivors
+    *    under the new stats (`postingsWithout`); emptied rows vanish;
+    *  - docs: a narrow filter; termstats regrouped from the new postings.
+    * The tables go to `tables-<generation>`, a directory of the new
+    * generation's own that the manifest names, so no cached plan of an
+    * older reader ever matches them. The manifest commit publishes the
+    * generation; then the previous generation's tables and the applied
+    * tombstones are deleted, under any reader still reading them. */
   def compact(idx: InvertedIndex): InvertedIndex = {
     val spark = idx.spark
     import spark.implicits._
     val dir = idx.dir
     if (!hasTombstones(dir)) return idx
 
-    val tomb = tombstones(spark, dir).toDF("docId")
+    val manifest = InvertedIndex.readManifest(dir)
+    val from = InvertedIndex.tablesDir(dir, manifest)
+    val gen = InvertedIndex.generationOf(manifest) + 1
+    val tables = s"tables-$gen"
+    val to = s"$dir/$tables"
+
+    val dead = tombstones(spark, dir).as[Long].collect()
+    java.util.Arrays.sort(dead)
+    val bcDead = spark.sparkContext.broadcast(dead)
+    val live = udf((d: Long) => java.util.Arrays.binarySearch(bcDead.value, d) < 0)
 
     // raw parquet (not idx.docs): the stored text column must survive
     // compaction with the rest of the row
-    val newDocs = spark.read.parquet(s"$dir/docs")
-      .join(tomb, Seq("docId"), "left_anti")
-    val stats = newDocs.agg(count(lit(1)), sum("dl").cast("long"))
-      .as[(Long, Long)].head()
-    val bm = graft.search.Bm25Stats(stats._1, stats._2)
-    val bcStats = spark.sparkContext.broadcast(bm)
-    val blockSize = graft.util.Json.obj(graft.util.Json.parse(idx.manifest))
-      .get("config").map(c => graft.util.Json.long(graft.util.Json.obj(c)("blockSize")).toInt)
-      .getOrElse(128)
-
-    val occurrences = idx.postings.flatMap { r =>
-      r.blocks.iterator.flatMap { b =>
-        val docs = graft.util.PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
-        val tfs = graft.util.PFor.decodeInts(b.tfs, b.count)
-        val pos = graft.util.VarInt.decodePositions(b.positions, tfs)
-        docs.indices.iterator.map(i =>
-          (r.segId, r.term, r.salt, docs(i), tfs(i), b.norms(i), pos(i)))
-      }
-    }.toDF("segId", "term", "salt", "docId", "tf", "norm", "pos")
-
-    val newPostings = occurrences
-      .join(tomb, Seq("docId"), "left_anti")
-      .repartition(col("segId"), col("term"), col("salt"))
-      .sortWithinPartitions("segId", "term", "salt", "docId")
-      .select("segId", "term", "salt", "docId", "tf", "norm", "pos")
-      .as[(Int, String, Int, Long, Int, Byte, Array[Int])]
-      .mapPartitions { it =>
-        // streaming regroup: input sorted by (segId, term, salt, docId)
-        val in = it.buffered
-        new Iterator[graft.model.PostingsRow] {
-          def hasNext: Boolean = in.hasNext
-          def next(): graft.model.PostingsRow = {
-            val head = in.head
-            val key = (head._1, head._2, head._3)
-            val group = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Int, Byte, Array[Int])]
-            while (in.hasNext && (in.head._1, in.head._2, in.head._3) == key) {
-              val r = in.next()
-              group += ((r._4, r._5, r._6, r._7))
-            }
-            IndexBuilder.reblock(key._1, key._2, key._3, group.toSeq,
-              bcStats.value, blockSize)
-          }
-        }
-      }
-
-    // write compacted tables to new dirs, then swap via manifest rewrite
-    newPostings.toDF().write.mode("overwrite").parquet(s"$dir/postings2")
-    newDocs.write.mode("overwrite").parquet(s"$dir/docs2")
+    val docs = InvertedIndex.read(spark, from, "docs").filter(live(col("docId")))
+    val segs = docs.groupBy("segId")
+      .agg(count(lit(1)), sum("dl").cast("long"), min("docId"), max("docId"))
+      .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1)
     // segments metadata MUST track the compacted docs: min/max stay
     // correct but docIds are now SPARSE inside them, and the dense-
     // prefix consumers (MatchAll docId-cutoff, early-terminating sorted
     // reads) decide from nDocs == max-min+1 whether a segment is dense
-    spark.read.parquet(s"$dir/docs2").groupBy("segId")
-      .agg(count(lit(1)).as("nDocs"),
-        min("docId").as("minDocId"), max("docId").as("maxDocId"))
-      .select(col("segId").cast("int"), col("nDocs").cast("long"),
-        col("minDocId").cast("long"), col("maxDocId").cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/segments2")
-    // term stats from the JUST-WRITTEN compacted postings (columnar
-    // term/df/ttf scan) — recomputing from newPostings would re-run the
-    // whole explode→anti-join→re-block pipeline a second time
-    TermFilters.withFilterCols(
-      spark.read.parquet(s"$dir/postings2").groupBy("term")
-        .agg(sum("df").as("df"), sum("ttf").as("ttf")))
-      .write.mode("overwrite").parquet(s"$dir/termstats2")
+    val segInfos = segs.map { case (s, n, _, lo, hi) => SegmentInfo(s, n, lo, hi) }
+    val bm = Bm25Stats(segs.map(_._2).sum, segs.map(_._3).sum)
+    val blockSize = manifest.get("config")
+      .map(c => Json.long(Json.obj(c)("blockSize")).toInt).getOrElse(128)
 
-    // atomic-ish swap (directory renames; manifest written last)
-    def swap(name: String): Unit = {
-      val old = Paths.get(dir, name)
-      val tmp = Paths.get(dir, s"$name.old")
-      Files.move(old, tmp)
-      Files.move(Paths.get(dir, s"${name}2"), old)
-      deleteRecursive(tmp)
-    }
-    swap("postings"); swap("docs"); swap("termstats"); swap("segments")
-    deleteRecursive(Paths.get(tombstonePath(dir)))
+    InvertedIndex.inParallel(
+      () => {
+        postingsWithout(InvertedIndex.read(spark, from, "postings").as[PostingsRow],
+          bcDead, bm, blockSize).write.mode("overwrite").parquet(s"$to/postings")
+        // term stats from the just-written postings (columnar term/df/ttf)
+        TermFilters.withFilterCols(InvertedIndex.read(spark, to, "postings").groupBy("term")
+          .agg(sum("df").as("df"), sum("ttf").as("ttf")))
+          .write.mode("overwrite").parquet(s"$to/termstats")
+      },
+      () => docs.write.mode("overwrite").parquet(s"$to/docs"),
+      () => spark.createDataset(segInfos.toSeq).coalesce(1)
+        .write.mode("overwrite").parquet(s"$to/segments"))
 
-    val manifest = new String(Files.readAllBytes(Paths.get(dir, "manifest.json")))
-    val m = graft.util.Json.obj(graft.util.Json.parse(manifest))
-    val gen = m.get("generation").map(graft.util.Json.long).getOrElse(1L)
-    // the embedded segments array must track the swapped segments
-    // parquet — a stale copy would describe pre-compaction dense ranges
-    val segArr: Vector[Any] = spark.read.parquet(s"$dir/segments")
-      .as[graft.model.SegmentInfo].collect().sortBy(_.segId).toVector
-      .map(s => scala.collection.immutable.ListMap[String, Any](
-        "segId" -> s.segId.toLong, "nDocs" -> s.nDocs,
-        "minDocId" -> s.minDocId, "maxDocId" -> s.maxDocId))
-    val updated = graft.util.Json.write(m
-      .updated("generation", gen + 1)
+    val updated = Json.write(manifest
+      .updated("generation", gen)
+      .updated("tables", tables)
       .updated("docCount", bm.docCount)
       .updated("sumTotalTermFreq", bm.sumTotalTermFreq)
-      // avgdl tracks the post-compaction stats (the regex rewrite used
-      // to leave it stale — informational, but keep it truthful)
       .updated("avgdl", bm.sumTotalTermFreq.toDouble / math.max(1L, bm.docCount))
-      .updated("segments", segArr))
+      .updated("segments", segInfos.toVector.map(s => ListMap[String, Any](
+        "segId" -> s.segId.toLong, "nDocs" -> s.nDocs,
+        "minDocId" -> s.minDocId, "maxDocId" -> s.maxDocId))))
     val tmp = Paths.get(dir, ".manifest.json.tmp")
     Files.write(tmp, updated.getBytes)
     Files.move(tmp, Paths.get(dir, "manifest.json"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+
+    // a fresh build keeps its tables in the index directory itself
+    if (from == dir) Seq("postings", "docs", "termstats", "segments")
+      .foreach(t => deleteRecursive(Paths.get(dir, t)))
+    else deleteRecursive(Paths.get(from))
+    deleteRecursive(Paths.get(tombstonePath(dir)))
     InvertedIndex.open(spark, dir)
+  }
+
+  /** `postings` without the docIds in `dead` (sorted): each row's
+    * survivors re-blocked under `stats` with the build's block layout,
+    * rows left empty dropped. One narrow pass — the rows keep their
+    * partitions, so no shuffle runs. */
+  private[index] def postingsWithout(postings: Dataset[PostingsRow], dead: Broadcast[Array[Long]],
+                                     stats: Bm25Stats, blockSize: Int): Dataset[PostingsRow] = {
+    import postings.sparkSession.implicits._
+    postings.mapPartitions { rows =>
+      val gone = dead.value
+      rows.flatMap { r =>
+        val docIds = mutable.ArrayBuilder.make[Long]
+        val tfs = mutable.ArrayBuilder.make[Int]
+        val norms = mutable.ArrayBuilder.make[Byte]
+        val positions = mutable.ArrayBuilder.make[Array[Int]]
+        r.blocks.foreach { b =>
+          val ds = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
+          val ts = PFor.decodeInts(b.tfs, b.count)
+          val ps = VarInt.decodePositions(b.positions, ts)
+          var i = 0
+          while (i < b.count) {
+            if (java.util.Arrays.binarySearch(gone, ds(i)) < 0) {
+              docIds += ds(i); tfs += ts(i); norms += b.norms(i); positions += ps(i)
+            }
+            i += 1
+          }
+        }
+        val kept = docIds.result()
+        if (kept.isEmpty) None
+        else Some(IndexBuilder.reblock(r.segId, r.term, r.salt, kept, tfs.result(),
+          norms.result(), positions.result(), stats.cache, blockSize))
+      }
+    }
   }
 
   private def deleteRecursive(p: java.nio.file.Path): Unit =

@@ -844,19 +844,13 @@ object IndexBuilder {
     }
   }
 
-  /** Re-block decoded postings (compaction path): same block layout and
-    * block-max metadata as the primary build. */
-  def reblock(segId: Int, term: String, salt: Int,
-              postings: Seq[(Long, Int, Byte, Array[Int])],
-              stats: Bm25Stats, blockSize: Int = 128): PostingsRow = {
-    val cache = BM25.buildCache(stats.avgdl)
-    val n = postings.length
-    val docIds = postings.map(_._1).toArray
-    val tfs = postings.map(_._2).toArray
-    val norms = postings.map(_._3).toArray
-    val pos = postings.map(_._4).toArray
-    packBlocks(segId, term, salt, docIds, tfs, norms, pos, cache, blockSize)
-  }
+  /** Re-block one row's decoded postings, in docId order (compaction
+    * path): same block layout and block-max metadata as the primary
+    * build, under the BM25 length cache `cache` of the new stats. */
+  def reblock(segId: Int, term: String, salt: Int, docIds: Array[Long],
+              tfs: Array[Int], norms: Array[Byte], positions: Array[Array[Int]],
+              cache: Array[Float], blockSize: Int): PostingsRow =
+    packBlocks(segId, term, salt, docIds, tfs, norms, positions, cache, blockSize)
 
   private def buildRow(group: mutable.ArrayBuffer[Run], head: Run,
                        cache: Array[Float], blockSize: Int): PostingsRow = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{DocRow, PostingsRow}
 import graft.search.Bm25Stats
+import graft.util.Json
 
 /** A queryable view of an index: the contract the search paths
   * (Searcher, RelationalPath, IndexTermDict, CheckIndex) depend on —
@@ -35,24 +36,31 @@ trait IndexView {
 final class InvertedIndex(val spark: SparkSession, val dir: String) extends IndexView {
   import spark.implicits._
 
-  val manifest: String =
-    new String(Files.readAllBytes(Paths.get(dir, "manifest.json")))
+  /** The manifest this reader opened at. */
+  private val manifest = InvertedIndex.readManifest(dir)
 
   /** Collection stats from the manifest — no job needed at query time. */
-  val stats: Bm25Stats = {
-    val m = graft.util.Json.obj(graft.util.Json.parse(manifest))
-    Bm25Stats(graft.util.Json.long(m("docCount")),
-      graft.util.Json.long(m("sumTotalTermFreq")))
-  }
+  val stats: Bm25Stats = Bm25Stats(Json.long(manifest("docCount")),
+    Json.long(manifest("sumTotalTermFreq")))
+
+  /** Generation this reader opened at. */
+  val generation: Long = InvertedIndex.generationOf(manifest)
+
+  /** Directory of this reader's generation's tables: what `warm()` pins. */
+  val tablesDir: String = InvertedIndex.tablesDir(dir, manifest)
+
+  /** Directory of the on-disk generation's tables. Uncached reads go
+    * there: a compaction deletes the previous generation's tables once
+    * its manifest is committed, so an open reader follows it. */
+  private def diskTables: String = InvertedIndex.tablesDir(dir, InvertedIndex.readManifest(dir))
 
   @volatile private var cached
       : Option[(RDD[SegmentPostings], Dataset[DocRow], DataFrame)] = None
 
   /** The whole postings table, always read from parquet: warm serving
-    * reads postings through `postingsOf` and the resident segments. The
-    * schema is the row type's, so opening the scan runs no footer job. */
+    * reads postings through `postingsOf` and the resident segments. */
   def postings: Dataset[PostingsRow] =
-    spark.read.schema(InvertedIndex.PostingsSchema).parquet(s"$dir/postings").as[PostingsRow]
+    InvertedIndex.read(spark, diskTables, "postings").as[PostingsRow]
 
   /** The warm reader's postings: one cached partition per segment. */
   def residentPostings: Option[RDD[SegmentPostings]] = cached.map(_._1)
@@ -70,57 +78,40 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
       .as[DocRow]
 
   def docs: Dataset[DocRow] = cached.map(_._2)
-    .getOrElse(docRowCols(spark.read.parquet(s"$dir/docs")))
+    .getOrElse(docRowCols(InvertedIndex.read(spark, diskTables, "docs")))
 
   /** Stored fields (docId, url, text) — the .fdt analogue; the text
     * column lives in the docs parquet but is column-pruned away from
     * every scoring path. */
   def storedFields: DataFrame =
-    spark.read.parquet(s"$dir/docs").select("docId", "url", "text")
+    InvertedIndex.read(spark, diskTables, "docs").select("docId", "url", "text")
 
   def termStats: DataFrame = cached.map(_._3)
-    .getOrElse(spark.read.parquet(s"$dir/termstats"))
+    .getOrElse(InvertedIndex.read(spark, diskTables, "termstats"))
 
-  def lineage: DataFrame = spark.read.parquet(s"$dir/lineage")
-
-  /** Generation this reader opened at. */
-  val generation: Long = {
-    val m = graft.util.Json.obj(graft.util.Json.parse(manifest))
-    m.get("generation").map(graft.util.Json.long).getOrElse(1L)
-  }
+  def lineage: DataFrame = InvertedIndex.read(spark, dir, "lineage")
 
   /** Current on-disk generation (one tiny driver file read) — drifts
-    * past `generation` when `Deletes.compact` rewrites the directory
-    * IN PLACE under this open reader. */
-  def diskGeneration: Long = {
-    val m = graft.util.Json.obj(graft.util.Json.parse(
-      new String(Files.readAllBytes(Paths.get(dir, "manifest.json")))))
-    m.get("generation").map(graft.util.Json.long).getOrElse(1L)
-  }
+    * past `generation` when `Deletes.compact` commits a new generation
+    * under this open reader. */
+  def diskGeneration: Long = InvertedIndex.generationOf(InvertedIndex.readManifest(dir))
 
   /** Fresh reader if the directory moved to a new generation
     * (DirectoryReader.openIfChanged). */
   def reopenIfChanged(): InvertedIndex =
     if (diskGeneration != generation) new InvertedIndex(spark, dir) else this
 
-  /** Per-segment docId ranges (driver-side, O(numSegments)) — the
-    * SegmentInfos the early-terminating sorted read plans against.
-    * Keyed on the on-disk generation: an in-place compaction under a
-    * live reader must NOT leave the dense-prefix consumers (MatchAll
-    * docId-cutoff, early-terminating sorted reads) planning against
-    * pre-compaction ranges — they would silently drop the live docs
-    * that now sit past the stale dense window. The refreshed table
+  /** Per-segment docId ranges (driver-side, O(numSegments), from the
+    * manifest — no job) — the SegmentInfos the early-terminating sorted
+    * read plans against. Read from the ON-DISK manifest: a compaction
+    * under a live reader must NOT leave the dense-prefix consumers
+    * (MatchAll docId-cutoff, early-terminating sorted reads) planning
+    * against pre-compaction ranges — they would silently drop the live
+    * docs that now sit past the stale dense window. The refreshed table
     * shows the sparse post-compaction ranges, so those consumers fall
     * back to the full scan. */
-  @volatile private var segInfos
-      : Option[(Long, Array[graft.model.SegmentInfo])] = None
-  def segments: Array[graft.model.SegmentInfo] = {
-    val gen = diskGeneration
-    if (!segInfos.exists(_._1 == gen))
-      segInfos = Some((gen, spark.read.parquet(s"$dir/segments")
-        .as[graft.model.SegmentInfo].collect().sortBy(_.segId)))
-    segInfos.get._2
-  }
+  def segments: Array[graft.model.SegmentInfo] =
+    InvertedIndex.segmentsOf(InvertedIndex.readManifest(dir))
 
   /** Whether every segment's docIds form a gap-free range — the
     * precondition for dense-prefix reads (MatchAll docId-cutoff,
@@ -250,18 +241,18 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * the analogue of a warm MMapDirectory + preloaded norms in the
     * reference's "warm searcher" serving mode. Postings become one
     * resident flat layout per segment (SegmentPostings); docs and the
-    * term dictionary stay cached Datasets. Opt-in: at full corpus
-    * scale you warm only the hot working set, so nothing in the query
-    * path REQUIRES this. */
+    * term dictionary stay cached Datasets. The tables are this reader's
+    * generation's (`tablesDir`): each generation has a directory of its
+    * own, so Spark's cache, which matches a plan by its paths, never
+    * hands one generation's cached tables to another's reader. Opt-in:
+    * at full corpus scale you warm only the hot working set, so nothing
+    * in the query path REQUIRES this. */
   def warm(): InvertedIndex = {
     if (cached.isEmpty) {
-      val segIds = graft.util.Json.obj(graft.util.Json.parse(manifest)).get("segments")
-        .map(graft.util.Json.arr(_).map(s =>
-          graft.util.Json.long(graft.util.Json.obj(s)("segId")).toInt))
-        .getOrElse(segments.map(_.segId).toSeq)
-      val p = SegmentPostings.resident(spark, s"$dir/postings", segIds)
-      val d = docRowCols(spark.read.parquet(s"$dir/docs")).persist()
-      val t = spark.read.parquet(s"$dir/termstats").persist()
+      val segIds = InvertedIndex.segmentsOf(manifest).map(_.segId).toSeq
+      val p = SegmentPostings.resident(spark, s"$tablesDir/postings", segIds)
+      val d = docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist()
+      val t = InvertedIndex.read(spark, tablesDir, "termstats").persist()
       // each materialization is a few small tasks, bound by scheduling
       // latency rather than cores: run them side by side
       InvertedIndex.inParallel(() => p.count(), () => t.count(), () => loadDocMaps(d))
@@ -272,13 +263,50 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
 }
 
 object InvertedIndex {
+  import org.apache.spark.sql.types._
+
   /** Schema of the postings parquet: PostingsRow's, as written. */
-  val PostingsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[PostingsRow].schema
+  val PostingsSchema: StructType = org.apache.spark.sql.Encoders.product[PostingsRow].schema
+
+  /** The schemas of an index's tables, as written. A read that passes
+    * its schema runs no footer job. */
+  val Schemas: Map[String, StructType] = Map(
+    "postings" -> PostingsSchema,
+    "docs" -> org.apache.spark.sql.Encoders.product[graft.model.StagedDoc].schema,
+    "termstats" -> StructType(Seq(StructField("term", StringType), StructField("df", LongType),
+      StructField("ttf", LongType), StructField("tlen", IntegerType), StructField("cmask", LongType))),
+    "lineage" -> org.apache.spark.sql.Encoders.product[graft.model.LineageRow].schema,
+    "tombstones" -> StructType(Seq(StructField("docId", LongType))))
+
+  /** Table `name` under `tables`, read with its known schema. */
+  def read(spark: SparkSession, tables: String, name: String): DataFrame =
+    spark.read.schema(Schemas(name)).parquet(s"$tables/$name")
+
+  /** The committed manifest of `dir`, parsed. */
+  def readManifest(dir: String): Map[String, Any] = Json.obj(Json.parse(
+    new String(Files.readAllBytes(Paths.get(dir, "manifest.json")))))
+
+  def generationOf(m: Map[String, Any]): Long =
+    m.get("generation").map(Json.long).getOrElse(1L)
+
+  /** The manifest's table directory: `tables` names a subdirectory of
+    * `dir` for a compacted generation; a fresh build keeps its tables in
+    * `dir` itself. */
+  def tablesDir(dir: String, m: Map[String, Any]): String =
+    m.get("tables").map(t => s"$dir/$t").getOrElse(dir)
+
+  /** The manifest's per-segment docId ranges, by segId. */
+  def segmentsOf(m: Map[String, Any]): Array[graft.model.SegmentInfo] =
+    Json.arr(m("segments")).map { v =>
+      val s = Json.obj(v)
+      graft.model.SegmentInfo(Json.long(s("segId")).toInt,
+        Json.long(s("nDocs")), Json.long(s("minDocId")),
+        Json.long(s("maxDocId")))
+    }.toArray.sortBy(_.segId)
 
   /** Runs `tasks` on threads of their own and waits for all of them;
     * the threads inherit the caller's Spark job group and pool. */
-  private def inParallel(tasks: (() => Any)*): Unit = {
+  private[index] def inParallel(tasks: (() => Any)*): Unit = {
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val threads = tasks.map(f => new Thread(() =>
       try f() catch { case e: Throwable => failed.compareAndSet(null, e) }))

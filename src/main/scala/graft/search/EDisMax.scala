@@ -25,7 +25,12 @@ object EDisMax {
   /** @param positional the RAW positive token sequence in query order
     *        (duplicates kept, must-markers stripped, mustNot excluded) —
     *        what `pf` phrase-boosts, as Solr builds the implicit phrase
-    *        from the user's token order, not the deduped clause list. */
+    *        from the user's token order, not the deduped clause list.
+    * @param mmCount minimum number of `should` clauses a doc must match.
+    *        `topK` clamps it to [0, |should|] on purpose: a caller-built
+    *        value above |should| requires every should clause, where
+    *        Lucene's BooleanQuery.setMinimumNumberShouldMatch matches
+    *        nothing — the same clamp `mmFromSpec` applies to mm specs. */
   final case class Parsed(must: Seq[String], should: Seq[String],
                           mustNot: Seq[String], mmCount: Int,
                           positional: Seq[String])
@@ -93,7 +98,10 @@ object EDisMax {
 
   /** Execute over `fields` = (index, boost) per qf entry.
     * Output: (rank, doc_id), double-precision tie-robust ranking like
-    * the other relational top-k paths.
+    * the other relational top-k paths. `p0` is normalized first (lists
+    * deduped, should disjoint from must, mmCount clamped to
+    * [0, |should|] — a deliberate divergence from Lucene, which matches
+    * nothing when mm exceeds the optional-clause count; see `Parsed`).
     *
     * @param tie the dismax tiebreak [U solr DisMaxQParser `tie`]:
     *        per (doc, term) the field score is

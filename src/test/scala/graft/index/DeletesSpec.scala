@@ -194,6 +194,76 @@ class DeletesSpec extends SparkSpec {
     }
   }
 
+  test("warm reader through two compactions: new stats, new docs, oracle scores") {
+    val rnd = new scala.util.Random(9091L)
+    val common = Seq("the", "spark", "join", "merge", "sort", "window", "batch", "row")
+    val rare = (0 until 24).map(i => s"rare$i")
+    val corpus = (0 until 160).map { i =>
+      val words = (0 until 3 + rnd.nextInt(16)).map(_ =>
+        if (rnd.nextDouble() < 0.2) rare(rnd.nextInt(rare.length))
+        else common(rnd.nextInt(common.length)))
+      (f"https://cy/$i%05d", words.mkString(" "), if (i % 4 == 0) "de" else "en")
+    }
+    val dir = Files.createTempDirectory("graft-cycles").toString
+    var reader = IndexBuilder.build(spark, mkPagesFrom(corpus), dir,
+      IndexConfig(numPartitions = 4, partsPerSegment = 1, blockSize = 16,
+        hotTermDf = 40, numSalts = 2, hotSampleRate = 1.0)).warm()
+    val queries = Seq[Query](TermQ("spark"), TermQ("rare3"), Query.and("spark", "join"),
+      Query.or("window", "rare7"), Query.not("the", "merge"), PhraseQ(Seq("spark", "join")))
+    var alive = corpus.indices.toSet
+    for (cycle <- 1 to 2) {
+      val doomed = alive.filter(_ => rnd.nextDouble() < 0.25)
+      Deletes.deleteByUrl(reader, doomed.toSeq.map(corpus(_)._1))
+      Deletes.compact(reader)
+      reader = reader.reopenIfChanged().warm()
+      alive --= doomed
+      assert(reader.generation === cycle + 1)
+
+      assert(CheckIndex.audit(reader).forall(_.contains("docId space")), s"cycle $cycle")
+      // the table's part files, not its directory: a plan over the
+      // directory is what a stale cache entry would answer
+      val parts = Files.list(java.nio.file.Paths.get(reader.tablesDir, "termstats"))
+        .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      val onDisk = spark.read.parquet(parts.toIndexedSeq: _*).select("term", "df").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(reader.termDfMap() === Some(onDisk), s"cycle $cycle: stale dictionary")
+
+      val oracle = new SpecOracle(corpus.indices.filter(alive).map(corpus))
+      val searcher = new Searcher(reader)
+      queries.foreach { q =>
+        val got = searcher.topK(q, 10).collect().map(r => (r.getString(2), r.getFloat(3))).toSeq
+        assert(got === oracle.topK(q, 10).map { case (_, _, u, s) => (u, s) },
+          s"cycle $cycle: $q")
+      }
+      // match-all reads the docs table: exactly the live docs
+      val docIds = new RelationalPath(reader).matchAllTopK(1000).collect().map(_.getLong(1)).toSet
+      assert(docIds === alive.map(_.toLong), s"cycle $cycle: docs table")
+    }
+  }
+
+  test("compaction rewrites postings in one narrow pass, no shuffle") {
+    val dir = Files.createTempDirectory("graft-del-plan").toString
+    val idx = IndexBuilder.build(spark, mkPages(texts), dir,
+      IndexConfig(numPartitions = 2, partsPerSegment = 1))
+    val dead = spark.sparkContext.broadcast(Array(1L, 3L))
+    val rewritten = Deletes.postingsWithout(idx.postings, dead, Bm25Stats(3, 10), 128)
+    val out = Files.createTempDirectory("graft-del-plan-out").resolve("postings").toString
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext)(rewritten.write.parquet(out))
+    assert(c.jobs === 1 && c.stages === 1, s"postings rewrite: $c")
+    val kept = InvertedIndex.read(spark, out.stripSuffix("/postings"), "postings")
+      .as[PostingsRow](org.apache.spark.sql.Encoders.product[PostingsRow]).collect()
+      .flatMap(_.blocks.flatMap(b => graft.util.PFor.decodeDeltas(b.docs, b.count, b.firstDocId)))
+    assert(kept.nonEmpty && !kept.exists(Set(1L, 3L)))
+
+    Deletes.deleteByUrl(idx, Seq("https://d/0001"))
+    // the whole compaction: the tombstone collect, the docs aggregate
+    // (2 jobs: adaptive execution runs its shuffle as a job of its own),
+    // the postings rewrite, termstats (2 jobs), and the docs and
+    // segments writes — the shuffle-based rewrite ran 18 jobs here
+    val whole = org.apache.spark.JobCounts.of(spark.sparkContext)(Deletes.compact(idx))
+    assert(whole.jobs === 8, s"compact: $whole")
+  }
+
   private def mkPagesFrom(corpus: Seq[(String, String, String)]): Dataset[Page] = {
     import spark.implicits._
     corpus.map { case (url, text, lang) =>

@@ -1,12 +1,20 @@
 package graft.index
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 
 import graft.model.{PostingsRow, SegmentInfo}
@@ -18,19 +26,50 @@ import graft.util.{Json, PFor, VarInt}
   * reclamation [U lucene/core/.../index/PendingDeletes.java, the `.liv`
   * files, IndexWriter#deleteDocuments; SURVEY.md §2.3].
   *
-  * Tombstones are an append-only parquet of deleted docIds next to the
-  * index; queries subtract them INSIDE the per-segment scorer (so a
-  * deleted doc never occupies a top-k slot) and the relational path
-  * anti-joins them. `compact` rewrites postings/docs dropping deleted
-  * docs into a new generation (docIds stay stable, as in a Lucene merge
-  * without renumbering — renumbering would invalidate nothing here but
-  * is unnecessary). */
+  * Layout: `<dir>/tombstones/` holds one parquet file per delete batch,
+  * `part-<uuid>.parquet`, in the table's schema (`optional int64
+  * docId`). The driver writes each file under a hidden name and renames
+  * it into place, so a listed part file is always complete; there is no
+  * `_SUCCESS` marker. A batch that matches no doc writes nothing.
+  *
+  * Write: `deleteByUrl` on a warm reader resolves its urls on the driver,
+  * from the url cache, and runs no Spark job — as the reference resolves
+  * a unique-key term without distributed work. Otherwise, and for
+  * `deleteWhere`/`expire`, one job collects the matching docIds.
+  *
+  * Visibility: once a delete call returns, every reader of the
+  * directory, warm or cold, sees it — `hasDeletes` lists the directory
+  * on each query and the tombstones are read with the table schema.
+  * Queries subtract them INSIDE the per-segment scorer (so a deleted doc
+  * never occupies a top-k slot) and the relational path anti-joins them.
+  *
+  * `compact` rewrites postings/docs without the deleted docs into a new
+  * generation (docIds stay stable, as in a Lucene merge without
+  * renumbering). It applies and then deletes exactly the part files it
+  * listed at its start: a batch that lands while it runs stays pending,
+  * and applies to the new generation because docIds are stable. */
 object Deletes {
 
   def tombstonePath(dir: String): String = s"$dir/tombstones"
 
-  def hasTombstones(dir: String): Boolean =
-    Files.exists(Paths.get(tombstonePath(dir), "_SUCCESS"))
+  /** Whether the tombstones directory holds a published part file (one
+    * driver listing). */
+  def hasTombstones(dir: String): Boolean = tombstoneFiles(dir).nonEmpty
+
+  /** The published part files: Spark's reader skips names that start
+    * with `.` or `_`, so a batch still being written is never listed. */
+  private def tombstoneFiles(dir: String): Seq[Path] = {
+    val d = Paths.get(tombstonePath(dir))
+    if (!Files.isDirectory(d)) Seq.empty
+    else {
+      val files = Files.list(d)
+      try files.iterator.asScala.filter { f =>
+        val n = f.getFileName.toString
+        !n.startsWith(".") && !n.startsWith("_")
+      }.toVector
+      finally files.close()
+    }
+  }
 
   /** Current tombstoned docIds (empty if none). */
   def tombstones(spark: SparkSession, dir: String): Dataset[java.lang.Long] = {
@@ -40,17 +79,21 @@ object Deletes {
   }
 
   /** Tombstone docs by unique key (url) — the reference's
-    * deleteDocuments(term on the uniqueKey field). Appends. */
-  def deleteByUrl(idx: InvertedIndex, urls: Seq[String]): Unit = {
-    val doomed = idx.docs.filter(col("url").isin(urls: _*)).select("docId")
-    doomed.write.mode("append").parquet(tombstonePath(idx.dir))
-  }
+    * deleteDocuments(term on the uniqueKey field). A warm reader finds
+    * the docIds in its url cache: every doc whose url is in the batch,
+    * with no Spark job. */
+  def deleteByUrl(idx: InvertedIndex, urls: Seq[String]): Unit =
+    writeTombstones(idx, idx.urlMapIfLoaded match {
+      case Some(byDocId) =>
+        val doomed = urls.toSet
+        byDocId.iterator.collect { case (d, u) if doomed(u) => d }.toArray
+      case None => docIdsWhere(idx, col("url").isin(urls: _*))
+    })
 
   /** Tombstone every doc matching an arbitrary docs-table predicate
-    * (delete-by-query). */
-  def deleteWhere(idx: InvertedIndex, pred: org.apache.spark.sql.Column): Unit =
-    idx.docs.filter(pred).select("docId")
-      .write.mode("append").parquet(tombstonePath(idx.dir))
+    * (delete-by-query): one job collects the docIds. */
+  def deleteWhere(idx: InvertedIndex, pred: Column): Unit =
+    writeTombstones(idx, docIdsWhere(idx, pred))
 
   /** TTL expiration: tombstone every doc with warc_ts older than the
     * cutoff — the DocExpirationUpdateProcessor analogue
@@ -59,11 +102,40 @@ object Deletes {
   def expire(idx: InvertedIndex, olderThan: java.sql.Timestamp): Unit =
     deleteWhere(idx, col("ts") < olderThan)
 
+  private def docIdsWhere(idx: InvertedIndex, pred: Column): Array[Long] = {
+    import idx.spark.implicits._
+    idx.docs.filter(pred).select("docId").as[Long].collect()
+  }
+
+  private lazy val TombstoneType: MessageType =
+    new SparkToParquetSchemaConverter().convert(InvertedIndex.Schemas("tombstones"))
+
+  /** Publishes `docIds` as one tombstone part file, written on the
+    * driver under a hidden name and then renamed into place. Writes
+    * nothing for an empty batch, so a delete that matches no doc
+    * leaves the index without pending deletes. */
+  private def writeTombstones(idx: InvertedIndex, docIds: Array[Long]): Unit =
+    if (docIds.nonEmpty) {
+      val conf = idx.spark.sparkContext.hadoopConfiguration
+      val name = s"part-${UUID.randomUUID()}.parquet"
+      val tmp = new HadoopPath(tombstonePath(idx.dir), s".$name.tmp")
+      val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(TombstoneType).build()
+      try {
+        val rows = new SimpleGroupFactory(TombstoneType)
+        docIds.foreach(d => out.write(rows.newGroup().append("docId", d)))
+      } finally out.close()
+      val published = new HadoopPath(tombstonePath(idx.dir), name)
+      if (!tmp.getFileSystem(conf).rename(tmp, published))
+        throw new java.io.IOException(s"could not publish tombstones $published")
+    }
+
   /** Rewrite the index without its tombstoned docs as the next
     * generation — a merge-policy compaction in one pass:
-    *  - the tombstoned docIds are collected to the driver ONCE, as a
-    *    sorted `Array[Long]`, and broadcast: driver and executor memory
-    *    is bounded by 8 bytes per pending delete;
+    *  - the part files published when it starts are listed once; their
+    *    docIds are collected to the driver ONCE, as a sorted
+    *    `Array[Long]`, and broadcast: driver and executor memory is
+    *    bounded by 8 bytes per pending delete;
     *  - one docs aggregate grouped by segId (count, Σdl, min and max
     *    docId) gives the new collection stats, the segments table and
     *    the manifest's segment ranges;
@@ -76,12 +148,14 @@ object Deletes {
     * generation's own that the manifest names, so no cached plan of an
     * older reader ever matches them. The manifest commit publishes the
     * generation; then the previous generation's tables and the applied
-    * tombstones are deleted, under any reader still reading them. */
+    * part files are deleted, under any reader still reading them. A
+    * batch published after the listing stays pending. */
   def compact(idx: InvertedIndex): InvertedIndex = {
     val spark = idx.spark
     import spark.implicits._
     val dir = idx.dir
-    if (!hasTombstones(dir)) return idx
+    val applied = tombstoneFiles(dir)
+    if (applied.isEmpty) return idx
 
     val manifest = InvertedIndex.readManifest(dir)
     val from = InvertedIndex.tablesDir(dir, manifest)
@@ -89,7 +163,8 @@ object Deletes {
     val tables = s"tables-$gen"
     val to = s"$dir/$tables"
 
-    val dead = tombstones(spark, dir).as[Long].collect()
+    val dead = spark.read.schema(InvertedIndex.Schemas("tombstones"))
+      .parquet(applied.map(_.toString): _*).as[Long].collect()
     java.util.Arrays.sort(dead)
     val bcDead = spark.sparkContext.broadcast(dead)
     val live = udf((d: Long) => java.util.Arrays.binarySearch(bcDead.value, d) < 0)
@@ -141,7 +216,11 @@ object Deletes {
     if (from == dir) Seq("postings", "docs", "termstats", "segments")
       .foreach(t => deleteRecursive(Paths.get(dir, t)))
     else deleteRecursive(Paths.get(from))
-    deleteRecursive(Paths.get(tombstonePath(dir)))
+    // with Hadoop's checksum files beside them
+    applied.foreach { f =>
+      Files.deleteIfExists(f)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    }
     InvertedIndex.open(spark, dir)
   }
 

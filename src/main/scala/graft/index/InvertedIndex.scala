@@ -260,6 +260,26 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     }
     this
   }
+
+  /** Releases what `warm()` and serving loaded: unpersists the resident
+    * postings and the cached docs and termstats, destroys the url and
+    * norms broadcasts, and drops the driver maps and the filter cache.
+    * The reader then answers cold. Call it once no query is running on
+    * the reader (a destroyed broadcast fails the query that reads it),
+    * e.g. after a refresh has published the reader that replaces it.
+    * Spark caches a Dataset by its plan, so another warm reader of the
+    * same generation shares these cache entries and loses them too. */
+  def close(): Unit = {
+    cached.foreach { case (p, d, t) =>
+      p.unpersist(blocking = false); d.unpersist(); t.unpersist()
+    }
+    cached = None
+    urlBc.foreach(_.destroy()); dlqBc.foreach(_.destroy())
+    urlBc = None; dlqBc = None
+    urlsMap = None; dlqsMap = None
+    statsMap = None; statsOverCap = false; sortedTerms = None
+    filterBitsets.clear()
+  }
 }
 
 object InvertedIndex {

@@ -2,6 +2,8 @@ package graft.index
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.model.{Page, PostingsRow}
 import graft.search._
@@ -262,6 +264,115 @@ class DeletesSpec extends SparkSpec {
     // segments writes — the shuffle-based rewrite ran 18 jobs here
     val whole = org.apache.spark.JobCounts.of(spark.sparkContext)(Deletes.compact(idx))
     assert(whole.jobs === 8, s"compact: $whole")
+  }
+
+  test("a delete that matches no doc writes nothing and compaction is a no-op") {
+    val dir = Files.createTempDirectory("graft-del-none").toString
+    val idx = IndexBuilder.build(spark, mkPages(texts.take(3)), dir,
+      IndexConfig(numPartitions = 2, partsPerSegment = 1))
+    val warm = InvertedIndex.open(spark, indexCopy(dir)).warm()
+    Seq(idx, warm).foreach { r =>
+      Deletes.deleteByUrl(r, Seq("https://d/no-such-url"))
+      assert(!r.hasDeletes, s"${r.dir}: deleteByUrl")
+      Deletes.deleteWhere(r, col("dl") > 100)
+      assert(!r.hasDeletes, s"${r.dir}: deleteWhere")
+      assert(Deletes.compact(r) eq r)
+      assert(r.diskGeneration === 1L && r.generation === 1L)
+    }
+  }
+
+  test("tombstone batches: driver-written, seen by every reader, no Spark job when warm") {
+    // two docs share one url: a delete by that url removes both
+    val corpus = (0 until 12).map(i => (f"https://tb/$i%03d", s"spark doc$i", "en")) :+
+      (("https://tb/005", "spark twin", "en"))
+    val dir = Files.createTempDirectory("graft-del-tomb").toString
+    IndexBuilder.build(spark, mkPagesFrom(corpus), dir,
+      IndexConfig(numPartitions = 3, partsPerSegment = 1))
+    val warm = InvertedIndex.open(spark, dir).warm()
+    val cold = InvertedIndex.open(spark, dir)
+    val byUrl = warm.urlMapIfLoaded.get.toSeq.groupMap(_._2)(_._1)
+    assert(byUrl("https://tb/005").size === 2)
+    def jobs(body: => Unit) = org.apache.spark.JobCounts.of(spark.sparkContext)(body)
+
+    val warmJobs = jobs(Deletes.deleteByUrl(warm, Seq("https://tb/005", "https://tb/007")))
+    assert(warmJobs.jobs === 0, s"warm deleteByUrl: $warmJobs")
+    val doomed = (byUrl("https://tb/005") ++ byUrl("https://tb/007")).toSet
+    // Spark reads the driver-written file with the table schema, in a
+    // handle that never loaded anything
+    def pending(r: InvertedIndex) = r.tombstones.collect().map(_.longValue).toSet
+    assert(cold.hasDeletes && pending(cold) === doomed)
+    assert(pending(InvertedIndex.open(spark, dir)) === doomed)
+    val coldHits = new Searcher(cold).scoredHits(TermQ("spark"), -1).collect().map(_._1).toSet
+    assert(coldHits === byUrl.values.flatten.toSet -- doomed)
+
+    val coldJobs = jobs(Deletes.deleteByUrl(cold, Seq("https://tb/001")))
+    assert(coldJobs.jobs === 1, s"cold deleteByUrl: $coldJobs")
+    val whereJobs = jobs(Deletes.deleteWhere(warm, col("url") === "https://tb/002"))
+    assert(whereJobs.jobs === 1, s"deleteWhere: $whereJobs")
+    val all = doomed ++ byUrl("https://tb/001") ++ byUrl("https://tb/002")
+    assert(pending(warm) === all && pending(cold) === all)
+    val warmHits = new Searcher(warm).scoredHits(TermQ("spark"), -1).collect().map(_._1).toSet
+    assert(warmHits === byUrl.values.flatten.toSet -- all)
+  }
+
+  test("compaction keeps the delete batches that land while it runs") {
+    val corpus = (0 until 400).map(i => (f"https://rc/$i%04d", s"spark race ${i % 7}", "en"))
+    val dir = Files.createTempDirectory("graft-del-race").toString
+    val reader = IndexBuilder.build(spark, mkPagesFrom(corpus), dir,
+      IndexConfig(numPartitions = 4, partsPerSegment = 1)).warm()
+    val docIdOf = reader.urlMapIfLoaded.get.map(_.swap)
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    @volatile var compacting = true
+    val deleter = new Thread(() =>
+      try corpus.iterator.map(_._1).takeWhile(_ => compacting).zipWithIndex.foreach { case (u, i) =>
+        Deletes.deleteByUrl(reader, Seq(u))
+        acked.add(u)
+        if (i == 4) started.countDown()
+      }
+      catch { case e: Throwable => failed.set(e) }
+      finally started.countDown())
+    deleter.start()
+    started.await()
+    try Deletes.compact(reader) finally compacting = false
+    deleter.join()
+    Option(failed.get).foreach(e => throw e)
+
+    val fresh = InvertedIndex.open(spark, dir)
+    assert(fresh.generation === 2L)
+    val live = fresh.docs.select("docId").collect().map(_.getLong(0)).toSet
+    val pending = fresh.tombstones.collect().map(_.longValue).toSet
+    val ackedIds = acked.asScala.map(docIdOf).toSet
+    assert(ackedIds.size > 5, "the deleter stopped before compaction started")
+    val lost = ackedIds.filter(d => live(d) && !pending(d))
+    assert(lost.isEmpty, s"${lost.size} acknowledged deletes lost")
+    // batches acknowledged after the compaction listed its part files
+    // are what remains pending
+    assert(pending.nonEmpty && pending.subsetOf(ackedIds))
+    val hits = new Searcher(fresh).scoredHits(TermQ("spark"), -1).collect().map(_._1).toSet
+    assert(hits === docIdOf.values.toSet -- ackedIds)
+  }
+
+  test("close releases the warm reader's caches and broadcasts; it then answers cold") {
+    val dir = Files.createTempDirectory("graft-close").toString
+    val idx = IndexBuilder.build(spark, mkPages(texts), dir,
+      IndexConfig(numPartitions = 2, partsPerSegment = 1)).warm()
+    val searcher = new Searcher(idx)
+    val q = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
+    val before = searcher.topK(q, 10).collect().toSeq
+    val resident = idx.residentPostings.get
+    val docs = idx.docs
+    val urls = idx.urlBroadcast().get
+    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
+    assert(docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+
+    idx.close()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(resident.id))
+    assert(docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    intercept[org.apache.spark.SparkException](urls.value)
+    assert(idx.residentPostings.isEmpty && idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)
+    assert(searcher.topK(q, 10).collect().toSeq === before)
   }
 
   private def mkPagesFrom(corpus: Seq[(String, String, String)]): Dataset[Page] = {

@@ -9,8 +9,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
@@ -71,6 +74,12 @@ object Deletes {
     }
   }
 
+  /** An upper bound on the pending tombstoned docs, from the part files'
+    * footers, read on the driver with no Spark job: their row counts
+    * summed, so a doc deleted in two batches counts twice. */
+  def pendingRows(idx: InvertedIndex): Long =
+    tombstoneFiles(idx.dir).map(f => readPart(idx, f)(_.getRecordCount)).sum
+
   /** Current tombstoned docIds (empty if none). */
   def tombstones(spark: SparkSession, dir: String): Dataset[java.lang.Long] = {
     import spark.implicits._
@@ -130,11 +139,41 @@ object Deletes {
         throw new java.io.IOException(s"could not publish tombstones $published")
     }
 
+  /** Opens a published part file with parquet-hadoop's reader on the
+    * driver — the counterpart of `writeTombstones`. */
+  private def readPart[T](idx: InvertedIndex, f: Path)(read: ParquetFileReader => T): T = {
+    val in = HadoopInputFile.fromPath(new HadoopPath(f.toUri),
+      idx.spark.sparkContext.hadoopConfiguration)
+    val r = ParquetFileReader.open(in)
+    try read(r) finally r.close()
+  }
+
+  /** The docIds the part files `files` hold, read on the driver. */
+  private def readDocIds(idx: InvertedIndex, files: Seq[Path]): Array[Long] = {
+    val out = mutable.ArrayBuilder.make[Long]
+    files.foreach(f => readPart(idx, f) { r =>
+      val schema = r.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      var pages = r.readNextRowGroup()
+      while (pages != null) {
+        val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+        var n = pages.getRowCount
+        while (n > 0) {
+          val g = rows.read()
+          if (g.getFieldRepetitionCount("docId") > 0) out += g.getLong("docId", 0)
+          n -= 1
+        }
+        pages = r.readNextRowGroup()
+      }
+    })
+    out.result()
+  }
+
   /** Rewrite the index without its tombstoned docs as the next
     * generation — a merge-policy compaction in one pass:
-    *  - the part files published when it starts are listed once; their
-    *    docIds are collected to the driver ONCE, as a sorted
-    *    `Array[Long]`, and broadcast: driver and executor memory is
+    *  - the part files published when it starts are listed once; the
+    *    driver reads their docIds, with no Spark job, into a sorted
+    *    `Array[Long]` and broadcasts it: driver and executor memory is
     *    bounded by 8 bytes per pending delete;
     *  - one docs aggregate grouped by segId (count, Σdl, min and max
     *    docId) gives the new collection stats, the segments table and
@@ -163,8 +202,7 @@ object Deletes {
     val tables = s"tables-$gen"
     val to = s"$dir/$tables"
 
-    val dead = spark.read.schema(InvertedIndex.Schemas("tombstones"))
-      .parquet(applied.map(_.toString): _*).as[Long].collect()
+    val dead = readDocIds(idx, applied)
     java.util.Arrays.sort(dead)
     val bcDead = spark.sparkContext.broadcast(dead)
     val live = udf((d: Long) => java.util.Arrays.binarySearch(bcDead.value, d) < 0)

@@ -2,6 +2,9 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -199,8 +202,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** The norms cache as a REUSABLE broadcast — one ship per searcher
     * lifetime, not one per query (re-broadcasting a 10^6-entry map per
     * query would put the serialization back on the hot path). */
-  @volatile private var dlqBc: Option[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]] = None
-  def dlqBroadcast(maxDocs: Long = 1L << 20): Option[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]] = {
+  @volatile private var dlqBc: Option[Broadcast[Map[Long, Int]]] = None
+  def dlqBroadcast(maxDocs: Long = 1L << 20): Option[Broadcast[Map[Long, Int]]] = {
     if (dlqBc.isEmpty)
       dlqMap(maxDocs).foreach(m => dlqBc = Some(spark.sparkContext.broadcast(m)))
     dlqBc
@@ -209,8 +212,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** The stored-fields (url) cache as a reusable broadcast — same
     * lifetime contract as `dlqBroadcast`; lets serving kernels recover
     * the corpus doc_id inside the scoring pass without a docs join. */
-  @volatile private var urlBc: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = None
-  def urlBroadcast(maxDocs: Long = 1L << 20): Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = {
+  @volatile private var urlBc: Option[Broadcast[Map[Long, String]]] = None
+  def urlBroadcast(maxDocs: Long = 1L << 20): Option[Broadcast[Map[Long, String]]] = {
     if (urlBc.isEmpty)
       urlMap(maxDocs).foreach(m => urlBc = Some(spark.sparkContext.broadcast(m)))
     urlBc
@@ -219,14 +222,14 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** Filter cache — the Solr filterCache / getDocSet analogue
     * [U solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java
     * filterCache]: the docId set of a non-scoring attribute predicate
-    * is computed ONCE and reused by every query carrying the same
-    * filter, replacing the per-query docs-table scan + cogroup with a
-    * broadcast bitmap. Single-JVM serving keeps one global bitmap
-    * (docCount bits — 5 KB per cached filter at 40 k docs); a cluster
-    * deployment holds the same cache as per-segment slices pinned on
-    * the executors (the per-searcher cache of the reference). */
+    * is computed ONCE, broadcast ONCE, and reused by every query carrying
+    * the same filter, replacing the per-query docs-table scan + cogroup
+    * with the cached broadcast. Single-JVM serving keeps one global
+    * bitmap (docCount bits — 5 KB per cached filter at 40 k docs); a
+    * cluster deployment holds the same cache as per-segment slices pinned
+    * on the executors (the per-searcher cache of the reference). */
   private val filterBitsets =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.BitSet]()
+    new java.util.concurrent.ConcurrentHashMap[String, Broadcast[java.util.BitSet]]()
 
   /** Cache is live only in warm serving mode with int-addressable
     * docIds (a cold/batch path never pays the collect). */
@@ -234,8 +237,14 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     cached.nonEmpty && segments.nonEmpty &&
       segments.last.maxDocId < Int.MaxValue.toLong
 
-  def filterCache(key: String)(build: => java.util.BitSet): java.util.BitSet =
-    filterBitsets.computeIfAbsent(key, _ => build)
+  /** The cached filter `key`'s broadcast bitmap, built and broadcast on
+    * first use. */
+  def filterCache(key: String)(build: => java.util.BitSet): Broadcast[java.util.BitSet] =
+    filterBitsets.computeIfAbsent(key, _ => spark.sparkContext.broadcast(build))
+
+  /** The cached filters' broadcast bitmaps. */
+  private[graft] def cachedFilters: Seq[Broadcast[java.util.BitSet]] =
+    filterBitsets.values.asScala.toSeq
 
   /** Pin the segment tables in executor memory and materialize them —
     * the analogue of a warm MMapDirectory + preloaded norms in the
@@ -262,8 +271,9 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   }
 
   /** Releases what `warm()` and serving loaded: unpersists the resident
-    * postings and the cached docs and termstats, destroys the url and
-    * norms broadcasts, and drops the driver maps and the filter cache.
+    * postings and the cached docs and termstats, destroys the url, norms
+    * and filter broadcasts, and drops the driver maps and the filter
+    * cache.
     * The reader then answers cold. Call it once no query is running on
     * the reader (a destroyed broadcast fails the query that reads it),
     * e.g. after a refresh has published the reader that replaces it.
@@ -278,6 +288,7 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     urlBc = None; dlqBc = None
     urlsMap = None; dlqsMap = None
     statsMap = None; statsOverCap = false; sortedTerms = None
+    filterBitsets.values.forEach(_.destroy())
     filterBitsets.clear()
   }
 }

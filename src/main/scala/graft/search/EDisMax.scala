@@ -1,5 +1,7 @@
 package graft.search
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -172,10 +174,12 @@ object EDisMax {
     // field BM25 term partials, the cross-field DisMax (tie fold),
     // must/mustNot/mm Boolean logic over any-field matches, pf/pf2/pf3
     // phrase tfs, bq additive boosts — folds per doc in ONE distributed
-    // pass over the query terms' postings: one position scan per field
-    // (a term's tf is its position count), tagged by field ordinal and
-    // unioned, one groupByKey(docId) shuffle (the fields are docId-
-    // aligned — same corpus, same url order), and NO docs-table joins —
+    // pass over the query terms' postings (a term's tf is its position
+    // count). When one warm index serves every field, that pass is one
+    // narrow job over its resident segments; otherwise one position
+    // scan per field, tagged by field ordinal and unioned, feeds one
+    // groupByKey(docId) shuffle (the fields are docId-aligned — same
+    // corpus, same url order). NO docs-table joins either way —
     // per-field length norms come from warm in-RAM norms broadcasts,
     // the reference's serving shape (NormsProducer keeps one byte per
     // doc in memory [U lucene/core/.../codecs/lucene90/
@@ -358,8 +362,7 @@ object EDisMax {
           .select(col("docId").cast("long"), col("doc_id").cast("long"),
             col("s").cast("double"))
           .as[(Long, Long, Double)].collect()
-        if (rows.isEmpty)
-          return Seq.empty[(Int, Long)].toDF("rank", "doc_id")
+        if (rows.isEmpty) return ResultFrames.rankedDocIds(spark, Nil)
         val bfMap: Map[Long, Double] =
           bfFeatures(fields.head._1, fnCol, Some(rows.map(_._1).toSeq))
             .select(col("docId").cast("long"), col("__bf").cast("double"))
@@ -370,9 +373,7 @@ object EDisMax {
           .map { case (d, id, s) => (d, id, s + bfMap.getOrElse(d, 0.0)) }
           .sortBy { case (d, _, s) => (-s, d) }
           .take(k)
-        return winners.toSeq.zipWithIndex
-          .map { case ((_, id, _), i) => (i + 1, id) }
-          .toDF("rank", "doc_id")
+        return ResultFrames.rankedDocIds(spark, winners.toSeq.map(_._2))
       }
       // above the cap the distributed left join is the correct plan —
       // and it is the query's ONLY job (no probe round-trip)
@@ -387,17 +388,16 @@ object EDisMax {
         col("doc_id").cast("long").as("doc_id"), col("s").cast("double").as("s"))
       .as[(Long, Long, Double)].collect()
       .sortBy { case (d, _, s) => (-s, d) }
-    winners.toSeq.zipWithIndex
-      .map { case ((_, id, _), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    ResultFrames.rankedDocIds(spark, winners.toSeq.map(_._2))
   }
 
   /** The single-pass kernel behind `topK` (see the eligibility comment
-    * there): every scoring component folded per doc inside one
-    * flatMapGroups over the query terms' decoded positions, unioned
-    * across the qf/phrase fields tagged by field ordinal. The
-    * double-precision op sequence mirrors the general plan expression
-    * for expression: per field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·
+    * there): every scoring component folded per doc (`DocFold`) over the
+    * query terms' decoded positions — per resident segment when one warm
+    * index serves every qf and gram field, else in one flatMapGroups
+    * over the positions unioned across the qf/phrase fields tagged by
+    * field ordinal. The double-precision op sequence mirrors the general
+    * plan expression for expression: per field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·
     * dlq_f/avgdl_f))))·boost_f; per term ts = max_f(ws) + tie·(Σ_f(ws)
     * − max_f(ws)); s = Σ ts must-then-should; then per gram in pinned
     * order s += boost·(sumIdf·(ptf/(ptf+1.2·(0.25+0.75·dlq/avgdl))))
@@ -410,7 +410,7 @@ object EDisMax {
       bq: Seq[(String, Double)]): DataFrame = {
     val spark = qf.head._1.spark
     import spark.implicits._
-    def empty = Seq.empty[(Int, Long)].toDF("rank", "doc_id")
+    def empty = ResultFrames.rankedDocIds(spark, Nil)
     // distinct indexes by reference — field ordinals; qf fields first
     // so ordinal < nQf ⇔ scored field
     val idxs = scala.collection.mutable.ArrayBuffer.empty[graft.index.InvertedIndex]
@@ -436,9 +436,8 @@ object EDisMax {
         } else None
       }.toArray
     val nIdx = idxs.length
-    // per-ordinal driver stats + norms broadcasts
+    // per-ordinal driver stats (norms ride the reader's broadcasts)
     val dfs: Array[Map[String, Long]] = idxs.map(_.termDfMap().get).toArray
-    val dlqBs = idxs.map(_.dlqBroadcast().get).toArray
     val avgdl: Array[Double] =
       idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
     val urls = qf.head._1.urlMap().get
@@ -452,8 +451,6 @@ object EDisMax {
     val mustArr = p.must.toArray
     val shouldArr = p.should.toArray
     val mustNotArr = p.mustNot.toArray
-    val mmCount = p.mmCount
-    val shouldNonEmpty = p.should.nonEmpty
     // per-ordinal scan terms — per-query dictionary slices only (the
     // task closure never captures the full df maps; norms ride the
     // broadcasts)
@@ -478,165 +475,213 @@ object EDisMax {
           t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5))
         }.toMap
       }
-    val positions: org.apache.spark.sql.Dataset[(Int, Long, String, Seq[Int])] =
-      idxs.toSeq.zipWithIndex.collect {
-        case (i, f) if scanTerms(f).nonEmpty =>
-          new RelationalPath(i).positionsTable(scanTerms(f))
-            .select(lit(f).as("fi"), col("docId").cast("long"),
-              col("term"), col("pos"))
-            .as[(Int, Long, String, Seq[Int])]
-      }.reduce(_ union _)
-    val tieW = tie
-    val qfOrdL = qfOrd
-    val qfBoostL = qfBoost
-    val scored = positions
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val posOf = Array.fill(nIdx)(
-          scala.collection.mutable.HashMap.empty[String, Array[Int]])
-        it.foreach { case (f, _, t, ps) => posOf(f)(t) = ps.toArray }
-        def presentAny(t: String): Boolean = {
-          var f = 0
-          var found = false
-          while (!found && f < qfOrdDistinct.length) {
-            found = posOf(qfOrdDistinct(f)).contains(t); f += 1
-          }
-          found
-        }
-        // Boolean gate first — no scoring work for non-hits
-        var ok = true
-        var i = 0
-        while (ok && i < mustNotArr.length) {
-          ok = !presentAny(mustNotArr(i)); i += 1
-        }
-        if (ok) {
-          var nMust = 0
-          i = 0
-          while (i < mustArr.length) {
-            if (presentAny(mustArr(i))) nMust += 1; i += 1
-          }
-          var nShould = 0
-          i = 0
-          while (i < shouldArr.length) {
-            if (presentAny(shouldArr(i))) nShould += 1; i += 1
-          }
-          ok = nMust == mustArr.length &&
-            (mustArr.nonEmpty || nShould >= 1) &&
-            (!shouldNonEmpty || mmCount == 0 || nShould >= mmCount)
-        }
-        // per-doc per-field norms, hoisted once (not per term); a doc
-        // absent from any norms map is dropped, like the general plan's
-        // inner docs join
-        val dlqD = new Array[Double](nIdx)
-        if (ok) {
-          var f = 0
-          while (ok && f < nIdx) {
-            dlqBs(f).value.get(docId) match {
-              case Some(d) => dlqD(f) = d.toDouble
-              case None => ok = false
+    val fold = new DocFold(qfOrd, qfOrdDistinct, qfBoost, mustArr, shouldArr, mustNotArr,
+      p.mmCount, tie, idxs.map(_.dlqBroadcast().get).toArray, avgdl, idfSlice, gramSpecs, bqList)
+    val winners: Array[(Long, Double)] = idxs.head.residentPostings match {
+      // one warm index serves every field: a doc's postings all live in
+      // its own segment, so each resident partition groups its segment's
+      // positions by docId, folds each doc and keeps its top k — one
+      // narrow job, no shuffle; the driver merges the ≤k per segment
+      case Some(segs) if nIdx == 1 =>
+        val terms = scanTerms(0)
+        segs.mapPartitions(_.flatMap { seg =>
+          val byDoc = scala.collection.mutable.HashMap.empty[Long,
+            Array[scala.collection.mutable.HashMap[String, Array[Int]]]]
+          seg.rows(terms).foreach { r =>
+            RelationalPath.positions(r).foreach { case (d, ps) =>
+              byDoc.getOrElseUpdate(d, Array(scala.collection.mutable.HashMap.empty))(0)(r.term) = ps
             }
-            f += 1
           }
+          topByScore(byDoc.iterator.flatMap { case (d, posOf) => fold(d, posOf).map(d -> _) }, k)
+        }).collect()
+      case _ =>
+        idxs.toSeq.zipWithIndex.collect {
+          case (i, f) if scanTerms(f).nonEmpty =>
+            new RelationalPath(i).positionsTable(scanTerms(f))
+              .select(lit(f).as("fi"), col("docId").cast("long"),
+                col("term"), col("pos"))
+              .as[(Int, Long, String, Seq[Int])]
+        }.reduce(_ union _)
+          .groupByKey(_._2)
+          .flatMapGroups { (docId, it) =>
+            val posOf = Array.fill(nIdx)(
+              scala.collection.mutable.HashMap.empty[String, Array[Int]])
+            it.foreach { case (f, _, t, ps) => posOf(f)(t) = ps.toArray }
+            fold(docId, posOf).map(docId -> _).iterator
+          }
+          .toDF("docId", "s")
+          .orderBy(desc("s"), asc("docId")).limit(k)
+          .as[(Long, Double)].collect()
+    }
+    ResultFrames.rankedDocIds(spark, winners.sortBy { case (d, s) => (-s, d) }.take(k)
+      .toSeq.map { case (d, _) => RelationalPath.docIdOfUrl(urls(d)) })
+  }
+
+  /** The k best (docId, s) hits by (s desc, docId asc), the order the
+    * driver merges them in. */
+  private def topByScore(hits: Iterator[(Long, Double)], k: Int): Iterator[(Long, Double)] = {
+    // head = the worst hit kept
+    val heap = new java.util.PriorityQueue[(Long, Double)](math.max(k, 1),
+      (a: (Long, Double), b: (Long, Double)) => {
+        val c = java.lang.Double.compare(a._2, b._2)
+        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
+      })
+    hits.foreach { h =>
+      heap.add(h)
+      if (heap.size > k) heap.poll()
+    }
+    heap.iterator.asScala
+  }
+
+  /** The per-doc fold of the single-pass kernel, shared by its resident
+    * pass and its groupByKey pass so both run one double-precision op
+    * sequence: `posOf(f)` maps each query term present in the doc's
+    * field-ordinal-f postings to its positions. None when the doc is no
+    * hit. */
+  private final class DocFold(
+      qfOrd: Array[Int], qfOrdDistinct: Array[Int], qfBoost: Array[Double],
+      mustArr: Array[String], shouldArr: Array[String], mustNotArr: Array[String],
+      mmCount: Int, tie: Double,
+      dlqBs: Array[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]],
+      avgdl: Array[Double], idfSlice: Array[Map[String, Double]],
+      gramSpecs: Array[(Int, Double, Array[String], Double)],
+      bqList: Array[(String, Double)]) extends Serializable {
+
+    def apply(docId: Long,
+              posOf: Array[scala.collection.mutable.HashMap[String, Array[Int]]]): Option[Double] = {
+      val nIdx = posOf.length
+      def presentAny(t: String): Boolean = {
+        var f = 0
+        var found = false
+        while (!found && f < qfOrdDistinct.length) {
+          found = posOf(qfOrdDistinct(f)).contains(t); f += 1
         }
-        if (!ok) Iterator.empty
-        else {
-          def tfNormAt(f: Int, tf: Double): Double =
-            tf / (tf + 1.2 * (0.25 + 0.75 * dlqD(f) / avgdl(f)))
-          // ts = cross-field dismax of the per-field weighted partials
-          def termTs(t: String): Double = {
-            var mx = 0.0
-            var sm = 0.0
-            var any = false
-            var q = 0
-            while (q < qfOrdL.length) {
-              val f = qfOrdL(q)
-              val ps = posOf(f).getOrElse(t, null)
-              if (ps != null) {
-                val ws = (idfSlice(f)(t) * tfNormAt(f, ps.length.toDouble)) *
-                  qfBoostL(q)
-                if (!any || ws > mx) mx = ws
-                sm += ws
-                any = true
-              }
-              q += 1
-            }
-            if (!any) 0.0
-            else if (tieW == 0.0) mx
-            else mx + tieW * (sm - mx)
+        found
+      }
+      // Boolean gate first — no scoring work for non-hits
+      var ok = true
+      var i = 0
+      while (ok && i < mustNotArr.length) {
+        ok = !presentAny(mustNotArr(i)); i += 1
+      }
+      if (ok) {
+        var nMust = 0
+        i = 0
+        while (i < mustArr.length) {
+          if (presentAny(mustArr(i))) nMust += 1; i += 1
+        }
+        var nShould = 0
+        i = 0
+        while (i < shouldArr.length) {
+          if (presentAny(shouldArr(i))) nShould += 1; i += 1
+        }
+        ok = nMust == mustArr.length &&
+          (mustArr.nonEmpty || nShould >= 1) &&
+          (shouldArr.isEmpty || mmCount == 0 || nShould >= mmCount)
+      }
+      // per-doc per-field norms, hoisted once (not per term); a doc
+      // absent from any norms map is dropped, like the general plan's
+      // inner docs join
+      val dlqD = new Array[Double](nIdx)
+      if (ok) {
+        var f = 0
+        while (ok && f < nIdx) {
+          dlqBs(f).value.get(docId) match {
+            case Some(d) => dlqD(f) = d.toDouble
+            case None => ok = false
           }
-          var s = 0.0
-          i = 0
-          while (i < mustArr.length) {
-            val ts = termTs(mustArr(i)); if (ts != 0.0) s += ts; i += 1
-          }
-          i = 0
-          while (i < shouldArr.length) {
-            val ts = termTs(shouldArr(i)); if (ts != 0.0) s += ts; i += 1
-          }
-          // grams in pinned order — the phraseFreqs counting kernel on
-          // the gram field's positions
-          var g = 0
-          while (g < gramSpecs.length) {
-            val (gf, boost, gram, sumIdf) = gramSpecs(g)
-            val pog = posOf(gf)
-            var all = true
-            var m = 0
-            while (all && m < gram.length) {
-              all = pog.contains(gram(m)); m += 1
-            }
-            if (all) {
-              val first = pog(gram(0))
-              val tailSets = new Array[java.util.HashSet[Integer]](gram.length)
-              m = 1
-              while (m < gram.length) {
-                val ps = pog(gram(m))
-                val set = new java.util.HashSet[Integer](ps.length * 2)
-                ps.foreach(pp => set.add(pp))
-                tailSets(m) = set
-                m += 1
-              }
-              var ptf = 0
-              var j = 0
-              while (j < first.length) {
-                val pp = first(j)
-                var good = true
-                m = 1
-                while (good && m < gram.length) {
-                  good = tailSets(m).contains(pp + m); m += 1
-                }
-                if (good) ptf += 1
-                j += 1
-              }
-              if (ptf > 0) {
-                val ptfD = ptf.toDouble
-                val ps2 = sumIdf * tfNormAt(gf, ptfD)
-                s = s + boost * ps2
-              }
-            }
-            g += 1
-          }
-          // bq in list order: primary-field BM25 of the term (no field
-          // boost — the general plan's scoredTf score column)
-          var b = 0
-          while (b < bqList.length) {
-            val (t, boost) = bqList(b)
-            val f0 = qfOrdL(0)
-            val ps = posOf(f0).getOrElse(t, null)
-            if (ps != null)
-              s = s + boost * (idfSlice(f0)(t) * tfNormAt(f0, ps.length.toDouble))
-            b += 1
-          }
-          Iterator.single((docId, s))
+          f += 1
         }
       }
-    val winners = scored.toDF("docId", "s")
-      .orderBy(desc("s"), asc("docId")).limit(k)
-      .as[(Long, Double)].collect()
-      .sortBy { case (d, s) => (-s, d) }
-    winners.toSeq.zipWithIndex.map { case ((d, _), i) =>
-      val u = urls(d)
-      (i + 1, u.substring(u.lastIndexOf('/') + 1).toLong)
-    }.toDF("rank", "doc_id")
+      if (!ok) return None
+      def tfNormAt(f: Int, tf: Double): Double =
+        tf / (tf + 1.2 * (0.25 + 0.75 * dlqD(f) / avgdl(f)))
+      // ts = cross-field dismax of the per-field weighted partials
+      def termTs(t: String): Double = {
+        var mx = 0.0
+        var sm = 0.0
+        var any = false
+        var q = 0
+        while (q < qfOrd.length) {
+          val f = qfOrd(q)
+          val ps = posOf(f).getOrElse(t, null)
+          if (ps != null) {
+            val ws = (idfSlice(f)(t) * tfNormAt(f, ps.length.toDouble)) *
+              qfBoost(q)
+            if (!any || ws > mx) mx = ws
+            sm += ws
+            any = true
+          }
+          q += 1
+        }
+        if (!any) 0.0
+        else if (tie == 0.0) mx
+        else mx + tie * (sm - mx)
+      }
+      var s = 0.0
+      i = 0
+      while (i < mustArr.length) {
+        val ts = termTs(mustArr(i)); if (ts != 0.0) s += ts; i += 1
+      }
+      i = 0
+      while (i < shouldArr.length) {
+        val ts = termTs(shouldArr(i)); if (ts != 0.0) s += ts; i += 1
+      }
+      // grams in pinned order — the phraseFreqs counting kernel on
+      // the gram field's positions
+      var g = 0
+      while (g < gramSpecs.length) {
+        val (gf, boost, gram, sumIdf) = gramSpecs(g)
+        val pog = posOf(gf)
+        var all = true
+        var m = 0
+        while (all && m < gram.length) {
+          all = pog.contains(gram(m)); m += 1
+        }
+        if (all) {
+          val first = pog(gram(0))
+          val tailSets = new Array[java.util.HashSet[Integer]](gram.length)
+          m = 1
+          while (m < gram.length) {
+            val ps = pog(gram(m))
+            val set = new java.util.HashSet[Integer](ps.length * 2)
+            ps.foreach(pp => set.add(pp))
+            tailSets(m) = set
+            m += 1
+          }
+          var ptf = 0
+          var j = 0
+          while (j < first.length) {
+            val pp = first(j)
+            var good = true
+            m = 1
+            while (good && m < gram.length) {
+              good = tailSets(m).contains(pp + m); m += 1
+            }
+            if (good) ptf += 1
+            j += 1
+          }
+          if (ptf > 0) {
+            val ptfD = ptf.toDouble
+            val ps2 = sumIdf * tfNormAt(gf, ptfD)
+            s = s + boost * ps2
+          }
+        }
+        g += 1
+      }
+      // bq in list order: primary-field BM25 of the term (no field
+      // boost — the general plan's scoredTf score column)
+      var b = 0
+      while (b < bqList.length) {
+        val (t, boost) = bqList(b)
+        val f0 = qfOrd(0)
+        val ps = posOf(f0).getOrElse(t, null)
+        if (ps != null)
+          s = s + boost * (idfSlice(f0)(t) * tfNormAt(f0, ps.length.toDouble))
+        b += 1
+      }
+      Some(s)
+    }
   }
 
   /** Term dfs over one field: the warm driver-side dictionary when the

@@ -105,8 +105,7 @@ object Ltr {
     val spark = idx.spark
     import spark.implicits._
     val cands = candidates(idx, baseTerms, topN)
-    if (cands.isEmpty)
-      return Seq.empty[(Int, Long)].toDF("rank", "doc_id")
+    if (cands.isEmpty) return ResultFrames.rankedDocIds(spark, Nil)
     val rescored = candidateFeatures(idx, cands.toSeq, model)
       .select(col("docId").cast("long").as("docId"),
         col("doc_id").cast("long").as("doc_id"),
@@ -114,8 +113,6 @@ object Ltr {
       .as[(Long, Long, Double)].collect()
       .sortBy { case (d, _, l) => (-l, d) }
       .take(k)
-    rescored.toSeq.zipWithIndex
-      .map { case ((_, id, _), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    ResultFrames.rankedDocIds(spark, rescored.toSeq.map(_._2))
   }
 }

@@ -131,9 +131,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
     val winners = topKWinnersFrame(perDoc, k)
       .as[(Long, Long, Double)].collect()
       .sortBy { case (d, _, s) => (-s, d) }
-    winners.toSeq.zipWithIndex
-      .map { case ((_, id, _), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    ResultFrames.rankedDocIds(session, winners.toSeq.map(_._2))
   }
 
   /** The LAZY bounded-winners frame every scored rank tail collects —
@@ -158,9 +156,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
         col("doc_id").cast("long").as("doc_id"))
       .as[(Long, Long)].collect()
       .sortBy(_._1)
-    winners.toSeq.zipWithIndex
-      .map { case ((_, id), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    ResultFrames.rankedDocIds(session, winners.toSeq.map(_._2))
   }
 
   /** Single-term top-k: (rank, doc_id). */
@@ -258,9 +254,8 @@ final class RelationalPath(idx: graft.index.IndexView) {
       .limit(hi)
       .as[(Long, Long, Double)].collect()
       .sortBy { case (d, _, s) => (-s, d) }
-    top.toSeq.zipWithIndex
-      .collect { case ((_, id, _), i) if i + 1 >= lo => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    val first = math.max(lo, 1)
+    ResultFrames.rankedDocIds(session, top.toSeq.drop(first - 1).map(_._2), first)
   }
 
   /** Collapse: best-scoring doc per group key (lang) for a term query
@@ -521,9 +516,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
         col("__d").cast("double").as("d"))
       .as[(Long, Long, Double)].collect()
       .sortBy { case (docId, _, d) => (d, docId) }
-    winners.toSeq.zipWithIndex
-      .map { case ((_, id, _), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
+    ResultFrames.rankedDocIds(session, winners.toSeq.map(_._2))
   }
 
   /** `{!bbox}` — LatLonPoint#newBoxQuery [U lucene/core/.../document/
@@ -632,7 +625,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
     }
     serving match {
       case Some((urlsB, Some(segs))) =>
-        segs.mapPartitions(_.flatMap { seg =>
+        ResultFrames.docIds(session, segs.mapPartitions(_.flatMap { seg =>
           val byDoc = scala.collection.mutable.HashMap.empty[Long,
             scala.collection.mutable.HashMap[String, Array[Int]]]
           seg.rows(all).foreach { r =>
@@ -644,7 +637,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
             case (d, byTerm) if req.forall(byTerm.contains) && verify(byTerm) =>
               RelationalPath.docIdOfUrl(urlsB.value(d))
           }
-        }).collect().sorted.toSeq.toDF("doc_id")
+        }).collect().sorted.toSeq)
       case Some((urlsB, None)) =>
         positionsTable(all)
           .select(col("docId").cast("long"), col("term"), col("pos"))

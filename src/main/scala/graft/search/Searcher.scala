@@ -2,13 +2,16 @@ package graft.search
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexView
 import graft.model.{Block, DocRow, PostingsRow}
 
-/** Per-query immutable context broadcast to executors: collection stats
+/** Per-query immutable context shipped to executors in the task closure
+  * (a few terms' stats — it rides the task binary): collection stats
   * + per-term global df/ttf (the `CollectionStatistics`/`TermStatistics`
   * inputs of the reference's Weight tree
   * [U lucene/core/.../search/IndexSearcher.java#createWeight]). */
@@ -21,13 +24,13 @@ final case class ScoringContext(stats: Bm25Stats,
 }
 
 /** Distributed top-k BM25 search over the segment tables (read path,
-  * SURVEY.md §3.B): broadcast query terms + stats, per-segment scorer
+  * SURVEY.md §3.B): query terms + stats shipped with the tasks, per-segment scorer
   * (leapfrog / WAND with block-max skipping) emitting at most k
   * candidates per segment, then a global TakeOrdered merge — the
   * IndexSearcher → TopScoreDocCollector → TopDocs.merge chain collapsed
   * into one Spark plan [U …/search/TopScoreDocCollector.java,
   * TopDocs#merge, WANDScorer.java]. Per-segment top-k ⊇ global top-k
-  * members because scores depend only on broadcast global stats. */
+  * members because scores depend only on the shipped global stats. */
 final class Searcher(idx: graft.index.IndexView) extends Serializable {
   private val session = idx.spark
   import session.implicits._
@@ -59,7 +62,7 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     * winners are fetched with a docId-pushdown scan + broadcast join —
     * no Spark-side global sort, no full docs-table scan. */
   def topK(q: Query, k: Int): DataFrame =
-    rankedResult(scoredHits(q, k).collect()
+    rankedResult(hits(q, k)
       .sortBy { case (d, s) => (-s, d) }
       .take(k))
 
@@ -68,13 +71,10 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     * the cursor predicate is applied at heap-insert time inside every
     * segment, so page-n docs can never be crowded out by page-(n-1)
     * docs. */
-  def topKAfter(q: Query, k: Int, afterScore: Float, afterDoc: Long): DataFrame = {
-    val merged: Array[(Long, Float)] =
-      scoredHits(q, k, Some((afterScore, afterDoc))).collect()
-        .sortBy { case (d, s) => (-s, d) }
-        .take(k)
-    rankedResult(merged)
-  }
+  def topKAfter(q: Query, k: Int, afterScore: Float, afterDoc: Long): DataFrame =
+    rankedResult(hits(q, k, Some((afterScore, afterDoc)))
+      .sortBy { case (d, s) => (-s, d) }
+      .take(k))
 
   /** Two-pass reranking [U solr/core/.../search/ReRankQParserPlugin.java]:
     * retrieve the top `reRankDocs` by `base`, rescore those docs with
@@ -84,17 +84,16 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     * evaluates only candidate docs' postings rows. */
   def rerank(base: Query, rerankQ: Query, reRankDocs: Int,
              weight: Float, k: Int): DataFrame = {
-    val topN = scoredHits(base, reRankDocs).collect()
+    val topN = hits(base, reRankDocs)
       .sortBy { case (d, s) => (-s, d) }
       .take(reRankDocs)
     if (topN.isEmpty) return rankedResult(Array.empty)
     val ids: Seq[Long] = topN.map(_._1).sorted.toSeq
-    // candidate restriction ships INSIDE the broadcast query (DocIdSetQ
-    // filter clause), so the rerank pass leapfrogs over ≤ reRankDocs
-    // docs executor-side — never an exhaustive evaluation + collect
+    // candidate restriction ships INSIDE the query (DocIdSetQ filter
+    // clause), so the rerank pass leapfrogs over ≤ reRankDocs docs
+    // executor-side — never an exhaustive evaluation + collect
     val rescores: Map[Long, Float] =
-      scoredHits(BoolQ(must = Seq(rerankQ), filter = Seq(DocIdSetQ(ids))), -1)
-        .collect().toMap
+      hits(BoolQ(must = Seq(rerankQ), filter = Seq(DocIdSetQ(ids))), -1).toMap
     val combined = topN
       .map { case (d, s) => (d, s + weight * rescores.getOrElse(d, 0f)) }
       .sortBy { case (d, s) => (-s, d) }
@@ -103,27 +102,23 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
   }
 
   private def rankedResult(merged: Array[(Long, Float)]): DataFrame = {
-    if (merged.isEmpty) {
-      return idx.spark.emptyDataset[(Int, Long, String, Float)]
-        .toDF("rank", "docId", "url", "score")
+    val warmUrls = idx match {
+      case inv: graft.index.InvertedIndex => inv.urlMapIfLoaded
+      case _ => None
     }
     // warm serving mode: stored fields for the ≤k winners come from the
     // driver-side url cache — the whole GET_FIELDS phase costs zero jobs
-    idx match {
-      case inv: graft.index.InvertedIndex if inv.urlMapIfLoaded.isDefined =>
-        val urls = inv.urlMapIfLoaded.get
-        return merged.toSeq.zipWithIndex
-          .map { case ((d, s), i) => (i + 1, d, urls.getOrElse(d, ""), s) }
-          .toDF("rank", "docId", "url", "score")
-      case _ => ()
+    if (merged.isEmpty || warmUrls.isDefined) {
+      val urls = warmUrls.getOrElse(Map.empty[Long, String])
+      return ResultFrames.of(session, ResultFrames.RankedHits, merged.toSeq.zipWithIndex
+        .map { case ((d, s), i) => Row(i + 1, d, urls.getOrElse(d, ""), s) })
     }
     val ids = merged.map(_._1)
     // ranks assigned on the DRIVER over the already-merged ≤k hits (the
     // TopDocs.merge output) — no Window operator anywhere in the plan,
     // so no single-partition exchange even for the rank column
-    val hitsDf = merged.toSeq.zipWithIndex
-      .map { case ((d, s), i) => (i + 1, d, s) }
-      .toDF("rank", "docId", "score")
+    val hitsDf = ResultFrames.of(session, ResultFrames.RankedScores, merged.toSeq.zipWithIndex
+      .map { case ((d, s), i) => Row(i + 1, d, s) })
     idx.docs.filter(col("docId").isin(ids: _*)).select("docId", "url")
       .join(broadcast(hitsDf), "docId")
       .select(col("rank"), col("docId"), col("url"), col("score"))
@@ -137,18 +132,31 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
 
   /** All scored hits of `q`, unranked (k caps per-segment emission when
     * > 0; pass k <= 0 for exhaustive evaluation). Multi-term queries
-    * are expanded against the term dictionary first (Query#rewrite).
-    *
-    * Plan shapes, chosen from ONE read of the reader's delete state (a
-    * delete landing mid-call cannot split the query over two states):
+    * are expanded against the term dictionary first (Query#rewrite). */
+  def scoredHits(q0: Query, k: Int,
+                 after: Option[(Float, Long)] = None): Dataset[(Long, Float)] =
+    evaluate(q0, k, after).fold(session.emptyDataset[(Long, Float)])(
+      _.fold(session.createDataset(_), identity))
+
+  /** `scoredHits`, collected to the driver: a warm query runs its bare
+    * RDD job, with no Dataset wrapped around it. */
+  private def hits(q0: Query, k: Int,
+                   after: Option[(Float, Long)] = None): Array[(Long, Float)] =
+    evaluate(q0, k, after).fold(Array.empty[(Long, Float)])(_.fold(_.collect(), _.collect()))
+
+  /** The plan of `scoredHits` — None when nothing can match — chosen from
+    * ONE read of the reader's delete state (a delete landing mid-call
+    * cannot split the query over two states):
     *  - warm reader, no deletes, no per-query docs rows needed: one
-    *    narrow pass over the resident segments — each partition looks up
-    *    the query terms and scores its segment, no shuffle;
+    *    narrow RDD pass over the resident segments — each partition looks
+    *    up the query terms and scores its segment, no shuffle. The query
+    *    and its ScoringContext ride the task closure; cached filter
+    *    bitmaps ride their per-filter broadcasts;
     *  - otherwise the postings rows of the query terms (`postingsOf`)
     *    are grouped by segment, cogrouped with the docs rows when
     *    attribute bits, match-all or deletes need them. */
-  def scoredHits(q0: Query, k: Int,
-                 after: Option[(Float, Long)] = None): Dataset[(Long, Float)] = {
+  private def evaluate(q0: Query, k: Int, after: Option[(Float, Long)])
+      : Option[Either[RDD[(Long, Float)], Dataset[(Long, Float)]]] = {
     val hasDeletes = idx.hasDeletes
     val qRewritten = Rewriter.rewrite(q0, new IndexTermDict(idx))
     // attribute predicates become indexed bitset lookups: evaluated ONCE
@@ -156,18 +164,16 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     val preds = Query.attrPreds(qRewritten)
     val q = Query.indexPreds(qRewritten, preds)
     val ctx = context(q)
-    val bcCtx = idx.spark.sparkContext.broadcast(ctx)
-    val bcQ = idx.spark.sparkContext.broadcast(q)
     val terms = Query.collectTerms(q)
     val hasMatchAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !Query.needsDocs(q)) return idx.spark.emptyDataset[(Long, Float)]
+    if (terms.isEmpty && !Query.needsDocs(q)) return None
     val kk = k
     val aft = after
     // warm-serving filter cache (Solr filterCache): every attribute
-    // predicate's docId bitmap is computed once and broadcast — the
+    // predicate's docId bitmap is computed and broadcast once — the
     // per-query docs scan + cogroup disappears entirely for cached
     // filters (match-all and deletes still need live docs rows)
-    val cachedPredBits: Option[IndexedSeq[java.util.BitSet]] = idx match {
+    val cachedPredBits: Option[IndexedSeq[Broadcast[java.util.BitSet]]] = idx match {
       case inv: graft.index.InvertedIndex
           // termAnchored: every candidate doc must have postings rows
           // for the query terms in its own segment, or the per-segment
@@ -184,24 +190,21 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
         }.toIndexedSeq)
       case _ => None
     }
-    val docsFree = cachedPredBits.isDefined || (!Query.needsDocs(q) && !hasDeletes)
     val resident = idx match {
       case inv: graft.index.InvertedIndex => inv.residentPostings
       case _ => None
     }
-    val bcBits = cachedPredBits.map(idx.spark.sparkContext.broadcast(_))
-    if (docsFree && resident.isDefined) {
-      return idx.spark.createDataset(resident.get.mapPartitions(_.flatMap { seg =>
-        SegmentScorer.score(bcQ.value, bcCtx.value, seg.rows(terms), None, kk, aft,
-          bcBits.fold(IndexedSeq.empty[java.util.BitSet])(_.value))
-      }))
+    if ((cachedPredBits.isDefined || (!Query.needsDocs(q) && !hasDeletes)) && resident.isDefined) {
+      val bits = cachedPredBits.getOrElse(IndexedSeq.empty)
+      return Some(Left(resident.get.mapPartitions(_.flatMap { seg =>
+        SegmentScorer.score(q, ctx, seg.rows(terms), None, kk, aft, bits.map(_.value))
+      })))
     }
     val rows = idx.postingsOf(terms)
-    if (docsFree) {
-      return rows.groupByKey(_.segId).flatMapGroups { (_, ps) =>
-        SegmentScorer.score(bcQ.value, bcCtx.value, ps, None, kk, aft,
-          bcBits.fold(IndexedSeq.empty[java.util.BitSet])(_.value))
-      }
+    if (!Query.needsDocs(q) && !hasDeletes) {
+      return Some(Right(rows.groupByKey(_.segId).flatMapGroups { (_, ps) =>
+        SegmentScorer.score(q, ctx, ps, None, kk, aft)
+      }))
     }
     // deletes are subtracted INSIDE the per-segment scorer (a deleted
     // doc must not occupy a top-k slot), via the docs cogroup path
@@ -244,10 +247,10 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
          else array(predCols: _*)).as("preds"),
         col("del"))
       .as[(Int, Long, Seq[Boolean], Boolean)]
-    rows.groupByKey(_.segId)
+    Some(Right(rows.groupByKey(_.segId)
       .cogroup(docsLite.groupByKey(_._1)) { (_, ps, ds) =>
-        SegmentScorer.score(bcQ.value, bcCtx.value, ps, Some(ds), kk, aft)
-      }
+        SegmentScorer.score(q, ctx, ps, Some(ds), kk, aft)
+      }))
   }
 }
 

@@ -36,8 +36,9 @@ object SortedRead {
   def earlyWinnersFrame(idx: InvertedIndex, k: Int): DataFrame = {
     val rel = new RelationalPath(idx)
     // deleted docs inside a window would push the kth live doc past it;
-    // widening by the (bounded) tombstone count keeps this exact
-    val slack = if (idx.hasDeletes) idx.tombstones.count() else 0L
+    // widening by the pending tombstone rows (footer counts: no job)
+    // keeps this exact
+    val slack = graft.index.Deletes.pendingRows(idx)
     val pred = idx.segments.map { s =>
       col("docId").between(s.minDocId,
         math.min(s.maxDocId, s.minDocId + k - 1 + slack))

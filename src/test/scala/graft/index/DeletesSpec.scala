@@ -258,12 +258,46 @@ class DeletesSpec extends SparkSpec {
     assert(kept.nonEmpty && !kept.exists(Set(1L, 3L)))
 
     Deletes.deleteByUrl(idx, Seq("https://d/0001"))
-    // the whole compaction: the tombstone collect, the docs aggregate
-    // (2 jobs: adaptive execution runs its shuffle as a job of its own),
-    // the postings rewrite, termstats (2 jobs), and the docs and
-    // segments writes — the shuffle-based rewrite ran 18 jobs here
+    // the whole compaction: the docs aggregate (2 jobs: adaptive
+    // execution runs its shuffle as a job of its own), the postings
+    // rewrite, termstats (2 jobs), and the docs and segments writes; the
+    // driver reads the tombstones — the shuffle-based rewrite ran 18
+    // jobs here
     val whole = org.apache.spark.JobCounts.of(spark.sparkContext)(Deletes.compact(idx))
-    assert(whole.jobs === 8, s"compact: $whole")
+    assert(whole.jobs === 7, s"compact: $whole")
+  }
+
+  test("compaction reads its tombstone batches on the driver: 40 batches cost what 8 do") {
+    val corpus = (0 until 60).map(i => (f"https://cb/$i%03d", s"spark batch $i", "en"))
+    def compactJobs(batches: Int): (Int, Set[Long]) = {
+      val dir = Files.createTempDirectory("graft-del-batches").toString
+      val idx = IndexBuilder.build(spark, mkPagesFrom(corpus), dir,
+        IndexConfig(numPartitions = 2, partsPerSegment = 1)).warm()
+      val docIdOf = idx.urlMapIfLoaded.get.map(_.swap)
+      (0 until batches).foreach(b => Deletes.deleteByUrl(idx, Seq(corpus(b)._1)))
+      assert(Deletes.pendingRows(idx) === batches)
+      val c = org.apache.spark.JobCounts.of(spark.sparkContext)(Deletes.compact(idx))
+      val live = InvertedIndex.open(spark, dir).docs.select("docId").collect().map(_.getLong(0)).toSet
+      assert(live === docIdOf.values.toSet -- corpus.take(batches).map(p => docIdOf(p._1)))
+      (c.jobs, live)
+    }
+    val (jobs8, _) = compactJobs(8)
+    val (jobs40, _) = compactJobs(40)
+    assert(jobs40 === jobs8, s"40 batches: $jobs40 jobs, 8 batches: $jobs8")
+  }
+
+  test("early-terminating sorted read runs no job while deletes are pending") {
+    val dir = Files.createTempDirectory("graft-del-sorted").toString
+    val idx = IndexBuilder.build(spark, mkPages(texts), dir,
+      IndexConfig(numPartitions = 2, partsPerSegment = 1))
+    Deletes.deleteByUrl(idx, Seq("https://d/0000"))
+    // the same doc in a second batch: a duplicate only widens the slack
+    Deletes.deleteByUrl(idx, Seq("https://d/0000"))
+    assert(Deletes.pendingRows(idx) === 2L)
+    val frame = org.apache.spark.JobCounts.of(spark.sparkContext)(SortedRead.earlyWinnersFrame(idx, 2))
+    assert(frame.jobs === 0, s"early winners frame: $frame")
+    assert(SortedRead.earlyTopK(idx, 2).collect().toSeq ===
+      SortedRead.fullScanTopK(idx, 2).collect().toSeq)
   }
 
   test("a delete that matches no doc writes nothing and compaction is a no-op") {
@@ -364,6 +398,8 @@ class DeletesSpec extends SparkSpec {
     val resident = idx.residentPostings.get
     val docs = idx.docs
     val urls = idx.urlBroadcast().get
+    val filters = idx.cachedFilters
+    assert(filters.size === 1)
     assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
     assert(docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
 
@@ -371,6 +407,7 @@ class DeletesSpec extends SparkSpec {
     assert(!spark.sparkContext.getPersistentRDDs.contains(resident.id))
     assert(docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
     intercept[org.apache.spark.SparkException](urls.value)
+    filters.foreach(f => intercept[org.apache.spark.SparkException](f.value))
     assert(idx.residentPostings.isEmpty && idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)
     assert(searcher.topK(q, 10).collect().toSeq === before)
   }

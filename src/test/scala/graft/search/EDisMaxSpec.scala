@@ -10,6 +10,10 @@ class EDisMaxSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val textIdx = SparkEntry.index(spark, sfDir)
   private lazy val urlIdx = SparkEntry.urlIndex(spark, sfDir)
+  /** A warm reader of the text index: single-index edismax runs the
+    * kernel's resident pass on it. */
+  private lazy val warmTextIdx =
+    graft.index.InvertedIndex.open(spark, indexCopy(textIdx.dir)).warm()
 
   test("parser: occurs, dedup, percentage mm floor") {
     val p = EDisMax.parse("+Spark -merge data window data", "50%")
@@ -182,16 +186,24 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("single-pass kernel ≡ general plan across query shapes") {
-    // a plain IndexView delegate is kernel-INELIGIBLE (the kernel
-    // pattern-matches InvertedIndex for its warm caches), so the same
-    // data runs the general relational plan — both plans must agree
-    // rank-for-rank on every query shape the kernel claims
+    shapesKernelAgreement(graft.index.InvertedIndex.open(spark, textIdx.dir))
+  }
+
+  test("resident kernel (warm single index) ≡ general plan across query shapes") {
+    shapesKernelAgreement(warmTextIdx)
+  }
+
+  /** A plain IndexView delegate is kernel-INELIGIBLE (the kernel
+    * pattern-matches InvertedIndex for its warm caches), so the same
+    * data runs the general relational plan — both plans must agree
+    * rank-for-rank on every query shape the kernel claims. */
+  private def shapesKernelAgreement(idx: graft.index.InvertedIndex): Unit = {
     val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = textIdx.spark
-      def stats = textIdx.stats
-      def postings = textIdx.postings
-      def docs = textIdx.docs
-      def termStats = textIdx.termStats
+      def spark = idx.spark
+      def stats = idx.stats
+      def postings = idx.postings
+      def docs = idx.docs
+      def termStats = idx.termStats
     }
     def both(q: String, mm: String, boost: Double = 1.0,
              pf: Boolean = false, pf2: Boolean = false, pf3: Boolean = false,
@@ -203,7 +215,7 @@ class EDisMaxSpec extends SparkSpec {
           pf2 = if (pf2) Seq(iv -> 0.4) else Nil,
           pf3 = if (pf3) Seq(iv -> 0.3) else Nil,
           bq = bq).collect().toSeq
-      assert(run(textIdx) === run(general), s"shape: q='$q' mm='$mm'")
+      assert(run(idx) === run(general), s"shape: q='$q' mm='$mm'")
     }
     both("sort merge window", "2<67%", pf2 = true)         // the x01 shape
     both("spark join", "0")                                 // plain OR
@@ -220,16 +232,26 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("kernel ≡ general plan on randomized caller-built Parsed (incl. must∩should overlap)") {
-    // bypasses parse(): raw Parsed values with duplicate lists, terms in
-    // BOTH must and should, and mm counts beyond the optional-clause
-    // count — topK's normalization must make both plans see the same
-    // invariant, or the kernel double-counts the overlapping term
+    randomizedKernelAgreement(graft.index.InvertedIndex.open(spark, textIdx.dir))
+  }
+
+  test("resident kernel (warm single index) ≡ general plan on randomized caller-built Parsed") {
+    randomizedKernelAgreement(warmTextIdx)
+  }
+
+  /** Bypasses parse(): raw Parsed values with duplicate lists, terms in
+    * BOTH must and should, and mm counts beyond the optional-clause
+    * count — topK's normalization must make both plans see the same
+    * invariant, or the kernel double-counts the overlapping term. On a
+    * reader that has not been warmed the kernel runs its groupByKey
+    * pass, on a warm one its resident pass. */
+  private def randomizedKernelAgreement(idx: graft.index.InvertedIndex): Unit = {
     val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = textIdx.spark
-      def stats = textIdx.stats
-      def postings = textIdx.postings
-      def docs = textIdx.docs
-      def termStats = textIdx.termStats
+      def spark = idx.spark
+      def stats = idx.stats
+      def postings = idx.postings
+      def docs = idx.docs
+      def termStats = idx.termStats
     }
     val pool = Vector("spark", "merge", "data", "sort", "window", "zzzabsent")
     val rnd = new scala.util.Random(7)
@@ -242,8 +264,8 @@ class EDisMaxSpec extends SparkSpec {
         .filterNot(t => must.contains(t) || should.contains(t))
       val mm = rnd.nextInt(should.length + 2)
       val p = EDisMax.Parsed(must, should, mustNot, mm, (must ++ should).distinct)
-      val pf2 = if (rnd.nextBoolean()) Seq(textIdx -> 0.4) else Nil
-      val viaKernel = EDisMax.topK(Seq(textIdx -> 1.0), p, 10, pf2 = pf2)
+      val pf2 = if (rnd.nextBoolean()) Seq(idx -> 0.4) else Nil
+      val viaKernel = EDisMax.topK(Seq(idx -> 1.0), p, 10, pf2 = pf2)
         .collect().toSeq
       val viaGeneral = EDisMax.topK(Seq(general -> 1.0), p, 10,
         pf2 = pf2.map { case (_, b) => (general, b) }).collect().toSeq

@@ -208,19 +208,33 @@ class PlanSpec extends SparkSpec {
       "after" -> (() => s.topKAfter(Query.or("spark", "merge"), 3, afterScore, afterDoc).collect()),
       "fuzzy" -> (() => s.topK(FuzzyQ("spork", 1), 10).collect()),
       "span-near" -> (() => rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect()),
-      "intervals" -> (() => rel.intervalContainingDocs(Seq("spark", "merge"), 6, "the").collect()))
+      "intervals" -> (() => rel.intervalContainingDocs(Seq("spark", "merge"), 6, "the").collect()),
+      "edismax" -> (() => EDisMax.topK(Seq(warm -> 1.0),
+        EDisMax.parse("+spark merge window", "50%"), 10, pf2 = Seq(warm -> 0.4),
+        bq = Seq("sort" -> 1.5)).collect()))
     families.foreach { case (name, run) =>
       run() // first call loads the driver caches (dictionary, filter bitmap)
       val c = org.apache.spark.JobCounts.of(spark.sparkContext)(run())
       assert(c.jobs === 1, s"$name: ${c.jobs} jobs")
       assert(c.stages === 1, s"$name: ${c.stages} stages submitted — a shuffle ran")
     }
-    // edismax keeps its one-shuffle kernel over the resident postings
-    val edis = () => EDisMax.topK(Seq(warm -> 1.0), EDisMax.parse("spark merge window", "50%"), 10)
-      .collect()
-    edis()
-    val e = org.apache.spark.JobCounts.of(spark.sparkContext)(edis())
-    assert(e.jobs <= 2 && e.stages <= 2, s"edismax: $e")
+  }
+
+  test("warm topK and topKAfter start no SQL execution before the caller collects") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val s = new Searcher(warm)
+    val filtered = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
+    s.topK(filtered, 10) // builds the cached filter (a SQL execution of its own)
+    val queries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "term" -> (() => s.topK(TermQ("spark"), 10)),
+      "filter" -> (() => s.topK(filtered, 10)),
+      "phrase" -> (() => s.topK(PhraseQ(Seq("batch", "batch")), 10)),
+      "after" -> (() => s.topKAfter(Query.or("spark", "merge"), 3, 1.0f, 2L)))
+    queries.foreach { case (name, run) =>
+      val c = org.apache.spark.JobCounts.of(spark.sparkContext)(run())
+      assert(c.jobs === 1, s"$name: $c")
+      assert(c.sqlExecutions === 0, s"$name: $c")
+    }
   }
 
   test("postings scan prunes columns (term stats never read blocks)") {

@@ -317,6 +317,69 @@ class SearchSpec extends SparkSpec {
     both(_.spanNearDocs(Seq("spark", "zzzabsent"), 3, inOrder = true), "absent term")
   }
 
+  test("a lost resident partition recomputes from parquet") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val s = new Searcher(warm)
+    val rel = new RelationalPath(warm)
+    def answers() = (s.topK(Query.or("spark", "merge"), 10).collect().toSeq,
+      EDisMax.topK(Seq(warm -> 1.0), EDisMax.parse("spark merge window", "50%"), 10).collect().toSeq,
+      rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect().toSeq)
+    val before = answers()
+    val resident = warm.residentPostings.get
+    org.apache.spark.LoseBlocks.of(resident)
+    assert(spark.sparkContext.getRDDStorageInfo.forall(i => i.id != resident.id || i.numCachedPartitions == 0))
+    assert(answers() === before)
+    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
+  }
+
+  test("4 threads of mixed queries on one warm reader answer as a serial caller does") {
+    // each query's context rides its own task closure and each cached
+    // filter is broadcast once, so threads sharing a reader (and racing
+    // to build its filter cache) must get exactly a lone caller's answers
+    def queries(r: graft.index.InvertedIndex): Seq[() => Seq[Seq[Any]]] = {
+      val s = new Searcher(r)
+      def hits(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.map(row => Seq(row.getInt(0), row.getLong(1), row.getString(2),
+          java.lang.Float.floatToRawIntBits(row.getFloat(3))))
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.map(row => Seq(row.getInt(0), row.getLong(1)))
+      val langs = r.docs.select("lang").distinct().collect()
+        .flatMap(row => Option(row.getString(0))).sorted.toSeq
+      assert(langs.nonEmpty)
+      Seq[() => Seq[Seq[Any]]](
+        () => hits(s.topK(TermQ("spark"), 10)),
+        () => hits(s.topK(Query.or("merge", "window"), 20)),
+        () => hits(s.topK(Query.and("spark", "join"), 10)),
+        () => hits(s.topK(PhraseQ(Seq("batch", "batch")), 10)),
+        () => hits(s.topKAfter(Query.or("spark", "merge"), 5, 2.0f, 3L)),
+        () => ids(EDisMax.topK(Seq(r -> 1.0), EDisMax.parse("spark merge window", "50%"), 10)),
+        () => ids(EDisMax.topK(Seq(r -> 1.0), EDisMax.parse("+spark -join data", "0"), 10,
+          pf2 = Seq(r -> 0.4)))) ++
+        langs.map(l => () => hits(s.topK(BoolQ(must = Seq(TermQ("spark")),
+          filter = Seq(AttrQ("lang", l))), 10)))
+    }
+    val serial = queries(graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()).map(_())
+    assert(serial.exists(_.nonEmpty))
+    // a fresh reader: its filter cache is built under concurrency
+    val shared = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val qs = queries(shared)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() =>
+        for (round <- 0 until 3; i <- qs.indices) {
+          val q = (i + t * 3 + round) % qs.length
+          try {
+            val got = qs(q)()
+            if (got != serial(q)) failures.add(s"thread $t round $round query $q: $got != ${serial(q)}")
+          } catch { case e: Throwable => failures.add(s"thread $t query $q: $e") }
+        })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toArray.mkString("\n"))
+    shared.close()
+  }
+
   test("CheckIndex audit clean on sf0.001") {
     assert(CheckIndex.audit(idx).isEmpty)
   }

@@ -1,0 +1,12 @@
+package org.apache.spark
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.RDDBlockId
+
+/** Drops an RDD's cached partitions from the block manager, as a lost
+  * executor would, while the RDD stays marked persisted. Lives in the
+  * spark package for the package-private block manager. */
+object LoseBlocks {
+  def of(rdd: RDD[_]): Unit =
+    rdd.partitions.indices.foreach(i => SparkEnv.get.blockManager.removeBlock(RDDBlockId(rdd.id, i)))
+}

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.search.{Query, Searcher}
+import graft.search.{AttrQ, BoolQ, BoostQ, PrefixQ, Query, Searcher, TermQ}
 
 /** Manual smoke driver: flagship entry + scorer-path vs relational-path
   * rank agreement on a few queries. */
@@ -26,28 +26,26 @@ object Smoke {
     val searcher = new Searcher(idx)
     val rel = new graft.search.RelationalPath(idx)
 
-    def ranksScorer(q: Query): Seq[Long] =
-      searcher.topK(q, 10).collect().map(_.getLong(1)).toSeq
-    def docIds(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.collect().map(_.getLong(1)).toSeq
-
-    val checks: Seq[(String, Query, Seq[Long])] = Seq(
-      ("q01 term spark", graft.search.TermQ("spark"), docIds(rel.termTopK("spark", 10))),
-      ("q04 and spark join", Query.and("spark", "join"), docIds(rel.andTopK(Seq("spark", "join"), 10))),
-      ("q06 or window batch", Query.or("window", "batch"), docIds(rel.orTopK(Seq("window", "batch"), 1, 10))),
-      ("q07 or-mm2", Query.orMM(2, "sort", "merge", "window"), docIds(rel.orTopK(Seq("sort", "merge", "window"), 2, 10)))
-    )
+    // scorer path ranks by docId, the relational path outputs the
+    // corpus doc_id: map through the url suffix
+    val docIdOf = idx.docs.collect().map(d =>
+      d.docId -> graft.search.RelationalPath.docIdOfUrl(d.url)).toMap
+    val checks: Seq[(String, Query)] = Seq(
+      "q01 term spark" -> TermQ("spark"),
+      "q04 and spark join" -> Query.and("spark", "join"),
+      "q06 or window batch" -> Query.or("window", "batch"),
+      "q07 or-mm2" -> Query.orMM(2, "sort", "merge", "window"),
+      "q08 spark -merge" -> Query.not("spark", "merge"),
+      "q09 spark +lang:en" -> BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"))),
+      "q11 prefix s*" -> PrefixQ("s"),
+      "q15 spark^2 merge" -> BoolQ(should = Seq(BoostQ(TermQ("spark"), 2f), TermQ("merge"))))
     var ok = true
-    checks.foreach { case (name, q, expect) =>
-      val got = ranksScorer(q)
-      // scorer uses the docs-table docId; relational outputs original doc_id.
-      // map scorer docIds -> doc_id via docs table url suffix
-      val urlMap = idx.docs.collect().map(d =>
-        d.docId -> d.url.substring(d.url.lastIndexOf('/') + 1).toLong).toMap
-      val gotDocIds = got.map(urlMap)
-      val agree = gotDocIds == expect
+    checks.foreach { case (name, q) =>
+      val got = searcher.topK(q, 10).collect().map(r => docIdOf(r.getLong(1))).toSeq
+      val expect = rel.forParsed(q, 10).collect().map(_.getLong(1)).toSeq
+      val agree = got == expect
       ok &= agree
-      println(f"$name%-22s scorer=$gotDocIds oracle=$expect agree=$agree")
+      println(f"$name%-22s scorer=$got relational=$expect agree=$agree")
     }
     println(if (ok) "SCORER==RELATIONAL: ALL AGREE" else "MISMATCH FOUND")
     spark.stop()

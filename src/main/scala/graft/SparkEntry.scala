@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexConfig, InvertedIndex}
 import graft.model.Corpus
 import graft.pipeline.{Ann, Components, Dedup, TextStats}
-import graft.search.{GraphStreams, Query, RelationalPath, Searcher, TermQ}
+import graft.search.{AttrQ, AttrRangeQ, BoolQ, BoostQ, DisMaxQ, FuzzyQ, GraphStreams, PrefixQ, Query,
+  RelationalPath, Searcher, TermQ, TermRangeQ}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -120,27 +121,32 @@ object SparkEntry {
         lit(st.sumTotalTermFreq).as("sum_ttf"))
     }),
     // ---- IR queries (§2.4, §2.7): (rank, doc_id) top-10 ----
-    "ir_q01_term" -> ((s, d) => rel(s, d).termTopK("spark", 10)),
-    "ir_q02_term_hot" -> ((s, d) => rel(s, d).termTopK("the", 10)),
-    "ir_q03_term_absent" -> ((s, d) => rel(s, d).termTopK("zzzmissing", 10)),
-    "ir_q04_and" -> ((s, d) => rel(s, d).andTopK(Seq("spark", "join"), 10)),
-    "ir_q05_and3" -> ((s, d) => rel(s, d).andTopK(Seq("spark", "the", "merge"), 10)),
-    "ir_q06_or" -> ((s, d) => rel(s, d).orTopK(Seq("window", "batch"), 1, 10)),
-    "ir_q07_or_mm2" -> ((s, d) => rel(s, d).orTopK(Seq("sort", "merge", "window"), 2, 10)),
-    "ir_q08_not" -> ((s, d) => rel(s, d).notTopK("spark", "merge", 10)),
-    "ir_q09_filter" -> ((s, d) => rel(s, d).filterTopK("spark", "en", 10)),
+    "ir_q01_term" -> ((s, d) => rel(s, d).forParsed(TermQ("spark"), 10)),
+    "ir_q02_term_hot" -> ((s, d) => rel(s, d).forParsed(TermQ("the"), 10)),
+    "ir_q03_term_absent" -> ((s, d) => rel(s, d).forParsed(TermQ("zzzmissing"), 10)),
+    "ir_q04_and" -> ((s, d) => rel(s, d).forParsed(Query.and("spark", "join"), 10)),
+    "ir_q05_and3" -> ((s, d) => rel(s, d).forParsed(Query.and("spark", "the", "merge"), 10)),
+    "ir_q06_or" -> ((s, d) => rel(s, d).forParsed(Query.or("window", "batch"), 10)),
+    "ir_q07_or_mm2" -> ((s, d) => rel(s, d).forParsed(Query.orMM(2, "sort", "merge", "window"), 10)),
+    "ir_q08_not" -> ((s, d) => rel(s, d).forParsed(Query.not("spark", "merge"), 10)),
+    "ir_q09_filter" -> ((s, d) => rel(s, d).forParsed(
+      BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"))), 10)),
     "ir_q10_phrase" -> ((s, d) => rel(s, d).phraseDocs(Seq("batch", "batch"))),
-    "ir_q11_prefix" -> ((s, d) => rel(s, d).prefixTopK("s", 10)),
-    "ir_q12_range" -> ((s, d) => rel(s, d).rangeTopK("batch", "data", 10)),
-    "ir_q13_fuzzy" -> ((s, d) => rel(s, d).fuzzyTopK("spork", 1, 10)),
-    "ir_q14_dismax" -> ((s, d) => rel(s, d).dismaxTopK(Seq("spark", "merge"), 0.3, 10)),
-    "ir_q15_boost" -> ((s, d) => rel(s, d).boostedOrTopK(Seq("spark" -> 2.0, "merge" -> 1.0), 10)),
-    "ir_q16_page2" -> ((s, d) => rel(s, d).termPage("spark", 11, 20)),
+    "ir_q11_prefix" -> ((s, d) => rel(s, d).forParsed(PrefixQ("s"), 10)),
+    "ir_q12_range" -> ((s, d) => rel(s, d).forParsed(TermRangeQ("batch", "data"), 10)),
+    "ir_q13_fuzzy" -> ((s, d) => rel(s, d).forParsed(FuzzyQ("spork", 1), 10)),
+    "ir_q14_dismax" -> ((s, d) => rel(s, d).forParsed(
+      DisMaxQ(Seq(TermQ("spark"), TermQ("merge")), 0.3f), 10)),
+    "ir_q15_boost" -> ((s, d) => rel(s, d).forParsed(
+      BoolQ(should = Seq(BoostQ(TermQ("spark"), 2f), TermQ("merge"))), 10)),
+    // searchAfter paging: ranks 11..20 of the top 20
+    "ir_q16_page2" -> ((s, d) =>
+      rel(s, d).forParsed(TermQ("spark"), 20).filter(col("rank") >= 11)),
     "ir_q17_collapse" -> ((s, d) => rel(s, d).collapseByLang("spark")),
     "ir_q18_facet" -> ((s, d) => rel(s, d).facetByLang("spark")),
     "ir_q19_matchall" -> ((s, d) => rel(s, d).matchAllTopK(10)),
-    "ir_q20_tsrange" -> ((s, d) => rel(s, d).tsRangeTopK("spark",
-      "2025-10-24 00:02:00", "2025-10-24 00:06:00", 10)),
+    "ir_q20_tsrange" -> ((s, d) => rel(s, d).forParsed(BoolQ(must = Seq(TermQ("spark")),
+      filter = Seq(AttrRangeQ("ts", Some("2025-10-24 00:02:00"), Some("2025-10-24 00:06:00")))), 10)),
     // query-STRING entry point: lucene-dialect parse → relational exec
     "ir_q21_qstring" -> ((s, d) =>
       rel(s, d).forParsed(graft.search.QueryParser.parse("spark AND join"), 10)),
@@ -167,7 +173,7 @@ object SparkEntry {
     // [explain] DocTransformer (§2.11): per-(hit, term) BM25 breakdown
     // — tf/df/dlq are the complete INTEGER inputs of each contribution
     "ir_q31_explain" -> ((s, d) => {
-      val hits = rel(s, d).orTopK(Seq("spark", "merge"), 1, 10)
+      val hits = rel(s, d).forParsed(Query.or("spark", "merge"), 10)
       graft.search.DocTransformers.explainRows(
         index(s, d), hits, Seq("spark", "merge"))
     }),
@@ -237,10 +243,7 @@ object SparkEntry {
       // maxTerms = 2: a two-element float sum is order-exact in IEEE,
       // so the gate is immune to aggregation-order noise (5-term sums
       // flipped near-tied ranks between runs on BOTH engines)
-      val q = graft.search.MoreLikeThis.fromText(index(s, d), text, maxTerms = 2)
-      val terms = q.asInstanceOf[graft.search.BoolQ].should
-        .collect { case graft.search.TermQ(t) => t }
-      rel(s, d).orTopK(terms, 1, 10)
+      rel(s, d).forParsed(graft.search.MoreLikeThis.fromText(index(s, d), text, maxTerms = 2), 10)
     }),
     // query elevation (QueryElevationComponent): docs 7 then 3 pinned
     // to the top in that order, doc 42 excluded, organic spark hits
@@ -248,7 +251,7 @@ object SparkEntry {
     // so exclusion backfills from deeper hits (the reference applies
     // exclusion before its rows cutoff)
     "ir_q42_elevate" -> ((s, d) => graft.search.Elevation.elevate(
-      rel(s, d).termTopK("spark", 13), Seq(7L, 3L), Seq(42L), k = 10)),
+      rel(s, d).forParsed(TermQ("spark"), 13), Seq(7L, 3L), Seq(42L), k = 10)),
     // edismax bq: additive boost query — hits of `spark` gain
     // 1.5 × BM25(merge) where merge also matches (hit set unchanged)
     "ir_q41_edismax_bq" -> ((s, d) => {

@@ -26,6 +26,13 @@ trait IndexView {
     postings.filter(org.apache.spark.sql.functions.col("term").isin(terms.distinct: _*))
   def docs: Dataset[DocRow]
   def termStats: DataFrame
+  /** Document frequencies of `terms`; a term absent from the dictionary
+    * is absent from the map. The one term → df lookup of the query
+    * paths: a bounded termStats collect here. */
+  def termDfs(terms: Seq[String]): Map[String, Long] =
+    if (terms.isEmpty) Map.empty
+    else termStats.filter(org.apache.spark.sql.functions.col("term").isin(terms.distinct: _*))
+      .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   /** Tombstoned docIds (live-docs complement); default: none. */
   def hasDeletes: Boolean = false
   def tombstones: Dataset[java.lang.Long] =
@@ -132,17 +139,26 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * query (the stats lookup). */
   @volatile private var statsMap: Option[Map[String, Long]] = None
   @volatile private var statsOverCap: Boolean = false
-  def termDfMap(maxTerms: Int = 1 << 20): Option[Map[String, Long]] = {
+  def termDfMap(): Option[Map[String, Long]] = {
     // memoize the over-cap outcome too — without it every eligibility
-    // probe on a big index re-collects maxTerms+1 dictionary rows
+    // probe on a big index re-collects CacheCap+1 dictionary rows
     if (statsMap.isEmpty && !statsOverCap) {
-      val rows = termStats.select("term", "df").limit(maxTerms + 1).collect()
-      if (rows.length <= maxTerms)
+      val rows = termStats.select("term", "df").limit(InvertedIndex.CacheCap + 1).collect()
+      if (rows.length <= InvertedIndex.CacheCap)
         statsMap = Some(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
       else statsOverCap = true
     }
     statsMap
   }
+
+  /** Served from the driver dictionary when `termDfMap` has loaded it
+    * (no job), else the bounded termStats collect. Never loads it: the
+    * serving paths (`Searcher`, edismax) call `termDfMap()` first. */
+  override def termDfs(terms: Seq[String]): Map[String, Long] =
+    statsMap match {
+      case Some(m) => terms.flatMap(t => m.get(t).map(t -> _)).toMap
+      case None => super.termDfs(terms)
+    }
 
   /** The loaded `termDfMap` dictionary in Spark's string order (code
     * point order) — never triggers a job, so multi-term rewrites expand
@@ -159,8 +175,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * GET_FIELDS job per query (a web-scale deployment fronts this with
     * a key-value store or keeps the hot slice). */
   @volatile private var urlsMap: Option[Map[Long, String]] = None
-  def urlMap(maxDocs: Long = 1L << 20): Option[Map[Long, String]] = {
-    if (urlsMap.isEmpty && stats.docCount <= maxDocs) {
+  def urlMap(): Option[Map[Long, String]] = {
+    if (urlsMap.isEmpty && stats.docCount <= InvertedIndex.CacheCap) {
       val rows = docs.select("docId", "url").collect()
       urlsMap = Some(rows.map(r => r.getLong(0) -> r.getString(1)).toMap)
     }
@@ -180,8 +196,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * deployment holds the same data as per-segment slices pinned on
     * the executors. */
   @volatile private var dlqsMap: Option[Map[Long, Int]] = None
-  def dlqMap(maxDocs: Long = 1L << 20): Option[Map[Long, Int]] = {
-    if (dlqsMap.isEmpty && stats.docCount <= maxDocs) {
+  def dlqMap(): Option[Map[Long, Int]] = {
+    if (dlqsMap.isEmpty && stats.docCount <= InvertedIndex.CacheCap) {
       val rows = docs.select("docId", "dlq").collect()
       dlqsMap = Some(rows.map(r => r.getLong(0) -> r.getInt(1)).toMap)
     }
@@ -191,8 +207,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** Materializes the cached docs table `d` and, under the maps' doc
     * cap, loads the url and norms caches from the same scan (serving
     * mode: stored fields and norms without a job). */
-  private def loadDocMaps(d: Dataset[DocRow], maxDocs: Long = 1L << 20): Unit =
-    if (stats.docCount > maxDocs) d.count()
+  private def loadDocMaps(d: Dataset[DocRow]): Unit =
+    if (stats.docCount > InvertedIndex.CacheCap) d.count()
     else {
       val rows = d.select("docId", "url", "dlq").as[(Long, String, Int)].collect()
       urlsMap = Some(rows.iterator.map(r => r._1 -> r._2).toMap)
@@ -203,9 +219,9 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * lifetime, not one per query (re-broadcasting a 10^6-entry map per
     * query would put the serialization back on the hot path). */
   @volatile private var dlqBc: Option[Broadcast[Map[Long, Int]]] = None
-  def dlqBroadcast(maxDocs: Long = 1L << 20): Option[Broadcast[Map[Long, Int]]] = {
+  def dlqBroadcast(): Option[Broadcast[Map[Long, Int]]] = {
     if (dlqBc.isEmpty)
-      dlqMap(maxDocs).foreach(m => dlqBc = Some(spark.sparkContext.broadcast(m)))
+      dlqMap().foreach(m => dlqBc = Some(spark.sparkContext.broadcast(m)))
     dlqBc
   }
 
@@ -213,9 +229,9 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * lifetime contract as `dlqBroadcast`; lets serving kernels recover
     * the corpus doc_id inside the scoring pass without a docs join. */
   @volatile private var urlBc: Option[Broadcast[Map[Long, String]]] = None
-  def urlBroadcast(maxDocs: Long = 1L << 20): Option[Broadcast[Map[Long, String]]] = {
+  def urlBroadcast(): Option[Broadcast[Map[Long, String]]] = {
     if (urlBc.isEmpty)
-      urlMap(maxDocs).foreach(m => urlBc = Some(spark.sparkContext.broadcast(m)))
+      urlMap().foreach(m => urlBc = Some(spark.sparkContext.broadcast(m)))
     urlBc
   }
 
@@ -295,6 +311,11 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
 
 object InvertedIndex {
   import org.apache.spark.sql.types._
+
+  /** Size cap of every driver-side serving cache: the term dictionary
+    * (`termDfMap`, in terms) and the url and norms maps (in docs). An
+    * index past it answers without the cache. */
+  val CacheCap: Int = 1 << 20
 
   /** Schema of the postings parquet: PostingsRow's, as written. */
   val PostingsSchema: StructType = org.apache.spark.sql.Encoders.product[PostingsRow].schema

@@ -238,30 +238,20 @@ object EDisMax {
         fieldScores(scoredTerms)
           .groupBy("docId", "doc_id", "term")
           .agg(tsCol.as("ts"))
-    val perDoc = perTerm
-      .withColumn("isMust", col("term").isin(p.must: _*))
-      .groupBy("docId", "doc_id")
-      .agg(sum("ts").as("s"),
-        sum(when(col("isMust"), 1).otherwise(0)).as("nMust"),
-        sum(when(!col("isMust"), 1).otherwise(0)).as("nShould"))
-      .filter(col("nMust") === p.must.length)
-    val mmFiltered =
-      if (p.should.nonEmpty && p.mmCount > 0)
-        perDoc.filter(col("nShould") >= p.mmCount)
-      else perDoc
-    var out = mmFiltered.select(col("docId"), col("doc_id"), col("s"))
-    if (p.mustNot.nonEmpty) {
-      // excluded if the term matches ANY qf field — only matching
-      // docIds are needed, so read the raw tf table per field (as
-      // boolTopK does) instead of running the BM25 scoring pipeline
-      // (term-stats broadcast + docs join + score projection) on terms
-      // whose scores are discarded
-      val excluded = fields.map { case (idx, _) =>
+    // excluded if a mustNot term matches ANY qf field — only matching
+    // docIds are needed, so read the raw tf table per field instead of
+    // running the BM25 scoring pipeline on terms whose scores are
+    // discarded
+    val excluded =
+      if (p.mustNot.isEmpty) None
+      else Some(fields.map { case (idx, _) =>
         new RelationalPath(idx).tfTable(p.mustNot)
           .toDF("term", "docId", "tf").select("docId")
-      }.reduce(_ union _).distinct()
-      out = out.join(excluded, Seq("docId"), "left_anti")
-    }
+      }.reduce(_ union _).distinct())
+    // the Boolean fold over terms (must count, mm, mustNot) is the
+    // relational path's own
+    var out = new RelationalPath(fields.head._1)
+      .boolPerDoc(perTerm, p.must, p.should, excluded, None, p.mmCount)
     // phrase boosts: full phrase (pf), bigram (pf2), trigram (pf3)
     // shingles of the positional order — computed for ALL grams of ALL
     // phrase fields in ONE batched pass per distinct field
@@ -283,7 +273,7 @@ object EDisMax {
         gramFields.zipWithIndex.map { case (idx, fi) =>
           val rel = new RelationalPath(idx)
           val mine = gramSeq.filter(_.field == idx)
-          val dfOf = dfLookup(idx, mine.flatMap(_.gram).distinct)
+          val dfOf = fieldDfs(idx, mine.flatMap(_.gram).distinct)
           val contents = mine.map(_.gram).distinct
             .filter(_.forall(dfOf.contains)).toIndexedSeq
           if (contents.nonEmpty) {
@@ -347,7 +337,7 @@ object EDisMax {
       // at least one should term, so |hits| ≤ min over must of
       // Σ_fields df, else Σ over should of Σ_fields df.
       val dfsByField: Seq[Map[String, Long]] =
-        fields.map { case (idx, _) => dfLookup(idx, scoredTerms) }
+        fields.map { case (idx, _) => fieldDfs(idx, scoredTerms) }
       def sumDf(t: String): Long = dfsByField.map(_.getOrElse(t, 0L)).sum
       val hitBound: Long =
         if (p.must.nonEmpty) p.must.map(sumDf).min
@@ -684,17 +674,16 @@ object EDisMax {
     }
   }
 
-  /** Term dfs over one field: the warm driver-side dictionary when the
-    * index has one loaded (no Spark job — serving mode), else a bounded
-    * termStats collect. Terms absent from the field are absent from the
-    * map, matching `RelationalPath.termDfs`. */
-  private def dfLookup(idx: IndexView, terms: Seq[String]): Map[String, Long] =
+  /** Term dfs over one field (`IndexView.termDfs`), loading an
+    * InvertedIndex's driver dictionary on first use as `Searcher` does
+    * (serving mode: no job after that). */
+  private def fieldDfs(idx: IndexView, terms: Seq[String]): Map[String, Long] = {
     idx match {
-      case inv: graft.index.InvertedIndex if inv.termDfMap().isDefined =>
-        val m = inv.termDfMap().get
-        terms.flatMap(t => m.get(t).map(t -> _)).toMap
-      case _ => new RelationalPath(idx).termDfs(terms)
+      case inv: graft.index.InvertedIndex => inv.termDfMap()
+      case _ =>
     }
+    idx.termDfs(terms)
+  }
 
   /** Hit-count cap for shipping candidate ids as a pushed isin
     * predicate into the bf feature scan; larger hit sets use the

@@ -74,17 +74,13 @@ object Highlighter {
 object MoreLikeThis {
 
   /** Build an OR query from a text's most significant terms, using the
-    * index's global df for idf (broadcast-sized lookup of only the
-    * doc's own terms). */
+    * index's global df for idf (`IndexView.termDfs` of only the doc's
+    * own terms). */
   def fromText(idx: graft.index.IndexView, text: String, maxTerms: Int = 10,
                minDocFreq: Long = 1): Query = {
     val tf = Analysis.analyze(text).groupBy(identity).view.mapValues(_.length)
     if (tf.isEmpty) return BoolQ()
-    val terms = tf.keys.toSeq
-    import org.apache.spark.sql.functions.col
-    val dfMap = idx.termStats.filter(col("term").isin(terms: _*))
-      .select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfMap = idx.termDfs(tf.keys.toSeq)
     val n = idx.stats.docCount
     val scored = tf.toSeq.flatMap { case (t, f) =>
       dfMap.get(t).filter(_ >= minDocFreq).map { df =>

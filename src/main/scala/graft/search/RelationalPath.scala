@@ -1,10 +1,8 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.index.InvertedIndex
 import graft.util.{PFor, VarInt}
 
 /** The engine's relational face: the same queries the scorer path
@@ -20,6 +18,11 @@ import graft.util.{PFor, VarInt}
   *   ln(1 + (N - df + 0.5)/(df + 0.5)) · tf/(tf + k1·(1-b + b·dlq/avgdl))
   * Float32-exact scoring lives in the scorer path; ScalaTest asserts
   * both paths agree on ranks.
+  *
+  * Scored top-k queries (term, Boolean, dismax, multi-term) all enter
+  * through `forParsed`, which compiles the `Query` into one plan; the
+  * other methods serve shapes a `Query` does not express (facets,
+  * collapse, function and geo ranking, position-verified doc lists).
   */
 object RelationalPath {
   /** (docId, positions) of every posting in a row, in docId order — the
@@ -159,104 +162,18 @@ final class RelationalPath(idx: graft.index.IndexView) {
     ResultFrames.rankedDocIds(session, winners.toSeq.map(_._2))
   }
 
-  /** Single-term top-k: (rank, doc_id). */
-  def termTopK(term: String, k: Int): DataFrame =
-    rankTopK(scoredTf(Seq(term))
-      .select(col("docId"), col("doc_id"), col("score").as("s")), k)
-
-  /** Conjunction (all terms required, scores summed). */
-  def andTopK(terms: Seq[String], k: Int): DataFrame =
-    rankTopK(
-      scoredTf(terms).groupBy("docId", "doc_id")
-        .agg(sum("score").as("s"), count(lit(1)).as("c"))
-        .filter(col("c") === terms.length)
-        .select(col("docId"), col("doc_id"), col("s")), k)
-
-  /** Disjunction with minimumShouldMatch. */
-  def orTopK(terms: Seq[String], mm: Int, k: Int): DataFrame =
-    rankTopK(
-      scoredTf(terms).groupBy("docId", "doc_id")
-        .agg(sum("score").as("s"), count(lit(1)).as("c"))
-        .filter(col("c") >= mm)
-        .select(col("docId"), col("doc_id"), col("s")), k)
-
-  /** MUST + MUST_NOT — anti join on docId. */
-  def notTopK(pos: String, neg: String, k: Int): DataFrame = {
-    val p = scoredTf(Seq(pos)).select(col("docId"), col("doc_id"), col("score").as("s"))
-    val n = scoredTf(Seq(neg)).select(col("docId"))
-    rankTopK(p.join(n, Seq("docId"), "left_anti"), k)
-  }
-
-  /** Scored term + non-scoring attribute filter (semi join). */
-  def filterTopK(term: String, lang: String, k: Int): DataFrame = {
-    val p = scoredTf(Seq(term)).select(col("docId"), col("doc_id"), col("score").as("s"))
-    val f = idx.docs.filter(col("lang") === lang).select("docId")
-    rankTopK(p.join(f, Seq("docId"), "left_semi"), k)
-  }
+  /** The docIds holding any of `terms` (distinct) — set membership read
+    * from the raw tf rows, no scoring. */
+  private def docIdsOf(terms: Seq[String]): DataFrame =
+    tfTable(terms.distinct).toDF("term", "docId", "tf").select("docId").distinct()
 
   /** Constant-score set membership (TermInSetQuery / multi-term rewrite
     * target): all docs containing ANY of the terms; constant score ⇒
     * rank = docId (url-rank) order. */
-  def constDocsTopK(terms: Seq[String], k: Int): DataFrame =
-    if (terms.isEmpty)
-      idx.spark.emptyDataFrame
-        .withColumn("rank", lit(0)).withColumn("doc_id", lit(0L))
-        .select("rank", "doc_id").limit(0)
-    else {
-      constRankByDocId(
-        tfTable(terms).toDF("term", "docId", "tf")
-          .select("docId").distinct()
-          .join(docsWithId.select(col("docId"), col("doc_id")), "docId"), k)
-    }
-
-  /** Prefix / range / fuzzy top-k — term-dictionary expansion (a
-    * pushdown-pruned termstats scan) then constant-score set. */
-  def prefixTopK(p: String, k: Int): DataFrame =
-    constDocsTopK(new IndexTermDict(idx).prefix(p), k)
-  def rangeTopK(lo: String, hi: String, k: Int): DataFrame =
-    constDocsTopK(new IndexTermDict(idx)
-      .range(Some(lo), Some(hi), il = true, ih = true), k)
-  def fuzzyTopK(t: String, maxEdits: Int, k: Int): DataFrame =
-    constDocsTopK(new IndexTermDict(idx).fuzzy(t, maxEdits), k)
-
-  /** DisjunctionMax: max + tieBreak·(sum − max) per doc. */
-  def dismaxTopK(terms: Seq[String], tieBreak: Double, k: Int): DataFrame =
-    rankTopK(
-      scoredTf(terms).groupBy("docId", "doc_id")
-        .agg(max("score").as("mx"), sum("score").as("sm"))
-        .withColumn("s", col("mx") + lit(tieBreak) * (col("sm") - col("mx")))
-        .select(col("docId"), col("doc_id"), col("s")), k)
-
-  /** Boosted disjunction: Σ boost(term)·score. */
-  def boostedOrTopK(termBoosts: Seq[(String, Double)], k: Int): DataFrame = {
-    val terms = termBoosts.map(_._1)
-    val boostCol = termBoosts.tail.foldLeft(
-      when(col("term") === termBoosts.head._1, lit(termBoosts.head._2))) {
-      case (acc, (t, b)) => acc.when(col("term") === t, lit(b))
-    }.otherwise(lit(1.0))
-    rankTopK(
-      scoredTf(terms)
-        .withColumn("ws", col("score") * boostCol)
-        .groupBy("docId", "doc_id")
-        .agg(sum("ws").as("s"))
-        .select(col("docId"), col("doc_id"), col("s")), k)
-  }
-
-  /** Deep paging: ranks [lo, hi] of a term query (searchAfter) — top-hi
-    * via TakeOrderedAndProject first, then driver rank/slice of the
-    * ≤hi collected rows. */
-  def termPage(term: String, lo: Int, hi: Int): DataFrame = {
-    val top = scoredTf(Seq(term))
-      .select(col("docId").cast("long").as("docId"),
-        col("doc_id").cast("long").as("doc_id"),
-        col("score").cast("double").as("s"))
-      .orderBy(desc("s"), asc("docId"))
-      .limit(hi)
-      .as[(Long, Long, Double)].collect()
-      .sortBy { case (d, _, s) => (-s, d) }
-    val first = math.max(lo, 1)
-    ResultFrames.rankedDocIds(session, top.toSeq.drop(first - 1).map(_._2), first)
-  }
+  private def constDocsTopK(terms: Seq[String], k: Int): DataFrame =
+    if (terms.isEmpty) ResultFrames.rankedDocIds(session, Nil)
+    else constRankByDocId(
+      docIdsOf(terms).join(docsWithId.select(col("docId"), col("doc_id")), "docId"), k)
 
   /** Collapse: best-scoring doc per group key (lang) for a term query
     * [U solr CollapsingQParserPlugin]. Argmax via max_by over the total
@@ -305,34 +222,53 @@ final class RelationalPath(idx: graft.index.IndexView) {
       .orderBy("lang")
 
   /** General Boolean top-k (the QParser → relational execution path):
-    * scored MUST/SHOULD term clauses with minimumShouldMatch, an
-    * optional non-scoring docs-attribute predicate, MUST_NOT terms.
-    * Generalizes andTopK/orTopK/notTopK/filterTopK into one plan. */
-  def boolTopK(must: Seq[String], should: Seq[String],
-               mustNot: Seq[String] = Nil,
-               attrFilter: Option[Column] = None,
-               mm: Int = 0, k: Int = 10): DataFrame = {
-    val mustD = must.distinct
-    val shouldD = should.distinct.filterNot(mustD.contains)
+    * scored MUST/SHOULD term clauses (a `BoostQ(TermQ, b)` clause weighs
+    * its term's score by b) with minimumShouldMatch, non-scoring
+    * docs-attribute MUST/FILTER predicates, MUST_NOT terms. */
+  private def boolTopK(b: BoolQ, k: Int): DataFrame = {
+    def isAttr(x: Query) = x match {
+      case _: AttrQ | _: AttrRangeQ => true
+      case _ => false
+    }
+    val (attrMust, restMust) = b.must.partition(isAttr)
+    val (attrFilt, restFilt) = b.filter.partition(isAttr)
+    require(restFilt.isEmpty,
+      s"only attribute FILTER clauses run on the relational path (a term belongs in must): $restFilt")
+    def weighted(qs: Seq[Query], what: String): Seq[(String, Double)] = qs.map {
+      case TermQ(t) => (t, 1.0)
+      case BoostQ(TermQ(t), w) => (t, w.toDouble)
+      case other => sys.error(s"unsupported $what clause on relational path: $other")
+    }
+    val must = weighted(restMust, "must")
+    val should = weighted(b.should, "should")
+    val mustNot = terms(b.mustNot, "mustNot")
+    val attrFilter = (attrMust ++ attrFilt)
+      .map(RelationalPath.attrPredColumn(idx.docs.schema, _))
+      .reduceOption(_ && _)
+    val mustD = must.map(_._1).distinct
+    val shouldD = should.map(_._1).distinct.filterNot(mustD.contains)
     val scoredTerms = mustD ++ shouldD
     if (scoredTerms.isEmpty) {
       // attr-only boolean (no scored term clauses): constant score ⇒
       // rank = docId (url-rank) order, mustNot terms anti-joined — the
       // scorer path answers the same shape via PredQ bitsets
-      attrFilter match {
-        case None =>
-          return idx.spark.emptyDataFrame
-            .withColumn("rank", lit(0)).withColumn("doc_id", lit(0L))
-            .select("rank", "doc_id").limit(0)
+      return attrFilter match {
+        case None => ResultFrames.rankedDocIds(session, Nil)
         case Some(pred) =>
-          var out = docsWithId.filter(pred).select(col("docId"), col("doc_id"))
-          if (mustNot.nonEmpty)
-            out = out.join(
-              tfTable(mustNot.distinct).toDF("term", "docId", "tf")
-                .select("docId").distinct(),
-              Seq("docId"), "left_anti")
-          return constRankByDocId(out, k)
+          val anchor = docsWithId.filter(pred).select(col("docId"), col("doc_id"))
+          constRankByDocId(
+            if (mustNot.isEmpty) anchor
+            else anchor.join(docIdsOf(mustNot), Seq("docId"), "left_anti"), k)
       }
+    }
+    // per-term weights; an unboosted term's score is not multiplied
+    val boosts = (must ++ should).groupMapReduce(_._1)(w => Set(w._2))(_ ++ _)
+      .map { case (t, ws) =>
+        require(ws.size == 1, s"term '$t' carries different boosts: $ws")
+        t -> ws.head
+      }.filter(_._2 != 1.0)
+    val ts = boosts.foldLeft(col("score")) { case (c, (t, w)) =>
+      when(col("term") === t, col("score") * lit(w)).otherwise(c)
     }
     // Lucene occur semantics (BoolScorer / Boolean2ScorerSupplier):
     // mm defaults to 1 only when there is NO required clause at all —
@@ -340,24 +276,40 @@ final class RelationalPath(idx: graft.index.IndexView) {
     // mm=0 and attr-matching docs surface with score 0 when no SHOULD
     // term matches (identical to the scorer path's required anchor).
     val hasRequired = mustD.nonEmpty || attrFilter.isDefined
-    val effMm = if (hasRequired) mm else math.max(mm, 1)
-    rankTopK(boolPerDoc(mustD, shouldD, mustNot, attrFilter, effMm), k)
+    val effMm = if (hasRequired) b.minShouldMatch else math.max(b.minShouldMatch, 1)
+    rankTopK(boolPerDoc(
+      scoredTf(scoredTerms).select(col("docId"), col("doc_id"), col("term"), ts.as("ts")),
+      mustD, shouldD, if (mustNot.isEmpty) None else Some(docIdsOf(mustNot)),
+      attrFilter, effMm), k)
   }
 
-  /** The LAZY scored per-doc frame of the general Boolean query (the
-    * plan rankTopK bounds and collects) — exposed for PlanSpec. */
-  private[search] def boolPerDoc(mustD: Seq[String], shouldD: Seq[String],
-                                 mustNot: Seq[String],
+  /** The LAZY scored per-doc frame of a Boolean query over term clauses
+    * (the plan rankTopK bounds and collects) — shared by `forParsed` and
+    * edismax's general plan, exposed for PlanSpec. `perTerm` holds one
+    * (docId, doc_id, term, ts) row per matching (term, doc); a doc
+    * scores Σ ts when it matches every `mustD` term and at least `effMm`
+    * of `shouldD`. `excluded` (docId) is anti-joined — the MUST_NOT
+    * matches. `attrFilter` is a required docs predicate: with no MUST
+    * term it is the anchor, whose docs keep score 0 when no SHOULD term
+    * matches. Output: (docId, doc_id, s). */
+  private[search] def boolPerDoc(perTerm: DataFrame,
+                                 mustD: Seq[String], shouldD: Seq[String],
+                                 excluded: Option[DataFrame],
                                  attrFilter: Option[Column],
                                  effMm: Int): DataFrame = {
-    val scoredTerms = mustD ++ shouldD
-    val scored = scoredTf(scoredTerms)
-      .withColumn("isMust", col("term").isin(mustD: _*))
-      .groupBy("docId", "doc_id")
-      .agg(sum("score").as("s"),
-        sum(when(col("isMust"), 1).otherwise(0)).as("nMust"),
-        sum(when(!col("isMust"), 1).otherwise(0)).as("nShould"))
-      .filter(col("nMust") === mustD.length)
+    val grouped =
+      if (mustD.length + shouldD.length == 1)
+        // one term: already one row per doc, so the fold is the identity
+        perTerm.select(col("docId"), col("doc_id"), col("ts").as("s"),
+          lit(mustD.length).as("nMust"), lit(shouldD.length).as("nShould"))
+      else
+        perTerm
+          .withColumn("isMust", col("term").isin(mustD: _*))
+          .groupBy("docId", "doc_id")
+          .agg(sum("ts").as("s"),
+            sum(when(col("isMust"), 1).otherwise(0)).as("nMust"),
+            sum(when(!col("isMust"), 1).otherwise(0)).as("nShould"))
+    val scored = grouped.filter(col("nMust") === mustD.length)
     var out =
       if (mustD.isEmpty && attrFilter.isDefined)
         // attr predicate is the required anchor: left-join the SHOULD
@@ -370,11 +322,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
     if (shouldD.nonEmpty && effMm > 0)
       out = out.filter(col("nShould") >= effMm)
     out = out.select(col("docId"), col("doc_id"), col("s"))
-    if (mustNot.nonEmpty)
-      out = out.join(
-        tfTable(mustNot.distinct).toDF("term", "docId", "tf")
-          .select("docId").distinct(),
-        Seq("docId"), "left_anti")
+    excluded.foreach(ex => out = out.join(ex, Seq("docId"), "left_anti"))
     if (mustD.nonEmpty) // otherwise the attr anchor already applied
       attrFilter.foreach { pred =>
         out = out.join(idx.docs.filter(pred).select("docId"), Seq("docId"), "left_semi")
@@ -444,37 +392,37 @@ final class RelationalPath(idx: graft.index.IndexView) {
       .orderBy("doc_id")
   }
 
-  /** Execute a parsed query string on the relational path (the Solr
-    * QParser → index-operation compilation, SURVEY.md §3.C). Supports
-    * the Boolean/term/attr subset; everything else (phrases, multi-term
-    * rewrites) has dedicated methods / the scorer path. */
-  def forParsed(q: Query, k: Int = 10): DataFrame = {
-    def terms(qs: Seq[Query], what: String): Seq[String] = qs.map {
-      case TermQ(t) => t
-      case other => sys.error(s"unsupported $what clause on relational path: $other")
-    }
-    q match {
-      case TermQ(t) => termTopK(t, k)
+  private def terms(qs: Seq[Query], what: String): Seq[String] = qs.map {
+    case TermQ(t) => t
+    case other => sys.error(s"unsupported $what clause on relational path: $other")
+  }
+
+  /** Scored top-k (rank, doc_id) of a parsed query on the relational
+    * path — the Solr QParser → index-operation compilation (SURVEY.md
+    * §3.C) and the one relational entry point for term, Boolean, dismax
+    * and multi-term queries. Multi-term queries (prefix, wildcard, fuzzy,
+    * term range) first rewrite against the term dictionary (the shared
+    * `Rewriter`), then:
+    *  - `MatchAllQ` and `TermSetQ`: constant score, url-rank order;
+    *  - `DisMaxQ` of terms: max + tieBreak·(sum − max) per doc;
+    *  - `TermQ` and `BoolQ`: see `boolTopK`.
+    * Phrase, span and interval queries are doc lists (`phraseDocs`,
+    * `spanNearDocs`, `intervalSourceDocs`); other shapes are answered
+    * by the scorer path. */
+  def forParsed(q: Query, k: Int = 10): DataFrame =
+    Rewriter.rewrite(q, new IndexTermDict(idx)) match {
       case MatchAllQ => matchAllTopK(k)
-      case b: BoolQ =>
-        def isAttr(x: Query) = x match {
-          case _: AttrQ | _: AttrRangeQ => true
-          case _ => false
-        }
-        val (attrMust, restMust) = b.must.partition(isAttr)
-        val (attrFilt, restFilt) = b.filter.partition(isAttr)
-        val termFilt = terms(restFilt, "filter") // non-scoring term filters
-        val attrPred = (attrMust ++ attrFilt)
-          .map(RelationalPath.attrPredColumn(idx.docs.schema, _))
-          .reduceOption(_ && _)
-        var df = boolTopK(terms(restMust, "must"), terms(b.should, "should"),
-          terms(b.mustNot, "mustNot"), attrPred, b.minShouldMatch, k)
-        require(termFilt.isEmpty,
-          "term FILTER clauses not supported on the relational path (use must)")
-        df
+      case TermSetQ(ts, _) => constDocsTopK(ts, k)
+      case DisMaxQ(qs, tieBreak) =>
+        rankTopK(
+          scoredTf(terms(qs, "dismax")).groupBy("docId", "doc_id")
+            .agg(max("score").as("mx"), sum("score").as("sm"))
+            .withColumn("s", col("mx") + lit(tieBreak.toDouble) * (col("sm") - col("mx")))
+            .select(col("docId"), col("doc_id"), col("s")), k)
+      case t: TermQ => boolTopK(BoolQ(must = Seq(t)), k)
+      case b: BoolQ => boolTopK(b, k)
       case other => sys.error(s"unsupported query on relational path: $other")
     }
-  }
 
   /** MatchAllDocsQuery analogue (`q=*:*`): every live doc, constant
     * score ⇒ rank = docId (url-rank) order
@@ -558,9 +506,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
                         term: String, k: Int): DataFrame = {
     val p = scoredTf(Seq(term))
       .select(col("docId"), col("doc_id"), col("score").as("s"))
-    val f = new RelationalPath(fromIdx).tfTable(Seq(fromTerm))
-      .toDF("term", "docId", "tf").select("docId").distinct()
-    rankTopK(p.join(f, Seq("docId"), "left_semi"), k)
+    rankTopK(p.join(new RelationalPath(fromIdx).docIdsOf(Seq(fromTerm)), Seq("docId"), "left_semi"), k)
   }
 
   /** Interval combinator query — maxgaps(g, ordered(bigTerms))
@@ -689,19 +635,6 @@ final class RelationalPath(idx: graft.index.IndexView) {
       byTerm => s.eval(byTerm).nonEmpty, requiredTerms = required)
   }
 
-  /** Scored term + non-scoring timestamp-range filter — the
-    * PointRangeQuery / BKD analogue over the docs table
-    * [U lucene/core/.../search/PointRangeQuery.java]; the range
-    * comparison is pushed into the docs parquet scan. */
-  def tsRangeTopK(term: String, loTs: String, hiTs: String, k: Int): DataFrame = {
-    val p = scoredTf(Seq(term)).select(col("docId"), col("doc_id"), col("score").as("s"))
-    val f = idx.docs
-      .filter(col("ts") >= to_timestamp(lit(loTs)) &&
-        col("ts") <= to_timestamp(lit(hiTs)))
-      .select("docId")
-    rankTopK(p.join(f, Seq("docId"), "left_semi"), k)
-  }
-
   /** Decoded per-(term, doc) position lists for `terms` — the shared
     * position source of spanNearDocs / phraseDocs / phraseScores (one
     * place knows the block/position format). */
@@ -709,13 +642,6 @@ final class RelationalPath(idx: graft.index.IndexView) {
     idx.postingsOf(terms)
       .flatMap(r => RelationalPath.positions(r).map { case (d, p) => (r.term, d, p) })
       .toDF("term", "docId", "pos")
-
-  /** Bounded driver lookup of the terms' document frequencies (the
-    * same shape as the Searcher's broadcast term stats). */
-  private[search] def termDfs(terms: Seq[String]): Map[String, Long] =
-    idx.termStats.filter(col("term").isin(terms.distinct: _*))
-      .select(col("term"), col("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Span-near matching docs (ascending doc_id)
     * [U lucene/core/.../search/spans/SpanNearQuery.java]. Execution
@@ -758,10 +684,9 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * phrase order WITH multiplicity, tf = phrase frequency) — the
     * scoring twin of `phraseDocs`, used by edismax `pf` boosts.
     * Output: (docId, doc_id, ps) for docs where the phrase occurs.
-    * The term-df lookup is a bounded driver collect (≤ |phrase| rows,
-    * the same shape as the Searcher's broadcast term stats). */
+    * The term dfs come from `IndexView.termDfs`, as the Searcher's do. */
   def phraseScores(terms: Seq[String]): DataFrame =
-    phraseScoresFrom(positionsTable(terms), termDfs(terms), terms)
+    phraseScoresFrom(positionsTable(terms), idx.termDfs(terms), terms)
 
   /** Exact phrase frequencies for MANY grams in ONE distributed pass —
     * the edismax pf/pf2/pf3 batch kernel. ONE shuffle of the decoded

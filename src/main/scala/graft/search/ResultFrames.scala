@@ -36,9 +36,9 @@ object ResultFrames {
   def of(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** (rank, doc_id) for corpus doc_ids in rank order, ranks from `first`. */
-  def rankedDocIds(spark: SparkSession, docIds: Seq[Long], first: Int = 1): DataFrame =
-    of(spark, RankDocId, docIds.zipWithIndex.map { case (id, i) => Row(first + i, id) })
+  /** (rank, doc_id) for corpus doc_ids in rank order, ranks from 1. */
+  def rankedDocIds(spark: SparkSession, docIds: Seq[Long]): DataFrame =
+    of(spark, RankDocId, docIds.zipWithIndex.map { case (id, i) => Row(i + 1, id) })
 
   /** (doc_id) rows in the given order. */
   def docIds(spark: SparkSession, docIds: Seq[Long]): DataFrame =

@@ -37,18 +37,13 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
 
   private def context(q: Query): ScoringContext = {
     val terms = Query.collectTerms(q)
-    val dfMap: Map[String, Long] =
-      if (terms.isEmpty) Map.empty
-      else idx match {
-        // warm serving mode: dictionary cached on the driver — no job
-        case inv: graft.index.InvertedIndex if inv.termDfMap().isDefined =>
-          val m = inv.termDfMap().get
-          terms.flatMap(t => m.get(t).map(t -> _)).toMap
-        case _ =>
-          idx.termStats.filter(col("term").isin(terms: _*))
-            .select("term", "df").as[(String, Long)].collect().toMap
-      }
-    ScoringContext(idx.stats, dfMap)
+    // serving mode: load the driver dictionary on first use, so every
+    // later lookup runs no job
+    idx match {
+      case inv: graft.index.InvertedIndex if terms.nonEmpty => inv.termDfMap()
+      case _ =>
+    }
+    ScoringContext(idx.stats, idx.termDfs(terms))
   }
 
   /** Top-k hits as (rank, docId, url, score), rank-identical to the
@@ -390,10 +385,10 @@ object SegmentScorer {
       case BoolQ(Seq(TermQ(t)), Nil, Nil, filt, mm)
         if k > 0 && deleted.isEmpty && mm <= 0 && filt.nonEmpty &&
           filt.forall(_.isInstanceOf[PredQ]) =>
-        termTopK(termScorer(t, ctx, termBlocks), k,
+        blockMaxTopK(termScorer(t, ctx, termBlocks), k,
           predAccept(filt, predBits, accept))
       case TermQ(_) if k > 0 && deleted.isEmpty =>
-        termTopK(scorer.asInstanceOf[TermScorer], k, accept)
+        blockMaxTopK(scorer.asInstanceOf[TermScorer], k, accept)
       case _ => exhaustive(scorer, k, accept)
     }
   }
@@ -482,7 +477,7 @@ object SegmentScorer {
   /** Single-term top-k with block-max skipping: once the heap is full,
     * whole blocks whose bound can't beat the threshold are never decoded
     * [U …/search/ImpactsDISI.java]. */
-  private def termTopK(ts: TermScorer, k: Int,
+  private def blockMaxTopK(ts: TermScorer, k: Int,
                        accept: (Long, Float) => Boolean): Iterator[(Long, Float)] = {
     val heap = new TopKHeap(k)
     var d = ts.nextDoc()

@@ -52,7 +52,7 @@ class DeletesSpec extends SparkSpec {
 
     // relational path agrees
     val rel = new RelationalPath(idx)
-    val relIds = rel.termTopK("spark", 10).collect().map(_.getLong(1)).toSet
+    val relIds = rel.forParsed(TermQ("spark"), 10).collect().map(_.getLong(1)).toSet
     assert(!relIds.contains(1L))
     assert(relIds.size === 3)
 

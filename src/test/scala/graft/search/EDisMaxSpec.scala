@@ -62,8 +62,15 @@ class EDisMaxSpec extends SparkSpec {
     val rel = new RelationalPath(textIdx)
     val viaEdismax = EDisMax.topK(Seq(textIdx -> 1.0),
       EDisMax.parse("spark join", "0"), 10).collect().toSeq
-    val viaBool = rel.orTopK(Seq("spark", "join"), 1, 10).collect().toSeq
+    val viaBool = rel.forParsed(Query.or("spark", "join"), 10).collect().toSeq
     assert(viaEdismax === viaBool)
+    // edismax's general plan and forParsed share the boolPerDoc fold, so
+    // the scorer path is the independent reference (docId → doc_id by url)
+    val urlOf = textIdx.docs.collect().map(d => d.docId -> d.url).toMap
+    val viaScorer = new Searcher(textIdx).topK(Query.or("spark", "join"), 10)
+      .collect().map(r => RelationalPath.docIdOfUrl(urlOf(r.getLong(1)))).toSeq
+    assert(viaScorer.nonEmpty)
+    assert(viaEdismax.map(_.getLong(1)) === viaScorer)
   }
 
   test("multi-field: url-only term matches through the url index") {

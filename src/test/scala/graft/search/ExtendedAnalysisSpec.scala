@@ -159,7 +159,7 @@ class ExtendedAnalysisSpec extends SparkSpec {
         |ORDER BY s.score DESC, s.docId ASC LIMIT 5""".stripMargin).collect()
     assert(out.length === 5)
     // agrees with the relational path's ranking
-    val rel = new RelationalPath(idx).termTopK("spark", 5).collect()
+    val rel = new RelationalPath(idx).forParsed(TermQ("spark"), 5).collect()
     val urls = rel.map(_.getLong(1)).map(id => f"$id%012d")
     out.map(_.getString(0)).zip(urls).foreach { case (u, suffix) =>
       assert(u.endsWith(suffix))

@@ -57,20 +57,28 @@ class PlanSpec extends SparkSpec {
 
   test("relational top-k winners frame: TakeOrderedAndProject, ZERO Window") {
     val rel = new RelationalPath(idx)
-    // the lazy frame rankTopK collects (ranks are stamped driver-side
-    // over the ≤k winners, so the executed plan has no Window at all)
-    val perDoc = rel.scoredTf(Seq("spark"))
-      .select(col("docId"), col("doc_id"), col("score").as("s"))
-    val p = plan(rel.topKWinnersFrame(perDoc, 10))
+    // the lazy frame rankTopK collects for forParsed(TermQ("spark")) —
+    // ranks are stamped driver-side over the ≤k winners, so the executed
+    // plan has no Window at all
+    val perTerm = rel.scoredTf(Seq("spark"))
+      .select(col("docId"), col("doc_id"), col("term"), col("score").as("ts"))
+    val p = plan(rel.topKWinnersFrame(
+      rel.boolPerDoc(perTerm, Seq("spark"), Nil, None, None, 0), 10))
     assert(p.contains("TakeOrderedAndProject"), p.take(3000))
     assert(!p.contains("Window"),
       s"rank tails are driver-stamped — no Window operator\n${p.take(3000)}")
+    // one term is one row per doc already: no group-by, so no shuffle
+    assert(!p.contains("HashAggregate"), p.take(3000))
+    assert("(?<!Broadcast)Exchange".r.findFirstIn(p).isEmpty, p.take(3000))
   }
 
   test("generic boolPerDoc winners: TakeOrdered + broadcast stats + anti join, ZERO Window") {
     val rel = new RelationalPath(idx)
+    val perTerm = rel.scoredTf(Seq("spark", "join"))
+      .select(col("docId"), col("doc_id"), col("term"), col("score").as("ts"))
+    val merge = rel.tfTable(Seq("merge")).toDF("term", "docId", "tf").select("docId")
     val df = rel.topKWinnersFrame(
-      rel.boolPerDoc(Seq("spark"), Seq("join"), Seq("merge"), None, 0), 10)
+      rel.boolPerDoc(perTerm, Seq("spark"), Seq("join"), Some(merge), None, 0), 10)
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"), p.take(3000))
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),

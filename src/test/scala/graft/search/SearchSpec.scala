@@ -71,25 +71,38 @@ class SearchSpec extends SparkSpec {
     // compare via doc_id: map scorer docId → doc_id via url suffix
     def scorerDocIds(q: Query): Seq[Long] =
       searcher.topK(q, 10).collect().map(_.getLong(1))
-        .map(d => urlOf(d).substring(urlOf(d).lastIndexOf('/') + 1).toLong).toSeq
-    def relDocIds(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.collect().map(_.getLong(1)).toSeq
+        .map(d => RelationalPath.docIdOfUrl(urlOf(d))).toSeq
+    val shapes: Seq[Query] = Seq(
+      TermQ("spark"),
+      TermQ("the"),
+      Query.and("spark", "join"),
+      Query.and("spark", "the", "merge"),
+      Query.or("window", "batch"),
+      Query.orMM(2, "sort", "merge", "window"),
+      Query.not("spark", "merge"),
+      BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"))),
+      DisMaxQ(Seq(TermQ("spark"), TermQ("merge")), 0.3f),
+      BoolQ(should = Seq(BoostQ(TermQ("spark"), 2f), TermQ("merge"))),
+      BoolQ(must = Seq(BoostQ(TermQ("spark"), 3f), TermQ("join"))),
+      PrefixQ("s"),
+      TermRangeQ("batch", "data"),
+      FuzzyQ("spork", 1),
+      BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrRangeQ("ts",
+        Some("2025-10-24 00:02:00"), Some("2025-10-24 00:06:00")))))
+    shapes.foreach { q =>
+      val relDocIds = rel.forParsed(q, 10).collect().map(_.getLong(1)).toSeq
+      assert(relDocIds.nonEmpty, s"no hits for $q")
+      assert(scorerDocIds(q) === relDocIds, s"ranks differ on $q")
+    }
+  }
 
-    assert(scorerDocIds(TermQ("spark")) === relDocIds(rel.termTopK("spark", 10)))
-    assert(scorerDocIds(TermQ("the")) === relDocIds(rel.termTopK("the", 10)))
-    assert(scorerDocIds(Query.and("spark", "join")) ===
-      relDocIds(rel.andTopK(Seq("spark", "join"), 10)))
-    assert(scorerDocIds(Query.and("spark", "the", "merge")) ===
-      relDocIds(rel.andTopK(Seq("spark", "the", "merge"), 10)))
-    assert(scorerDocIds(Query.or("window", "batch")) ===
-      relDocIds(rel.orTopK(Seq("window", "batch"), 1, 10)))
-    assert(scorerDocIds(Query.orMM(2, "sort", "merge", "window")) ===
-      relDocIds(rel.orTopK(Seq("sort", "merge", "window"), 2, 10)))
-    assert(scorerDocIds(Query.not("spark", "merge")) ===
-      relDocIds(rel.notTopK("spark", "merge", 10)))
-    assert(scorerDocIds(BoolQ(must = Seq(TermQ("spark")),
-      filter = Seq(AttrQ("lang", "en")))) ===
-      relDocIds(rel.filterTopK("spark", "en", 10)))
+  test("relational path rejects a term FILTER clause before running a Spark job") {
+    val rel = new RelationalPath(idx)
+    val q = BoolQ(must = Seq(TermQ("spark")), filter = Seq(TermQ("merge")))
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext) {
+      intercept[IllegalArgumentException](rel.forParsed(q, 10))
+    }
+    assert(c.jobs === 0 && c.sqlExecutions === 0, c)
   }
 
   test("filterCache: warm serving path (broadcast bitmap) == SpecOracle on attr filters") {

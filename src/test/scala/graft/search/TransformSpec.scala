@@ -23,7 +23,7 @@ class TransformSpec extends SparkSpec {
 
   test("[explain] rows: tf/df/dlq match a driver recount; contributions sum to the hit score") {
     val terms = Seq("spark", "merge")
-    val hits = rel.orTopK(terms, 1, 10)
+    val hits = rel.forParsed(BoolQ(should = terms.map(TermQ.apply)), 10)
     val rows = DocTransformers.explainRows(idx, hits, terms).collect()
     assert(rows.nonEmpty)
     // driver oracle from raw corpus text
@@ -53,7 +53,7 @@ class TransformSpec extends SparkSpec {
   }
 
   test("fl pipeline: [docid], [value], fn-computed field") {
-    val hits = rel.termTopK("spark", 5)
+    val hits = rel.forParsed(TermQ("spark"), 5)
     val out = DocTransformers.apply(idx, hits, TermQ("spark"),
       DocTransformers.parseFl("rank,doc_id,[docid],answer:[value v=42]"))
       .collect()
@@ -244,7 +244,7 @@ class TransformSpec extends SparkSpec {
     val baseModel = Ltr.LinearModel(Seq("base" -> col("s")), Seq(1.0))
     val baseGot = Ltr.rescore(idx, terms, 30, 10, baseModel).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val baseExp = rel.orTopK(terms, 1, 10).collect()
+    val baseExp = rel.forParsed(BoolQ(should = terms.map(TermQ.apply)), 10).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     assert(baseGot === baseExp)
   }

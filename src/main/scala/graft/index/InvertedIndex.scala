@@ -64,8 +64,7 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * its manifest is committed, so an open reader follows it. */
   private def diskTables: String = InvertedIndex.tablesDir(dir, InvertedIndex.readManifest(dir))
 
-  @volatile private var cached
-      : Option[(RDD[SegmentPostings], Dataset[DocRow], DataFrame)] = None
+  @volatile private var cached: Option[InvertedIndex.Warm] = None
 
   /** The whole postings table, always read from parquet: warm serving
     * reads postings through `postingsOf` and the resident segments. */
@@ -73,7 +72,10 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     InvertedIndex.read(spark, diskTables, "postings").as[PostingsRow]
 
   /** The warm reader's postings: one cached partition per segment. */
-  def residentPostings: Option[RDD[SegmentPostings]] = cached.map(_._1)
+  def residentPostings: Option[RDD[SegmentPostings]] = cached.map(_.postings)
+
+  /** The warm reader's doc columns: one cached partition per segment. */
+  def residentDocs: Option[RDD[SegmentDocs]] = cached.map(_.docCols)
 
   override def postingsOf(terms: Seq[String]): Dataset[PostingsRow] =
     residentPostings match {
@@ -87,7 +89,7 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     df.select("segId", "docId", "url", "lang", "dl", "norm", "dlq", "ts")
       .as[DocRow]
 
-  def docs: Dataset[DocRow] = cached.map(_._2)
+  def docs: Dataset[DocRow] = cached.map(_.docs)
     .getOrElse(docRowCols(InvertedIndex.read(spark, diskTables, "docs")))
 
   /** Stored fields (docId, url, text) — the .fdt analogue; the text
@@ -96,7 +98,7 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   def storedFields: DataFrame =
     InvertedIndex.read(spark, diskTables, "docs").select("docId", "url", "text")
 
-  def termStats: DataFrame = cached.map(_._3)
+  def termStats: DataFrame = cached.map(_.termStats)
     .getOrElse(InvertedIndex.read(spark, diskTables, "termstats"))
 
   def lineage: DataFrame = InvertedIndex.read(spark, dir, "lineage")
@@ -265,39 +267,43 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** Pin the segment tables in executor memory and materialize them —
     * the analogue of a warm MMapDirectory + preloaded norms in the
     * reference's "warm searcher" serving mode. Postings become one
-    * resident flat layout per segment (SegmentPostings); docs and the
-    * term dictionary stay cached Datasets. The tables are this reader's
-    * generation's (`tablesDir`): each generation has a directory of its
-    * own, so Spark's cache, which matches a plan by its paths, never
-    * hands one generation's cached tables to another's reader. Opt-in:
+    * resident flat layout per segment (SegmentPostings), and so do the
+    * doc columns (SegmentDocs); docs and the term dictionary also stay
+    * cached Datasets. The tables are this reader's generation's
+    * (`tablesDir`): each generation has a directory of its own, so
+    * Spark's cache, which matches a plan by its paths, never hands one
+    * generation's cached tables to another's reader. Opt-in:
     * at full corpus scale you warm only the hot working set, so nothing
     * in the query path REQUIRES this. */
   def warm(): InvertedIndex = {
     if (cached.isEmpty) {
       val segIds = InvertedIndex.segmentsOf(manifest).map(_.segId).toSeq
-      val p = SegmentPostings.resident(spark, s"$tablesDir/postings", segIds)
-      val d = docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist()
-      val t = InvertedIndex.read(spark, tablesDir, "termstats").persist()
+      val w = InvertedIndex.Warm(SegmentPostings.resident(spark, s"$tablesDir/postings", segIds),
+        SegmentDocs.resident(spark, s"$tablesDir/docs", segIds),
+        docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist(),
+        InvertedIndex.read(spark, tablesDir, "termstats").persist())
       // each materialization is a few small tasks, bound by scheduling
       // latency rather than cores: run them side by side
-      InvertedIndex.inParallel(() => p.count(), () => t.count(), () => loadDocMaps(d))
-      cached = Some((p, d, t))
+      InvertedIndex.inParallel(() => w.postings.count(), () => w.docCols.count(),
+        () => w.termStats.count(), () => loadDocMaps(w.docs))
+      cached = Some(w)
     }
     this
   }
 
   /** Releases what `warm()` and serving loaded: unpersists the resident
-    * postings and the cached docs and termstats, destroys the url, norms
-    * and filter broadcasts, and drops the driver maps and the filter
-    * cache.
+    * postings and doc columns and the cached docs and termstats,
+    * destroys the url, norms and filter broadcasts, and drops the driver
+    * maps and the filter cache.
     * The reader then answers cold. Call it once no query is running on
     * the reader (a destroyed broadcast fails the query that reads it),
     * e.g. after a refresh has published the reader that replaces it.
     * Spark caches a Dataset by its plan, so another warm reader of the
     * same generation shares these cache entries and loses them too. */
   def close(): Unit = {
-    cached.foreach { case (p, d, t) =>
-      p.unpersist(blocking = false); d.unpersist(); t.unpersist()
+    cached.foreach { w =>
+      w.postings.unpersist(blocking = false); w.docCols.unpersist(blocking = false)
+      w.docs.unpersist(); w.termStats.unpersist()
     }
     cached = None
     urlBc.foreach(_.destroy()); dlqBc.foreach(_.destroy())
@@ -311,6 +317,14 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
 
 object InvertedIndex {
   import org.apache.spark.sql.types._
+
+  /** What `warm()` pinned: the resident postings and doc columns, one
+    * partition per segment, and the cached docs and termstats tables.
+    * The doc columns are an RDD of their own, not a part of the postings
+    * one: every resident job ships its RDD's scan lineage, and the
+    * scorer jobs need not carry the docs scan. */
+  private final case class Warm(postings: RDD[SegmentPostings], docCols: RDD[SegmentDocs],
+                                docs: Dataset[DocRow], termStats: DataFrame)
 
   /** Size cap of every driver-side serving cache: the term dictionary
     * (`termDfMap`, in terms) and the url and norms maps (in docs). An
@@ -375,6 +389,18 @@ object InvertedIndex {
     while (i < n && a.charAt(i) == b.charAt(i)) i += 1
     if (i == n) Integer.compare(a.length, b.length)
     else Integer.compare(a.codePointAt(i), b.codePointAt(i))
+  }
+
+  /** The terms of `sorted` (in code point order) that start with `p`:
+    * one contiguous run, found by binary search. */
+  def withPrefix(sorted: Array[String], p: String): Iterator[String] = {
+    var lo = 0
+    var hi = sorted.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (CodePointOrder.lt(sorted(mid), p)) lo = mid + 1 else hi = mid
+    }
+    Iterator.range(lo, sorted.length).map(sorted(_)).takeWhile(_.startsWith(p))
   }
 
   def open(spark: SparkSession, dir: String): InvertedIndex = {

@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.index.SegmentDocs
 import graft.util.{PFor, VarInt}
 
 /** The engine's relational face: the same queries the scorer path
@@ -94,8 +95,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
   def docsWithId: DataFrame = liveDocsWithId(idx.hasDeletes)
 
   private def liveDocsWithId(hasDeletes: Boolean): DataFrame = {
-    val base = idx.docs.withColumn("doc_id",
-      element_at(split(col("url"), "/"), -1).cast("long"))
+    val base = idx.docs.withColumn("doc_id", SegmentDocs.DocNumColumn)
     if (hasDeletes)
       base.join(idx.tombstones.toDF("docId"), Seq("docId"), "left_anti")
     else base
@@ -424,22 +424,54 @@ final class RelationalPath(idx: graft.index.IndexView) {
       case other => sys.error(s"unsupported query on relational path: $other")
     }
 
+  /** The warm reader's resident doc columns, when they answer a call
+    * exactly: a warm InvertedIndex with no pending deletes (the columns
+    * still hold tombstoned docs; the docs plan subtracts them). */
+  private def residentDocs: Option[org.apache.spark.rdd.RDD[SegmentDocs]] = idx match {
+    case inv: graft.index.InvertedIndex => inv.residentDocs.filter(_ => !inv.hasDeletes)
+    case _ => None
+  }
+
+  /** Constant-score top-k from the resident doc columns: the first `k`
+    * docs in docId order on which `pred` holds (every doc when None),
+    * one narrow job (each segment stops at its `k`th match) and a driver
+    * merge. None when the call must take the docs plan: a cold reader,
+    * pending deletes, or a predicate over a column the resident docs
+    * lack. */
+  private[search] def residentConstTopK(pred: Option[Column], k: Int): Option[DataFrame] =
+    for {
+      docs <- residentDocs
+      bound <- SegmentDocs.bind(session, pred.toSeq: _*)
+    } yield ResultFrames.rankedDocIds(session,
+      SegmentDocs.firstMatching(docs, bound.headOption, k).map(_._2).toSeq)
+
   /** MatchAllDocsQuery analogue (`q=*:*`): every live doc, constant
     * score ⇒ rank = docId (url-rank) order
-    * [U lucene/core/.../search/MatchAllDocsQuery.java]. */
+    * [U lucene/core/.../search/MatchAllDocsQuery.java]. A warm reader
+    * without pending deletes reads the first `k` docs of each resident
+    * segment (`residentConstTopK`); otherwise a docs plan. */
   def matchAllTopK(k: Int): DataFrame =
-    constRankByDocId(docsWithId.select(col("docId"), col("doc_id")), k)
+    residentConstTopK(None, k).getOrElse(
+      constRankByDocId(docsWithId.select(col("docId"), col("doc_id")), k))
 
   /** Function-range query (`{!frange l=.. u=..}fn(...)`
     * [U solr/core/.../search/FunctionRangeQParserPlugin.java]): every
     * live doc whose function-query VALUE (any ValueSources Column over
     * the docs row) lies in [lo, hi]; constant score ⇒ rank = docId
-    * (url-rank) order. The function filter is a pure Column predicate —
-    * Catalyst pushes what it can into the docs scan. */
-  def frangeTopK(fn: Column, lo: Double, hi: Double, k: Int): DataFrame =
-    constRankByDocId(
-      docsWithId.filter(fn.cast("double").between(lo, hi))
-        .select(col("docId"), col("doc_id")), k)
+    * (url-rank) order.
+    *
+    * A warm reader without pending deletes, whose function reads only
+    * resident columns (`SegmentDocs.Schema`), answers from its resident
+    * doc columns in one narrow job with no Dataset: the predicate is
+    * analyzed once per call and evaluated interpreted, because generated
+    * code inlines the bounds and would compile again for every new
+    * range. Otherwise the predicate filters a docs plan, and Catalyst
+    * pushes what it can into the docs scan. */
+  def frangeTopK(fn: Column, lo: Double, hi: Double, k: Int): DataFrame = {
+    val pred = fn.cast("double").between(lo, hi)
+    residentConstTopK(Some(pred), k).getOrElse(
+      constRankByDocId(docsWithId.filter(pred).select(col("docId"), col("doc_id")), k))
+  }
 
   /** Geo distance filter + sort-by-distance — the reference's spatial
     * filter/sort surface [U solr SpatialFilterQParser `{!geofilt}` +
@@ -447,14 +479,26 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * #newDistanceQuery]: docs whose point (latSql, lonSql — any SQL
     * expressions over the docs row) lies within `dKm` of (lat, lon),
     * ranked by ascending haversine distance, docId (url-rank)
-    * tie-break. The distance is the ValueSources `geodist` Column
-    * (pure codegen trig) and the ≤d predicate filters BEFORE the
-    * bounded TakeOrderedAndProject; ranks stamp on the driver. */
+    * tie-break. The distance is the ValueSources `geodist` Column.
+    *
+    * A warm reader without pending deletes, whose point expressions read
+    * only resident columns (`SegmentDocs.Schema`), answers from its
+    * resident doc columns in one narrow job with no Dataset: each segment
+    * keeps a bounded heap of its `k` nearest docs within `dKm`, and the
+    * driver merges them. The distance is analyzed once per call and
+    * evaluated interpreted, because generated code inlines the centre
+    * and would compile again for every new one.
+    * Otherwise a docs plan filters by the ≤d predicate BEFORE the
+    * bounded TakeOrderedAndProject. Ranks stamp on the driver. */
   def geoTopK(latSql: String, lonSql: String, lat: Double, lon: Double,
               dKm: Double, k: Int): DataFrame = {
     val dist = graft.functions.ValueSources.fn("geodist",
       expr(latSql), expr(lonSql), lit(lat), lit(lon))
-    val winners = docsWithId
+    val resident = for {
+      docs <- residentDocs
+      Seq(d) <- SegmentDocs.bind(session, dist.cast("double"))
+    } yield SegmentDocs.smallest(docs, d, dKm, k)
+    val winners = resident.getOrElse(docsWithId
       .withColumn("__d", dist)
       .filter(col("__d") <= dKm)
       .orderBy(asc("__d"), asc("docId"))
@@ -462,7 +506,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
       .select(col("docId").cast("long").as("docId"),
         col("doc_id").cast("long").as("doc_id"),
         col("__d").cast("double").as("d"))
-      .as[(Long, Long, Double)].collect()
+      .as[(Long, Long, Double)].collect())
       .sortBy { case (docId, _, d) => (d, docId) }
     ResultFrames.rankedDocIds(session, winners.toSeq.map(_._2))
   }

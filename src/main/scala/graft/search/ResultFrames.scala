@@ -32,6 +32,10 @@ object ResultFrames {
     StructField("docId", LongType, nullable = false),
     StructField("score", FloatType, nullable = false)))
 
+  /** (term, df): dictionary lookups, as the termstats plans project them. */
+  val TermDf: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+
   /** A local frame of `rows`, which must match `schema`. */
   def of(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)

@@ -45,16 +45,7 @@ final class IndexTermDict(idx: graft.index.IndexView, maxExpansions: Int = 10000
   }
 
   def prefix(p: String): Seq[String] = warmTerms match {
-    case Some(ts) =>
-      // prefix matches are one contiguous run of the sorted dictionary
-      var lo = 0
-      var hi = ts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (InvertedIndex.CodePointOrder.lt(ts(mid), p)) lo = mid + 1 else hi = mid
-      }
-      capped(ts.iterator.drop(lo).takeWhile(_.startsWith(p))
-        .take(maxExpansions + 1).toSeq)
+    case Some(ts) => capped(InvertedIndex.withPrefix(ts, p).take(maxExpansions + 1).toSeq)
     case None => run(idx.termStats.filter(col("term").startsWith(p)))
   }
   def regex(re: String): Seq[String] =

@@ -14,20 +14,24 @@ import graft.index.InvertedIndex
   * that segment's sorted top-k, so the scan reads k docs per segment
   * instead of the corpus.
   *
-  * Plan shape: the per-segment docId windows compile to an OR of range
-  * predicates PUSHED into the docs parquet scan (row-group min/max on
-  * the docId-sorted files prunes everything else); the survivors
-  * (≤ segments·(k+tombstones) rows) feed the usual
-  * TakeOrderedAndProject + rank Window. */
+  * A warm reader without pending deletes reads the first k docs of each
+  * resident segment (`SegmentDocs`) in one narrow job, with no Dataset,
+  * for both reads here. Otherwise, the early read's per-segment docId
+  * windows compile to an OR of range predicates PUSHED into the docs
+  * parquet scan (row-group min/max on the docId-sorted files prunes
+  * everything else), and the survivors (≤ segments·(k+tombstones) rows)
+  * feed the bounded TakeOrderedAndProject; ranks stamp on the driver. */
 object SortedRead {
 
   /** Top-k docs in index-sort order: (rank, doc_id). */
   def earlyTopK(idx: InvertedIndex, k: Int): DataFrame = {
-    // gaps inside a segment (post-compaction) make "first k ids" ≠
-    // "ids in [min, min+k)" — metadata can't bound the kth live id,
-    // so fall back to the exact full scan
-    if (!idx.segmentsDense) return fullScanTopK(idx, k)
-    new RelationalPath(idx).constRankByDocId(earlyWinnersFrame(idx, k), k)
+    val rel = new RelationalPath(idx)
+    rel.residentConstTopK(None, k).getOrElse(
+      // gaps inside a segment (post-compaction) make "first k ids" ≠
+      // "ids in [min, min+k)" — metadata can't bound the kth live id,
+      // so fall back to the exact full scan
+      if (!idx.segmentsDense) rel.matchAllTopK(k)
+      else rel.constRankByDocId(earlyWinnersFrame(idx, k), k))
   }
 
   /** The LAZY pruned candidate frame earlyTopK bounds and collects —
@@ -47,7 +51,7 @@ object SortedRead {
   }
 
   /** Full-scan equivalent (for tests/bench comparison): rank every live
-    * doc by docId — same result, corpus-sized scan. */
+    * doc by docId — same result, corpus-sized scan on a cold reader. */
   def fullScanTopK(idx: InvertedIndex, k: Int): DataFrame =
     new RelationalPath(idx).matchAllTopK(k)
 }

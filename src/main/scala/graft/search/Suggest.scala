@@ -1,9 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.index.IndexView
+import graft.index.{IndexView, InvertedIndex}
 
 /** Spellcheck / suggest over the term dictionary — the
   * SpellCheckComponent / suggesters family re-expressed as
@@ -15,13 +15,31 @@ import graft.index.IndexView
 object Suggest {
 
   /** Autocomplete: dictionary terms with the prefix, most frequent
-    * first (df desc, term asc tie-break). */
-  def suggest(idx: IndexView, prefix: String, k: Int = 10): DataFrame =
-    idx.termStats
-      .filter(col("term").startsWith(prefix))
-      .select(col("term"), col("df").cast("long").as("df"))
-      .orderBy(desc("df"), asc("term"))
-      .limit(k)
+    * first (df desc, term asc tie-break). An InvertedIndex loads its
+    * driver dictionary (`termDfMap`, as the scorer's lookups do) and
+    * answers from it with no job: the prefix's terms are one run of the
+    * sorted dictionary. Over the dictionary cache cap, and on other
+    * views, a termstats plan answers. */
+  def suggest(idx: IndexView, prefix: String, k: Int = 10): DataFrame = {
+    val loaded = idx match {
+      case inv: InvertedIndex =>
+        inv.termDfMap().flatMap(dfs => inv.sortedTermsIfLoaded.map(dfs -> _))
+      case _ => None
+    }
+    loaded match {
+      case Some((dfs, sorted)) =>
+        // the run is in term order, and a stable sort by df keeps it
+        // as the tie-break
+        val top = InvertedIndex.withPrefix(sorted, prefix).toArray.sortBy(t => -dfs(t)).take(k)
+        ResultFrames.of(idx.spark, ResultFrames.TermDf, top.toSeq.map(t => Row(t, dfs(t))))
+      case None =>
+        idx.termStats
+          .filter(col("term").startsWith(prefix))
+          .select(col("term"), col("df").cast("long").as("df"))
+          .orderBy(desc("df"), asc("term"))
+          .limit(k)
+    }
+  }
 
   /** AnalyzingInfixSuggester analogue [U lucene/suggest/.../analyzing/
     * AnalyzingInfixSuggester.java — which INDEXES the suggest corpus

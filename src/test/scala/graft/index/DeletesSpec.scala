@@ -9,7 +9,7 @@ import graft.model.{Page, PostingsRow}
 import graft.search._
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Tombstone deletes + compaction: deleted docs vanish from results
   * (scorer AND relational paths) while pre-compaction scores keep the
@@ -393,23 +393,34 @@ class DeletesSpec extends SparkSpec {
     val idx = IndexBuilder.build(spark, mkPages(texts), dir,
       IndexConfig(numPartitions = 2, partsPerSegment = 1)).warm()
     val searcher = new Searcher(idx)
+    val rel = new RelationalPath(idx)
     val q = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
+    def docReads() = Seq(
+      rel.frangeTopK(graft.functions.ValueSources.fn("mod", col("dl"), lit(2)), 1, 1, 10),
+      rel.geoTopK("cast(doc_id as double)", "0.0", 1.0, 0.0, 300.0, 3),
+      SortedRead.earlyTopK(idx, 2), SortedRead.fullScanTopK(idx, 10)).map(_.collect().toSeq)
     val before = searcher.topK(q, 10).collect().toSeq
+    val docReadsBefore = docReads()
     val resident = idx.residentPostings.get
+    val docCols = idx.residentDocs.get
     val docs = idx.docs
     val urls = idx.urlBroadcast().get
     val filters = idx.cachedFilters
     assert(filters.size === 1)
-    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
+    assert(Seq(resident.id, docCols.id).forall(spark.sparkContext.getPersistentRDDs.contains))
     assert(docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
 
     idx.close()
     assert(!spark.sparkContext.getPersistentRDDs.contains(resident.id))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(docCols.id))
     assert(docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
     intercept[org.apache.spark.SparkException](urls.value)
     filters.foreach(f => intercept[org.apache.spark.SparkException](f.value))
-    assert(idx.residentPostings.isEmpty && idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)
+    assert(idx.residentPostings.isEmpty && idx.residentDocs.isEmpty &&
+      idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)
     assert(searcher.topK(q, 10).collect().toSeq === before)
+    assert(docReads() === docReadsBefore)
+    assert(docReadsBefore.forall(_.nonEmpty))
   }
 
   private def mkPagesFrom(corpus: Seq[(String, String, String)]): Dataset[Page] = {

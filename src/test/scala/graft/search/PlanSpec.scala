@@ -245,6 +245,30 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("warm reader, no deletes: frange, geo and sorted reads run as ONE job and no SQL; suggest runs none") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val rel = new RelationalPath(warm)
+    val families: Seq[(String, () => DataFrame)] = Seq(
+      "frange" -> (() => rel.frangeTopK(graft.functions.ValueSources.fn("mod", col("dl"), lit(7)), 2, 3, 10)),
+      "geo" -> (() => rel.geoTopK("cast(doc_id % 120 as double) - 59.5",
+        "cast((doc_id * 7) % 360 as double) - 179.5", 10.0, 20.0, 2000.0, 10)),
+      "sorted_early" -> (() => SortedRead.earlyTopK(warm, 10)),
+      "sorted_full" -> (() => SortedRead.fullScanTopK(warm, 10)))
+    families.foreach { case (name, run) =>
+      run().collect()
+      val c = org.apache.spark.JobCounts.of(spark.sparkContext)(run())
+      assert(c.jobs === 1, s"$name: $c")
+      assert(c.stages === 1, s"$name: $c — a shuffle ran")
+      assert(c.sqlExecutions === 0, s"$name: $c")
+      // the ranked frame is local: collecting it runs no further job
+      val all = org.apache.spark.JobCounts.of(spark.sparkContext)(run().collect())
+      assert(all.jobs === 1, s"$name collected: $all")
+    }
+    Suggest.suggest(warm, "sp", 10).collect() // loads the driver dictionary
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext)(Suggest.suggest(warm, "s", 10).collect())
+    assert(c.jobs === 0, s"suggest: $c")
+  }
+
   test("postings scan prunes columns (term stats never read blocks)") {
     val p = plan(idx.termStats.filter(col("term") === "spark"))
     assert(!p.contains("blocks"),

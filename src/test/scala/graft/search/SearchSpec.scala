@@ -110,7 +110,7 @@ class SearchSpec extends SparkSpec {
     // bitmaps replace the per-query docs cogroup — results must stay
     // float32-identical to the oracle, and a second run (cache hit)
     // must agree with the first
-    val warmIdx = SparkEntry.index(spark, sfDir).warm()
+    val warmIdx = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
     assert(warmIdx.filterCacheEnabled)
     val s2 = new Searcher(warmIdx)
     val filtered = Seq(
@@ -157,6 +157,29 @@ class SearchSpec extends SparkSpec {
       warmDict.prefix("s"); warmDict.fuzzy("spork", 1)
     }
     assert(c.jobs === 0)
+  }
+
+  test("suggest from the loaded dictionary == the termstats plan, for every 1- and 2-char prefix") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    // a view that is no InvertedIndex answers with the termstats plan
+    val planned = new graft.index.IndexView {
+      def spark = warm.spark
+      def stats = warm.stats
+      def postings = warm.postings
+      def docs = warm.docs
+      def termStats = warm.termStats
+    }
+    def rows(v: graft.index.IndexView, p: String, k: Int) =
+      Suggest.suggest(v, p, k).collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+    val dict = warm.termDfMap().get.keys.toSeq
+    val prefixes = ("" +: "zzz_absent" +: dict.map(_.take(1))) ++ dict.filter(_.length >= 2).map(_.take(2))
+    prefixes.distinct.foreach { p =>
+      Seq(1, 10, 1000).foreach(k => assert(rows(warm, p, k) === rows(planned, p, k), s"prefix '$p' k=$k"))
+    }
+    assert(Suggest.suggest(warm, "s", 10).schema === Suggest.suggest(planned, "s", 10).schema)
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext)(rows(warm, "sp", 10))
+    assert(c.jobs === 0, c)
+    warm.close()
   }
 
   test("FilterBits: executor-side bitmap == row collect; O(partitions) blobs only") {
@@ -336,13 +359,16 @@ class SearchSpec extends SparkSpec {
     val rel = new RelationalPath(warm)
     def answers() = (s.topK(Query.or("spark", "merge"), 10).collect().toSeq,
       EDisMax.topK(Seq(warm -> 1.0), EDisMax.parse("spark merge window", "50%"), 10).collect().toSeq,
-      rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect().toSeq)
+      rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect().toSeq,
+      rel.geoTopK("cast(doc_id % 120 as double)", "0.0", 30.0, 0.0, 500.0, 10).collect().toSeq,
+      SortedRead.earlyTopK(warm, 10).collect().toSeq)
     val before = answers()
-    val resident = warm.residentPostings.get
-    org.apache.spark.LoseBlocks.of(resident)
-    assert(spark.sparkContext.getRDDStorageInfo.forall(i => i.id != resident.id || i.numCachedPartitions == 0))
+    val resident = Seq(warm.residentPostings.get, warm.residentDocs.get)
+    resident.foreach(org.apache.spark.LoseBlocks.of(_))
+    assert(spark.sparkContext.getRDDStorageInfo.forall(i =>
+      !resident.exists(_.id == i.id) || i.numCachedPartitions == 0))
     assert(answers() === before)
-    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
+    assert(resident.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id)))
   }
 
   test("4 threads of mixed queries on one warm reader answer as a serial caller does") {

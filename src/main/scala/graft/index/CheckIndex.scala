@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.functions._
 
-import graft.util.{PFor, VarInt}
+import graft.util.{PFor, SmallFloat, VarInt}
 
 /** Structural index audit — the analogue of the reference's CheckIndex
   * [U lucene/core/src/java/org/apache/lucene/index/CheckIndex.java]:
@@ -67,6 +67,24 @@ object CheckIndex {
       .as[(Long, Long, Long)].head()
     if (minD != 0 || maxD != nDocs - 1 || distinctD != nDocs)
       problems += s"docId space not dense: min=$minD max=$maxD distinct=$distinctD n=$nDocs"
+
+    // 5. norms: every posting's norm byte is its doc's docs-table norm,
+    //    and dlq is that byte decoded — the scorer tree and the edismax
+    //    kernel read norms from the postings, the relational plans the
+    //    docs table's dlq
+    val badNorms = idx.postings.flatMap { r =>
+      r.blocks.iterator.flatMap { b =>
+        val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
+        docs.indices.iterator.map(i => (docs(i), b.norms(i)))
+      }
+    }.toDF("docId", "pnorm")
+      .join(idx.docs.select("docId", "norm"), Seq("docId"), "left")
+      .filter(col("norm").isNull || col("pnorm") =!= col("norm"))
+      .count()
+    if (badNorms > 0)
+      problems += s"$badNorms postings whose norm byte differs from their doc's docs-table norm"
+    val badDlq = idx.docs.filter(d => d.dlq != SmallFloat.byte4ToInt(d.norm)).count()
+    if (badDlq > 0) problems += s"$badDlq docs whose dlq is not their norm byte decoded"
 
     problems.toSeq
   }

@@ -174,68 +174,28 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
 
   /** Driver-side stored-fields cache for serving mode: docId → url,
     * loaded on demand when the docs table is small enough. Saves the
-    * GET_FIELDS job per query (a web-scale deployment fronts this with
-    * a key-value store or keeps the hot slice). */
+    * GET_FIELDS job per query, and every serving path (Searcher, the
+    * edismax kernel, the position-verified doc lists) maps its winning
+    * docIds to urls and doc_ids through it on the driver (a web-scale
+    * deployment fronts this with a key-value store or keeps the hot
+    * slice). */
   @volatile private var urlsMap: Option[Map[Long, String]] = None
   def urlMap(): Option[Map[Long, String]] = {
-    if (urlsMap.isEmpty && stats.docCount <= InvertedIndex.CacheCap) {
-      val rows = docs.select("docId", "url").collect()
-      urlsMap = Some(rows.map(r => r.getLong(0) -> r.getString(1)).toMap)
-    }
+    if (urlsMap.isEmpty && stats.docCount <= InvertedIndex.CacheCap)
+      urlsMap = Some(urlsOf(docs))
     urlsMap
   }
 
   /** The url cache if warm() loaded it — never triggers a job. */
   def urlMapIfLoaded: Option[Map[Long, String]] = urlsMap
 
-  /** Driver-side norms cache for serving mode: docId → quantized doc
-    * length (dlq) — the in-RAM per-segment norms of a warm searcher
-    * [U lucene/core/.../codecs/lucene90/Lucene90NormsProducer.java:
-    * Lucene serves norms from memory-mapped .nvd, one byte per doc].
-    * Shipped to executors ONCE as a broadcast (`dlqBroadcast`) so
-    * scoring kernels can fold BM25 length normalization without a
-    * docs-table join. Same cap + on-demand shape as urlMap; a cluster
-    * deployment holds the same data as per-segment slices pinned on
-    * the executors. */
-  @volatile private var dlqsMap: Option[Map[Long, Int]] = None
-  def dlqMap(): Option[Map[Long, Int]] = {
-    if (dlqsMap.isEmpty && stats.docCount <= InvertedIndex.CacheCap) {
-      val rows = docs.select("docId", "dlq").collect()
-      dlqsMap = Some(rows.map(r => r.getLong(0) -> r.getInt(1)).toMap)
-    }
-    dlqsMap
-  }
+  private def urlsOf(d: Dataset[DocRow]): Map[Long, String] =
+    d.select("docId", "url").as[(Long, String)].collect().toMap
 
-  /** Materializes the cached docs table `d` and, under the maps' doc
-    * cap, loads the url and norms caches from the same scan (serving
-    * mode: stored fields and norms without a job). */
-  private def loadDocMaps(d: Dataset[DocRow]): Unit =
-    if (stats.docCount > InvertedIndex.CacheCap) d.count()
-    else {
-      val rows = d.select("docId", "url", "dlq").as[(Long, String, Int)].collect()
-      urlsMap = Some(rows.iterator.map(r => r._1 -> r._2).toMap)
-      dlqsMap = Some(rows.iterator.map(r => r._1 -> r._3).toMap)
-    }
-
-  /** The norms cache as a REUSABLE broadcast — one ship per searcher
-    * lifetime, not one per query (re-broadcasting a 10^6-entry map per
-    * query would put the serialization back on the hot path). */
-  @volatile private var dlqBc: Option[Broadcast[Map[Long, Int]]] = None
-  def dlqBroadcast(): Option[Broadcast[Map[Long, Int]]] = {
-    if (dlqBc.isEmpty)
-      dlqMap().foreach(m => dlqBc = Some(spark.sparkContext.broadcast(m)))
-    dlqBc
-  }
-
-  /** The stored-fields (url) cache as a reusable broadcast — same
-    * lifetime contract as `dlqBroadcast`; lets serving kernels recover
-    * the corpus doc_id inside the scoring pass without a docs join. */
-  @volatile private var urlBc: Option[Broadcast[Map[Long, String]]] = None
-  def urlBroadcast(): Option[Broadcast[Map[Long, String]]] = {
-    if (urlBc.isEmpty)
-      urlMap().foreach(m => urlBc = Some(spark.sparkContext.broadcast(m)))
-    urlBc
-  }
+  /** Materializes the cached docs table `d` and, under the url cache's
+    * doc cap, loads the url cache from the same scan. */
+  private def loadUrlMap(d: Dataset[DocRow]): Unit =
+    if (stats.docCount > InvertedIndex.CacheCap) d.count() else urlsMap = Some(urlsOf(d))
 
   /** Filter cache — the Solr filterCache / getDocSet analogue
     * [U solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java
@@ -265,14 +225,17 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     filterBitsets.values.asScala.toSeq
 
   /** Pin the segment tables in executor memory and materialize them —
-    * the analogue of a warm MMapDirectory + preloaded norms in the
-    * reference's "warm searcher" serving mode. Postings become one
-    * resident flat layout per segment (SegmentPostings), and so do the
-    * doc columns (SegmentDocs); docs and the term dictionary also stay
-    * cached Datasets. The tables are this reader's generation's
-    * (`tablesDir`): each generation has a directory of its own, so
-    * Spark's cache, which matches a plan by its paths, never hands one
-    * generation's cached tables to another's reader. Opt-in:
+    * the analogue of a warm MMapDirectory in the reference's "warm
+    * searcher" serving mode. Postings become one resident flat layout
+    * per segment (SegmentPostings), and so do the doc columns
+    * (SegmentDocs); docs and the term dictionary also stay cached
+    * Datasets, and the url cache (`urlMap`) loads from the same docs
+    * scan. Norms need no load of their own: every posting carries its
+    * doc's norm byte, and the scorers read it there. The tables are
+    * this reader's generation's (`tablesDir`): each generation has a
+    * directory of its own, so Spark's cache, which matches a plan by its
+    * paths, never hands one generation's cached tables to another's
+    * reader. Opt-in:
     * at full corpus scale you warm only the hot working set, so nothing
     * in the query path REQUIRES this. */
   def warm(): InvertedIndex = {
@@ -285,16 +248,16 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
       // each materialization is a few small tasks, bound by scheduling
       // latency rather than cores: run them side by side
       InvertedIndex.inParallel(() => w.postings.count(), () => w.docCols.count(),
-        () => w.termStats.count(), () => loadDocMaps(w.docs))
+        () => w.termStats.count(), () => loadUrlMap(w.docs))
       cached = Some(w)
     }
     this
   }
 
   /** Releases what `warm()` and serving loaded: unpersists the resident
-    * postings and doc columns and the cached docs and termstats,
-    * destroys the url, norms and filter broadcasts, and drops the driver
-    * maps and the filter cache.
+    * postings and doc columns and the cached docs and termstats, drops
+    * the driver url and dictionary caches, and destroys the filter
+    * cache's broadcasts (the reader's only broadcasts).
     * The reader then answers cold. Call it once no query is running on
     * the reader (a destroyed broadcast fails the query that reads it),
     * e.g. after a refresh has published the reader that replaces it.
@@ -306,9 +269,7 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
       w.docs.unpersist(); w.termStats.unpersist()
     }
     cached = None
-    urlBc.foreach(_.destroy()); dlqBc.foreach(_.destroy())
-    urlBc = None; dlqBc = None
-    urlsMap = None; dlqsMap = None
+    urlsMap = None
     statsMap = None; statsOverCap = false; sortedTerms = None
     filterBitsets.values.forEach(_.destroy())
     filterBitsets.clear()
@@ -327,8 +288,8 @@ object InvertedIndex {
                                 docs: Dataset[DocRow], termStats: DataFrame)
 
   /** Size cap of every driver-side serving cache: the term dictionary
-    * (`termDfMap`, in terms) and the url and norms maps (in docs). An
-    * index past it answers without the cache. */
+    * (`termDfMap`, in terms) and the url map (in docs). An index past it
+    * answers without the cache. */
   val CacheCap: Int = 1 << 20
 
   /** Schema of the postings parquet: PostingsRow's, as written. */

@@ -179,12 +179,13 @@ object EDisMax {
     // narrow job over its resident segments; otherwise one position
     // scan per field, tagged by field ordinal and unioned, feeds one
     // groupByKey(docId) shuffle (the fields are docId-aligned — same
-    // corpus, same url order). NO docs-table joins either way —
-    // per-field length norms come from warm in-RAM norms broadcasts,
-    // the reference's serving shape (NormsProducer keeps one byte per
-    // doc in memory [U lucene/core/.../codecs/lucene90/
-    // Lucene90NormsProducer.java]; ExtendedDismaxQParser scores the
-    // same postings cursors once per segment). The general relational
+    // corpus, same url order). NO docs-table joins either way — each
+    // (field, doc) length norm is the norm byte its postings carry, the
+    // byte the scorer tree scores from (the docs table's dlq is the
+    // same SmallFloat value; CheckIndex audits the equality), and
+    // doc_ids come from the first field's url cache on the driver
+    // (ExtendedDismaxQParser scores the same postings cursors once per
+    // segment). The general relational
     // plan below chains 4+ exchanges per field (scoredTf stats+docs
     // joins, cross-field groupBy, perDoc groupBy, phrase join) that AQE
     // stages into ~8 jobs per query. Arithmetic is the same
@@ -192,9 +193,9 @@ object EDisMax {
     // hash-validate it against the SQL oracles, and EDisMaxSpec asserts
     // kernel ≡ general plan for single- and multi-field shapes. Falls
     // through to the general plan when bf is present (arbitrary
-    // docs-table Column), any index has deletes, or any index's
-    // dictionary/norms exceed the cache caps (2^20 — a cluster serves
-    // norms as executor-pinned per-segment slices instead).
+    // docs-table Column), any field is not an InvertedIndex, any index
+    // has deletes, any index's dictionary exceeds the cache cap (2^20
+    // terms) or the first field's docs exceed the url cache's (2^20).
     val kernelFields: Option[(Seq[(graft.index.InvertedIndex, Double)],
                               Seq[(graft.index.InvertedIndex, Double, Seq[String])])] =
       if (bf.isEmpty) {
@@ -203,8 +204,7 @@ object EDisMax {
           case GramSpec(i: graft.index.InvertedIndex, b, g) => (i, b, g) }
         val allInv = qfInv.map(_._1) ++ gramInv.map(_._1)
         if (qfInv.length == fields.length && gramInv.length == gramSeq.length &&
-            allInv.forall(i => !i.hasDeletes && i.termDfMap().isDefined &&
-              i.dlqBroadcast().isDefined) &&
+            allInv.forall(i => !i.hasDeletes && i.termDfMap().isDefined) &&
             qfInv.head._1.urlMap().isDefined)
           Some((qfInv, gramInv))
         else None
@@ -388,7 +388,8 @@ object EDisMax {
     * over the positions unioned across the qf/phrase fields tagged by
     * field ordinal. The double-precision op sequence mirrors the general
     * plan expression for expression: per field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·
-    * dlq_f/avgdl_f))))·boost_f; per term ts = max_f(ws) + tie·(Σ_f(ws)
+    * dlq_f/avgdl_f))))·boost_f, dlq_f decoded from the field's postings
+    * norm byte; per term ts = max_f(ws) + tie·(Σ_f(ws)
     * − max_f(ws)); s = Σ ts must-then-should; then per gram in pinned
     * order s += boost·(sumIdf·(ptf/(ptf+1.2·(0.25+0.75·dlq/avgdl))))
     * with the gram field's stats; then bq in list order s +=
@@ -426,7 +427,7 @@ object EDisMax {
         } else None
       }.toArray
     val nIdx = idxs.length
-    // per-ordinal driver stats (norms ride the reader's broadcasts)
+    // per-ordinal driver stats (norms ride the postings)
     val dfs: Array[Map[String, Long]] = idxs.map(_.termDfMap().get).toArray
     val avgdl: Array[Double] =
       idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
@@ -442,8 +443,7 @@ object EDisMax {
     val shouldArr = p.should.toArray
     val mustNotArr = p.mustNot.toArray
     // per-ordinal scan terms — per-query dictionary slices only (the
-    // task closure never captures the full df maps; norms ride the
-    // broadcasts)
+    // task closure never captures the full df maps)
     val scanTerms: Array[Seq[String]] = Array.tabulate(nIdx) { f =>
       val mine = scala.collection.mutable.LinkedHashSet.empty[String]
       if (f < nQf && qfOrdDistinct.contains(f)) {
@@ -466,38 +466,34 @@ object EDisMax {
         }.toMap
       }
     val fold = new DocFold(qfOrd, qfOrdDistinct, qfBoost, mustArr, shouldArr, mustNotArr,
-      p.mmCount, tie, idxs.map(_.dlqBroadcast().get).toArray, avgdl, idfSlice, gramSpecs, bqList)
+      p.mmCount, tie, avgdl, idfSlice, gramSpecs, bqList)
     val winners: Array[(Long, Double)] = idxs.head.residentPostings match {
       // one warm index serves every field: a doc's postings all live in
       // its own segment, so each resident partition groups its segment's
-      // positions by docId, folds each doc and keeps its top k — one
+      // postings by docId, folds each doc and keeps its top k — one
       // narrow job, no shuffle; the driver merges the ≤k per segment
       case Some(segs) if nIdx == 1 =>
         val terms = scanTerms(0)
         segs.mapPartitions(_.flatMap { seg =>
-          val byDoc = scala.collection.mutable.HashMap.empty[Long,
-            Array[scala.collection.mutable.HashMap[String, Array[Int]]]]
+          val byDoc = scala.collection.mutable.HashMap.empty[Long, DocPostings]
           seg.rows(terms).foreach { r =>
-            RelationalPath.positions(r).foreach { case (d, ps) =>
-              byDoc.getOrElseUpdate(d, Array(scala.collection.mutable.HashMap.empty))(0)(r.term) = ps
+            RelationalPath.postings(r).foreach { case (d, ps, norm) =>
+              byDoc.getOrElseUpdate(d, new DocPostings(1)).add(0, r.term, ps, norm)
             }
           }
-          topByScore(byDoc.iterator.flatMap { case (d, posOf) => fold(d, posOf).map(d -> _) }, k)
+          topByScore(byDoc.iterator.flatMap { case (d, dp) => fold(dp).map(d -> _) }, k)
         }).collect()
       case _ =>
         idxs.toSeq.zipWithIndex.collect {
           case (i, f) if scanTerms(f).nonEmpty =>
-            new RelationalPath(i).positionsTable(scanTerms(f))
-              .select(lit(f).as("fi"), col("docId").cast("long"),
-                col("term"), col("pos"))
-              .as[(Int, Long, String, Seq[Int])]
+            i.postingsOf(scanTerms(f)).flatMap(r =>
+              RelationalPath.postings(r).map { case (d, ps, norm) => (f, d, r.term, ps, norm) })
         }.reduce(_ union _)
           .groupByKey(_._2)
           .flatMapGroups { (docId, it) =>
-            val posOf = Array.fill(nIdx)(
-              scala.collection.mutable.HashMap.empty[String, Array[Int]])
-            it.foreach { case (f, _, t, ps) => posOf(f)(t) = ps.toArray }
-            fold(docId, posOf).map(docId -> _).iterator
+            val dp = new DocPostings(nIdx)
+            it.foreach { case (f, _, t, ps, norm) => dp.add(f, t, ps, norm) }
+            fold(dp).map(docId -> _).iterator
           }
           .toDF("docId", "s")
           .orderBy(desc("s"), asc("docId")).limit(k)
@@ -523,23 +519,34 @@ object EDisMax {
     heap.iterator.asScala
   }
 
+  /** One doc's postings of the query terms, by field ordinal f:
+    * `posOf(f)` maps each term present in the doc's field-f postings to
+    * its positions, and `norm(f)` is the norm byte those postings carry
+    * (set once the doc has any field-f posting, the only case a field-f
+    * norm is read). */
+  private final class DocPostings(nIdx: Int) {
+    val posOf: Array[scala.collection.mutable.HashMap[String, Array[Int]]] =
+      Array.fill(nIdx)(scala.collection.mutable.HashMap.empty)
+    val norm = new Array[Byte](nIdx)
+    def add(f: Int, term: String, positions: Array[Int], normByte: Byte): Unit = {
+      posOf(f)(term) = positions
+      norm(f) = normByte
+    }
+  }
+
   /** The per-doc fold of the single-pass kernel, shared by its resident
     * pass and its groupByKey pass so both run one double-precision op
-    * sequence: `posOf(f)` maps each query term present in the doc's
-    * field-ordinal-f postings to its positions. None when the doc is no
-    * hit. */
+    * sequence. None when the doc is no hit. */
   private final class DocFold(
       qfOrd: Array[Int], qfOrdDistinct: Array[Int], qfBoost: Array[Double],
       mustArr: Array[String], shouldArr: Array[String], mustNotArr: Array[String],
       mmCount: Int, tie: Double,
-      dlqBs: Array[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]],
       avgdl: Array[Double], idfSlice: Array[Map[String, Double]],
       gramSpecs: Array[(Int, Double, Array[String], Double)],
       bqList: Array[(String, Double)]) extends Serializable {
 
-    def apply(docId: Long,
-              posOf: Array[scala.collection.mutable.HashMap[String, Array[Int]]]): Option[Double] = {
-      val nIdx = posOf.length
+    def apply(doc: DocPostings): Option[Double] = {
+      val posOf = doc.posOf
       def presentAny(t: String): Boolean = {
         var f = 0
         var found = false
@@ -569,23 +576,10 @@ object EDisMax {
           (mustArr.nonEmpty || nShould >= 1) &&
           (shouldArr.isEmpty || mmCount == 0 || nShould >= mmCount)
       }
-      // per-doc per-field norms, hoisted once (not per term); a doc
-      // absent from any norms map is dropped, like the general plan's
-      // inner docs join
-      val dlqD = new Array[Double](nIdx)
-      if (ok) {
-        var f = 0
-        while (ok && f < nIdx) {
-          dlqBs(f).value.get(docId) match {
-            case Some(d) => dlqD(f) = d.toDouble
-            case None => ok = false
-          }
-          f += 1
-        }
-      }
       if (!ok) return None
-      def tfNormAt(f: Int, tf: Double): Double =
-        tf / (tf + 1.2 * (0.25 + 0.75 * dlqD(f) / avgdl(f)))
+      // dlq = the norm byte decoded, the docs table's dlq for the doc
+      def tfNormAt(f: Int, tf: Double): Double = tf / (tf + 1.2 * (0.25 + 0.75 *
+        graft.util.SmallFloat.LengthTable(doc.norm(f) & 0xFF).toDouble / avgdl(f)))
       // ts = cross-field dismax of the per-field weighted partials
       def termTs(t: String): Double = {
         var mx = 0.0

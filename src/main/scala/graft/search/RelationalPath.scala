@@ -26,14 +26,14 @@ import graft.util.{PFor, VarInt}
   * collapse, function and geo ranking, position-verified doc lists).
   */
 object RelationalPath {
-  /** (docId, positions) of every posting in a row, in docId order — the
-    * one place that decodes the block/position format for the position
-    * readers. */
-  def positions(r: graft.model.PostingsRow): Iterator[(Long, Array[Int])] =
+  /** (docId, positions, norm byte) of every posting in a row, in docId
+    * order — the one place that decodes the block/position format for
+    * the position readers and the edismax kernel. */
+  def postings(r: graft.model.PostingsRow): Iterator[(Long, Array[Int], Byte)] =
     r.blocks.iterator.flatMap { b =>
       val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
       val pos = VarInt.decodePositions(b.positions, PFor.decodeInts(b.tfs, b.count))
-      docs.indices.iterator.map(i => (docs(i), pos(i)))
+      docs.indices.iterator.map(i => (docs(i), pos(i), b.norms(i)))
     }
 
   /** The corpus doc_id a url ends in (the relational output key). */
@@ -577,22 +577,19 @@ final class RelationalPath(idx: graft.index.IndexView) {
   /** Shared tail of the position-verified doc queries (span-near,
     * interval combinators, interval sources): docs (ascending doc_id)
     * where `required` terms are all present and the decoded per-term
-    * position lists satisfy `verify`. Three execution shapes, chosen
+    * position lists satisfy `verify`. Two execution shapes, chosen
     * from ONE read of the reader's delete state:
     *
-    * - **Warm resident** (warm InvertedIndex, no deletes, urls cache
-    *   under its 2^20-doc cap): one narrow pass over the resident
-    *   segments — every doc's postings live in its own segment, so each
-    *   partition decodes and verifies its segment's docs and maps them
-    *   to doc_id through the urls broadcast; the driver sorts the
-    *   matching doc_ids. No shuffle, no join.
-    * - **Serving one-pass** (cold InvertedIndex, no deletes, urls cache
-    *   under its cap): ONE groupByKey over the query terms' positions
-    *   with the required-presence gate folded into the verifier and
-    *   doc_id recovered from the urls broadcast inside the same pass —
-    *   one shuffle, zero joins. The cap bounds the ungated shuffle: a
-    *   ≤2^20-doc corpus' position payload fits the verify stage even
-    *   for stop-word terms.
+    * - **Serving** (InvertedIndex, no deletes, url cache under its 2^20-
+    *   doc cap): the matching docIds come from one narrow pass over the
+    *   resident segments on a warm reader (every doc's postings live in
+    *   its own segment, so each partition decodes and verifies its
+    *   segment's docs — no shuffle), or from ONE groupByKey over the
+    *   query terms' positions on a cold one (one shuffle, zero joins;
+    *   the cap bounds the ungated shuffle: a ≤2^20-doc corpus' position
+    *   payload fits the verify stage even for stop-word terms). The
+    *   driver maps them to doc_id through the url cache and sorts them,
+    *   as the scorer path and the edismax kernel do.
     * - **General two-phase** (the scale default): docId
     *   pre-intersection on `required` from the tf rows — with a hot
     *   term in the query the ANY-term candidate set would be the whole
@@ -607,57 +604,51 @@ final class RelationalPath(idx: graft.index.IndexView) {
       requiredTerms: Seq[String] = Nil): DataFrame = {
     val all = allTerms.distinct
     val req = (if (requiredTerms.isEmpty) allTerms else requiredTerms).distinct
+    val matches: scala.collection.mutable.HashMap[String, Array[Int]] => Boolean =
+      byTerm => req.forall(byTerm.contains) && verify(byTerm)
+    // the per-doc verify of the groupByKey plans below, over
+    // (term, docId, pos) rows
+    def verified(positions: DataFrame): Dataset[Long] =
+      positions.select(col("docId").cast("long"), col("term"), col("pos"))
+        .as[(Long, String, Seq[Int])]
+        .groupByKey(_._1)
+        .flatMapGroups { (docId, it) =>
+          val byTerm = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+          it.foreach { case (_, t, p) => byTerm(t) = p.toArray }
+          if (matches(byTerm)) Iterator.single(docId) else Iterator.empty
+        }
     val hasDeletes = idx.hasDeletes
     val serving = idx match {
       case inv: graft.index.InvertedIndex if !hasDeletes =>
-        inv.urlBroadcast().map(u => (u, inv.residentPostings))
+        inv.urlMap().map(u => (u, inv.residentPostings))
       case _ => None
     }
     serving match {
-      case Some((urlsB, Some(segs))) =>
-        ResultFrames.docIds(session, segs.mapPartitions(_.flatMap { seg =>
-          val byDoc = scala.collection.mutable.HashMap.empty[Long,
-            scala.collection.mutable.HashMap[String, Array[Int]]]
-          seg.rows(all).foreach { r =>
-            RelationalPath.positions(r).foreach { case (d, p) =>
-              byDoc.getOrElseUpdate(d, scala.collection.mutable.HashMap.empty)(r.term) = p
-            }
-          }
-          byDoc.iterator.collect {
-            case (d, byTerm) if req.forall(byTerm.contains) && verify(byTerm) =>
-              RelationalPath.docIdOfUrl(urlsB.value(d))
-          }
-        }).collect().sorted.toSeq)
-      case Some((urlsB, None)) =>
-        positionsTable(all)
-          .select(col("docId").cast("long"), col("term"), col("pos"))
-          .as[(Long, String, Seq[Int])]
-          .groupByKey(_._1)
-          .flatMapGroups { (docId, it) =>
-            val byTerm = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-            it.foreach { case (_, t, p) => byTerm(t) = p.toArray }
-            if (req.forall(byTerm.contains) && verify(byTerm))
-              Iterator.single(RelationalPath.docIdOfUrl(urlsB.value(docId)))
-            else Iterator.empty
-          }
-          .toDF("doc_id").orderBy("doc_id")
+      case Some((urls, resident)) =>
+        val docIds = resident match {
+          case Some(segs) =>
+            segs.mapPartitions(_.flatMap { seg =>
+              val byDoc = scala.collection.mutable.HashMap.empty[Long,
+                scala.collection.mutable.HashMap[String, Array[Int]]]
+              seg.rows(all).foreach { r =>
+                RelationalPath.postings(r).foreach { case (d, p, _) =>
+                  byDoc.getOrElseUpdate(d, scala.collection.mutable.HashMap.empty)(r.term) = p
+                }
+              }
+              byDoc.iterator.collect { case (d, byTerm) if matches(byTerm) => d }
+            }).collect()
+          case None =>
+            verified(positionsTable(all)).collect()
+        }
+        ResultFrames.docIds(session,
+          docIds.map(d => RelationalPath.docIdOfUrl(urls(d))).sorted.toSeq)
       case None =>
         val cands = tfTable(req).toDF("term", "docId", "tf")
           .groupBy("docId")
           .agg(countDistinct("term").as("nt"))
           .filter(col("nt") === req.length)
           .select("docId")
-        positionsTable(all).join(cands, "docId")
-          .select(col("docId").cast("long"), col("term"), col("pos"))
-          .as[(Long, String, Seq[Int])]
-          .groupByKey(_._1)
-          .flatMapGroups { (docId, it) =>
-            val byTerm = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-            it.foreach { case (_, t, p) => byTerm(t) = p.toArray }
-            if (req.forall(byTerm.contains) && verify(byTerm))
-              Iterator.single(docId)
-            else Iterator.empty
-          }
+        verified(positionsTable(all).join(cands, "docId"))
           .toDF("docId")
           .join(liveDocsWithId(hasDeletes).select("docId", "doc_id"), "docId")
           .select("doc_id").orderBy("doc_id")
@@ -684,7 +675,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * place knows the block/position format). */
   private[search] def positionsTable(terms: Seq[String]): DataFrame =
     idx.postingsOf(terms)
-      .flatMap(r => RelationalPath.positions(r).map { case (d, p) => (r.term, d, p) })
+      .flatMap(r => RelationalPath.postings(r).map { case (d, p, _) => (r.term, d, p) })
       .toDF("term", "docId", "pos")
 
   /** Span-near matching docs (ascending doc_id)

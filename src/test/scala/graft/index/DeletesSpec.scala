@@ -404,7 +404,6 @@ class DeletesSpec extends SparkSpec {
     val resident = idx.residentPostings.get
     val docCols = idx.residentDocs.get
     val docs = idx.docs
-    val urls = idx.urlBroadcast().get
     val filters = idx.cachedFilters
     assert(filters.size === 1)
     assert(Seq(resident.id, docCols.id).forall(spark.sparkContext.getPersistentRDDs.contains))
@@ -414,7 +413,6 @@ class DeletesSpec extends SparkSpec {
     assert(!spark.sparkContext.getPersistentRDDs.contains(resident.id))
     assert(!spark.sparkContext.getPersistentRDDs.contains(docCols.id))
     assert(docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    intercept[org.apache.spark.SparkException](urls.value)
     filters.foreach(f => intercept[org.apache.spark.SparkException](f.value))
     assert(idx.residentPostings.isEmpty && idx.residentDocs.isEmpty &&
       idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)

@@ -73,6 +73,36 @@ class IndexSpec extends SparkSpec {
     assert(CheckIndex.audit(idx).isEmpty)
   }
 
+  test("CheckIndex invariant 5: posting norm bytes are the docs table's norms") {
+    import spark.implicits._
+    val idx = IndexBuilder.build(spark, mkPages(miniTexts), tmpDir("norms"),
+      IndexConfig(numPartitions = 2, partsPerSegment = 1))
+    assert(CheckIndex.audit(idx).isEmpty)
+    // a compacted generation keeps each survivor's norm byte; its only
+    // finding is the docId space it punched holes into
+    Deletes.deleteByUrl(idx, Seq("https://t/0001"))
+    val compacted = Deletes.compact(idx)
+    assert(CheckIndex.audit(compacted).forall(_.contains("docId space")))
+    // one block's first norm byte flipped in every "spark" row
+    val flipped: IndexView = new IndexView {
+      def spark = idx.spark
+      def stats = idx.stats
+      def postings = idx.postings.map { r =>
+        if (r.term != "spark") r
+        else {
+          val b = r.blocks.head
+          val norms = b.norms.clone()
+          norms(0) = (norms(0) ^ 1).toByte
+          r.copy(blocks = b.copy(norms = norms) +: r.blocks.tail)
+        }
+      }
+      def docs = idx.docs
+      def termStats = idx.termStats
+    }
+    assert(CheckIndex.audit(flipped).exists(_.contains("norm byte differs")),
+      CheckIndex.audit(flipped))
+  }
+
   test("salted merge ≡ unsalted merge (skew corpus, every doc has hot term)") {
     val texts = (0 until 200).map(i => s"the filler$i common the")
     val unsalted = IndexBuilder.build(spark, mkPages(texts), tmpDir("unsalted"),

@@ -282,8 +282,19 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("multi-field kernel ≡ general plan across query shapes") {
-    // force the general plan by wrapping ONE field as a plain
-    // IndexView (kernel eligibility requires every field warm)
+    multiFieldKernelAgreement(textIdx, urlIdx)
+    // both fields warm: the kernel's groupByKey pass reads the resident
+    // postings and their norm bytes (the text and url fields' lengths
+    // differ, so a norm taken from the wrong field changes the ranks)
+    multiFieldKernelAgreement(
+      graft.index.InvertedIndex.open(spark, indexCopy(textIdx.dir)).warm(),
+      graft.index.InvertedIndex.open(spark, indexCopy(urlIdx.dir)).warm())
+  }
+
+  /** Both qf fields as InvertedIndexes run the kernel; wrapped as plain
+    * IndexViews they run the general plan — both must agree. */
+  private def multiFieldKernelAgreement(textIdx: graft.index.InvertedIndex,
+                                        urlIdx: graft.index.InvertedIndex): Unit = {
     def plain(i: graft.index.InvertedIndex): graft.index.IndexView =
       new graft.index.IndexView {
         def spark = i.spark

@@ -19,6 +19,24 @@ class PlanSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** The formatted plans of the SQL queries `body` runs, as executed
+    * (captured by a QueryExecutionListener; JobCounts drains the
+    * listener bus before the listener is removed). */
+  private def executedPlans(body: => Any): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit =
+        plans.add(qe.explainString(ExplainMode.fromString("formatted")))
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try org.apache.spark.JobCounts.of(spark.sparkContext)(body)
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
   test("term predicate is pushed into the postings parquet scan") {
     val p = plan(idx.postings.filter(col("term") === "spark").toDF())
     assert(p.contains("PushedFilters"), p.take(500))
@@ -160,12 +178,17 @@ class PlanSpec extends SparkSpec {
 
   test("span-near serving: single MapGroups pass, zero joins") {
     // a cold InvertedIndex with no deletes takes the one-pass serving
-    // shape: one groupByKey over the terms' positions, doc_id from the
-    // urls broadcast — no candidate join, no docsWithId join (a fresh
-    // reader: the shared one may have been warmed by another suite, and
-    // a warm reader runs no plan at all — see the job-count spec below)
-    val rel = new RelationalPath(graft.index.InvertedIndex.open(spark, idx.dir))
-    val p = plan(rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true))
+    // shape: one groupByKey over the terms' positions, collected, with
+    // doc_id from the url cache on the driver — no candidate join, no
+    // docsWithId join (a fresh reader: the shared one may have been
+    // warmed by another suite, and a warm reader runs no plan at all —
+    // see the job-count spec below). The returned frame is local, so
+    // the plan asserted is the one the call executes.
+    val cold = graft.index.InvertedIndex.open(spark, idx.dir)
+    cold.urlMap() // the url cache loads with a plan of its own
+    val plans = executedPlans(new RelationalPath(cold).spanNearDocs(Seq("spark", "merge"), 3, inOrder = true))
+    assert(plans.length === 1, plans.mkString("\n\n").take(4000))
+    val p = plans.head
     assert(!p.contains("UDF("), "opaque UDF filter in span-near plan")
     assert(!p.contains("collect_list"), "ANY-term collect in span-near plan")
     assert(p.contains("MapGroups"), p.take(2000))

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{DocRow, PostingsRow}
@@ -72,14 +71,14 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     InvertedIndex.read(spark, diskTables, "postings").as[PostingsRow]
 
   /** The warm reader's postings: one cached partition per segment. */
-  def residentPostings: Option[RDD[SegmentPostings]] = cached.map(_.postings)
+  def residentPostings: Option[ResidentSegments[SegmentPostings]] = cached.map(_.postings)
 
   /** The warm reader's doc columns: one cached partition per segment. */
-  def residentDocs: Option[RDD[SegmentDocs]] = cached.map(_.docCols)
+  def residentDocs: Option[ResidentSegments[SegmentDocs]] = cached.map(_.docCols)
 
   override def postingsOf(terms: Seq[String]): Dataset[PostingsRow] =
     residentPostings match {
-      case Some(segs) => SegmentPostings.rowsOf(spark, segs, terms)
+      case Some(segs) => SegmentPostings.rowsOf(spark, segs.persisted, terms)
       case None => super.postingsOf(terms)
     }
 
@@ -231,25 +230,35 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * (SegmentDocs); docs and the term dictionary also stay cached
     * Datasets, and the url cache (`urlMap`) loads from the same docs
     * scan. Norms need no load of their own: every posting carries its
-    * doc's norm byte, and the scorers read it there. The tables are
-    * this reader's generation's (`tablesDir`): each generation has a
-    * directory of its own, so Spark's cache, which matches a plan by its
-    * paths, never hands one generation's cached tables to another's
-    * reader. Opt-in:
-    * at full corpus scale you warm only the hot working set, so nothing
-    * in the query path REQUIRES this. */
+    * doc's norm byte, and the scorers read it there.
+    *
+    * The persisted segment RDDs are the only copy of the segments and
+    * the only way to rebuild one. A warm query's resident job runs over
+    * a lineage-free view of their cached blocks (`ResidentSegments.run`),
+    * so it ships only its own function, never the parquet scan that
+    * built the segments; a job that finds a block missing reruns once
+    * over the persisted RDD, which recomputes the lost segment from
+    * parquet and caches it again, and counts a rebuild.
+    *
+    * The tables are this reader's generation's (`tablesDir`): each
+    * generation has a directory of its own, so Spark's cache, which
+    * matches a plan by its paths, never hands one generation's cached
+    * tables to another's reader. Opt-in: at full corpus scale you warm
+    * only the hot working set, so nothing in the query path REQUIRES
+    * this. */
   def warm(): InvertedIndex = {
     if (cached.isEmpty) {
       val segIds = InvertedIndex.segmentsOf(manifest).map(_.segId).toSeq
-      val w = InvertedIndex.Warm(SegmentPostings.resident(spark, s"$tablesDir/postings", segIds),
-        SegmentDocs.resident(spark, s"$tablesDir/docs", segIds),
-        docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist(),
-        InvertedIndex.read(spark, tablesDir, "termstats").persist())
+      val postings = SegmentPostings.resident(spark, s"$tablesDir/postings", segIds)
+      val docCols = SegmentDocs.resident(spark, s"$tablesDir/docs", segIds)
+      val docs = docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist()
+      val termStats = InvertedIndex.read(spark, tablesDir, "termstats").persist()
       // each materialization is a few small tasks, bound by scheduling
       // latency rather than cores: run them side by side
-      InvertedIndex.inParallel(() => w.postings.count(), () => w.docCols.count(),
-        () => w.termStats.count(), () => loadUrlMap(w.docs))
-      cached = Some(w)
+      InvertedIndex.inParallel(() => postings.count(), () => docCols.count(),
+        () => termStats.count(), () => loadUrlMap(docs))
+      cached = Some(InvertedIndex.Warm(new ResidentSegments(postings),
+        new ResidentSegments(docCols), docs, termStats))
     }
     this
   }
@@ -258,14 +267,17 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     * postings and doc columns and the cached docs and termstats, drops
     * the driver url and dictionary caches, and destroys the filter
     * cache's broadcasts (the reader's only broadcasts).
-    * The reader then answers cold. Call it once no query is running on
+    * The reader then answers cold. A resident job that finds its blocks
+    * gone under it reruns over the unpersisted segment RDDs, from
+    * parquet, so it still answers. Call it once no query is running on
     * the reader (a destroyed broadcast fails the query that reads it),
     * e.g. after a refresh has published the reader that replaces it.
     * Spark caches a Dataset by its plan, so another warm reader of the
     * same generation shares these cache entries and loses them too. */
   def close(): Unit = {
     cached.foreach { w =>
-      w.postings.unpersist(blocking = false); w.docCols.unpersist(blocking = false)
+      w.postings.persisted.unpersist(blocking = false)
+      w.docCols.persisted.unpersist(blocking = false)
       w.docs.unpersist(); w.termStats.unpersist()
     }
     cached = None
@@ -282,9 +294,10 @@ object InvertedIndex {
   /** What `warm()` pinned: the resident postings and doc columns, one
     * partition per segment, and the cached docs and termstats tables.
     * The doc columns are an RDD of their own, not a part of the postings
-    * one: every resident job ships its RDD's scan lineage, and the
-    * scorer jobs need not carry the docs scan. */
-  private final case class Warm(postings: RDD[SegmentPostings], docCols: RDD[SegmentDocs],
+    * one, so a lost doc-columns segment rebuilds without a postings
+    * scan and the other way round. */
+  private final case class Warm(postings: ResidentSegments[SegmentPostings],
+                                docCols: ResidentSegments[SegmentDocs],
                                 docs: Dataset[DocRow], termStats: DataFrame)
 
   /** Size cap of every driver-side serving cache: the term dictionary

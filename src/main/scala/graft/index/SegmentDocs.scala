@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A doc is read as one reused row of `Schema`, so a predicate or value
   * analyzed over that schema (`SegmentDocs.bind`) evaluates on it
-  * directly. */
+  * directly; the call's argument slots, if any, follow the columns. */
 final class SegmentDocs(
     docId: Array[Long],
     docNum: Array[Long],
@@ -45,7 +45,12 @@ final class SegmentDocs(
     row.update(5, lang(i))
   }
 
-  private def newRow(): InternalRow = new SpecificInternalRow(SegmentDocs.Schema.map(_.dataType))
+  /** A row of `Schema` followed by `args`, the call's argument slots. */
+  private def newRow(args: Array[Double] = Array.emptyDoubleArray): InternalRow = {
+    val row = new SpecificInternalRow(SegmentDocs.Schema.map(_.dataType) ++ args.map(_ => DoubleType))
+    args.indices.foreach(j => row.setDouble(SegmentDocs.Schema.length + j, args(j)))
+    row
+  }
 
   private def docNumOf(i: Int): Long = {
     if (docNumNull.get(i))
@@ -64,10 +69,12 @@ final class SegmentDocs(
   }
 
   /** (docId, doc_id, value) of the `k` docs with the smallest `value`
-    * (a bound double) at most `max`, docId breaking ties. A null value
-    * is never at most `max`; the comparison is Spark SQL's `<=`. */
-  def smallest(value: Expression, max: Double, k: Int): Array[(Long, Long, Double)] = {
-    val row = newRow()
+    * (a double bound with `args.length` argument slots) at most `max`,
+    * docId breaking ties. A null value is never at most `max`; the
+    * comparison is Spark SQL's `<=`. */
+  def smallest(value: Expression, args: Array[Double], max: Double,
+               k: Int): Array[(Long, Long, Double)] = {
+    val row = newRow(args)
     // (docId, position, value), largest first: the bounded heap's head
     // is the one to drop
     val heap = new java.util.PriorityQueue[(Long, Long, Double)](math.max(k, 1),
@@ -146,15 +153,18 @@ object SegmentDocs {
       docNumNull, tsNull)
   }
 
-  /** `cols` analyzed over an empty local frame of `Schema` and bound to
-    * its row, for interpreted evaluation on resident docs — None when a
-    * column references something the resident docs lack, or cannot be
-    * evaluated row by row (nondeterministic or unevaluable parts).
-    * Interpreted, not generated: generated code inlines the call's
-    * literals, so every new bound or centre would compile anew. */
-  def bind(spark: SparkSession, cols: Column*): Option[Seq[Expression]] = {
+  /** `cols` analyzed over an empty local frame of `Schema` followed by
+    * one non-null double column per name of `args` (the call's argument
+    * slots), and bound to its row, for interpreted evaluation on resident
+    * docs — None when a column references something the resident docs
+    * lack, or cannot be evaluated row by row (nondeterministic or
+    * unevaluable parts). Interpreted, not generated: generated code
+    * inlines the call's literals, so every new bound or centre would
+    * compile anew. */
+  def bind(spark: SparkSession, args: Seq[String], cols: Column*): Option[Seq[Expression]] = {
     if (cols.isEmpty) return Some(Nil)
-    val empty: DataFrame = spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
+    val empty: DataFrame = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Schema ++ args.map(StructField(_, DoubleType, nullable = false))))
     val analyzed =
       try empty.select(cols.zipWithIndex.map { case (c, i) => c.as(s"_$i") }: _*)
         .queryExecution.analyzed
@@ -172,13 +182,15 @@ object SegmentDocs {
   /** (docId, doc_id) of the first `k` docs in docId order on which
     * `pred` holds: one narrow job over the resident segments, each
     * emitting its first `k`, merged on the driver. */
-  def firstMatching(docs: RDD[SegmentDocs], pred: Option[Expression], k: Int): Array[(Long, Long)] =
-    docs.mapPartitions(_.flatMap(_.firstMatching(pred, k))).collect().sortBy(_._1).take(k)
+  def firstMatching(docs: ResidentSegments[SegmentDocs], pred: Option[Expression],
+                    k: Int): Array[(Long, Long)] =
+    docs.run(_.firstMatching(pred, k)).sortBy(_._1).take(k)
 
   /** (docId, doc_id, value) of the `k` docs with the smallest `value`
-    * at most `max`, by (value, docId): one narrow job, each segment
-    * emitting its bounded `k`, merged on the driver. */
-  def smallest(docs: RDD[SegmentDocs], value: Expression, max: Double,
-               k: Int): Array[(Long, Long, Double)] =
-    docs.mapPartitions(_.flatMap(_.smallest(value, max, k))).collect().sorted(byValue).take(k)
+    * (with `args` in its argument slots) at most `max`, by (value,
+    * docId): one narrow job, each segment emitting its bounded `k`,
+    * merged on the driver. */
+  def smallest(docs: ResidentSegments[SegmentDocs], value: Expression, args: Array[Double],
+               max: Double, k: Int): Array[(Long, Long, Double)] =
+    docs.run(_.smallest(value, args, max, k).iterator).sorted(byValue).take(k)
 }

@@ -474,7 +474,7 @@ object EDisMax {
       // narrow job, no shuffle; the driver merges the ≤k per segment
       case Some(segs) if nIdx == 1 =>
         val terms = scanTerms(0)
-        segs.mapPartitions(_.flatMap { seg =>
+        segs.run { seg =>
           val byDoc = scala.collection.mutable.HashMap.empty[Long, DocPostings]
           seg.rows(terms).foreach { r =>
             RelationalPath.postings(r).foreach { case (d, ps, norm) =>
@@ -482,7 +482,7 @@ object EDisMax {
             }
           }
           topByScore(byDoc.iterator.flatMap { case (d, dp) => fold(dp).map(d -> _) }, k)
-        }).collect()
+        }
       case _ =>
         idxs.toSeq.zipWithIndex.collect {
           case (i, f) if scanTerms(f).nonEmpty =>

@@ -1,6 +1,7 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 import graft.index.SegmentDocs
@@ -38,6 +39,31 @@ object RelationalPath {
 
   /** The corpus doc_id a url ends in (the relational output key). */
   def docIdOfUrl(url: String): Long = url.substring(url.lastIndexOf('/') + 1).toLong
+
+  /** How many bound geo distances `geoDistance` keeps. */
+  private val GeoDistances = 64
+
+  private type GeoKey = (SparkSession, String, String)
+
+  /** `geoDistance`'s bound distances, least recently used first. */
+  private val geoDistances =
+    new java.util.LinkedHashMap[GeoKey, Option[Expression]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[GeoKey, Option[Expression]]): Boolean =
+        size > GeoDistances
+    }
+
+  /** The resident haversine distance from the point (latSql, lonSql) to
+    * the centre in the two argument slots after the resident columns
+    * (`SegmentDocs.bind`), bound once per session and point expressions,
+    * so a geo call with a new centre parses and analyzes nothing. None
+    * when the point reads a column the resident docs lack. */
+  private def geoDistance(spark: SparkSession, latSql: String, lonSql: String): Option[Expression] =
+    geoDistances.synchronized {
+      geoDistances.computeIfAbsent((spark, latSql, lonSql), _ =>
+        SegmentDocs.bind(spark, Seq("__centre_lat", "__centre_lon"),
+          graft.functions.ValueSources.fn("geodist", expr(latSql), expr(lonSql),
+            col("__centre_lat"), col("__centre_lon")).cast("double")).map(_.head))
+    }
 
   /** Attribute predicate (AttrQ / AttrRangeQ) → boolean Column over the
     * docs table, typed from its schema (timestamp values parse,
@@ -427,7 +453,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
   /** The warm reader's resident doc columns, when they answer a call
     * exactly: a warm InvertedIndex with no pending deletes (the columns
     * still hold tombstoned docs; the docs plan subtracts them). */
-  private def residentDocs: Option[org.apache.spark.rdd.RDD[SegmentDocs]] = idx match {
+  private def residentDocs: Option[graft.index.ResidentSegments[SegmentDocs]] = idx match {
     case inv: graft.index.InvertedIndex => inv.residentDocs.filter(_ => !inv.hasDeletes)
     case _ => None
   }
@@ -441,7 +467,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
   private[search] def residentConstTopK(pred: Option[Column], k: Int): Option[DataFrame] =
     for {
       docs <- residentDocs
-      bound <- SegmentDocs.bind(session, pred.toSeq: _*)
+      bound <- SegmentDocs.bind(session, Nil, pred.toSeq: _*)
     } yield ResultFrames.rankedDocIds(session,
       SegmentDocs.firstMatching(docs, bound.headOption, k).map(_._2).toSeq)
 
@@ -485,21 +511,21 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * only resident columns (`SegmentDocs.Schema`), answers from its
     * resident doc columns in one narrow job with no Dataset: each segment
     * keeps a bounded heap of its `k` nearest docs within `dKm`, and the
-    * driver merges them. The distance is analyzed once per call and
-    * evaluated interpreted, because generated code inlines the centre
-    * and would compile again for every new one.
+    * driver merges them. The distance is bound once per (latSql, lonSql)
+    * with the centre as an argument (`geoDistance`) and evaluated
+    * interpreted, because generated code inlines the centre and would
+    * compile again for every new one.
     * Otherwise a docs plan filters by the ≤d predicate BEFORE the
     * bounded TakeOrderedAndProject. Ranks stamp on the driver. */
   def geoTopK(latSql: String, lonSql: String, lat: Double, lon: Double,
               dKm: Double, k: Int): DataFrame = {
-    val dist = graft.functions.ValueSources.fn("geodist",
-      expr(latSql), expr(lonSql), lit(lat), lit(lon))
     val resident = for {
       docs <- residentDocs
-      Seq(d) <- SegmentDocs.bind(session, dist.cast("double"))
-    } yield SegmentDocs.smallest(docs, d, dKm, k)
+      d <- RelationalPath.geoDistance(session, latSql, lonSql)
+    } yield SegmentDocs.smallest(docs, d, Array(lat, lon), dKm, k)
     val winners = resident.getOrElse(docsWithId
-      .withColumn("__d", dist)
+      .withColumn("__d", graft.functions.ValueSources.fn("geodist",
+        expr(latSql), expr(lonSql), lit(lat), lit(lon)))
       .filter(col("__d") <= dKm)
       .orderBy(asc("__d"), asc("docId"))
       .limit(k)
@@ -627,7 +653,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
       case Some((urls, resident)) =>
         val docIds = resident match {
           case Some(segs) =>
-            segs.mapPartitions(_.flatMap { seg =>
+            segs.run { seg =>
               val byDoc = scala.collection.mutable.HashMap.empty[Long,
                 scala.collection.mutable.HashMap[String, Array[Int]]]
               seg.rows(all).foreach { r =>
@@ -636,7 +662,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
                 }
               }
               byDoc.iterator.collect { case (d, byTerm) if matches(byTerm) => d }
-            }).collect()
+            }
           case None =>
             verified(positionsTable(all)).collect()
         }

@@ -3,11 +3,10 @@ package graft.search
 import scala.collection.mutable
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
-import graft.index.IndexView
+import graft.index.{IndexView, ResidentSegments, SegmentPostings}
 import graft.model.{Block, DocRow, PostingsRow}
 
 /** Per-query immutable context shipped to executors in the task closure
@@ -130,28 +129,32 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     * are expanded against the term dictionary first (Query#rewrite). */
   def scoredHits(q0: Query, k: Int,
                  after: Option[(Float, Long)] = None): Dataset[(Long, Float)] =
-    evaluate(q0, k, after).fold(session.emptyDataset[(Long, Float)])(
-      _.fold(session.createDataset(_), identity))
+    evaluate(q0, k, after).fold(session.emptyDataset[(Long, Float)])(_.fold(
+      { case (segs, score) => session.createDataset(segs.persisted.mapPartitions(_.flatMap(score))) },
+      identity))
 
   /** `scoredHits`, collected to the driver: a warm query runs its bare
-    * RDD job, with no Dataset wrapped around it. */
+    * resident job (`ResidentSegments.run`), with no Dataset wrapped
+    * around it. */
   private def hits(q0: Query, k: Int,
                    after: Option[(Float, Long)] = None): Array[(Long, Float)] =
-    evaluate(q0, k, after).fold(Array.empty[(Long, Float)])(_.fold(_.collect(), _.collect()))
+    evaluate(q0, k, after).fold(Array.empty[(Long, Float)])(_.fold(
+      { case (segs, score) => segs.run(score) }, _.collect()))
 
   /** The plan of `scoredHits` — None when nothing can match — chosen from
     * ONE read of the reader's delete state (a delete landing mid-call
     * cannot split the query over two states):
-    *  - warm reader, no deletes, no per-query docs rows needed: one
-    *    narrow RDD pass over the resident segments — each partition looks
-    *    up the query terms and scores its segment, no shuffle. The query
-    *    and its ScoringContext ride the task closure; cached filter
-    *    bitmaps ride their per-filter broadcasts;
+    *  - warm reader, no deletes, no per-query docs rows needed: the
+    *    resident segments and the per-segment scorer, run as one narrow
+    *    pass — each segment looks up the query terms and scores itself,
+    *    no shuffle. The query and its ScoringContext ride the task
+    *    closure; cached filter bitmaps ride their per-filter broadcasts;
     *  - otherwise the postings rows of the query terms (`postingsOf`)
     *    are grouped by segment, cogrouped with the docs rows when
     *    attribute bits, match-all or deletes need them. */
   private def evaluate(q0: Query, k: Int, after: Option[(Float, Long)])
-      : Option[Either[RDD[(Long, Float)], Dataset[(Long, Float)]]] = {
+      : Option[Either[(ResidentSegments[SegmentPostings], SegmentPostings => Iterator[(Long, Float)]),
+          Dataset[(Long, Float)]]] = {
     val hasDeletes = idx.hasDeletes
     val qRewritten = Rewriter.rewrite(q0, new IndexTermDict(idx))
     // attribute predicates become indexed bitset lookups: evaluated ONCE
@@ -191,9 +194,8 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     }
     if ((cachedPredBits.isDefined || (!Query.needsDocs(q) && !hasDeletes)) && resident.isDefined) {
       val bits = cachedPredBits.getOrElse(IndexedSeq.empty)
-      return Some(Left(resident.get.mapPartitions(_.flatMap { seg =>
-        SegmentScorer.score(q, ctx, seg.rows(terms), None, kk, aft, bits.map(_.value))
-      })))
+      return Some(Left((resident.get, seg =>
+        SegmentScorer.score(q, ctx, seg.rows(terms), None, kk, aft, bits.map(_.value)))))
     }
     val rows = idx.postingsOf(terms)
     if (!Query.needsDocs(q) && !hasDeletes) {

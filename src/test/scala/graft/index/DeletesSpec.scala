@@ -401,8 +401,8 @@ class DeletesSpec extends SparkSpec {
       SortedRead.earlyTopK(idx, 2), SortedRead.fullScanTopK(idx, 10)).map(_.collect().toSeq)
     val before = searcher.topK(q, 10).collect().toSeq
     val docReadsBefore = docReads()
-    val resident = idx.residentPostings.get
-    val docCols = idx.residentDocs.get
+    val resident = idx.residentPostings.get.persisted
+    val docCols = idx.residentDocs.get.persisted
     val docs = idx.docs
     val filters = idx.cachedFilters
     assert(filters.size === 1)

@@ -292,6 +292,20 @@ class PlanSpec extends SparkSpec {
     assert(c.jobs === 0, s"suggest: $c")
   }
 
+  test("a warm resident job's task binary holds its function, not the segments' parquet scan") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val terms = Seq("spark", "merge")
+    val q = Query.or(terms: _*)
+    val ctx = ScoringContext(warm.stats, warm.termDfs(terms))
+    val postings = org.apache.spark.TaskBinary.bytes(warm.residentPostings.get.job(seg =>
+      SegmentScorer.score(q, ctx, seg.rows(terms), None, 10)))(_.toArray)
+    val docs = org.apache.spark.TaskBinary.bytes(
+      warm.residentDocs.get.job(_.firstMatching(None, 10)))(_.toArray)
+    assert(postings < 4096, s"postings job: $postings bytes")
+    assert(docs < 4096, s"docs job: $docs bytes")
+    warm.close()
+  }
+
   test("postings scan prunes columns (term stats never read blocks)") {
     val p = plan(idx.termStats.filter(col("term") === "spark"))
     assert(!p.contains("blocks"),

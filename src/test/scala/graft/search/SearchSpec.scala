@@ -363,12 +363,29 @@ class SearchSpec extends SparkSpec {
       rel.geoTopK("cast(doc_id % 120 as double)", "0.0", 30.0, 0.0, 500.0, 10).collect().toSeq,
       SortedRead.earlyTopK(warm, 10).collect().toSeq)
     val before = answers()
-    val resident = Seq(warm.residentPostings.get, warm.residentDocs.get)
-    resident.foreach(org.apache.spark.LoseBlocks.of(_))
+    val seams = Seq(warm.residentPostings.get, warm.residentDocs.get)
+    val resident = seams.map(_.persisted)
+    import org.apache.spark.LoseBlocks
+    // one lost segment: each seam's first job finds block 2 missing and
+    // reruns once over the persisted RDD, which rebuilds that segment
+    // alone and caches it again
+    val rebuilds = seams.map(_.rebuilds)
+    resident.foreach(LoseBlocks.of(_, Seq(2)))
+    assert(resident.map(LoseBlocks.cached) === Seq.fill(2)(Seq(0, 1, 3)))
+    assert(answers() === before)
+    assert(seams.map(_.rebuilds) === rebuilds.map(_ + 1))
+    assert(resident.map(LoseBlocks.cached) === Seq.fill(2)(Seq(0, 1, 2, 3)))
+    // every segment lost
+    resident.foreach(LoseBlocks.of(_))
     assert(spark.sparkContext.getRDDStorageInfo.forall(i =>
       !resident.exists(_.id == i.id) || i.numCachedPartitions == 0))
     assert(answers() === before)
+    assert(seams.map(_.rebuilds) === rebuilds.map(_ + 2))
     assert(resident.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id)))
+    // a job that outlives close() still answers, from parquet
+    val docsSeam = warm.residentDocs.get
+    warm.close()
+    assert(docsSeam.run(d => Iterator(d.size.toLong)).sum === warm.stats.docCount)
   }
 
   test("4 threads of mixed queries on one warm reader answer as a serial caller does") {

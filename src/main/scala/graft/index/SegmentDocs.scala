@@ -46,7 +46,7 @@ final class SegmentDocs(
   }
 
   /** A row of `Schema` followed by `args`, the call's argument slots. */
-  private def newRow(args: Array[Double] = Array.emptyDoubleArray): InternalRow = {
+  private def newRow(args: Array[Double]): InternalRow = {
     val row = new SpecificInternalRow(SegmentDocs.Schema.map(_.dataType) ++ args.map(_ => DoubleType))
     args.indices.foreach(j => row.setDouble(SegmentDocs.Schema.length + j, args(j)))
     row
@@ -59,10 +59,10 @@ final class SegmentDocs(
   }
 
   /** (docId, doc_id) of the first `k` docs, in docId order, on which
-    * `pred` (a bound boolean; null counts as false) holds — all docs
-    * when `pred` is None. */
-  def firstMatching(pred: Option[Expression], k: Int): Iterator[(Long, Long)] = {
-    val row = newRow()
+    * `pred` (a boolean bound with `args.length` argument slots; null
+    * counts as false) holds — all docs when `pred` is None. */
+  def firstMatching(pred: Option[Expression], args: Array[Double], k: Int): Iterator[(Long, Long)] = {
+    val row = newRow(args)
     (0 until size).iterator.filter { i =>
       pred.forall { p => read(i, row); p.eval(row) == true }
     }.take(k).map(i => (docId(i), docNumOf(i)))
@@ -180,11 +180,12 @@ object SegmentDocs {
   }
 
   /** (docId, doc_id) of the first `k` docs in docId order on which
-    * `pred` holds: one narrow job over the resident segments, each
-    * emitting its first `k`, merged on the driver. */
+    * `pred` (with `args` in its argument slots) holds: one narrow job
+    * over the resident segments, each emitting its first `k`, merged on
+    * the driver. */
   def firstMatching(docs: ResidentSegments[SegmentDocs], pred: Option[Expression],
-                    k: Int): Array[(Long, Long)] =
-    docs.run(_.firstMatching(pred, k)).sortBy(_._1).take(k)
+                    args: Array[Double], k: Int): Array[(Long, Long)] =
+    docs.run(_.firstMatching(pred, args, k)).sortBy(_._1).take(k)
 
   /** (docId, doc_id, value) of the `k` docs with the smallest `value`
     * (with `args` in its argument slots) at most `max`, by (value,

@@ -16,12 +16,13 @@ import graft.index.IndexView
   * excluded from ANY qf field).
   *
   * Fields are separate single-field indexes built over the SAME corpus
-  * in the SAME url order, so docIds line up across them and the
-  * cross-field combine is an equi-join on docId (per-field analysis
+  * in the SAME url order, so docIds line up across them and a doc's
+  * postings from every field meet under its docId (per-field analysis
   * chains, e.g. the url field's punct→space mapping filter, live in the
   * field's own build). Scoring: per (doc, term)
   * max_f(boost_f · score_f) (tie=0), summed over matching terms —
-  * DisMaxQ over fields inside BooleanQuery over terms. */
+  * DisMaxQ over fields inside BooleanQuery over terms. `topK` is the one
+  * execution plan, over any `IndexView`. */
 object EDisMax {
 
   /** @param positional the RAW positive token sequence in query order
@@ -105,6 +106,19 @@ object EDisMax {
     * [0, |should|] — a deliberate divergence from Lucene, which matches
     * nothing when mm exceeds the optional-clause count; see `Parsed`).
     *
+    * One plan serves every reader (ExtendedDismaxQParser builds one
+    * query and scores it over each segment's postings): every scoring
+    * component — per-field BM25 term partials, the cross-field DisMax
+    * (tie fold), must/mustNot/mm Boolean logic over any-field matches,
+    * pf/pf2/pf3 phrase tfs, bq boosts — folds per doc (`DocFold`) in one
+    * pass over the query terms' postings, read through `postingsOf` (a
+    * term's tf is its position count). Each (field, doc) length norm is
+    * the norm byte its postings carry, the byte the scorer tree scores
+    * from; term dfs come from `IndexView.termDfs`; the ≤k winners' doc_ids
+    * come from the primary field's urls (`corpusIds`). Gates
+    * ir_q30/35/36/39/41/46 hash-validate the arithmetic against the SQL
+    * oracles.
+    *
     * @param tie the dismax tiebreak [U solr DisMaxQParser `tie`]:
     *        per (doc, term) the field score is
     *        max_f(ws) + tie·(Σ_f(ws) − max_f(ws)) — 0.0 (default) is
@@ -115,7 +129,7 @@ object EDisMax {
     *        the same ValueSources registry as function queries.
     * @param pf phrase fields [U solr edismax `pf`]: per (index, boost),
     *        docs where `p.positional` occurs as an exact phrase gain
-    *        boost · BM25-phrase-score (RelationalPath.phraseScores) —
+    *        boost · BM25-phrase-score (PhraseQuery idf-sum semantics) —
     *        a pure BOOST: it never adds or removes hits.
     * @param pf2 bigram phrase fields [U solr edismax `pf2`]: every
     *        ADJACENT PAIR of `p.positional` is phrase-boosted the same
@@ -139,321 +153,88 @@ object EDisMax {
     require(fields.nonEmpty, "edismax needs at least one qf field")
     // re-establish parse()'s invariant (deduped lists, should disjoint
     // from must, mm within the optional count) on caller-BUILT Parsed
-    // values too: the single-pass kernel folds termTs once per list
-    // entry, so a term in both must and should would double-count there
-    // while the general plan scores each distinct (term, doc) once
+    // values too: the fold sums termTs once per list entry, so a term
+    // in both must and should would double-count
     val p = {
       val must = p0.must.distinct
       val should = p0.should.distinct.filterNot(must.contains)
       Parsed(must, should, p0.mustNot.distinct,
         math.max(0, math.min(p0.mmCount, should.length)), p0.positional)
     }
+    require(p.must.nonEmpty || p.should.nonEmpty, "edismax needs at least one positive term")
     val spark = fields.head._1.spark
-    val scoredTerms = p.must ++ p.should
-    require(scoredTerms.nonEmpty, "edismax needs at least one positive term")
+    import spark.implicits._
+    def empty = ResultFrames.rankedDocIds(spark, Nil)
+    val primary = fields.head._1
 
     // pf/pf2/pf3 shingles of the positional order, in the PINNED
     // additive order (fields in list order, grams left→right, pf
-    // before pf2 before pf3) — shared by both execution plans below
-    final case class GramSpec(field: IndexView, boost: Double, gram: Seq[String])
-    val gramSeq: Seq[GramSpec] =
-      (if (p.positional.length >= 2)
-         pf.map { case (i, b) => GramSpec(i, b, p.positional) }
+    // before pf2 before pf3)
+    val grams: Seq[(IndexView, Double, Seq[String])] =
+      (if (p.positional.length >= 2) pf.map { case (i, b) => (i, b, p.positional) }
        else Nil) ++
       (if (p.positional.length >= 2)
-         pf2.flatMap { case (i, b) =>
-           p.positional.sliding(2).map(g => GramSpec(i, b, g)).toSeq }
+         pf2.flatMap { case (i, b) => p.positional.sliding(2).map(g => (i, b, g)).toSeq }
        else Nil) ++
       (if (p.positional.length >= 3)
-         pf3.flatMap { case (i, b) =>
-           p.positional.sliding(3).map(g => GramSpec(i, b, g)).toSeq }
+         pf3.flatMap { case (i, b) => p.positional.sliding(3).map(g => (i, b, g)).toSeq }
        else Nil)
 
-    // ---- single-pass serving kernel ----
-    // No boost function and every index warm: the whole query — per-
-    // field BM25 term partials, the cross-field DisMax (tie fold),
-    // must/mustNot/mm Boolean logic over any-field matches, pf/pf2/pf3
-    // phrase tfs, bq additive boosts — folds per doc in ONE distributed
-    // pass over the query terms' postings (a term's tf is its position
-    // count). When one warm index serves every field, that pass is one
-    // narrow job over its resident segments; otherwise one position
-    // scan per field, tagged by field ordinal and unioned, feeds one
-    // groupByKey(docId) shuffle (the fields are docId-aligned — same
-    // corpus, same url order). NO docs-table joins either way — each
-    // (field, doc) length norm is the norm byte its postings carry, the
-    // byte the scorer tree scores from (the docs table's dlq is the
-    // same SmallFloat value; CheckIndex audits the equality), and
-    // doc_ids come from the first field's url cache on the driver
-    // (ExtendedDismaxQParser scores the same postings cursors once per
-    // segment). The general relational
-    // plan below chains 4+ exchanges per field (scoredTf stats+docs
-    // joins, cross-field groupBy, perDoc groupBy, phrase join) that AQE
-    // stages into ~8 jobs per query. Arithmetic is the same
-    // double-precision op sequence — gates ir_q30/36/39/41/46
-    // hash-validate it against the SQL oracles, and EDisMaxSpec asserts
-    // kernel ≡ general plan for single- and multi-field shapes. Falls
-    // through to the general plan when bf is present (arbitrary
-    // docs-table Column), any field is not an InvertedIndex, any index
-    // has deletes, any index's dictionary exceeds the cache cap (2^20
-    // terms) or the first field's docs exceed the url cache's (2^20).
-    val kernelFields: Option[(Seq[(graft.index.InvertedIndex, Double)],
-                              Seq[(graft.index.InvertedIndex, Double, Seq[String])])] =
-      if (bf.isEmpty) {
-        val qfInv = fields.collect { case (i: graft.index.InvertedIndex, b) => (i, b) }
-        val gramInv = gramSeq.collect {
-          case GramSpec(i: graft.index.InvertedIndex, b, g) => (i, b, g) }
-        val allInv = qfInv.map(_._1) ++ gramInv.map(_._1)
-        if (qfInv.length == fields.length && gramInv.length == gramSeq.length &&
-            allInv.forall(i => !i.hasDeletes && i.termDfMap().isDefined) &&
-            qfInv.head._1.urlMap().isDefined)
-          Some((qfInv, gramInv))
-        else None
-      } else None
-    kernelFields.foreach { case (qfInv, gramInv) =>
-      return singlePassTopK(qfInv, p, k, tie, gramInv, bq)
-    }
-
-    // per-field per-(term, doc) boosted partials, unioned across fields
-    def fieldScores(terms: Seq[String]): DataFrame =
-      fields.map { case (idx, boost) =>
-        new RelationalPath(idx).scoredTf(terms)
-          .select(col("term"), col("docId"), col("doc_id"),
-            (col("score") * lit(boost)).as("ws"))
-      }.reduce(_ unionByName _)
-
-    // DisMax per (doc, term) across fields (tiebreak folds the
-    // non-winning fields in at `tie` weight), then Boolean over terms.
-    // Single-field qf (the common serving shape): the cross-field
-    // DisMax is the identity — scoredTf already emits exactly one row
-    // per (term, docId), so max-of-one ≡ the row and the groupBy would
-    // be a full shuffle of the widest frame for nothing; skip it.
-    val tsCol =
-      if (tie == 0.0) max("ws")
-      else max("ws") + lit(tie) * (sum("ws") - max("ws"))
-    val perTerm =
-      if (fields.length == 1)
-        fieldScores(scoredTerms)
-          .select(col("docId"), col("doc_id"), col("term"), col("ws").as("ts"))
-      else
-        fieldScores(scoredTerms)
-          .groupBy("docId", "doc_id", "term")
-          .agg(tsCol.as("ts"))
-    // excluded if a mustNot term matches ANY qf field — only matching
-    // docIds are needed, so read the raw tf table per field instead of
-    // running the BM25 scoring pipeline on terms whose scores are
-    // discarded
-    val excluded =
-      if (p.mustNot.isEmpty) None
-      else Some(fields.map { case (idx, _) =>
-        new RelationalPath(idx).tfTable(p.mustNot)
-          .toDF("term", "docId", "tf").select("docId")
-      }.reduce(_ union _).distinct())
-    // the Boolean fold over terms (must count, mm, mustNot) is the
-    // relational path's own
-    var out = new RelationalPath(fields.head._1)
-      .boolPerDoc(perTerm, p.must, p.should, excluded, None, p.mmCount)
-    // phrase boosts: full phrase (pf), bigram (pf2), trigram (pf3)
-    // shingles of the positional order — computed for ALL grams of ALL
-    // phrase fields in ONE batched pass per distinct field
-    // (RelationalPath.phraseFreqs: one position shuffle, every gram
-    // counted in-group), then folded into the score as a single Column
-    // expression in the PINNED additive order (fields in list order,
-    // grams left→right, pf before pf2 before pf3) with the exact
-    // per-gram FP op sequence of the one-join-per-gram path it
-    // replaces: s ← s + boost·coalesce(sumIdf·(ptf/(ptf + 1.2·(0.25 +
-    // 0.75·dlq/avgdl))), 0). A miss keeps the doc at +0.0 — pf never
-    // adds or removes hits.
-    if (gramSeq.nonEmpty) {
-      val gramFields = gramSeq.map(_.field).distinct
-      // per distinct field: df lookup (one bounded collect), active
-      // gram contents (every term in the dictionary — a gram with an
-      // absent term scores 0 everywhere, exactly the empty frame the
-      // per-gram path produced), one batched freq frame, one left join
-      val perField: Map[IndexView, (Map[String, Long], IndexedSeq[Seq[String]], Int)] =
-        gramFields.zipWithIndex.map { case (idx, fi) =>
-          val rel = new RelationalPath(idx)
-          val mine = gramSeq.filter(_.field == idx)
-          val dfOf = fieldDfs(idx, mine.flatMap(_.gram).distinct)
-          val contents = mine.map(_.gram).distinct
-            .filter(_.forall(dfOf.contains)).toIndexedSeq
-          if (contents.nonEmpty) {
-            val ff = rel.phraseFreqs(contents)
-              .select(col("docId"), col("ptfs").as(s"__ptfs$fi"),
-                col("dlq").as(s"__pdlq$fi"))
-            out = out.join(ff, Seq("docId"), "left")
-          }
-          idx -> ((dfOf, contents, fi))
-        }.toMap
-      var sCol = col("s")
-      gramSeq.foreach { case GramSpec(idx, boost, gram) =>
-        val (dfOf, contents, fi) = perField(idx)
-        val ci = contents.indexOf(gram)
-        if (ci >= 0) {
-          val n = idx.stats.docCount
-          var sumIdf = 0.0 // phrase-order fold, like the scorer path
-          gram.foreach(t =>
-            sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-          val ptf = element_at(col(s"__ptfs$fi"), lit(ci))
-          val ps = lit(sumIdf) * (ptf / (ptf +
-            lit(1.2) * (lit(0.25) + lit(0.75) *
-              col(s"__pdlq$fi").cast("double") /
-              lit(new RelationalPath(idx).avgdlDouble))))
-          sCol = sCol + lit(boost) * coalesce(ps, lit(0.0))
-        }
-      }
-      out = out.withColumn("s", sCol)
-        .drop(perField.values.flatMap { case (_, cs, fi) =>
-          if (cs.nonEmpty) Seq(s"__ptfs$fi", s"__pdlq$fi") else Nil
-        }.toSeq: _*)
-    }
-    bq.foreach { case (rawTerm, boost) =>
-      // boost query: primary-field BM25 of the term, added where it
-      // matches (left join keeps non-matching hits at +0). The term
-      // goes through the same fold as every parsed query term — the
-      // dictionary stores lowercased terms, so a raw mixed-case bq
-      // would silently boost nothing.
-      val term = Analysis.lowercase(rawTerm)
-      val bScores = new RelationalPath(fields.head._1).scoredTf(Seq(term))
-        .select(col("docId"), col("score").as("bqs"))
-      out = out.join(bScores, Seq("docId"), "left")
-        .withColumn("s",
-          col("s") + lit(boost) * coalesce(col("bqs"), lit(0.0)))
-        .drop("bqs")
-    }
-    import spark.implicits._
-    bf.foreach { fnCol =>
-      // evaluate the boost function over the primary field's docs row
-      // and ADD it (edismax bf is additive; `boost` would multiply).
-      // LEFT-join semantics + coalesce(0): bf can never add or remove
-      // hits, and a null-valued function (e.g. log(0)) contributes 0
-      // instead of nulling the whole score — Solr bf semantics.
-      //
-      // The plan choice needs |hits|, but probing it with a blocking
-      // limit().collect() would evaluate the whole hit pipeline twice
-      // and add a serial round-trip to the hot path. Instead the hit
-      // count is UPPER-BOUNDED from term document frequencies alone
-      // (no job in warm mode — the dictionary df map lives on the
-      // driver): every hit matches all must terms in some field /
-      // at least one should term, so |hits| ≤ min over must of
-      // Σ_fields df, else Σ over should of Σ_fields df.
-      val dfsByField: Seq[Map[String, Long]] =
-        fields.map { case (idx, _) => fieldDfs(idx, scoredTerms) }
-      def sumDf(t: String): Long = dfsByField.map(_.getOrElse(t, 0L)).sum
-      val hitBound: Long =
-        if (p.must.nonEmpty) p.must.map(sumDf).min
-        else p.should.map(sumDf).sum
-      if (hitBound <= bfCap) {
-        // the entire hit set is provably ≤ the cap: materialize it
-        // once (one job), fetch bf features with the candidate ids
-        // PUSHED into the feature scan (row-group pruning — asserted
-        // in PlanSpec), and finish ranking on the driver with the same
-        // comparator the distributed tail uses.
-        val rows = out
-          .select(col("docId").cast("long"), col("doc_id").cast("long"),
-            col("s").cast("double"))
-          .as[(Long, Long, Double)].collect()
-        if (rows.isEmpty) return ResultFrames.rankedDocIds(spark, Nil)
-        val bfMap: Map[Long, Double] =
-          bfFeatures(fields.head._1, fnCol, Some(rows.map(_._1).toSeq))
-            .select(col("docId").cast("long"), col("__bf").cast("double"))
-            .collect()
-            .map(r => r.getLong(0) ->
-              (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
-        val winners = rows
-          .map { case (d, id, s) => (d, id, s + bfMap.getOrElse(d, 0.0)) }
-          .sortBy { case (d, _, s) => (-s, d) }
-          .take(k)
-        return ResultFrames.rankedDocIds(spark, winners.toSeq.map(_._2))
-      }
-      // above the cap the distributed left join is the correct plan —
-      // and it is the query's ONLY job (no probe round-trip)
-      out = out.join(bfFeatures(fields.head._1, fnCol, None), Seq("docId"), "left")
-        .withColumn("s", col("s") + coalesce(col("__bf"), lit(0.0)))
-        .drop("__bf")
-    }
-    val winners = out
-      .orderBy(desc("s"), asc("docId"))
-      .limit(k)
-      .select(col("docId").cast("long").as("docId"),
-        col("doc_id").cast("long").as("doc_id"), col("s").cast("double").as("s"))
-      .as[(Long, Long, Double)].collect()
-      .sortBy { case (d, _, s) => (-s, d) }
-    ResultFrames.rankedDocIds(spark, winners.toSeq.map(_._2))
-  }
-
-  /** The single-pass kernel behind `topK` (see the eligibility comment
-    * there): every scoring component folded per doc (`DocFold`) over the
-    * query terms' decoded positions — per resident segment when one warm
-    * index serves every qf and gram field, else in one flatMapGroups
-    * over the positions unioned across the qf/phrase fields tagged by
-    * field ordinal. The double-precision op sequence mirrors the general
-    * plan expression for expression: per field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·
-    * dlq_f/avgdl_f))))·boost_f, dlq_f decoded from the field's postings
-    * norm byte; per term ts = max_f(ws) + tie·(Σ_f(ws)
-    * − max_f(ws)); s = Σ ts must-then-should; then per gram in pinned
-    * order s += boost·(sumIdf·(ptf/(ptf+1.2·(0.25+0.75·dlq/avgdl))))
-    * with the gram field's stats; then bq in list order s +=
-    * boost·(idf·tfNorm) over the primary field. */
-  private def singlePassTopK(
-      qf: Seq[(graft.index.InvertedIndex, Double)],
-      p: Parsed, k: Int, tie: Double,
-      gramsIn: Seq[(graft.index.InvertedIndex, Double, Seq[String])],
-      bq: Seq[(String, Double)]): DataFrame = {
-    val spark = qf.head._1.spark
-    import spark.implicits._
-    def empty = ResultFrames.rankedDocIds(spark, Nil)
     // distinct indexes by reference — field ordinals; qf fields first
     // so ordinal < nQf ⇔ scored field
-    val idxs = scala.collection.mutable.ArrayBuffer.empty[graft.index.InvertedIndex]
-    def ordOf(i: graft.index.InvertedIndex): Int = {
+    val idxs = scala.collection.mutable.ArrayBuffer.empty[IndexView]
+    def ordOf(i: IndexView): Int = {
       val at = idxs.indexWhere(_ eq i)
       if (at >= 0) at else { idxs += i; idxs.length - 1 }
     }
-    qf.foreach { case (i, _) => ordOf(i) }
+    val qfOrd: Array[Int] = fields.map { case (i, _) => ordOf(i) }.toArray
     val nQf = idxs.length
-    val qfOrd: Array[Int] = qf.map { case (i, _) => ordOf(i) }.toArray
-    val qfBoost: Array[Double] = qf.map(_._2).toArray
-    val gramSpecs: Array[(Int, Double, Array[String], Double)] =
-      gramsIn.flatMap { case (i, b, g) =>
-        val dfOf = i.termDfMap().get
-        // a gram with a dictionary-absent term scores 0 everywhere
-        // (the empty frame of the general plan) — dropped, order kept
-        if (g.forall(dfOf.contains)) {
-          val n = i.stats.docCount
-          var sumIdf = 0.0 // phrase-order fold, like the scorer path
-          g.foreach(t =>
-            sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-          Some((ordOf(i), b, g.toArray, sumIdf))
-        } else None
-      }.toArray
-    val nIdx = idxs.length
-    // per-ordinal driver stats (norms ride the postings)
-    val dfs: Array[Map[String, Long]] = idxs.map(_.termDfMap().get).toArray
-    val avgdl: Array[Double] =
-      idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
-    val urls = qf.head._1.urlMap().get
-    // a must term absent from EVERY qf field's dictionary is
-    // unsatisfiable
     val qfOrdDistinct = qfOrd.distinct
-    if (!p.must.forall(t => qfOrdDistinct.exists(f => dfs(f).contains(t))))
-      return empty
+    val qfBoost: Array[Double] = fields.map(_._2).toArray
+    val gramOrds: Seq[(Int, Double, Seq[String])] = grams.map { case (i, b, g) => (ordOf(i), b, g) }
+    val nIdx = idxs.length
     val bqList: Array[(String, Double)] =
-      bq.map { case (t, b) => (graft.analysis.Analysis.lowercase(t), b) }.toArray
+      bq.map { case (t, b) => (Analysis.lowercase(t), b) }.toArray
     val mustArr = p.must.toArray
     val shouldArr = p.should.toArray
     val mustNotArr = p.mustNot.toArray
-    // per-ordinal scan terms — per-query dictionary slices only (the
-    // task closure never captures the full df maps)
-    val scanTerms: Array[Seq[String]] = Array.tabulate(nIdx) { f =>
+    // the terms ordinal f reads: the query terms on a qf field, bq terms
+    // on the primary one, the terms of `gs`'s grams on their field
+    def termsOf(f: Int, gs: Seq[(Int, Seq[String])]): Seq[String] = {
       val mine = scala.collection.mutable.LinkedHashSet.empty[String]
-      if (f < nQf && qfOrdDistinct.contains(f)) {
+      if (f < nQf) {
         (mustArr ++ shouldArr ++ mustNotArr).foreach(mine += _)
         if (f == qfOrd(0)) bqList.foreach(mine += _._1)
       }
-      gramSpecs.foreach { case (gf, _, g, _) => if (gf == f) g.foreach(mine += _) }
-      mine.toSeq.filter(dfs(f).contains)
+      gs.foreach { case (gf, g) => if (gf == f) g.foreach(mine += _) }
+      mine.toSeq
     }
+    // per-ordinal dfs of the query's terms only — per-query dictionary
+    // slices, so the task closure never captures a full dictionary
+    val dfs: Array[Map[String, Long]] = Array.tabulate(nIdx)(f =>
+      fieldDfs(idxs(f), termsOf(f, gramOrds.map { case (gf, _, g) => (gf, g) })))
+    // a must term absent from EVERY qf field's dictionary is
+    // unsatisfiable
+    if (!mustArr.forall(t => qfOrdDistinct.exists(f => dfs(f).contains(t))))
+      return empty
+    val gramSpecs: Array[(Int, Double, Array[String], Double)] =
+      gramOrds.flatMap { case (f, b, g) =>
+        val dfOf = dfs(f)
+        // a gram with a dictionary-absent term scores 0 everywhere —
+        // dropped, order kept
+        if (g.forall(dfOf.contains)) {
+          val n = idxs(f).stats.docCount
+          var sumIdf = 0.0 // phrase-order fold, like the scorer path
+          g.foreach(t =>
+            sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
+          Some((f, b, g.toArray, sumIdf))
+        } else None
+      }.toArray
+    val scanTerms: Array[Seq[String]] = Array.tabulate(nIdx)(f =>
+      termsOf(f, gramSpecs.map { case (gf, _, g, _) => (gf, g.toSeq) }).filter(dfs(f).contains))
     if (scanTerms.forall(_.isEmpty)) return empty
+    val avgdl: Array[Double] =
+      idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
     // idf for the SCAN terms only — never a full-dictionary map per
     // query (a 10^6-term warm field would pay O(|dict|) log() calls on
     // the hot path for a handful of needed entries)
@@ -467,12 +248,59 @@ object EDisMax {
       }
     val fold = new DocFold(qfOrd, qfOrdDistinct, qfBoost, mustArr, shouldArr, mustNotArr,
       p.mmCount, tie, avgdl, idfSlice, gramSpecs, bqList)
-    val winners: Array[(Long, Double)] = idxs.head.residentPostings match {
-      // one warm index serves every field: a doc's postings all live in
-      // its own segment, so each resident partition groups its segment's
-      // postings by docId, folds each doc and keeps its top k — one
-      // narrow job, no shuffle; the driver merges the ≤k per segment
-      case Some(segs) if nIdx == 1 =>
+    def topOf(hits: DataFrame): Array[(Long, Double)] =
+      hits.orderBy(desc("s"), asc("docId")).limit(k).select("docId", "s")
+        .as[(Long, Double)].collect().sortBy { case (d, s) => (-s, d) }
+
+    // bf (edismax bf is additive; `boost` would multiply) over the
+    // primary field's docs row, LEFT-joined + coalesce(0): bf can never
+    // add or remove hits, and a null-valued function (e.g. log(0))
+    // contributes 0 instead of nulling the whole score — Solr bf
+    // semantics. The regime needs |hits|, but probing it with a
+    // blocking collect would run the hit pipeline twice; instead it is
+    // UPPER-BOUNDED from term dfs alone (no job once the dictionary is
+    // on the driver): every hit matches all must terms in some field /
+    // at least one should term, so |hits| ≤ min over must of Σ_fields
+    // df, else Σ over should of Σ_fields df.
+    def withBf(hits: DataFrame, fn: org.apache.spark.sql.Column): Array[(Long, Double)] = {
+      def sumDf(t: String): Long = qfOrd.map(f => dfs(f).getOrElse(t, 0L)).sum
+      val hitBound: Long =
+        if (mustArr.nonEmpty) mustArr.map(sumDf).min else shouldArr.map(sumDf).sum
+      if (hitBound <= bfCap) {
+        // the hit set is provably ≤ the cap: collect it (one job), fetch
+        // the bf features with the candidate ids PUSHED into the feature
+        // scan (row-group pruning — asserted in PlanSpec) and rank on
+        // the driver with the comparator the distributed tail uses
+        val rows = hits.select("docId", "s").as[(Long, Double)].collect()
+        if (rows.isEmpty) return rows
+        val bfMap: Map[Long, Double] =
+          bfFeatures(primary, fn, Some(rows.map(_._1).toSeq))
+            .select(col("docId").cast("long"), col("__bf").cast("double"))
+            .collect()
+            .map(r => r.getLong(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
+        rows.map { case (d, s) => (d, s + bfMap.getOrElse(d, 0.0)) }
+          .sortBy { case (d, s) => (-s, d) }.take(k)
+      } else
+        // above the cap the distributed left join is the plan
+        topOf(hits.join(bfFeatures(primary, fn, None), Seq("docId"), "left")
+          .withColumn("s", col("s") + coalesce(col("__bf"), lit(0.0))))
+    }
+
+    // The pass. The resident pass needs one warm index serving every
+    // field (a doc's postings all live in its own segment, so each
+    // resident partition folds its own docs and keeps its top k: one
+    // narrow job, no shuffle); it reads no tombstones and no docs, so it
+    // also needs no bf and no pending deletes. Every other query runs
+    // the groupByKey pass: one position scan per field, tagged by
+    // ordinal and unioned, grouped by docId (the fields are
+    // docId-aligned — same corpus, same url order).
+    val resident = idxs.head match {
+      case inv: graft.index.InvertedIndex if nIdx == 1 && bf.isEmpty && !inv.hasDeletes =>
+        inv.residentPostings
+      case _ => None
+    }
+    val winners: Array[(Long, Double)] = resident match {
+      case Some(segs) =>
         val terms = scanTerms(0)
         segs.run { seg =>
           val byDoc = scala.collection.mutable.HashMap.empty[Long, DocPostings]
@@ -482,9 +310,9 @@ object EDisMax {
             }
           }
           topByScore(byDoc.iterator.flatMap { case (d, dp) => fold(dp).map(d -> _) }, k)
-        }
-      case _ =>
-        idxs.toSeq.zipWithIndex.collect {
+        }.sortBy { case (d, s) => (-s, d) }.take(k)
+      case None =>
+        val folded = idxs.toSeq.zipWithIndex.collect {
           case (i, f) if scanTerms(f).nonEmpty =>
             i.postingsOf(scanTerms(f)).flatMap(r =>
               RelationalPath.postings(r).map { case (d, ps, norm) => (f, d, r.term, ps, norm) })
@@ -496,11 +324,17 @@ object EDisMax {
             fold(dp).map(docId -> _).iterator
           }
           .toDF("docId", "s")
-          .orderBy(desc("s"), asc("docId")).limit(k)
-          .as[(Long, Double)].collect()
+        // a doc tombstoned in any qf field's index is no hit: a delete
+        // removes the whole doc
+        val hits = idxs.take(nQf).foldLeft(folded)((h, i) =>
+          h.join(i.tombstones.toDF("docId"), Seq("docId"), "left_anti"))
+        bf match {
+          case None => topOf(hits)
+          case Some(fn) => withBf(hits, fn)
+        }
     }
-    ResultFrames.rankedDocIds(spark, winners.sortBy { case (d, s) => (-s, d) }.take(k)
-      .toSeq.map { case (d, _) => RelationalPath.docIdOfUrl(urls(d)) })
+
+    ResultFrames.rankedDocIds(spark, corpusIds(primary, winners.toSeq.map(_._1)))
   }
 
   /** The k best (docId, s) hits by (s desc, docId asc), the order the
@@ -534,9 +368,15 @@ object EDisMax {
     }
   }
 
-  /** The per-doc fold of the single-pass kernel, shared by its resident
-    * pass and its groupByKey pass so both run one double-precision op
-    * sequence. None when the doc is no hit. */
+  /** The per-doc fold of `topK`, shared by its resident pass and its
+    * groupByKey pass so both run one double-precision op sequence: per
+    * field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·dlq_f/avgdl_f))))·boost_f,
+    * dlq_f decoded from the field's postings norm byte; per term
+    * ts = max_f(ws) + tie·(Σ_f(ws) − max_f(ws)); s = Σ ts must-then-
+    * should; then per gram in pinned order s += boost·(sumIdf·(ptf/(ptf+
+    * 1.2·(0.25+0.75·dlq/avgdl)))) with the gram field's stats; then bq in
+    * list order s += boost·(idf·tfNorm) over the primary field. None
+    * when the doc is no hit. */
   private final class DocFold(
       qfOrd: Array[Int], qfOrdDistinct: Array[Int], qfBoost: Array[Double],
       mustArr: Array[String], shouldArr: Array[String], mustNotArr: Array[String],
@@ -611,8 +451,8 @@ object EDisMax {
       while (i < shouldArr.length) {
         val ts = termTs(shouldArr(i)); if (ts != 0.0) s += ts; i += 1
       }
-      // grams in pinned order — the phraseFreqs counting kernel on
-      // the gram field's positions
+      // grams in pinned order: each gram's phrase tf counted on the
+      // gram field's positions
       var g = 0
       while (g < gramSpecs.length) {
         val (gf, boost, gram, sumIdf) = gramSpecs(g)
@@ -654,7 +494,7 @@ object EDisMax {
         g += 1
       }
       // bq in list order: primary-field BM25 of the term (no field
-      // boost — the general plan's scoredTf score column)
+      // boost)
       var b = 0
       while (b < bqList.length) {
         val (t, boost) = bqList(b)
@@ -671,12 +511,32 @@ object EDisMax {
   /** Term dfs over one field (`IndexView.termDfs`), loading an
     * InvertedIndex's driver dictionary on first use as `Searcher` does
     * (serving mode: no job after that). */
-  private def fieldDfs(idx: IndexView, terms: Seq[String]): Map[String, Long] = {
+  private[search] def fieldDfs(idx: IndexView, terms: Seq[String]): Map[String, Long] = {
     idx match {
       case inv: graft.index.InvertedIndex => inv.termDfMap()
       case _ =>
     }
     idx.termDfs(terms)
+  }
+
+  /** The corpus doc_ids of the primary field's `docIds`, in order, from
+    * their urls: through the url cache, loaded on first use as the other
+    * serving paths do, or — with no cache (a plain IndexView, or an
+    * index past the cache's doc cap) — one lookup of just these rows in
+    * the docs table, its docId predicate pushed into the scan. */
+  private def corpusIds(primary: IndexView, docIds: Seq[Long]): Seq[Long] = {
+    if (docIds.isEmpty) return Nil
+    val cached = primary match {
+      case inv: graft.index.InvertedIndex => inv.urlMap()
+      case _ => None
+    }
+    val urlOf: Long => String = cached.getOrElse {
+      val spark = primary.spark
+      import spark.implicits._
+      primary.docs.filter(col("docId").isin(docIds: _*)).select("docId", "url")
+        .as[(Long, String)].collect().toMap
+    }
+    docIds.map(d => RelationalPath.docIdOfUrl(urlOf(d)))
   }
 
   /** Hit-count cap for shipping candidate ids as a pushed isin

@@ -40,30 +40,40 @@ object RelationalPath {
   /** The corpus doc_id a url ends in (the relational output key). */
   def docIdOfUrl(url: String): Long = url.substring(url.lastIndexOf('/') + 1).toLong
 
-  /** How many bound geo distances `geoDistance` keeps. */
-  private val GeoDistances = 64
+  /** How many bound resident expressions `boundResident` keeps. */
+  private val BoundExpressions = 64
 
-  private type GeoKey = (SparkSession, String, String)
+  private type BoundKey = (SparkSession, Any)
 
-  /** `geoDistance`'s bound distances, least recently used first. */
-  private val geoDistances =
-    new java.util.LinkedHashMap[GeoKey, Option[Expression]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[GeoKey, Option[Expression]]): Boolean =
-        size > GeoDistances
+  /** `boundResident`'s expressions, least recently used first. */
+  private val bound =
+    new java.util.LinkedHashMap[BoundKey, Option[Expression]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[BoundKey, Option[Expression]]): Boolean =
+        size > BoundExpressions
+    }
+
+  /** `value` bound for the resident docs with `args` as its argument
+    * slots (`SegmentDocs.bind`), once per session and `key`, so a call
+    * with new arguments parses and analyzes nothing. None when `value`
+    * reads a column the resident docs lack. */
+  private def boundResident(spark: SparkSession, key: Any, args: Seq[String])
+                           (value: => Column): Option[Expression] =
+    bound.synchronized {
+      bound.computeIfAbsent((spark, key), _ => SegmentDocs.bind(spark, args, value).map(_.head))
     }
 
   /** The resident haversine distance from the point (latSql, lonSql) to
-    * the centre in the two argument slots after the resident columns
-    * (`SegmentDocs.bind`), bound once per session and point expressions,
-    * so a geo call with a new centre parses and analyzes nothing. None
-    * when the point reads a column the resident docs lack. */
+    * the centre in the two argument slots. */
   private def geoDistance(spark: SparkSession, latSql: String, lonSql: String): Option[Expression] =
-    geoDistances.synchronized {
-      geoDistances.computeIfAbsent((spark, latSql, lonSql), _ =>
-        SegmentDocs.bind(spark, Seq("__centre_lat", "__centre_lon"),
-          graft.functions.ValueSources.fn("geodist", expr(latSql), expr(lonSql),
-            col("__centre_lat"), col("__centre_lon")).cast("double")).map(_.head))
-    }
+    boundResident(spark, ("geodist", latSql, lonSql), Seq("__centre_lat", "__centre_lon"))(
+      graft.functions.ValueSources.fn("geodist", expr(latSql), expr(lonSql),
+        col("__centre_lat"), col("__centre_lon")).cast("double"))
+
+  /** The resident predicate lo ≤ fn ≤ hi, with lo and hi in the two
+    * argument slots (Spark's `between` over the double value). */
+  private def inRange(spark: SparkSession, fn: Column): Option[Expression] =
+    boundResident(spark, ("frange", fn), Seq("__lo", "__hi"))(
+      fn.cast("double").between(col("__lo"), col("__hi")))
 
   /** Attribute predicate (AttrQ / AttrRangeQ) → boolean Column over the
     * docs table, typed from its schema (timestamp values parse,
@@ -310,8 +320,8 @@ final class RelationalPath(idx: graft.index.IndexView) {
   }
 
   /** The LAZY scored per-doc frame of a Boolean query over term clauses
-    * (the plan rankTopK bounds and collects) — shared by `forParsed` and
-    * edismax's general plan, exposed for PlanSpec. `perTerm` holds one
+    * (the plan rankTopK bounds and collects) — `forParsed`'s Boolean
+    * fold, exposed for PlanSpec and the edismax reference plan. `perTerm` holds one
     * (docId, doc_id, term, ts) row per matching (term, doc); a doc
     * scores Σ ts when it matches every `mustD` term and at least `effMm`
     * of `shouldD`. `excluded` (docId) is anti-joined — the MUST_NOT
@@ -459,17 +469,14 @@ final class RelationalPath(idx: graft.index.IndexView) {
   }
 
   /** Constant-score top-k from the resident doc columns: the first `k`
-    * docs in docId order on which `pred` holds (every doc when None),
-    * one narrow job (each segment stops at its `k`th match) and a driver
-    * merge. None when the call must take the docs plan: a cold reader,
-    * pending deletes, or a predicate over a column the resident docs
-    * lack. */
-  private[search] def residentConstTopK(pred: Option[Column], k: Int): Option[DataFrame] =
-    for {
-      docs <- residentDocs
-      bound <- SegmentDocs.bind(session, Nil, pred.toSeq: _*)
-    } yield ResultFrames.rankedDocIds(session,
-      SegmentDocs.firstMatching(docs, bound.headOption, k).map(_._2).toSeq)
+    * docs in docId order on which `pred` (bound, with `args` in its
+    * argument slots) holds, every doc when None — one narrow job (each
+    * segment stops at its `k`th match) and a driver merge. None when the
+    * call must take the docs plan: a cold reader or pending deletes. */
+  private[search] def residentConstTopK(pred: Option[Expression], k: Int,
+                                        args: Array[Double] = Array.emptyDoubleArray): Option[DataFrame] =
+    residentDocs.map(docs => ResultFrames.rankedDocIds(session,
+      SegmentDocs.firstMatching(docs, pred, args, k).map(_._2).toSeq))
 
   /** MatchAllDocsQuery analogue (`q=*:*`): every live doc, constant
     * score ⇒ rank = docId (url-rank) order
@@ -489,15 +496,16 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * A warm reader without pending deletes, whose function reads only
     * resident columns (`SegmentDocs.Schema`), answers from its resident
     * doc columns in one narrow job with no Dataset: the predicate is
-    * analyzed once per call and evaluated interpreted, because generated
-    * code inlines the bounds and would compile again for every new
-    * range. Otherwise the predicate filters a docs plan, and Catalyst
-    * pushes what it can into the docs scan. */
-  def frangeTopK(fn: Column, lo: Double, hi: Double, k: Int): DataFrame = {
-    val pred = fn.cast("double").between(lo, hi)
-    residentConstTopK(Some(pred), k).getOrElse(
-      constRankByDocId(docsWithId.filter(pred).select(col("docId"), col("doc_id")), k))
-  }
+    * bound once per (session, fn) with lo and hi as arguments (`inRange`)
+    * and evaluated interpreted, because generated code inlines the
+    * bounds and would compile again for every new range. Otherwise the
+    * predicate filters a docs plan, and Catalyst pushes what it can into
+    * the docs scan. */
+  def frangeTopK(fn: Column, lo: Double, hi: Double, k: Int): DataFrame =
+    RelationalPath.inRange(session, fn)
+      .flatMap(pred => residentConstTopK(Some(pred), k, Array(lo, hi)))
+      .getOrElse(constRankByDocId(
+        docsWithId.filter(fn.cast("double").between(lo, hi)).select(col("docId"), col("doc_id")), k))
 
   /** Geo distance filter + sort-by-distance — the reference's spatial
     * filter/sort surface [U solr SpatialFilterQParser `{!geofilt}` +
@@ -697,8 +705,8 @@ final class RelationalPath(idx: graft.index.IndexView) {
   }
 
   /** Decoded per-(term, doc) position lists for `terms` — the shared
-    * position source of spanNearDocs / phraseDocs / phraseScores (one
-    * place knows the block/position format). */
+    * position source of the general position-verified plans and
+    * phraseDocs (one place knows the block/position format). */
   private[search] def positionsTable(terms: Seq[String]): DataFrame =
     idx.postingsOf(terms)
       .flatMap(r => RelationalPath.postings(r).map { case (d, p, _) => (r.term, d, p) })
@@ -717,9 +725,15 @@ final class RelationalPath(idx: graft.index.IndexView) {
   }
 
   /** Exact-phrase matching docs (ascending doc_id), two-phase:
-    * conjunction candidates, then position verification. */
-  def phraseDocs(terms: Seq[String]): DataFrame =
-    phraseJoined(positionsTable(terms), terms)
+    * conjunction candidates (a k-way docId join of the terms' position
+    * lists, p0..p_{k-1}), then position verification. */
+  def phraseDocs(terms: Seq[String]): DataFrame = {
+    val hits = positionsTable(terms)
+    terms.zipWithIndex.tail.foldLeft(
+      hits.filter(col("term") === terms.head).select(col("docId"), col("pos").as("p0"))) {
+      case (acc, (t, i)) =>
+        acc.join(hits.filter(col("term") === t).select(col("docId"), col("pos").as(s"p$i")), "docId")
+    }
       .withColumn("ph",
         exists(col("p0"), p =>
           terms.indices.tail.map(i => array_contains(col(s"p$i"), p + i))
@@ -727,125 +741,5 @@ final class RelationalPath(idx: graft.index.IndexView) {
       .filter(col("ph"))
       .join(docsWithId.select("docId", "doc_id"), "docId")
       .select("doc_id").orderBy("doc_id")
-
-  /** k-way docId position join: (docId, p0..p_{k-1}) for docs holding
-    * every phrase term — shared by phraseDocs (existence) and
-    * phraseScores (frequency). */
-  private def phraseJoined(hits: DataFrame, terms: Seq[String]): DataFrame =
-    terms.zipWithIndex.tail.foldLeft(
-      hits.filter(col("term") === terms.head)
-        .select(col("docId"), col("pos").as("p0"))) {
-      case (acc, (t, i)) =>
-        acc.join(hits.filter(col("term") === t)
-          .select(col("docId"), col("pos").as(s"p$i")), "docId")
-    }
-
-  /** BM25-scored exact phrase (PhraseQuery scoring [U lucene/core/
-    * .../search/PhraseQuery.java]: idf = Σ constituent-term idfs in
-    * phrase order WITH multiplicity, tf = phrase frequency) — the
-    * scoring twin of `phraseDocs`, used by edismax `pf` boosts.
-    * Output: (docId, doc_id, ps) for docs where the phrase occurs.
-    * The term dfs come from `IndexView.termDfs`, as the Searcher's do. */
-  def phraseScores(terms: Seq[String]): DataFrame =
-    phraseScoresFrom(positionsTable(terms), idx.termDfs(terms), terms)
-
-  /** Exact phrase frequencies for MANY grams in ONE distributed pass —
-    * the edismax pf/pf2/pf3 batch kernel. ONE shuffle of the decoded
-    * positions of all gram terms, grouped by doc; every gram's phrase
-    * tf is counted inside the group, so plan depth (and shuffle count)
-    * is CONSTANT in the gram count — replacing the one k-way position
-    * self-join per gram that made pf2 latency linear in the bigram
-    * count. Mirrors how the reference evaluates all pf/pf2/pf3
-    * PhraseQueries in one pass over the shared per-segment term
-    * positions [U solr/core/.../search/ExtendedDismaxQParser.java
-    * addShingledPhraseQueries; lucene ExactPhraseMatcher].
-    *
-    * Output: (docId, ptfs: Map[gramIdx → phrase tf], dlq) — live docs
-    * with at least one matching gram only; a gram with ptf 0 has no
-    * map entry. The per-gram count is integer-exact identical to
-    * `phraseScoresFrom`'s array_contains fold. */
-  private[search] def phraseFreqs(grams: IndexedSeq[Seq[String]]): DataFrame = {
-    require(grams.nonEmpty && grams.forall(_.length >= 2),
-      "phraseFreqs needs grams of length >= 2")
-    val allTerms = grams.flatten.distinct
-    val gramArr: Array[Array[String]] = grams.map(_.toArray).toArray
-    val freqs = positionsTable(allTerms)
-      .select(col("docId").cast("long"), col("term"), col("pos"))
-      .as[(Long, String, Seq[Int])]
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val posOf = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.foreach { case (_, t, ps) => posOf(t) = ps.toArray }
-        val setOf = posOf.map { case (t, ps) =>
-          val s = new java.util.HashSet[Integer](ps.length * 2)
-          ps.foreach(p => s.add(p))
-          t -> s
-        }
-        val hits = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-        var g = 0
-        while (g < gramArr.length) {
-          val gram = gramArr(g)
-          var ok = true
-          var i = 0
-          while (ok && i < gram.length) { ok = posOf.contains(gram(i)); i += 1 }
-          if (ok) {
-            val first = posOf(gram(0))
-            var ptf = 0
-            var j = 0
-            while (j < first.length) {
-              val p = first(j)
-              var m = 1
-              var good = true
-              while (good && m < gram.length) {
-                good = setOf(gram(m)).contains(p + m)
-                m += 1
-              }
-              if (good) ptf += 1
-              j += 1
-            }
-            if (ptf > 0) hits += ((g, ptf.toDouble))
-          }
-          g += 1
-        }
-        if (hits.isEmpty) Iterator.empty
-        else Iterator.single((docId, hits.toMap))
-      }
-      .toDF("docId", "ptfs")
-    // live-docs + dlq in one inner join (the same role as
-    // phraseScoresFrom's docsWithId join: tombstoned docs contribute 0)
-    freqs.join(docsWithId.select(col("docId"), col("dlq")), "docId")
-  }
-
-  /** The double-precision BM25 kernel constants exposed for callers
-    * that re-state the phrase score as a Column (edismax batch boosts):
-    * avgdl as the double the in-class formulas use. */
-  private[search] def avgdlDouble: Double = avgdlD
-
-  /** phraseScores over a PRE-BUILT position table + df lookup, so a
-    * caller boosting many grams of the same token set (edismax
-    * pf/pf2/pf3) pays ONE dictionary collect and shares one decode
-    * definition instead of one per gram. */
-  private[search] def phraseScoresFrom(hits: DataFrame,
-                                       dfOf: Map[String, Long],
-                                       terms: Seq[String]): DataFrame = {
-    require(terms.length >= 2, "a phrase needs at least two terms")
-    val none = docsWithId.select(col("docId"), col("doc_id"))
-      .limit(0).withColumn("ps", lit(0.0))
-    if (terms.exists(t => !dfOf.contains(t))) return none
-    val n = idx.stats.docCount
-    var sumIdf = 0.0 // phrase-order fold, like the scorer path
-    terms.foreach(t =>
-      sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-    phraseJoined(hits, terms)
-      .withColumn("ptf", size(filter(col("p0"), p =>
-        terms.indices.tail.map(i => array_contains(col(s"p$i"), p + i))
-          .foldLeft(lit(true))(_ && _))).cast("double"))
-      .filter(col("ptf") > 0)
-      .join(docsWithId.select(col("docId"), col("dlq"), col("doc_id")), "docId")
-      .withColumn("ps",
-        lit(sumIdf) * (col("ptf") /
-          (col("ptf") +
-            lit(1.2) * (lit(0.25) + lit(0.75) * col("dlq").cast("double") / lit(avgdlD)))))
-      .select(col("docId"), col("doc_id"), col("ps"))
   }
 }

@@ -126,11 +126,13 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
 
   /** All scored hits of `q`, unranked (k caps per-segment emission when
     * > 0; pass k <= 0 for exhaustive evaluation). Multi-term queries
-    * are expanded against the term dictionary first (Query#rewrite). */
+    * are expanded against the term dictionary first (Query#rewrite). A
+    * warm query runs its resident job (`ResidentSegments.run`) here and
+    * wraps the collected hits; any other returns its lazy plan. */
   def scoredHits(q0: Query, k: Int,
                  after: Option[(Float, Long)] = None): Dataset[(Long, Float)] =
     evaluate(q0, k, after).fold(session.emptyDataset[(Long, Float)])(_.fold(
-      { case (segs, score) => session.createDataset(segs.persisted.mapPartitions(_.flatMap(score))) },
+      { case (segs, score) => session.createDataset(segs.run(score).toSeq) },
       identity))
 
   /** `scoredHits`, collected to the driver: a warm query runs its bare
@@ -152,7 +154,7 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     *  - otherwise the postings rows of the query terms (`postingsOf`)
     *    are grouped by segment, cogrouped with the docs rows when
     *    attribute bits, match-all or deletes need them. */
-  private def evaluate(q0: Query, k: Int, after: Option[(Float, Long)])
+  private[search] def evaluate(q0: Query, k: Int, after: Option[(Float, Long)])
       : Option[Either[(ResidentSegments[SegmentPostings], SegmentPostings => Iterator[(Long, Float)]),
           Dataset[(Long, Float)]]] = {
     val hasDeletes = idx.hasDeletes

@@ -196,6 +196,47 @@ class DeletesSpec extends SparkSpec {
     }
   }
 
+  test("edismax over pending tombstones, warm and cold: no deleted url, the reference plan's ranks") {
+    val sf = "/root/testdata/sf0.001"
+    val textDir = indexCopy(graft.SparkEntry.index(spark, sf).dir)
+    val urlDir = indexCopy(graft.SparkEntry.urlIndex(spark, sf).dir)
+    val (text0, url0) = (InvertedIndex.open(spark, textDir), InvertedIndex.open(spark, urlDir))
+    val bf = Some(org.apache.spark.sql.functions.log(col("dl") + lit(1L)))
+    def shapes(t: IndexView, u: IndexView): Seq[(String, EDisMaxOracle.Call)] = {
+      def text(q: String, mm: String = "0") = EDisMaxOracle.Call(Seq(t -> 1.0), EDisMax.parse(q, mm))
+      Seq(
+        "mustNot" -> text("+spark -merge data"),
+        "pf2" -> text("spark merge window").copy(pf2 = Seq(t -> 0.4)),
+        "bq" -> text("spark join").copy(bq = Seq("merge" -> 1.5)),
+        "bf pushed" -> text("spark merge").copy(bf = bf),
+        "bf joined" -> text("spark merge").copy(bf = bf, bfCap = 0),
+        "multi-field" -> EDisMaxOracle.Call(Seq(t -> 2.0, u -> 1.0), EDisMax.parse("spark src3", "50%"),
+          tie = 0.3, bf = bf))
+    }
+    val clean = shapes(text0, url0).map { case (name, call) => name -> call.engine.map(_.getLong(1)) }
+    // every fourth doc, by url in both field indexes: a doc is deleted whole
+    val doomed = text0.urlMap().get.collect { case (d, u) if d % 4 == 0 => u }.toSeq
+    val deleted = doomed.map(RelationalPath.docIdOfUrl).toSet
+    clean.foreach { case (name, ids) => assert(ids.exists(deleted), s"$name: no deleted doc to drop") }
+    Deletes.deleteByUrl(text0, doomed)
+    Deletes.deleteByUrl(url0, doomed)
+    for (warm <- Seq(false, true)) {
+      def open(dir: String) = {
+        val r = InvertedIndex.open(spark, dir)
+        if (warm) r.warm() else r
+      }
+      val (t, u) = (open(textDir), open(urlDir))
+      assert(t.hasDeletes && u.hasDeletes)
+      shapes(t, u).foreach { case (name, call) =>
+        val got = call.engine
+        val ids = got.map(_.getLong(1))
+        assert(ids.nonEmpty && !ids.exists(deleted), s"$name (warm=$warm): ${ids.filter(deleted)}")
+        assert(got === call.oracle, s"$name (warm=$warm)")
+      }
+      if (warm) { t.close(); u.close() }
+    }
+  }
+
   test("warm reader through two compactions: new stats, new docs, oracle scores") {
     val rnd = new scala.util.Random(9091L)
     val common = Seq("the", "spark", "join", "merge", "sort", "window", "batch", "row")

@@ -4,7 +4,8 @@ import graft.SparkSpec
 import graft.SparkEntry
 
 /** edismax dialect: parser goldens (qf/mm semantics) and execution
-  * agreement with the single-field relational path. */
+  * agreement with the single-field relational path and with the
+  * general relational plan kept as the reference (`EDisMaxOracle`). */
 class EDisMaxSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -64,8 +65,7 @@ class EDisMaxSpec extends SparkSpec {
       EDisMax.parse("spark join", "0"), 10).collect().toSeq
     val viaBool = rel.forParsed(Query.or("spark", "join"), 10).collect().toSeq
     assert(viaEdismax === viaBool)
-    // edismax's general plan and forParsed share the boolPerDoc fold, so
-    // the scorer path is the independent reference (docId → doc_id by url)
+    // and the scorer path agrees too (docId → doc_id by url)
     val urlOf = textIdx.docs.collect().map(d => d.docId -> d.url).toMap
     val viaScorer = new Searcher(textIdx).topK(Query.or("spark", "join"), 10)
       .collect().map(r => RelationalPath.docIdOfUrl(urlOf(r.getLong(1)))).toSeq
@@ -154,11 +154,9 @@ class EDisMaxSpec extends SparkSpec {
     val dom = EDisMax.topK(fields, p, 1000, pf = Seq(textIdx -> 1e9))
       .collect().sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
     assert(dom.take(phraseDocs.size).toSet === phraseDocs)
-    // phraseScores agrees with phraseDocs on the matching set
-    val psDocs = new RelationalPath(textIdx)
-      .phraseScores(Seq("batch", "batch")).collect()
-    assert(psDocs.map(_.getLong(1)).toSet === phraseDocs)
-    psDocs.foreach(r => assert(r.getDouble(2) > 0.0))
+    // the boosted ranks are the reference plan's, whose phrase join
+    // counts the phrase tfs independently of the kernel's per-doc fold
+    assert(boosted.toSeq === EDisMaxOracle.topK(fields, p, 1000, pf = fields).collect().toSeq)
   }
 
   test("pf2/pf3: bigram shingles; 2-term pf2 ≡ pf; pure boost") {
@@ -200,29 +198,24 @@ class EDisMaxSpec extends SparkSpec {
     shapesKernelAgreement(warmTextIdx)
   }
 
-  /** A plain IndexView delegate is kernel-INELIGIBLE (the kernel
-    * pattern-matches InvertedIndex for its warm caches), so the same
-    * data runs the general relational plan — both plans must agree
-    * rank-for-rank on every query shape the kernel claims. */
+  /** `EDisMax.topK` over `idx` and over a plain IndexView delegate of it
+    * (no driver dictionary or url cache: the read an over-cap reader
+    * takes) ≡ the general relational plan, `EDisMaxOracle`, rank for
+    * rank on every query shape. */
   private def shapesKernelAgreement(idx: graft.index.InvertedIndex): Unit = {
-    val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = idx.spark
-      def stats = idx.stats
-      def postings = idx.postings
-      def docs = idx.docs
-      def termStats = idx.termStats
-    }
-    def both(q: String, mm: String, boost: Double = 1.0,
+    import org.apache.spark.sql.functions._
+    def both(q: String, mm: String, boost: Double = 1.0, tie: Double = 0.0,
+             bf: Option[org.apache.spark.sql.Column] = None,
              pf: Boolean = false, pf2: Boolean = false, pf3: Boolean = false,
              bq: Seq[(String, Double)] = Nil): Unit = {
-      val p = EDisMax.parse(q, mm)
-      def run(iv: graft.index.IndexView) =
-        EDisMax.topK(Seq(iv -> boost), p, 10,
-          pf = if (pf) Seq(iv -> 0.7) else Nil,
-          pf2 = if (pf2) Seq(iv -> 0.4) else Nil,
-          pf3 = if (pf3) Seq(iv -> 0.3) else Nil,
-          bq = bq).collect().toSeq
-      assert(run(idx) === run(general), s"shape: q='$q' mm='$mm'")
+      val call = EDisMaxOracle.Call(Seq(idx -> boost), EDisMax.parse(q, mm), tie = tie, bf = bf,
+        pf = if (pf) Seq(idx -> 0.7) else Nil,
+        pf2 = if (pf2) Seq(idx -> 0.4) else Nil,
+        pf3 = if (pf3) Seq(idx -> 0.3) else Nil,
+        bq = bq)
+      val want = call.oracle
+      assert(call.engine === want, s"shape: q='$q' mm='$mm'")
+      assert(call.over(EDisMaxOracle.plain).engine === want, s"plain shape: q='$q' mm='$mm'")
     }
     both("sort merge window", "2<67%", pf2 = true)         // the x01 shape
     both("spark join", "0")                                 // plain OR
@@ -236,6 +229,7 @@ class EDisMaxSpec extends SparkSpec {
     both("spark zzzabsent merge", "0", pf2 = true)          // absent gram term
     both("+zzzabsent spark", "0")                           // absent must → empty
     both("spark spark merge", "100%")                       // duplicate tokens
+    both("spark join", "50%", tie = 0.3, bf = Some(log(col("dl") + lit(1L)))) // the ir_q35 shape
   }
 
   test("kernel ≡ general plan on randomized caller-built Parsed (incl. must∩should overlap)") {
@@ -248,18 +242,12 @@ class EDisMaxSpec extends SparkSpec {
 
   /** Bypasses parse(): raw Parsed values with duplicate lists, terms in
     * BOTH must and should, and mm counts beyond the optional-clause
-    * count — topK's normalization must make both plans see the same
-    * invariant, or the kernel double-counts the overlapping term. On a
-    * reader that has not been warmed the kernel runs its groupByKey
-    * pass, on a warm one its resident pass. */
+    * count — topK's normalization must hold them to the invariant the
+    * reference plan sees, or the kernel double-counts the overlapping
+    * term. On a reader that has not been warmed the kernel runs its
+    * groupByKey pass, on a warm one its resident pass, and on a plain
+    * delegate the groupByKey pass with the trait's df lookup. */
   private def randomizedKernelAgreement(idx: graft.index.InvertedIndex): Unit = {
-    val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = idx.spark
-      def stats = idx.stats
-      def postings = idx.postings
-      def docs = idx.docs
-      def termStats = idx.termStats
-    }
     val pool = Vector("spark", "merge", "data", "sort", "window", "zzzabsent")
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 12) {
@@ -271,13 +259,12 @@ class EDisMaxSpec extends SparkSpec {
         .filterNot(t => must.contains(t) || should.contains(t))
       val mm = rnd.nextInt(should.length + 2)
       val p = EDisMax.Parsed(must, should, mustNot, mm, (must ++ should).distinct)
-      val pf2 = if (rnd.nextBoolean()) Seq(idx -> 0.4) else Nil
-      val viaKernel = EDisMax.topK(Seq(idx -> 1.0), p, 10, pf2 = pf2)
-        .collect().toSeq
-      val viaGeneral = EDisMax.topK(Seq(general -> 1.0), p, 10,
-        pf2 = pf2.map { case (_, b) => (general, b) }).collect().toSeq
-      assert(viaKernel === viaGeneral,
-        s"trial $trial: must=$must should=$should mustNot=$mustNot mm=$mm")
+      val call = EDisMaxOracle.Call(Seq(idx -> 1.0), p,
+        pf2 = if (rnd.nextBoolean()) Seq(idx -> 0.4) else Nil)
+      val want = call.oracle
+      val shape = s"trial $trial: must=$must should=$should mustNot=$mustNot mm=$mm"
+      assert(call.engine === want, shape)
+      assert(call.over(EDisMaxOracle.plain).engine === want, s"plain $shape")
     }
   }
 
@@ -291,32 +278,27 @@ class EDisMaxSpec extends SparkSpec {
       graft.index.InvertedIndex.open(spark, indexCopy(urlIdx.dir)).warm())
   }
 
-  /** Both qf fields as InvertedIndexes run the kernel; wrapped as plain
-    * IndexViews they run the general plan — both must agree. */
+  /** Both qf fields as InvertedIndexes, and wrapped as plain IndexViews,
+    * run the kernel's groupByKey pass — both ≡ the reference plan. */
   private def multiFieldKernelAgreement(textIdx: graft.index.InvertedIndex,
                                         urlIdx: graft.index.InvertedIndex): Unit = {
-    def plain(i: graft.index.InvertedIndex): graft.index.IndexView =
-      new graft.index.IndexView {
-        def spark = i.spark
-        def stats = i.stats
-        def postings = i.postings
-        def docs = i.docs
-        def termStats = i.termStats
-      }
+    import org.apache.spark.sql.functions._
     def both(q: String, mm: String, tie: Double = 0.0,
+             bf: Option[org.apache.spark.sql.Column] = None,
              pfText: Boolean = false, pf2Text: Boolean = false,
              bq: Seq[(String, Double)] = Nil): Unit = {
-      val p = EDisMax.parse(q, mm)
-      def run(t: graft.index.IndexView, u: graft.index.IndexView) =
-        EDisMax.topK(Seq(t -> 2.0, u -> 1.0), p, 10, tie = tie,
-          pf = if (pfText) Seq(t -> 0.7) else Nil,
-          pf2 = if (pf2Text) Seq(t -> 0.4) else Nil,
-          bq = bq).collect().toSeq
-      assert(run(textIdx, urlIdx) === run(plain(textIdx), plain(urlIdx)),
-        s"shape: q='$q' mm='$mm' tie=$tie")
+      val call = EDisMaxOracle.Call(Seq(textIdx -> 2.0, urlIdx -> 1.0), EDisMax.parse(q, mm),
+        tie = tie, bf = bf,
+        pf = if (pfText) Seq(textIdx -> 0.7) else Nil,
+        pf2 = if (pf2Text) Seq(textIdx -> 0.4) else Nil,
+        bq = bq)
+      val want = call.oracle
+      assert(call.engine === want, s"shape: q='$q' mm='$mm' tie=$tie")
+      assert(call.over(EDisMaxOracle.plain).engine === want, s"plain shape: q='$q' mm='$mm' tie=$tie")
     }
     both("spark src3", "50%")                     // the ir_q30 gate shape
     both("spark src3", "50%", tie = 0.3)          // dismax tiebreak fold
+    both("spark src3", "50%", tie = 0.3, bf = Some(log(col("dl") + lit(1L)))) // the ir_q35 shape
     both("spark src3 merge", "2")                 // absolute mm across fields
     both("+spark src1", "0")                      // must in one field
     both("+spark -src1 merge", "0")               // mustNot from the url field

@@ -31,8 +31,12 @@ class PlanSpec extends SparkSpec {
       def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
                     exception: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try org.apache.spark.JobCounts.of(spark.sparkContext)(body)
+    // registered once JobCounts has drained the bus, so a query that
+    // ran before `body` cannot deliver its plan here
+    try org.apache.spark.JobCounts.of(spark.sparkContext) {
+      spark.listenerManager.register(listener)
+      body
+    }
     finally spark.listenerManager.unregister(listener)
     plans.toArray(Array.empty[String]).toSeq
   }
@@ -300,9 +304,40 @@ class PlanSpec extends SparkSpec {
     val postings = org.apache.spark.TaskBinary.bytes(warm.residentPostings.get.job(seg =>
       SegmentScorer.score(q, ctx, seg.rows(terms), None, 10)))(_.toArray)
     val docs = org.apache.spark.TaskBinary.bytes(
-      warm.residentDocs.get.job(_.firstMatching(None, 10)))(_.toArray)
+      warm.residentDocs.get.job(_.firstMatching(None, Array.emptyDoubleArray, 10)))(_.toArray)
+    // scoredHits runs the Searcher's own per-segment function through
+    // the seam, before the caller collects and outside any SQL execution
+    val s = new Searcher(warm)
+    val scored = s.evaluate(q, 10, None) match {
+      case Some(Left((segs, score))) => org.apache.spark.TaskBinary.bytes(segs.job(score))(_.toArray)
+      case other => fail(s"warm scoredHits plan: $other")
+    }
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext)(s.scoredHits(q, 10))
+    assert(c.jobs === 1 && c.sqlExecutions === 0, s"scoredHits: $c")
     assert(postings < 4096, s"postings job: $postings bytes")
     assert(docs < 4096, s"docs job: $docs bytes")
+    assert(scored < 4096, s"scoredHits job: $scored bytes")
+    warm.close()
+  }
+
+  test("warm edismax with bf or pending deletes: the kernel's groupByKey pass, well under the general plan's jobs") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val fields = Seq(warm -> 1.0)
+    val p = EDisMax.parse("+spark merge window", "50%")
+    def jobs(run: () => Any): Int = {
+      run() // first call loads the driver caches
+      org.apache.spark.JobCounts.of(spark.sparkContext)(run()).jobs
+    }
+    // the clean shape stays the resident pass's one job
+    assert(jobs(() => EDisMax.topK(fields, p, 10).collect()) === 1)
+    // the general plan these shapes ran before read 10 jobs with bf
+    // and 9 with pending deletes; the groupByKey pass reads 3 for each
+    val bf = jobs(() => EDisMax.topK(fields, p, 10, bf = Some(log(col("dl") + lit(1L)))).collect())
+    assert(bf <= 3, s"bf: $bf jobs")
+    graft.index.Deletes.deleteByUrl(warm, warm.urlMap().get.collect { case (d, u) if d % 7 == 0 => u }.toSeq)
+    assert(warm.hasDeletes)
+    val deletes = jobs(() => EDisMax.topK(fields, p, 10).collect())
+    assert(deletes <= 3, s"pending deletes: $deletes jobs")
     warm.close()
   }
 

@@ -66,6 +66,14 @@ class ResidentDocsSpec extends SparkSpec {
     assert(nonEmpty > 10)
     val (w, c) = warmAndCold(frange(5, 3, 1, 10))
     assert(w.isEmpty && c.isEmpty)
+    // one function bound once, its bounds in argument slots: a second
+    // range over it answers its own range, not the first one's
+    val ranges = Seq((0.0, 1.0), (3.0, 4.0), (2.0, 6.0)).map { case (lo, hi) =>
+      val (w, c) = warmAndCold(frange(7, lo, hi, 50))
+      assert(w.nonEmpty && w === c, s"mod 7 [$lo, $hi]")
+      w
+    }
+    assert(ranges.distinct.size === ranges.size)
   }
 
   test("frange over a column the resident docs lack takes the docs plan, same answer") {

@@ -289,7 +289,7 @@ object Bench {
     // measurement isolates compute (one shared local disk does not
     // scale with threads; per-executor disks on a real cluster do)
     val benchRoot = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR",
-      "/root/repo/target/bench-index")
+      java.nio.file.Paths.get("target", "bench-index").toAbsolutePath.toString)
 
     if (sys.env.getOrElse("SPARK_GRAFT_BUILD_ONLY", "0") == "1") {
       // child mode: one timed build at this JVM's processor budget;

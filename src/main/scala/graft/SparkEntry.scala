@@ -11,7 +11,7 @@ import graft.pipeline.{Ann, Components, Dedup, TextStats}
 import graft.search.{AttrQ, AttrRangeQ, BoolQ, BoostQ, DisMaxQ, FuzzyQ, GraphStreams, PrefixQ, Query,
   RelationalPath, Searcher, TermQ, TermRangeQ}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every entry in `queries` with an `oracleSql` twin is hash-compared by
   * the driver against DuckDB running that SQL on the same parquet
@@ -24,6 +24,13 @@ object SparkEntry {
 
   /** Bump when the on-disk index format changes (stale caches rebuild). */
   private val FormatVersion = "v8" // v8: suggest gram table carries edge flag + infix meta; v7: suggest gram table carries (weight, glen, gmask); v6: _gram_meta.json sidecar on the suggest ngram table; v5: stored text column in docs (staged sorted corpus); v4: termstats (tlen, cmask)
+
+  /** The cached index dir of testdata dir `sfDir`, plus `suffix`, under
+    * `target/gindex/<FormatVersion>` of the working directory: each
+    * checkout builds and reuses its own. */
+  private def cacheDir(sfDir: String, suffix: String = ""): String =
+    java.nio.file.Paths.get("target", "gindex", FormatVersion,
+      sfDir.replaceAll("[^A-Za-z0-9.]+", "_") + suffix).toAbsolutePath.toString
 
   /** Polygon for the ir_q53 gate — .25 offsets keep every synthesized
     * (x.5-grid) point off the edges and vertices. */
@@ -47,8 +54,7 @@ object SparkEntry {
   /** Build-or-open the cached index for a testdata dir. */
   def index(spark: SparkSession, sfDir: String): InvertedIndex =
     indexes.computeIfAbsent(sfDir, { _ =>
-      val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-      val dir = s"/root/repo/target/gindex/$FormatVersion/$name"
+      val dir = cacheDir(sfDir)
       IndexBuilder.build(spark, Corpus.pages(spark, sfDir), dir,
         IndexConfig(numPartitions = 8, partsPerSegment = 2,
           hotTermDf = 300, numSalts = 4, hotSampleRate = 1.0))
@@ -58,8 +64,7 @@ object SparkEntry {
     * text length, url tie-break) for the early-termination gate. */
   def sortedIndex(spark: SparkSession, sfDir: String): InvertedIndex =
     indexes.computeIfAbsent(sfDir + "#sorted", { _ =>
-      val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-      val dir = s"/root/repo/target/gindex/$FormatVersion/$name-sorted"
+      val dir = cacheDir(sfDir, "-sorted")
       IndexBuilder.build(spark, Corpus.pages(spark, sfDir), dir,
         IndexConfig(numPartitions = 8, partsPerSegment = 2,
           hotTermDf = 300, numSalts = 4, hotSampleRate = 1.0,
@@ -73,8 +78,7 @@ object SparkEntry {
     * standard tokenizer (Solr per-field fieldType analyzers). */
   def urlIndex(spark: SparkSession, sfDir: String): InvertedIndex =
     indexes.computeIfAbsent(sfDir + "#url", { _ =>
-      val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-      val dir = s"/root/repo/target/gindex/$FormatVersion/$name-url"
+      val dir = cacheDir(sfDir, "-url")
       import spark.implicits._
       val pages = Corpus.pages(spark, sfDir).toDF()
         .withColumn("text", lower(translate(col("url"), ":/.-", "    ")))
@@ -180,8 +184,7 @@ object SparkEntry {
     // ngram-INDEXED suggester (AnalyzingInfixSuggester shape): lookup is
     // an equality on the materialized gram table, not a dictionary scan
     "ir_q32_suggest_ngram" -> ((s, d) => {
-      val dir = s"/root/repo/target/gindex/$FormatVersion/" +
-        d.replaceAll("[^A-Za-z0-9.]+", "_") + "-suggest"
+      val dir = cacheDir(d, "-suggest")
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
         graft.search.Suggest.buildNgramIndex(index(s, d), dir)
       graft.search.Suggest.suggestNgram(s, dir, "sp", 10)
@@ -650,8 +653,7 @@ object SparkEntry {
     // fuzzy-prefix suggester (FuzzySuggester): glen/gmask-pruned gram
     // scan, banded levenshtein, weight-ranked
     "ir_q48_suggest_fuzzy" -> ((s, d) => {
-      val dir = s"/root/repo/target/gindex/$FormatVersion/" +
-        d.replaceAll("[^A-Za-z0-9.]+", "_") + "-suggest"
+      val dir = cacheDir(d, "-suggest")
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
         graft.search.Suggest.buildNgramIndex(index(s, d), dir)
       graft.search.Suggest.suggestFuzzy(s, dir, "spar", 1, 10)
@@ -659,8 +661,7 @@ object SparkEntry {
     // arbitrary-weight suggester (weightField): weight = Σ n_chars of
     // the docs containing the term, supplied by the caller at build
     "ir_q49_suggest_weighted" -> ((s, d) => {
-      val dir = s"/root/repo/target/gindex/$FormatVersion/" +
-        d.replaceAll("[^A-Za-z0-9.]+", "_") + "-suggestw"
+      val dir = cacheDir(d, "-suggestw")
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) {
         val entries = docsTable(s, d)
           .select(col("n_chars"), explode(array_distinct(
@@ -675,8 +676,7 @@ object SparkEntry {
     // grams — "ark" surfaces "spark"; prefix matches rank ahead of
     // infix matches (the blended sort), then weight desc
     "ir_q50_suggest_infix" -> ((s, d) => {
-      val dir = s"/root/repo/target/gindex/$FormatVersion/" +
-        d.replaceAll("[^A-Za-z0-9.]+", "_") + "-suggesti"
+      val dir = cacheDir(d, "-suggesti")
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
         graft.search.Suggest.buildSuggestIndex(
           index(s, d).termStats

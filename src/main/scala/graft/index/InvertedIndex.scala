@@ -2,9 +2,6 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{DocRow, PostingsRow}
@@ -41,7 +38,9 @@ trait IndexView {
 /** Read handle over a committed index directory (manifest.json present).
   * The IndexSearcher-side analogue of a Lucene `DirectoryReader` over a
   * `segments_N` commit point [U lucene/core/.../index/SegmentInfos.java,
-  * DirectoryReader]. */
+  * DirectoryReader]. Warmed (`warm()`), it keeps each segment resident,
+  * postings and doc columns together, and a query without pending
+  * deletes, attribute filters included, reads them in one job. */
 final class InvertedIndex(val spark: SparkSession, val dir: String) extends IndexView {
   import spark.implicits._
 
@@ -70,15 +69,17 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   def postings: Dataset[PostingsRow] =
     InvertedIndex.read(spark, diskTables, "postings").as[PostingsRow]
 
-  /** The warm reader's postings: one cached partition per segment. */
-  def residentPostings: Option[ResidentSegments[SegmentPostings]] = cached.map(_.postings)
+  /** The warm reader's resident segments: one cached partition per
+    * segment, holding its postings and its doc columns. */
+  def resident: Option[ResidentSegments] = cached.map(_.segments)
 
-  /** The warm reader's doc columns: one cached partition per segment. */
-  def residentDocs: Option[ResidentSegments[SegmentDocs]] = cached.map(_.docCols)
-
+  /** A warm reader reads `terms`' rows from its resident segments: one
+    * narrow pass over the cached partitions, no parquet scan. */
   override def postingsOf(terms: Seq[String]): Dataset[PostingsRow] =
-    residentPostings match {
-      case Some(segs) => SegmentPostings.rowsOf(spark, segs.persisted, terms)
+    resident match {
+      case Some(segs) =>
+        val ts = terms.distinct
+        spark.createDataset(segs.persisted.mapPartitions(_.flatMap(_.postings.rows(ts))))
       case None => super.postingsOf(terms)
     }
 
@@ -196,49 +197,25 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   private def loadUrlMap(d: Dataset[DocRow]): Unit =
     if (stats.docCount > InvertedIndex.CacheCap) d.count() else urlsMap = Some(urlsOf(d))
 
-  /** Filter cache — the Solr filterCache / getDocSet analogue
-    * [U solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java
-    * filterCache]: the docId set of a non-scoring attribute predicate
-    * is computed ONCE, broadcast ONCE, and reused by every query carrying
-    * the same filter, replacing the per-query docs-table scan + cogroup
-    * with the cached broadcast. Single-JVM serving keeps one global
-    * bitmap (docCount bits — 5 KB per cached filter at 40 k docs); a
-    * cluster deployment holds the same cache as per-segment slices pinned
-    * on the executors (the per-searcher cache of the reference). */
-  private val filterBitsets =
-    new java.util.concurrent.ConcurrentHashMap[String, Broadcast[java.util.BitSet]]()
-
-  /** Cache is live only in warm serving mode with int-addressable
-    * docIds (a cold/batch path never pays the collect). */
-  def filterCacheEnabled: Boolean =
-    cached.nonEmpty && segments.nonEmpty &&
-      segments.last.maxDocId < Int.MaxValue.toLong
-
-  /** The cached filter `key`'s broadcast bitmap, built and broadcast on
-    * first use. */
-  def filterCache(key: String)(build: => java.util.BitSet): Broadcast[java.util.BitSet] =
-    filterBitsets.computeIfAbsent(key, _ => spark.sparkContext.broadcast(build))
-
-  /** The cached filters' broadcast bitmaps. */
-  private[graft] def cachedFilters: Seq[Broadcast[java.util.BitSet]] =
-    filterBitsets.values.asScala.toSeq
-
   /** Pin the segment tables in executor memory and materialize them —
     * the analogue of a warm MMapDirectory in the reference's "warm
-    * searcher" serving mode. Postings become one resident flat layout
-    * per segment (SegmentPostings), and so do the doc columns
-    * (SegmentDocs); docs and the term dictionary also stay cached
-    * Datasets, and the url cache (`urlMap`) loads from the same docs
-    * scan. Norms need no load of their own: every posting carries its
-    * doc's norm byte, and the scorers read it there.
+    * searcher" serving mode. Each segment becomes one resident partition
+    * (`ResidentSegments`) holding its postings as a flat layout
+    * (SegmentPostings) and its doc columns (SegmentDocs), which also
+    * answer attribute filters: a warm query evaluates its predicates on
+    * each segment's own doc columns, the per-segment filter bits of the
+    * reference. Docs and the term dictionary also stay cached Datasets,
+    * and the url cache (`urlMap`) loads from the same docs scan. Norms
+    * need no load of their own: every posting carries its doc's norm
+    * byte, and the scorers read it there.
     *
-    * The persisted segment RDDs are the only copy of the segments and
-    * the only way to rebuild one. A warm query's resident job runs over
-    * a lineage-free view of their cached blocks (`ResidentSegments.run`),
-    * so it ships only its own function, never the parquet scan that
-    * built the segments; a job that finds a block missing reruns once
-    * over the persisted RDD, which recomputes the lost segment from
-    * parquet and caches it again, and counts a rebuild.
+    * The persisted segments RDD is the only copy of the segments and the
+    * only way to rebuild one. A warm query's resident job runs over a
+    * lineage-free view of its cached blocks (`ResidentSegments.run`), so
+    * it ships only its own function, never the parquet scans that built
+    * the segments; a job that finds a block missing reruns once over the
+    * persisted RDD, which recomputes the lost segment from parquet and
+    * caches it again, and counts a rebuild.
     *
     * The tables are this reader's generation's (`tablesDir`): each
     * generation has a directory of its own, so Spark's cache, which
@@ -249,55 +226,44 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   def warm(): InvertedIndex = {
     if (cached.isEmpty) {
       val segIds = InvertedIndex.segmentsOf(manifest).map(_.segId).toSeq
-      val postings = SegmentPostings.resident(spark, s"$tablesDir/postings", segIds)
-      val docCols = SegmentDocs.resident(spark, s"$tablesDir/docs", segIds)
+      val segments = ResidentSegments.build(spark, tablesDir, segIds)
       val docs = docRowCols(InvertedIndex.read(spark, tablesDir, "docs")).persist()
       val termStats = InvertedIndex.read(spark, tablesDir, "termstats").persist()
       // each materialization is a few small tasks, bound by scheduling
       // latency rather than cores: run them side by side
-      InvertedIndex.inParallel(() => postings.count(), () => docCols.count(),
-        () => termStats.count(), () => loadUrlMap(docs))
-      cached = Some(InvertedIndex.Warm(new ResidentSegments(postings),
-        new ResidentSegments(docCols), docs, termStats))
+      InvertedIndex.inParallel(() => segments.count(), () => termStats.count(),
+        () => loadUrlMap(docs))
+      cached = Some(InvertedIndex.Warm(new ResidentSegments(segments), docs, termStats))
     }
     this
   }
 
   /** Releases what `warm()` and serving loaded: unpersists the resident
-    * postings and doc columns and the cached docs and termstats, drops
-    * the driver url and dictionary caches, and destroys the filter
-    * cache's broadcasts (the reader's only broadcasts).
-    * The reader then answers cold. A resident job that finds its blocks
-    * gone under it reruns over the unpersisted segment RDDs, from
-    * parquet, so it still answers. Call it once no query is running on
-    * the reader (a destroyed broadcast fails the query that reads it),
-    * e.g. after a refresh has published the reader that replaces it.
-    * Spark caches a Dataset by its plan, so another warm reader of the
-    * same generation shares these cache entries and loses them too. */
+    * segments and the cached docs and termstats, and drops the driver url
+    * and dictionary caches. The reader then answers cold. A resident job
+    * that finds its blocks gone under it, a filter query's too, reruns
+    * over the unpersisted segments RDD, from parquet, so a query running
+    * across `close()` still answers; e.g. close a reader once a refresh
+    * has published the one that replaces it. Spark caches a Dataset by
+    * its plan, so another warm reader of the same generation shares the
+    * docs and termstats cache entries and loses them too. */
   def close(): Unit = {
     cached.foreach { w =>
-      w.postings.persisted.unpersist(blocking = false)
-      w.docCols.persisted.unpersist(blocking = false)
+      w.segments.persisted.unpersist(blocking = false)
       w.docs.unpersist(); w.termStats.unpersist()
     }
     cached = None
     urlsMap = None
     statsMap = None; statsOverCap = false; sortedTerms = None
-    filterBitsets.values.forEach(_.destroy())
-    filterBitsets.clear()
   }
 }
 
 object InvertedIndex {
   import org.apache.spark.sql.types._
 
-  /** What `warm()` pinned: the resident postings and doc columns, one
-    * partition per segment, and the cached docs and termstats tables.
-    * The doc columns are an RDD of their own, not a part of the postings
-    * one, so a lost doc-columns segment rebuilds without a postings
-    * scan and the other way round. */
-  private final case class Warm(postings: ResidentSegments[SegmentPostings],
-                                docCols: ResidentSegments[SegmentDocs],
+  /** What `warm()` pinned: the resident segments, one partition per
+    * segment, and the cached docs and termstats tables. */
+  private final case class Warm(segments: ResidentSegments,
                                 docs: Dataset[DocRow], termStats: DataFrame)
 
   /** Size cap of every driver-side serving cache: the term dictionary

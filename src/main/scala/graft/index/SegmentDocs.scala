@@ -3,13 +3,13 @@ package graft.index
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, SpecificInternalRow, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, Literal, SpecificInternalRow,
+  Unevaluable}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.{col, element_at, split}
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One segment's doc columns, resident in executor memory for a warm
@@ -56,6 +56,30 @@ final class SegmentDocs(
     if (docNumNull.get(i))
       throw new IllegalStateException(s"doc ${docId(i)}: url has no numeric last path segment")
     docNum(i)
+  }
+
+  /** The segment's docs and, per boolean of `preds` (bound on `Schema`;
+    * null counts as false), the docs it holds on, as bits from the
+    * segment's first docId. */
+  def bits(preds: Seq[Expression]): SegmentBits = {
+    val base = if (size == 0) 0L else docId(0)
+    val ps = preds.toArray
+    val all = new java.util.BitSet(size)
+    val matching = Array.fill(ps.length)(new java.util.BitSet(size))
+    val row = newRow(Array.emptyDoubleArray)
+    var i = 0
+    while (i < size) {
+      val off = (docId(i) - base).toInt
+      all.set(off)
+      if (ps.nonEmpty) read(i, row)
+      var p = 0
+      while (p < ps.length) {
+        if (ps(p).eval(row) == true) matching(p).set(off)
+        p += 1
+      }
+      i += 1
+    }
+    SegmentBits(base, matching.toIndexedSeq, all, None)
   }
 
   /** (docId, doc_id) of the first `k` docs, in docId order, on which
@@ -115,11 +139,10 @@ object SegmentDocs {
     if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
 
-  /** The docs parquet at `path` as one cached partition per segment of
+  /** The docs parquet at `path` as one partition per segment of
     * `segIds`, each in docId order, with no shuffle: partition i keeps
     * segment i's rows of one shared scan (the shape of
-    * `SegmentPostings.resident`). Persisted but not yet computed; a lost
-    * partition recomputes from the parquet. */
+    * `SegmentPostings.resident`). */
   def resident(spark: SparkSession, path: String, segIds: Seq[Int]): RDD[SegmentDocs] = {
     val rows = spark.read.schema(InvertedIndex.Schemas("docs")).parquet(path)
       .select(col("segId") +: Schema.map(f =>
@@ -127,12 +150,7 @@ object SegmentDocs {
       .queryExecution.toRdd
     spark.sparkContext
       .union(segIds.map(s => rows.filter(_.getInt(0) == s).coalesce(1)))
-      .mapPartitions { it =>
-        val docs = it.map(_.copy()).toArray.sortBy(_.getLong(1))
-        if (docs.isEmpty) Iterator.empty else Iterator.single(build(docs))
-      }
-      .setName(s"resident docs $path")
-      .persist(StorageLevel.MEMORY_ONLY)
+      .mapPartitions(it => Iterator.single(build(it.map(_.copy()).toArray.sortBy(_.getLong(1)))))
   }
 
   /** Lays out one segment's docs: rows of (segId, then `Schema`'s
@@ -156,11 +174,12 @@ object SegmentDocs {
   /** `cols` analyzed over an empty local frame of `Schema` followed by
     * one non-null double column per name of `args` (the call's argument
     * slots), and bound to its row, for interpreted evaluation on resident
-    * docs — None when a column references something the resident docs
-    * lack, or cannot be evaluated row by row (nondeterministic or
-    * unevaluable parts). Interpreted, not generated: generated code
-    * inlines the call's literals, so every new bound or centre would
-    * compile anew. */
+    * docs, its constant parts folded to literals (a timestamp bound
+    * parses once, not per doc) — None when a column references something
+    * the resident docs lack, or cannot be evaluated row by row
+    * (nondeterministic or unevaluable parts). Interpreted, not generated:
+    * generated code inlines the call's literals, so every new bound or
+    * centre would compile anew. */
   def bind(spark: SparkSession, args: Seq[String], cols: Column*): Option[Seq[Expression]] = {
     if (cols.isEmpty) return Some(Nil)
     val empty: DataFrame = spark.createDataFrame(java.util.Collections.emptyList[Row](),
@@ -172,7 +191,9 @@ object SegmentDocs {
     ReplaceExpressions(analyzed) match {
       case Project(list, child) =>
         val bound = list.map(a =>
-          BindReferences.bindReference(a.asInstanceOf[Alias].child, child.output))
+          BindReferences.bindReference(a.asInstanceOf[Alias].child, child.output).transformDown {
+            case e if e.foldable && !e.isInstanceOf[Literal] => Literal.create(e.eval(), e.dataType)
+          })
         Some(bound).filter(_.forall(e =>
           e.deterministic && e.find(_.isInstanceOf[Unevaluable]).isEmpty))
       case _ => None
@@ -183,15 +204,44 @@ object SegmentDocs {
     * `pred` (with `args` in its argument slots) holds: one narrow job
     * over the resident segments, each emitting its first `k`, merged on
     * the driver. */
-  def firstMatching(docs: ResidentSegments[SegmentDocs], pred: Option[Expression],
+  def firstMatching(segs: ResidentSegments, pred: Option[Expression],
                     args: Array[Double], k: Int): Array[(Long, Long)] =
-    docs.run(_.firstMatching(pred, args, k)).sortBy(_._1).take(k)
+    segs.run(_.docs.firstMatching(pred, args, k)).sortBy(_._1).take(k)
 
   /** (docId, doc_id, value) of the `k` docs with the smallest `value`
     * (with `args` in its argument slots) at most `max`, by (value,
     * docId): one narrow job, each segment emitting its bounded `k`,
     * merged on the driver. */
-  def smallest(docs: ResidentSegments[SegmentDocs], value: Expression, args: Array[Double],
+  def smallest(segs: ResidentSegments, value: Expression, args: Array[Double],
                max: Double, k: Int): Array[(Long, Long, Double)] =
-    docs.run(_.smallest(value, args, max, k).iterator).sorted(byValue).take(k)
+    segs.run(_.docs.smallest(value, args, max, k).iterator).sorted(byValue).take(k)
+}
+
+/** One segment's doc sets for a query, as bits at docId − `base`: per
+  * attribute predicate the docs it holds on, the segment's docs (what
+  * match-all reads) and its deleted docs. A warm reader evaluates them on
+  * its resident doc columns (`SegmentDocs.bits`); a cold plan builds them
+  * from the docs rows it delivers (`SegmentBits.of`). */
+final case class SegmentBits(base: Long, preds: IndexedSeq[java.util.BitSet],
+                             all: java.util.BitSet, deleted: Option[java.util.BitSet])
+
+object SegmentBits {
+
+  /** From one segment's docs rows (segId, docId, predicate values,
+    * deleted): the rows delivered are the docs of `all`. */
+  def of(rows: Iterator[(Int, Long, Seq[Boolean], Boolean)]): SegmentBits = {
+    val rs = rows.toArray
+    val base = if (rs.isEmpty) 0L else rs.iterator.map(_._2).min
+    val np = if (rs.isEmpty) 0 else rs(0)._3.length
+    val preds = IndexedSeq.fill(np)(new java.util.BitSet())
+    val all, deleted = new java.util.BitSet()
+    rs.foreach { case (_, docId, ps, del) =>
+      val off = (docId - base).toInt
+      all.set(off)
+      var i = 0
+      while (i < np) { if (ps(i)) preds(i).set(off); i += 1 }
+      if (del) deleted.set(off)
+    }
+    SegmentBits(base, preds, all, Some(deleted).filterNot(_.isEmpty))
+  }
 }

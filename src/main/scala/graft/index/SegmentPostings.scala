@@ -3,9 +3,8 @@ package graft.index
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.{Block, PostingsRow}
 
@@ -147,13 +146,13 @@ object SegmentPostings {
     Ordering.by((r: PostingsRow) => (r.term, r.salt))(
       Ordering.Tuple2(InvertedIndex.CodePointOrder, Ordering.Int))
 
-  /** The postings parquet at `path` as one cached partition per segment
-    * of `segIds`, with no shuffle: partition i reads every file of one
+  /** The postings parquet at `path` as one partition per segment of
+    * `segIds`, with no shuffle: partition i reads every file of one
     * shared scan, keeps segment i's rows (checked on the binary row, so
     * only they are decoded to objects), sorts them by (term, salt) and
-    * lays them out flat. One scan plan, not one per segment: planning a
-    * scan costs more than decoding these files. The result is persisted
-    * but not yet computed; a lost partition recomputes from the parquet. */
+    * lays them out flat — an empty layout for a segment with no rows.
+    * One scan plan, not one per segment: planning a scan costs more than
+    * decoding these files. */
   def resident(spark: SparkSession, path: String, segIds: Seq[Int]): RDD[SegmentPostings] = {
     val schema = InvertedIndex.PostingsSchema
     val segIdAt = schema.fieldIndex("segId")
@@ -161,25 +160,10 @@ object SegmentPostings {
     val rows = spark.read.schema(schema).parquet(path).queryExecution.toRdd
     spark.sparkContext
       .union(segIds.map(s => rows.filter(_.getInt(segIdAt) == s).coalesce(1)))
-      .mapPartitions { it =>
-        val sorted = it.map(toRow).toArray.sorted(rowOrder)
-        if (sorted.isEmpty) Iterator.empty
-        else {
-          val b = new Builder(sorted.head.segId)
-          sorted.foreach(b.add)
-          Iterator.single(b.result())
-        }
+      .mapPartitionsWithIndex { (i, it) =>
+        val b = new Builder(segIds(i))
+        it.map(toRow).toArray.sorted(rowOrder).foreach(b.add)
+        Iterator.single(b.result())
       }
-      .setName(s"resident postings $path")
-      .persist(StorageLevel.MEMORY_ONLY)
-  }
-
-  /** `terms`' rows from a resident layout as a Dataset — one narrow
-    * pass over the cached partitions, no parquet scan. */
-  def rowsOf(spark: SparkSession, segs: RDD[SegmentPostings],
-             terms: Seq[String]): Dataset[PostingsRow] = {
-    import spark.implicits._
-    val ts = terms.distinct
-    spark.createDataset(segs.mapPartitions(_.flatMap(_.rows(ts))))
   }
 }

@@ -296,7 +296,7 @@ object EDisMax {
     // docId-aligned — same corpus, same url order).
     val resident = idxs.head match {
       case inv: graft.index.InvertedIndex if nIdx == 1 && bf.isEmpty && !inv.hasDeletes =>
-        inv.residentPostings
+        inv.resident
       case _ => None
     }
     val winners: Array[(Long, Double)] = resident match {
@@ -304,7 +304,7 @@ object EDisMax {
         val terms = scanTerms(0)
         segs.run { seg =>
           val byDoc = scala.collection.mutable.HashMap.empty[Long, DocPostings]
-          seg.rows(terms).foreach { r =>
+          seg.postings.rows(terms).foreach { r =>
             RelationalPath.postings(r).foreach { case (d, ps, norm) =>
               byDoc.getOrElseUpdate(d, new DocPostings(1)).add(0, r.term, ps, norm)
             }

@@ -170,24 +170,6 @@ object Query {
     out.toSeq
   }
 
-  /** Is every matching doc guaranteed ≥1 postings row (for some query
-    * term) in its own segment? Required by the warm filter-cache fast
-    * path, whose per-segment groups come from the postings scan alone:
-    * an attr-anchored query (e.g. `+lang:en -spark` — terms only under
-    * MUST_NOT) can match docs in segments with NO postings rows for the
-    * query terms, and those segments would silently vanish. BoolQ is
-    * anchored only through a MUST clause (the r3 attr-anchor semantics
-    * keep mm at 0 when a predicate is present, so SHOULD terms are
-    * optional); DisMaxQ needs every branch anchored. */
-  def termAnchored(q: Query): Boolean = q match {
-    case TermQ(_) | PhraseQ(_, _) | SpanNearQ(_, _, _) | TermSetQ(_, _) => true
-    case BoostQ(inner, _) => termAnchored(inner)
-    case ConstScoreQ(inner, _) => termAnchored(inner)
-    case DisMaxQ(qs, _) => qs.nonEmpty && qs.forall(termAnchored)
-    case b: BoolQ => b.must.exists(termAnchored)
-    case _ => false
-  }
-
   /** Does the query contain MatchAllQ (forces full docs-row delivery)? */
   def containsMatchAll(q: Query): Boolean = q match {
     case MatchAllQ => true

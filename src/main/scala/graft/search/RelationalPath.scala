@@ -75,17 +75,24 @@ object RelationalPath {
     boundResident(spark, ("frange", fn), Seq("__lo", "__hi"))(
       fn.cast("double").between(col("__lo"), col("__hi")))
 
-  /** Attribute predicate (AttrQ / AttrRangeQ) → boolean Column over the
-    * docs table, typed from its schema (timestamp values parse,
-    * numerics cast) — shared by the scorer path's bitset build and the
-    * relational executor; Catalyst pushes the comparison into the
-    * parquet scan. */
+  /** Attribute predicate `p` bound for the resident docs
+    * (`attrPredColumn` over `SegmentDocs.Schema`), once per session and
+    * predicate — the per-segment filter bits of a warm query evaluate it.
+    * None when it reads a column the resident docs lack. */
+  def residentPred(spark: SparkSession, p: Query): Option[Expression] =
+    boundResident(spark, ("pred", p), Nil)(attrPredColumn(SegmentDocs.Schema, p))
+
+  /** Attribute predicate (AttrQ / AttrRangeQ) → boolean Column over a
+    * docs frame, typed from its schema (timestamp values parse,
+    * numerics cast; a column the schema lacks compares as given) —
+    * shared by the scorer path's bitsets and the relational executor;
+    * Catalyst pushes the comparison into the parquet scan. */
   def attrPredColumn(schema: org.apache.spark.sql.types.StructType,
                      p: Query): Column = {
     import org.apache.spark.sql.types._
-    def litFor(name: String, v: String): Column = schema(name).dataType match {
-      case TimestampType => to_timestamp(lit(v))
-      case dt: NumericType => lit(v).cast(dt)
+    def litFor(name: String, v: String): Column = schema.find(_.name == name).map(_.dataType) match {
+      case Some(TimestampType) => to_timestamp(lit(v))
+      case Some(dt: NumericType) => lit(v).cast(dt)
       case _ => lit(v)
     }
     p match {
@@ -460,11 +467,11 @@ final class RelationalPath(idx: graft.index.IndexView) {
       case other => sys.error(s"unsupported query on relational path: $other")
     }
 
-  /** The warm reader's resident doc columns, when they answer a call
-    * exactly: a warm InvertedIndex with no pending deletes (the columns
-    * still hold tombstoned docs; the docs plan subtracts them). */
-  private def residentDocs: Option[graft.index.ResidentSegments[SegmentDocs]] = idx match {
-    case inv: graft.index.InvertedIndex => inv.residentDocs.filter(_ => !inv.hasDeletes)
+  /** The warm reader's resident segments, when their doc columns answer
+    * a call exactly: a warm InvertedIndex with no pending deletes (the
+    * columns still hold tombstoned docs; the docs plan subtracts them). */
+  private def residentSegments: Option[graft.index.ResidentSegments] = idx match {
+    case inv: graft.index.InvertedIndex => inv.resident.filter(_ => !inv.hasDeletes)
     case _ => None
   }
 
@@ -475,8 +482,8 @@ final class RelationalPath(idx: graft.index.IndexView) {
     * call must take the docs plan: a cold reader or pending deletes. */
   private[search] def residentConstTopK(pred: Option[Expression], k: Int,
                                         args: Array[Double] = Array.emptyDoubleArray): Option[DataFrame] =
-    residentDocs.map(docs => ResultFrames.rankedDocIds(session,
-      SegmentDocs.firstMatching(docs, pred, args, k).map(_._2).toSeq))
+    residentSegments.map(segs => ResultFrames.rankedDocIds(session,
+      SegmentDocs.firstMatching(segs, pred, args, k).map(_._2).toSeq))
 
   /** MatchAllDocsQuery analogue (`q=*:*`): every live doc, constant
     * score ⇒ rank = docId (url-rank) order
@@ -528,9 +535,9 @@ final class RelationalPath(idx: graft.index.IndexView) {
   def geoTopK(latSql: String, lonSql: String, lat: Double, lon: Double,
               dKm: Double, k: Int): DataFrame = {
     val resident = for {
-      docs <- residentDocs
+      segs <- residentSegments
       d <- RelationalPath.geoDistance(session, latSql, lonSql)
-    } yield SegmentDocs.smallest(docs, d, Array(lat, lon), dKm, k)
+    } yield SegmentDocs.smallest(segs, d, Array(lat, lon), dKm, k)
     val winners = resident.getOrElse(docsWithId
       .withColumn("__d", graft.functions.ValueSources.fn("geodist",
         expr(latSql), expr(lonSql), lit(lat), lit(lon)))
@@ -654,7 +661,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
     val hasDeletes = idx.hasDeletes
     val serving = idx match {
       case inv: graft.index.InvertedIndex if !hasDeletes =>
-        inv.urlMap().map(u => (u, inv.residentPostings))
+        inv.urlMap().map(u => (u, inv.resident))
       case _ => None
     }
     serving match {
@@ -664,7 +671,7 @@ final class RelationalPath(idx: graft.index.IndexView) {
             segs.run { seg =>
               val byDoc = scala.collection.mutable.HashMap.empty[Long,
                 scala.collection.mutable.HashMap[String, Array[Int]]]
-              seg.rows(all).foreach { r =>
+              seg.postings.rows(all).foreach { r =>
                 RelationalPath.postings(r).foreach { case (d, p, _) =>
                   byDoc.getOrElseUpdate(d, scala.collection.mutable.HashMap.empty)(r.term) = p
                 }

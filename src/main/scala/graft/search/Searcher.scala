@@ -2,12 +2,12 @@ package graft.search
 
 import scala.collection.mutable
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexView, ResidentSegments, SegmentPostings}
-import graft.model.{Block, DocRow, PostingsRow}
+import graft.index.{ResidentSegments, Segment, SegmentBits, SegmentDocs}
+import graft.model.{Block, PostingsRow}
 
 /** Per-query immutable context shipped to executors in the task closure
   * (a few terms' stats — it rides the task binary): collection stats
@@ -29,7 +29,11 @@ final case class ScoringContext(stats: Bm25Stats,
   * IndexSearcher → TopScoreDocCollector → TopDocs.merge chain collapsed
   * into one Spark plan [U …/search/TopScoreDocCollector.java,
   * TopDocs#merge, WANDScorer.java]. Per-segment top-k ⊇ global top-k
-  * members because scores depend only on the shipped global stats. */
+  * members because scores depend only on the shipped global stats.
+  * Attribute filters are per-segment bitsets (`SegmentBits`, the
+  * per-segment DocSets of the reference's filter cache): a warm reader
+  * evaluates them on each resident segment's doc columns, a cold one
+  * builds them from the docs rows cogrouped with the postings. */
 final class Searcher(idx: graft.index.IndexView) extends Serializable {
   private val session = idx.spark
   import session.implicits._
@@ -119,11 +123,6 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
       .orderBy("rank")
   }
 
-  /** Attribute predicate → boolean docs Column (the docvalues-filter
-    * analogue; shared with the relational executor). */
-  private def predColumn(p: Query): org.apache.spark.sql.Column =
-    RelationalPath.attrPredColumn(idx.docs.schema, p)
-
   /** All scored hits of `q`, unranked (k caps per-segment emission when
     * > 0; pass k <= 0 for exhaustive evaluation). Multi-term queries
     * are expanded against the term dictionary first (Query#rewrite). A
@@ -146,76 +145,60 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
   /** The plan of `scoredHits` — None when nothing can match — chosen from
     * ONE read of the reader's delete state (a delete landing mid-call
     * cannot split the query over two states):
-    *  - warm reader, no deletes, no per-query docs rows needed: the
-    *    resident segments and the per-segment scorer, run as one narrow
-    *    pass — each segment looks up the query terms and scores itself,
-    *    no shuffle. The query and its ScoringContext ride the task
-    *    closure; cached filter bitmaps ride their per-filter broadcasts;
+    *  - warm reader, no deletes, every attribute predicate bound on the
+    *    resident doc columns (`RelationalPath.residentPred`): the resident
+    *    segments and the per-segment scorer, run as one narrow pass —
+    *    each segment looks up the query terms, evaluates the predicates
+    *    on its own doc columns into its bits, and scores itself, no
+    *    shuffle. The query, its ScoringContext and the bound predicates
+    *    ride the task closure;
     *  - otherwise the postings rows of the query terms (`postingsOf`)
     *    are grouped by segment, cogrouped with the docs rows when
-    *    attribute bits, match-all or deletes need them. */
+    *    attribute bits, match-all or deletes need them: pending deletes,
+    *    or a predicate over a column the resident docs lack. */
   private[search] def evaluate(q0: Query, k: Int, after: Option[(Float, Long)])
-      : Option[Either[(ResidentSegments[SegmentPostings], SegmentPostings => Iterator[(Long, Float)]),
+      : Option[Either[(ResidentSegments, Segment => Iterator[(Long, Float)]),
           Dataset[(Long, Float)]]] = {
     val hasDeletes = idx.hasDeletes
     val qRewritten = Rewriter.rewrite(q0, new IndexTermDict(idx))
-    // attribute predicates become indexed bitset lookups: evaluated ONCE
-    // in the docs scan (pushdown-friendly), shipped as booleans
+    // attribute predicates become per-segment bitsets, indexed by PredQ
     val preds = Query.attrPreds(qRewritten)
     val q = Query.indexPreds(qRewritten, preds)
     val ctx = context(q)
     val terms = Query.collectTerms(q)
-    val hasMatchAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !Query.needsDocs(q)) return None
+    val needsDocs = Query.needsDocs(q)
+    if (terms.isEmpty && !needsDocs) return None
     val kk = k
     val aft = after
-    // warm-serving filter cache (Solr filterCache): every attribute
-    // predicate's docId bitmap is computed and broadcast once — the
-    // per-query docs scan + cogroup disappears entirely for cached
-    // filters (match-all and deletes still need live docs rows)
-    val cachedPredBits: Option[IndexedSeq[Broadcast[java.util.BitSet]]] = idx match {
-      case inv: graft.index.InvertedIndex
-          // termAnchored: every candidate doc must have postings rows
-          // for the query terms in its own segment, or the per-segment
-          // scoring would drop whole segments (an attr-anchored query
-          // like `+lang:en -spark` — terms only under MUST_NOT — must
-          // keep the docs cogroup path)
-          if Query.termAnchored(q) && preds.nonEmpty && !hasMatchAll &&
-            !hasDeletes && inv.filterCacheEnabled =>
-        Some(preds.map { p =>
-          inv.filterCache(p.toString) {
-            FilterBits.build(idx.docs.filter(coalesce(predColumn(p), lit(false)))
-              .select("docId"))._1
-          }
-        }.toIndexedSeq)
-      case _ => None
-    }
     val resident = idx match {
-      case inv: graft.index.InvertedIndex => inv.residentPostings
+      case inv: graft.index.InvertedIndex if !hasDeletes =>
+        inv.resident.map(segs => (segs, preds.map(RelationalPath.residentPred(session, _))))
       case _ => None
     }
-    if ((cachedPredBits.isDefined || (!Query.needsDocs(q) && !hasDeletes)) && resident.isDefined) {
-      val bits = cachedPredBits.getOrElse(IndexedSeq.empty)
-      return Some(Left((resident.get, seg =>
-        SegmentScorer.score(q, ctx, seg.rows(terms), None, kk, aft, bits.map(_.value)))))
+    resident match {
+      case Some((segs, bound)) if bound.forall(_.isDefined) =>
+        return Some(Left((segs, ResidentScore(q, ctx, bound.flatten, k, after))))
+      case _ =>
     }
     val rows = idx.postingsOf(terms)
-    if (!Query.needsDocs(q) && !hasDeletes) {
+    if (!needsDocs && !hasDeletes) {
       return Some(Right(rows.groupByKey(_.segId).flatMapGroups { (_, ps) =>
         SegmentScorer.score(q, ctx, ps, None, kk, aft)
       }))
     }
     // deletes are subtracted INSIDE the per-segment scorer (a deleted
-    // doc must not occupy a top-k slot), via the docs cogroup path
+    // doc must not occupy a top-k slot), via the docs cogroup path;
+    // predicates see the resident columns (`doc_id` too)
+    val docs = idx.docs.withColumn("doc_id", SegmentDocs.DocNumColumn)
     // null attribute values must read as non-matching, not poison the
     // boolean array encoder on rows that travel for other reasons
-    val predCols = preds.map(p => coalesce(predColumn(p), lit(false)))
+    val predCols = preds.map(p => coalesce(RelationalPath.attrPredColumn(docs.schema, p), lit(false)))
     val withDel =
       if (hasDeletes)
-        idx.docs.join(idx.tombstones.toDF("docId").withColumn("del", lit(true)),
+        docs.join(idx.tombstones.toDF("docId").withColumn("del", lit(true)),
           Seq("docId"), "left")
           .withColumn("del", coalesce(col("del"), lit(false)))
-      else idx.docs.withColumn("del", lit(false))
+      else docs.withColumn("del", lit(false))
     // pre-filter: only rows that can influence scoring travel to the
     // cogroup — any referenced predicate true, or tombstoned (full
     // rows only for MatchAll, which needs every doc in general; a
@@ -237,7 +220,7 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
       case _ => None
     }
     val needed =
-      if (hasMatchAll) matchAllCutoff.getOrElse(lit(true))
+      if (Query.containsMatchAll(q)) matchAllCutoff.getOrElse(lit(true))
       else (predCols :+ col("del")).reduce(_ || _)
     val docsLite = withDel
       .filter(needed)
@@ -248,116 +231,56 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
       .as[(Int, Long, Seq[Boolean], Boolean)]
     Some(Right(rows.groupByKey(_.segId)
       .cogroup(docsLite.groupByKey(_._1)) { (_, ps, ds) =>
-        SegmentScorer.score(q, ctx, ps, Some(ds), kk, aft)
+        SegmentScorer.score(q, ctx, ps, Some(SegmentBits.of(ds)), kk, aft)
       }))
   }
 }
 
-/** Distributed bitmap construction for the warm-serving filter cache
-  * [U solr/core/.../search/SolrIndexSearcher.java getDocSet — Solr
-  * builds per-segment DocSets executor-side and the searcher holds the
-  * merged set]: the matching docIds are compacted into ONE bitmap blob
-  * PER PARTITION on the executors (java.util.BitSet bytes — 1 bit per
-  * doc in the partition's id span), and only those O(partitions) blobs
-  * travel to the driver, which ORs them into the global bitmap. The
-  * driver transfer is ≈ bitmapBytes (docCount/8 worst case — the size
-  * of the artifact being built), never O(matchingRows) row objects: a
-  * dense filter like `lang:en` over 10^9 docs ships ~125 MB of bitmap
-  * instead of ~10^9 collected rows. */
-object FilterBits {
-  /** Returns (bitmap, blobCount). blobCount ≤ the frame's partition
-    * count — asserted in SearcherSpec as the bounded-collect contract. */
-  private[graft] def build(matching: DataFrame): (java.util.BitSet, Int) = {
-    val spark = matching.sparkSession
-    import spark.implicits._
-    val blobs: Array[(Long, Array[Byte])] = matching
-      .select(col("docId").cast("long"))
-      .as[Long]
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val ids = it.toArray
-          var min = Long.MaxValue
-          ids.foreach(d => if (d < min) min = d)
-          val b = new java.util.BitSet()
-          ids.foreach(d => b.set((d - min).toInt))
-          Iterator.single((min, b.toByteArray))
-        }
-      }.collect()
-    val bits = new java.util.BitSet()
-    blobs.foreach { case (min, arr) =>
-      val b = java.util.BitSet.valueOf(arr)
-      var i = b.nextSetBit(0)
-      while (i >= 0) { bits.set((min + i).toInt); i = b.nextSetBit(i + 1) }
-    }
-    (bits, blobs.length)
-  }
+/** A warm query's per-segment function, all its resident job's closure
+  * carries: the segment evaluates the bound attribute predicates `preds`
+  * on its doc columns into its bits when the query reads docs, then
+  * scores its postings. */
+private[search] final case class ResidentScore(q: Query, ctx: ScoringContext, preds: Seq[Expression],
+                                               k: Int, after: Option[(Float, Long)])
+    extends (Segment => Iterator[(Long, Float)]) {
+  def apply(seg: Segment): Iterator[(Long, Float)] =
+    SegmentScorer.score(q, ctx, seg.postings.rows(Query.collectTerms(q)),
+      if (Query.needsDocs(q)) Some(seg.docs.bits(preds)) else None, k, after)
 }
 
 /** Executor-side per-segment evaluation. */
 object SegmentScorer {
 
   /** Score one segment's postings for `q`; emits at most k hits
-    * (k <= 0 → all hits). `docsIt` present only for attribute filters /
-    * match-all / deletes (pre-filtered on the driver side to the rows
-    * that can influence scoring). Query term clauses absent from this
-    * segment compile to EmptyScorer and Boolean semantics decide — a
-    * query with an attr-only required part plus optional/negated term
-    * clauses still matches (Lucene BooleanQuery semantics). */
+    * (k <= 0 → all hits). `bits`, the segment's doc sets, present only
+    * for attribute filters / match-all / deletes. Query term clauses
+    * absent from this segment compile to EmptyScorer and Boolean
+    * semantics decide — a query with an attr-only required part plus
+    * optional/negated term clauses still matches (Lucene BooleanQuery
+    * semantics). */
   def score(q: Query, ctx: ScoringContext,
             postings: Iterator[PostingsRow],
-            docsIt: Option[Iterator[(Int, Long, Seq[Boolean], Boolean)]],
+            bits: Option[SegmentBits],
             k: Int,
-            after: Option[(Float, Long)] = None,
-            globalPredBits: IndexedSeq[java.util.BitSet] = IndexedSeq.empty)
-      : Iterator[(Long, Float)] = {
+            after: Option[(Float, Long)] = None): Iterator[(Long, Float)] = {
     // term → salt-ordered concatenated blocks
     val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingsRow]]
     postings.foreach { r =>
       byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r
     }
-    if (byTerm.isEmpty && docsIt.isEmpty) return Iterator.empty
+    if (byTerm.isEmpty && bits.isEmpty) return Iterator.empty
     val termBlocks: Map[String, IndexedSeq[Block]] = byTerm.iterator.map {
       case (t, rows) => t -> rows.sortBy(_.salt).flatMap(_.blocks).toIndexedSeq
     }.toMap
 
-    // per-predicate bitsets + all-docs bitset + deleted bitset — 1 bit
-    // per segment doc, shared base docId
-    var deleted: Option[(java.util.BitSet, Long)] = None
-    // filter-cache mode: predicate bitmaps arrive pre-built (global
-    // docId base 0) instead of from per-query docs rows
-    var predBits: IndexedSeq[(java.util.BitSet, Long)] =
-      globalPredBits.map(b => (b, 0L))
-    var allBits: Option[(java.util.BitSet, Long)] = None
-    docsIt.foreach { it =>
-      val rows = it.toArray
-      if (rows.nonEmpty) {
-        val minDoc = rows.iterator.map(_._2).min
-        val np = rows(0)._3.length
-        val pb = Array.fill(np)(new java.util.BitSet())
-        val all = new java.util.BitSet()
-        val delBits = new java.util.BitSet()
-        var anyDel = false
-        rows.foreach { case (_, docId, ps, del) =>
-          val off = (docId - minDoc).toInt
-          all.set(off)
-          var i = 0
-          while (i < np) { if (ps(i)) pb(i).set(off); i += 1 }
-          if (del) { delBits.set(off); anyDel = true }
-        }
-        if (anyDel) deleted = Some((delBits, minDoc))
-        predBits = pb.map(b => (b, minDoc)).toIndexedSeq
-        allBits = Some((all, minDoc))
-      }
-    }
-
-    val scorer0 = compile(q, ctx, termBlocks, predBits, allBits)
+    val scorer0 = compile(q, ctx, termBlocks, bits)
     // live-docs filter: required-but-not-scoring exclusion of tombstones
     // [U …/search/ReqExclScorer + the .liv bitset]
+    val deleted = bits.flatMap(b => b.deleted.map(new BitsetScorer(_, b.base)))
     val scorer = deleted match {
-      case Some((bits, minDoc)) =>
+      case Some(del) =>
         new BoolScorer(IndexedSeq(scorer0), IndexedSeq.empty, IndexedSeq.empty,
-          IndexedSeq(new BitsetScorer(bits, minDoc)), 0)
+          IndexedSeq(del), 0)
       case None => scorer0
     }
 
@@ -376,11 +299,11 @@ object SegmentScorer {
           // is legal and WAND's ≥1-should invariant would drop it
           (filt.isEmpty || (mm >= 1 && filt.forall(_.isInstanceOf[PredQ]))) =>
         wandTopK(should.map(s => termScorer(s.asInstanceOf[TermQ].term, ctx, termBlocks)).toIndexedSeq,
-          math.max(mm, 1), k, predAccept(filt, predBits, accept))
+          math.max(mm, 1), k, predAccept(filt, bits, accept))
       // filtered single-term query keeps block-max skipping: pure-filter
-      // clauses (pre-built bitmaps — the warm filter cache or the docs
-      // cogroup) become an O(1) accept over the term iterator instead of
-      // demoting the whole query to the exhaustive BoolScorer
+      // clauses (the segment's predicate bits) become an O(1) accept over
+      // the term iterator instead of demoting the whole query to the
+      // exhaustive BoolScorer
       // [U …/search/IndexOrDocValuesQuery.java — filters execute as
       // verification-only predicates over the lead iterator]. Skipping
       // stays exact: accept only withholds heap insertions, so the
@@ -390,7 +313,7 @@ object SegmentScorer {
         if k > 0 && deleted.isEmpty && mm <= 0 && filt.nonEmpty &&
           filt.forall(_.isInstanceOf[PredQ]) =>
         blockMaxTopK(termScorer(t, ctx, termBlocks), k,
-          predAccept(filt, predBits, accept))
+          predAccept(filt, bits, accept))
       case TermQ(_) if k > 0 && deleted.isEmpty =>
         blockMaxTopK(scorer.asInstanceOf[TermScorer], k, accept)
       case _ => exhaustive(scorer, k, accept)
@@ -398,16 +321,16 @@ object SegmentScorer {
   }
 
   /** Compose `accept` with pure-filter bitmap membership tests. A PredQ
-    * beyond `predBits` matches nothing (the segment delivered no docs
-    * rows for it), mirroring compile's EmptyScorer. */
-  private def predAccept(filt: Seq[Query],
-                         predBits: IndexedSeq[(java.util.BitSet, Long)],
+    * beyond the segment's predicate bits matches nothing (the segment
+    * delivered no docs rows for it), mirroring compile's EmptyScorer. */
+  private def predAccept(filt: Seq[Query], segBits: Option[SegmentBits],
                          accept: (Long, Float) => Boolean): (Long, Float) => Boolean =
     if (filt.isEmpty) accept
     else {
       val tests: Array[Long => Boolean] = filt.map {
-        case PredQ(i) if i < predBits.length =>
-          val (bits, base) = predBits(i)
+        case PredQ(i) if segBits.exists(i < _.preds.length) =>
+          val SegmentBits(base, preds, _, _) = segBits.get
+          val bits = preds(i)
           (d: Long) => {
             val off = d - base
             off >= 0 && off < Int.MaxValue && bits.get(off.toInt)
@@ -423,8 +346,7 @@ object SegmentScorer {
 
   def compile(q: Query, ctx: ScoringContext,
               blocks: Map[String, IndexedSeq[Block]],
-              predBits: IndexedSeq[(java.util.BitSet, Long)],
-              allBits: Option[(java.util.BitSet, Long)]): DocScorer = q match {
+              bits: Option[SegmentBits]): DocScorer = q match {
     case TermQ(t) => termScorer(t, ctx, blocks)
     case PhraseQ(ts, slop) =>
       // weight = Σ constituent idfs, float-accumulated in phrase order
@@ -439,16 +361,11 @@ object SegmentScorer {
       else new SpanNearScorer(ts.map(t => termScorer(t, ctx, blocks)).toIndexedSeq,
         w, ctx.cache, slop, inOrder)
     case PredQ(i) =>
-      if (i < predBits.length) {
-        val (bits, minDoc) = predBits(i)
-        new BitsetScorer(bits, minDoc)
-      } else new EmptyScorer
+      bits.filter(i < _.preds.length).map(b => new BitsetScorer(b.preds(i), b.base))
+        .getOrElse(new EmptyScorer)
     case MatchAllQ =>
-      allBits match {
-        case Some((bits, minDoc)) =>
-          new ConstScorer(new BitsetScorer(bits, minDoc), 1f)
-        case None => new EmptyScorer
-      }
+      bits.map(b => new ConstScorer(new BitsetScorer(b.all, b.base), 1f))
+        .getOrElse(new EmptyScorer)
     case MatchNoneQ => new EmptyScorer
     case DocIdSetQ(ids) => new IdSetScorer(ids.toArray)
     case AttrQ(name, _) =>
@@ -462,19 +379,19 @@ object SegmentScorer {
         ts.map(t => termScorer(t, ctx, blocks)).toIndexedSeq,
         IndexedSeq.empty, 1), s)
     case BoostQ(inner, b) =>
-      new BoostScorer(compile(inner, ctx, blocks, predBits, allBits), b)
+      new BoostScorer(compile(inner, ctx, blocks, bits), b)
     case ConstScoreQ(inner, s) =>
-      new ConstScorer(compile(inner, ctx, blocks, predBits, allBits), s)
+      new ConstScorer(compile(inner, ctx, blocks, bits), s)
     case DisMaxQ(qs, t) =>
-      new DisMaxScorer(qs.map(compile(_, ctx, blocks, predBits, allBits)).toIndexedSeq, t)
+      new DisMaxScorer(qs.map(compile(_, ctx, blocks, bits)).toIndexedSeq, t)
     case _: PrefixQ | _: WildcardQ | _: FuzzyQ | _: TermRangeQ =>
       sys.error(s"multi-term query must be rewritten before compile: $q")
     case BoolQ(must, should, mustNot, filt, mm) =>
       new BoolScorer(
-        must.map(compile(_, ctx, blocks, predBits, allBits)).toIndexedSeq,
-        filt.map(compile(_, ctx, blocks, predBits, allBits)).toIndexedSeq,
-        should.map(compile(_, ctx, blocks, predBits, allBits)).toIndexedSeq,
-        mustNot.map(compile(_, ctx, blocks, predBits, allBits)).toIndexedSeq,
+        must.map(compile(_, ctx, blocks, bits)).toIndexedSeq,
+        filt.map(compile(_, ctx, blocks, bits)).toIndexedSeq,
+        should.map(compile(_, ctx, blocks, bits)).toIndexedSeq,
+        mustNot.map(compile(_, ctx, blocks, bits)).toIndexedSeq,
         mm)
   }
 

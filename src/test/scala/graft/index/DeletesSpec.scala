@@ -182,7 +182,7 @@ class DeletesSpec extends SparkSpec {
 
     val doomed = corpus.indices.filter(_ => rnd.nextDouble() < 0.3).map(_.toLong).toSet
     Deletes.deleteByUrl(idx, doomed.toSeq.map(i => corpus(i.toInt)._1))
-    assert(idx.hasDeletes && idx.residentPostings.isDefined)
+    assert(idx.hasDeletes && idx.resident.isDefined)
     val cold = new Searcher(InvertedIndex.open(spark, dir))
     queries.zip(before).foreach { case (q, all) =>
       val got = searcher.scoredHits(q, -1).collect().toMap
@@ -429,7 +429,7 @@ class DeletesSpec extends SparkSpec {
     assert(hits === docIdOf.values.toSet -- ackedIds)
   }
 
-  test("close releases the warm reader's caches and broadcasts; it then answers cold") {
+  test("close releases the warm reader's caches; it then answers cold") {
     val dir = Files.createTempDirectory("graft-close").toString
     val idx = IndexBuilder.build(spark, mkPages(texts), dir,
       IndexConfig(numPartitions = 2, partsPerSegment = 1)).warm()
@@ -440,23 +440,22 @@ class DeletesSpec extends SparkSpec {
       rel.frangeTopK(graft.functions.ValueSources.fn("mod", col("dl"), lit(2)), 1, 1, 10),
       rel.geoTopK("cast(doc_id as double)", "0.0", 1.0, 0.0, 300.0, 3),
       SortedRead.earlyTopK(idx, 2), SortedRead.fullScanTopK(idx, 10)).map(_.collect().toSeq)
-    val before = searcher.topK(q, 10).collect().toSeq
+    // the reader holds no broadcast: a filter query broadcasts nothing
+    // but the task binaries of its stages
+    val held = org.apache.spark.Broadcasts.live()
+    var before = Seq.empty[org.apache.spark.sql.Row]
+    val c = org.apache.spark.JobCounts.of(spark.sparkContext) { before = searcher.topK(q, 10).collect().toSeq }
+    assert((org.apache.spark.Broadcasts.live() -- held).size <= c.stages, c)
     val docReadsBefore = docReads()
-    val resident = idx.residentPostings.get.persisted
-    val docCols = idx.residentDocs.get.persisted
+    val resident = idx.resident.get.persisted
     val docs = idx.docs
-    val filters = idx.cachedFilters
-    assert(filters.size === 1)
-    assert(Seq(resident.id, docCols.id).forall(spark.sparkContext.getPersistentRDDs.contains))
+    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
     assert(docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
 
     idx.close()
     assert(!spark.sparkContext.getPersistentRDDs.contains(resident.id))
-    assert(!spark.sparkContext.getPersistentRDDs.contains(docCols.id))
     assert(docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    filters.foreach(f => intercept[org.apache.spark.SparkException](f.value))
-    assert(idx.residentPostings.isEmpty && idx.residentDocs.isEmpty &&
-      idx.urlMapIfLoaded.isEmpty && !idx.filterCacheEnabled)
+    assert(idx.resident.isEmpty && idx.urlMapIfLoaded.isEmpty)
     assert(searcher.topK(q, 10).collect().toSeq === before)
     assert(docReads() === docReadsBefore)
     assert(docReadsBefore.forall(_.nonEmpty))

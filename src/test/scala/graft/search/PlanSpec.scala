@@ -248,7 +248,7 @@ class PlanSpec extends SparkSpec {
         EDisMax.parse("+spark merge window", "50%"), 10, pf2 = Seq(warm -> 0.4),
         bq = Seq("sort" -> 1.5)).collect()))
     families.foreach { case (name, run) =>
-      run() // first call loads the driver caches (dictionary, filter bitmap)
+      run() // first call loads the driver dictionary
       val c = org.apache.spark.JobCounts.of(spark.sparkContext)(run())
       assert(c.jobs === 1, s"$name: ${c.jobs} jobs")
       assert(c.stages === 1, s"$name: ${c.stages} stages submitted — a shuffle ran")
@@ -259,7 +259,7 @@ class PlanSpec extends SparkSpec {
     val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
     val s = new Searcher(warm)
     val filtered = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
-    s.topK(filtered, 10) // builds the cached filter (a SQL execution of its own)
+    s.topK(filtered, 10) // loads the driver dictionary
     val queries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "term" -> (() => s.topK(TermQ("spark"), 10)),
       "filter" -> (() => s.topK(filtered, 10)),
@@ -270,6 +270,38 @@ class PlanSpec extends SparkSpec {
       assert(c.jobs === 1, s"$name: $c")
       assert(c.sqlExecutions === 0, s"$name: $c")
     }
+  }
+
+  test("warm filters, match-all and attr-anchored queries run as ONE job and no SQL; a url filter takes the docs cogroup") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val s = new Searcher(warm)
+    s.topK(TermQ("spark"), 10) // loads the driver dictionary
+    val repeated = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
+    s.topK(repeated, 10)
+    val queries: Seq[(String, Query)] = Seq(
+      // bounds no other spec uses: the predicate binds in this call
+      "first-seen predicate" -> BoolQ(must = Seq(TermQ("merge")), filter = Seq(AttrRangeQ("ts",
+        Some("2025-10-24 00:01:17"), Some("2025-10-24 00:07:43")))),
+      "repeated filter" -> repeated,
+      "match-all" -> MatchAllQ,
+      "+lang:en -spark" -> BoolQ(must = Seq(AttrQ("lang", "en")), mustNot = Seq(TermQ("spark"))))
+    queries.foreach { case (name, q) =>
+      var hits: DataFrame = null
+      val c = org.apache.spark.JobCounts.of(spark.sparkContext) { hits = s.topK(q, 10) }
+      assert(hits.collect().nonEmpty, name)
+      assert(c.jobs === 1, s"$name: $c")
+      assert(c.stages === 1, s"$name: $c — a shuffle ran")
+      assert(c.sqlExecutions === 0, s"$name: $c")
+    }
+    // the resident docs lack `url`: its predicate cogroups the docs rows
+    val url = BoolQ(must = Seq(TermQ("the")), filter = Seq(AttrRangeQ("url",
+      Some("https://example.com/src1"), Some("https://example.com/src3"))))
+    s.evaluate(url, 10, None) match {
+      case Some(Right(plan)) => assert(plan.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.CoGroup => g }.size === 1)
+      case other => fail(s"url filter plan: $other")
+    }
+    warm.close()
   }
 
   test("warm reader, no deletes: frange, geo and sorted reads run as ONE job and no SQL; suggest runs none") {
@@ -301,22 +333,31 @@ class PlanSpec extends SparkSpec {
     val terms = Seq("spark", "merge")
     val q = Query.or(terms: _*)
     val ctx = ScoringContext(warm.stats, warm.termDfs(terms))
-    val postings = org.apache.spark.TaskBinary.bytes(warm.residentPostings.get.job(seg =>
-      SegmentScorer.score(q, ctx, seg.rows(terms), None, 10)))(_.toArray)
+    val segs = warm.resident.get
+    val postings = org.apache.spark.TaskBinary.bytes(segs.job(seg =>
+      SegmentScorer.score(q, ctx, seg.postings.rows(terms), None, 10)))(_.toArray)
     val docs = org.apache.spark.TaskBinary.bytes(
-      warm.residentDocs.get.job(_.firstMatching(None, Array.emptyDoubleArray, 10)))(_.toArray)
+      segs.job(_.docs.firstMatching(None, Array.emptyDoubleArray, 10)))(_.toArray)
     // scoredHits runs the Searcher's own per-segment function through
-    // the seam, before the caller collects and outside any SQL execution
+    // the seam, before the caller collects and outside any SQL execution.
+    // A filter's function also carries its bound predicates: Catalyst
+    // trees of about 1.5 KB each (BoundReference's accessor lambdas, the
+    // literals' pattern bits), still a tenth of the 55 KB a job carrying
+    // the segments' scan plan ships
     val s = new Searcher(warm)
-    val scored = s.evaluate(q, 10, None) match {
+    def scoredJob(q: Query): Int = s.evaluate(q, 10, None) match {
       case Some(Left((segs, score))) => org.apache.spark.TaskBinary.bytes(segs.job(score))(_.toArray)
-      case other => fail(s"warm scoredHits plan: $other")
+      case other => fail(s"warm scoredHits plan of $q: $other")
     }
+    val scored = scoredJob(q)
+    val filtered = scoredJob(BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"),
+      AttrRangeQ("ts", Some("2025-10-24 00:02:00"), None))))
     val c = org.apache.spark.JobCounts.of(spark.sparkContext)(s.scoredHits(q, 10))
     assert(c.jobs === 1 && c.sqlExecutions === 0, s"scoredHits: $c")
     assert(postings < 4096, s"postings job: $postings bytes")
     assert(docs < 4096, s"docs job: $docs bytes")
     assert(scored < 4096, s"scoredHits job: $scored bytes")
+    assert(filtered < 8192, s"filter job: $filtered bytes")
     warm.close()
   }
 

@@ -122,7 +122,7 @@ class ResidentDocsSpec extends SparkSpec {
     Deletes.deleteByUrl(warmDel, doomed)
     val deleted = doomed.map(RelationalPath.docIdOfUrl).toSet
     val coldDel = InvertedIndex.open(spark, dir)
-    assert(warmDel.hasDeletes && warmDel.residentDocs.isDefined)
+    assert(warmDel.hasDeletes && warmDel.resident.isDefined)
     val reads: Seq[InvertedIndex => DataFrame] = Seq(
       frange(5, 0, 1, 50), frange(7, 2, 2, 10), geo(0.0, 0.0, 3000.0, 50), geo(20.0, -40.0, 1000.0, 5),
       SortedRead.earlyTopK(_, 10), SortedRead.fullScanTopK(_, 10), SortedRead.earlyTopK(_, 5000))

@@ -2,7 +2,9 @@ package graft.search
 
 import graft.SparkSpec
 import graft.SparkEntry
-import graft.index.CheckIndex
+import org.apache.spark.sql.functions.col
+
+import graft.index.{CheckIndex, SegmentDocs}
 import graft.model.Corpus
 
 /** Rank- AND float32-score-identity of the distributed scorer path
@@ -105,34 +107,64 @@ class SearchSpec extends SparkSpec {
     assert(c.jobs === 0 && c.sqlExecutions === 0, c)
   }
 
-  test("filterCache: warm serving path (broadcast bitmap) == SpecOracle on attr filters") {
-    // warming enables the Solr-filterCache analogue: cached predicate
-    // bitmaps replace the per-query docs cogroup — results must stay
-    // float32-identical to the oracle, and a second run (cache hit)
-    // must agree with the first
-    val warmIdx = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
-    assert(warmIdx.filterCacheEnabled)
-    val s2 = new Searcher(warmIdx)
-    val filtered = Seq(
+  test("per-segment filter bits: a warm reader answers attribute filters as SpecOracle and a cold reader do") {
+    // a warm query evaluates its predicates on each resident segment's
+    // doc columns; the answers must be float32-identical to the oracle
+    // and to a cold reader's docs cogroup, and a second run (the bound
+    // predicate reused) must agree with the first
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val warmS = new Searcher(warm)
+    val coldS = new Searcher(graft.index.InvertedIndex.open(spark, idx.dir))
+    // the SpecOracle has no ts or doc_id attribute: it reads those
+    // predicates as the doc set they select on the raw corpus
+    val corpus = Corpus.pages(spark, sfDir).toDF()
+      .select(col("url"), col("warc_ts").as("ts"), SegmentDocs.DocNumColumn.as("doc_id"))
+    val oracleDocId = corpus.select("url").collect().map(_.getString(0)).sorted.zipWithIndex
+      .map { case (u, i) => u -> i.toLong }.toMap
+    def docSet(p: Query): Query = DocIdSetQ(corpus.filter(RelationalPath.attrPredColumn(corpus.schema, p))
+      .select("url").collect().map(r => oracleDocId(r.getString(0))).sorted.toSeq)
+    val ts = AttrRangeQ("ts", Some("2025-10-24 00:02:00"), Some("2025-10-24 00:06:00"))
+    val geo = GeoFiltQ("cast(doc_id % 120 as double) - 59.5",
+      "cast((doc_id * 7) % 360 as double) - 179.5", 10.0, 20.0, 5000.0)
+    val url = AttrRangeQ("url", Some("https://example.com/src1"), Some("https://example.com/src3"))
+    // (query, the oracle's query, whether the warm reader runs it on its
+    // resident segments)
+    val cases: Seq[(Query, Query, Boolean)] = Seq(
       BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"))),
       BoolQ(must = Seq(TermQ("the")), mustNot = Seq(TermQ("merge")),
         filter = Seq(AttrQ("lang", "de"))),
       BoolQ(should = Seq(TermQ("window"), TermQ("batch")),
         filter = Seq(AttrQ("lang", "en"))),
-      // attr-ANCHORED (terms only under mustNot / optional should):
-      // must NOT take the cache fast path — segments without the terms
-      // still hold candidates (regression: warmed shared index broke
-      // QueryParserSpec's `+lang:en -spark`)
+      // attr-ANCHORED (terms only under mustNot): segments without the
+      // terms still hold candidates
       BoolQ(must = Seq(AttrQ("lang", "en")), mustNot = Seq(TermQ("spark"))),
-      BoolQ(should = Seq(TermQ("window")), filter = Seq(AttrQ("lang", "de"))))
-    filtered.foreach { q =>
-      val run1 = s2.topK(q, 10).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getFloat(3))).toSeq
-      val run2 = s2.topK(q, 10).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getFloat(3))).toSeq
-      assert(run1 === oracle.topK(q, 10), s"warm filter mismatch on $q")
-      assert(run1 === run2, s"cache hit diverged on $q")
+      BoolQ(should = Seq(TermQ("window")), filter = Seq(AttrQ("lang", "de"))),
+      MatchAllQ).map(q => (q, q, true)) ++ Seq(
+      (BoolQ(must = Seq(TermQ("spark")), filter = Seq(ts)),
+        BoolQ(must = Seq(TermQ("spark")), filter = Seq(docSet(ts))), true),
+      (BoolQ(must = Seq(TermQ("the")), filter = Seq(geo)),
+        BoolQ(must = Seq(TermQ("the")), filter = Seq(docSet(geo))), true),
+      // the resident docs lack `url`: the docs cogroup answers
+      (BoolQ(must = Seq(TermQ("the")), filter = Seq(url)),
+        BoolQ(must = Seq(TermQ("the")), filter = Seq(url)), false))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getString(2), java.lang.Float.floatToRawIntBits(r.getFloat(3))))
+    def oracleRows(hits: Seq[(Int, Long, String, Float)]) =
+      hits.map { case (i, d, u, sc) => (i, d, u, java.lang.Float.floatToRawIntBits(sc)) }
+    cases.foreach { case (q, oracleQ, onResident) =>
+      assert(warmS.evaluate(q, 10, None).exists(_.isLeft) === onResident, s"plan of $q")
+      val run1 = rows(warmS.topK(q, 10))
+      assert(run1.nonEmpty, s"no hits for $q")
+      assert(run1 === oracleRows(oracle.topK(oracleQ, 10)), s"warm filter mismatch on $q")
+      assert(run1 === rows(warmS.topK(q, 10)), s"second run diverged on $q")
+      assert(run1 === rows(coldS.topK(q, 10)), s"warm != cold on $q")
     }
+    // match-all page 2: the ten docs after page 1's last
+    val p1 = rows(warmS.topK(MatchAllQ, 10))
+    val p2 = rows(warmS.topKAfter(MatchAllQ, 10, java.lang.Float.intBitsToFloat(p1.last._4), p1.last._2))
+    assert(p2 === oracleRows(oracle.topK(MatchAllQ, 20).drop(10)).map(r => r.copy(_1 = r._1 - 10)))
+    assert(p2 === rows(coldS.topKAfter(MatchAllQ, 10, java.lang.Float.intBitsToFloat(p1.last._4), p1.last._2)))
+    warm.close()
   }
 
   test("warm dictionary expands fuzzy and prefix exactly as the termStats scan, with no job") {
@@ -180,20 +212,6 @@ class SearchSpec extends SparkSpec {
     val c = org.apache.spark.JobCounts.of(spark.sparkContext)(rows(warm, "sp", 10))
     assert(c.jobs === 0, c)
     warm.close()
-  }
-
-  test("FilterBits: executor-side bitmap == row collect; O(partitions) blobs only") {
-    import org.apache.spark.sql.functions._
-    val matching = idx.docs
-      .filter(coalesce(col("lang") === "en", lit(false))).select("docId")
-    val (bits, blobCount) = FilterBits.build(matching)
-    // the driver never receives more than one blob per partition — the
-    // bounded-collect contract (a dense filter ships bitmap bytes, not
-    // O(matchingRows) row objects)
-    assert(blobCount <= matching.rdd.getNumPartitions)
-    val naive = new java.util.BitSet()
-    matching.collect().foreach(r => naive.set(r.getLong(0).toInt))
-    assert(bits === naive)
   }
 
   test("searchAfter page 2 of MatchAll is not hidden by the dense-prefix cutoff") {
@@ -361,37 +379,55 @@ class SearchSpec extends SparkSpec {
       EDisMax.topK(Seq(warm -> 1.0), EDisMax.parse("spark merge window", "50%"), 10).collect().toSeq,
       rel.spanNearDocs(Seq("spark", "merge"), 3, inOrder = true).collect().toSeq,
       rel.geoTopK("cast(doc_id % 120 as double)", "0.0", 30.0, 0.0, 500.0, 10).collect().toSeq,
-      SortedRead.earlyTopK(warm, 10).collect().toSeq)
+      SortedRead.earlyTopK(warm, 10).collect().toSeq,
+      s.topK(BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en"))), 10).collect().toSeq)
     val before = answers()
-    val seams = Seq(warm.residentPostings.get, warm.residentDocs.get)
-    val resident = seams.map(_.persisted)
+    val seam = warm.resident.get
+    val resident = seam.persisted
     import org.apache.spark.LoseBlocks
-    // one lost segment: each seam's first job finds block 2 missing and
-    // reruns once over the persisted RDD, which rebuilds that segment
-    // alone and caches it again
-    val rebuilds = seams.map(_.rebuilds)
-    resident.foreach(LoseBlocks.of(_, Seq(2)))
-    assert(resident.map(LoseBlocks.cached) === Seq.fill(2)(Seq(0, 1, 3)))
+    // one lost segment: the first job finds block 2 missing and reruns
+    // once over the persisted RDD, which rebuilds that segment alone
+    // and caches it again
+    val rebuilds = seam.rebuilds
+    LoseBlocks.of(resident, Seq(2))
+    assert(LoseBlocks.cached(resident) === Seq(0, 1, 3))
     assert(answers() === before)
-    assert(seams.map(_.rebuilds) === rebuilds.map(_ + 1))
-    assert(resident.map(LoseBlocks.cached) === Seq.fill(2)(Seq(0, 1, 2, 3)))
+    assert(seam.rebuilds === rebuilds + 1)
+    assert(LoseBlocks.cached(resident) === Seq(0, 1, 2, 3))
     // every segment lost
-    resident.foreach(LoseBlocks.of(_))
+    LoseBlocks.of(resident)
     assert(spark.sparkContext.getRDDStorageInfo.forall(i =>
-      !resident.exists(_.id == i.id) || i.numCachedPartitions == 0))
+      i.id != resident.id || i.numCachedPartitions == 0))
     assert(answers() === before)
-    assert(seams.map(_.rebuilds) === rebuilds.map(_ + 2))
-    assert(resident.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id)))
+    assert(seam.rebuilds === rebuilds + 2)
+    assert(spark.sparkContext.getPersistentRDDs.contains(resident.id))
     // a job that outlives close() still answers, from parquet
-    val docsSeam = warm.residentDocs.get
     warm.close()
-    assert(docsSeam.run(d => Iterator(d.size.toLong)).sum === warm.stats.docCount)
+    assert(seam.run(seg => Iterator(seg.docs.size.toLong)).sum === warm.stats.docCount)
+  }
+
+  test("a filter query that outlives close() still answers, from parquet") {
+    val warm = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
+    val s = new Searcher(warm)
+    val q = BoolQ(must = Seq(TermQ("spark")), filter = Seq(AttrQ("lang", "en")))
+    val before = s.scoredHits(q, 10).collect().sorted.toSeq
+    assert(before.nonEmpty)
+    // planned on the warm reader, run after close() has unpersisted its
+    // segments: the job recomputes them from parquet
+    val (segs, score) = s.evaluate(q, 10, None) match {
+      case Some(Left(plan)) => plan
+      case other => fail(s"warm filter plan: $other")
+    }
+    warm.close()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(segs.persisted.id))
+    assert(segs.run(score).sorted.toSeq === before)
   }
 
   test("4 threads of mixed queries on one warm reader answer as a serial caller does") {
-    // each query's context rides its own task closure and each cached
-    // filter is broadcast once, so threads sharing a reader (and racing
-    // to build its filter cache) must get exactly a lone caller's answers
+    // each query's context and bound predicates ride its own task
+    // closure, and each segment builds its filter bits per query, so
+    // threads sharing a reader (and racing to bind new predicates) must
+    // get exactly a lone caller's answers
     def queries(r: graft.index.InvertedIndex): Seq[() => Seq[Seq[Any]]] = {
       val s = new Searcher(r)
       def hits(df: org.apache.spark.sql.DataFrame) =
@@ -401,7 +437,7 @@ class SearchSpec extends SparkSpec {
         df.collect().toSeq.map(row => Seq(row.getInt(0), row.getLong(1)))
       val langs = r.docs.select("lang").distinct().collect()
         .flatMap(row => Option(row.getString(0))).sorted.toSeq
-      assert(langs.nonEmpty)
+      assert(langs.size > 1, langs)
       Seq[() => Seq[Seq[Any]]](
         () => hits(s.topK(TermQ("spark"), 10)),
         () => hits(s.topK(Query.or("merge", "window"), 20)),
@@ -410,13 +446,14 @@ class SearchSpec extends SparkSpec {
         () => hits(s.topKAfter(Query.or("spark", "merge"), 5, 2.0f, 3L)),
         () => ids(EDisMax.topK(Seq(r -> 1.0), EDisMax.parse("spark merge window", "50%"), 10)),
         () => ids(EDisMax.topK(Seq(r -> 1.0), EDisMax.parse("+spark -join data", "0"), 10,
-          pf2 = Seq(r -> 0.4)))) ++
+          pf2 = Seq(r -> 0.4))),
+        () => hits(s.topK(MatchAllQ, 10))) ++
         langs.map(l => () => hits(s.topK(BoolQ(must = Seq(TermQ("spark")),
           filter = Seq(AttrQ("lang", l))), 10)))
     }
     val serial = queries(graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()).map(_())
     assert(serial.exists(_.nonEmpty))
-    // a fresh reader: its filter cache is built under concurrency
+    // a fresh reader, whose dictionary loads under concurrency
     val shared = graft.index.InvertedIndex.open(spark, indexCopy(idx.dir)).warm()
     val qs = queries(shared)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
